@@ -11,6 +11,7 @@
 set -e
 set -o pipefail
 cd "$(dirname "$0")/.."
+. scripts/host_size.sh
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
 
 if ! grep -q "target/scala" /tmp/graft_cp.txt 2>/dev/null; then
@@ -21,8 +22,8 @@ if ! grep -q "target/scala" /tmp/graft_cp.txt 2>/dev/null; then
 fi
 ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-java $ADD_OPENS -Xmx48g -cp "$(cat /tmp/graft_cp.txt)" graft.Bench "$@"
+SPARK_GRAFT_SF_DIR="$SF" \
+java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$(cat /tmp/graft_cp.txt)" graft.Bench "$@"
 
 # the drift gate only meaningfully applies to the full suite writing
 # BENCH_LOCAL.json against a committed predecessor of the same sf

@@ -14,6 +14,7 @@
 # Usage: bash scripts/run_sf1.sh [queries...]   (no args = full suite)
 set -e
 cd "$(dirname "$0")/.."
+. scripts/host_size.sh
 SF=${SPARK_GRAFT_SF1_DIR:-/tmp/graft_sf1}
 OUT=${SPARK_GRAFT_SF1_OUT:-/tmp/graft_verify_sf1}
 FIX=${GRAFT_MEDIA_FIXTURE_DIR:-/tmp/graft_media_sf1}
@@ -42,8 +43,7 @@ if [ $# -gt 0 ]; then
 fi
 
 GRAFT_MEDIA_UNIVERSE_DOCS=50000 GRAFT_MEDIA_FIXTURE_DIR="$FIX" \
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-java $ADD_OPENS -Xmx48g -cp "$(cat /tmp/graft_cp.txt)" \
+java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$(cat /tmp/graft_cp.txt)" \
   graft.Verify "$SF" "$OUT" $QFILTER
 
 python3 scripts/compare_timeout.py "${ONLY[@]}" "$SF" "$OUT" \

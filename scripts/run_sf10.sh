@@ -10,6 +10,7 @@ set -e
 # prints its metric line and then dies in teardown would record as success
 set -o pipefail
 cd "$(dirname "$0")/.."
+. scripts/host_size.sh
 SF=${SPARK_GRAFT_SF10_DIR:-/tmp/graft_sf10}
 OUT=${1:-/tmp/sf10_results.jsonl}
 shift || true
@@ -52,9 +53,9 @@ FULLDIR=${SPARK_GRAFT_SF10_FULL:-/tmp/sf10_full}
 mkdir -p "$FULLDIR"
 for q in "${QUERIES[@]}"; do
   echo "[sf10] $q ..." >&2
-  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+  SPARK_GRAFT_SF_DIR="$SF" \
   SPARK_GRAFT_BENCH_OUT="$FULLDIR/$q.json" \
-  java $ADD_OPENS -Xmx48g -cp "$(cat /tmp/graft_cp.txt)" \
+  java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$(cat /tmp/graft_cp.txt)" \
     graft.Bench "$q" 2>/tmp/sf10_q_err.log | grep '"metric"' >> "$OUT" \
     || echo "{\"failed\":\"$q\"}" >> "$OUT"
 done
@@ -82,8 +83,7 @@ EOF
 # assert the linear-class gen_pairs bounds (check_sf10_audit.py) —
 # wall-clock says "slow", the audit says WHICH family went quadratic
 echo "[sf10] h01 audit bounds ..." >&2
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-java $ADD_OPENS -Xmx48g -cp "$(cat /tmp/graft_cp.txt)" \
+java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$(cat /tmp/graft_cp.txt)" \
   graft.Verify "$SF" /tmp/graft_verify_sf10 h01_lsh_bucket_audit \
   2>/tmp/sf10_q_err.log >/dev/null
 python3 scripts/check_sf10_audit.py /tmp/graft_verify_sf10/h01_lsh_bucket_audit

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.QualifiedTableName
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -10,10 +13,34 @@ import org.apache.spark.sql.types.LongType
   * column pruning applies to whatever the caller selects downstream. At
   * cluster scale these would be catalog tables partitioned by date; the
   * query functions only depend on the logical schema.
+  *
+  * A table path is resolved (files listed, schema inferred by a footer
+  * job) once per session and path modification time; later reads reuse
+  * that relation with fresh attribute ids, so self-joins see two
+  * relations as before. The resolution lives in the session's own
+  * relation cache, the one `SessionCatalog` keeps for catalog tables, so
+  * it goes away with the session. Rewriting the path (a Spark overwrite
+  * recreates the directory) moves its modification time and the next
+  * read resolves it again; files added below an unchanged top-level
+  * directory, and session settings changed after the first read that
+  * alter schema inference, are not seen.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val mtime =
+      try p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getModificationTime
+      catch { case _: java.io.IOException => -1L } // the read below reports it
+    val key = QualifiedTableName(CacheCatalog, path, mtime.toString)
+    val relation = spark.sessionState.catalog.getCachedPlan(key,
+      () => spark.read.parquet(path).queryExecution.analyzed)
+    GraftBridge.ofRows(spark, relation.asInstanceOf[MultiInstanceRelation].newInstance())
+  }
+
+  /** Catalog part of the relation-cache keys: no catalog has this name,
+    * so the keys never meet a table's. */
+  private val CacheCatalog = "graft_parquet_path"
 
   def lineitem(spark: SparkSession, dir: String): DataFrame   = t(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "orders")

@@ -989,12 +989,13 @@ object Dedup {
     // duplicate structure.
     maxBucket.foreach(cap =>
       require(cap > 1, s"maxBucket must exceed 1, got $cap"))
+    // a singleton bucket yields no pair: drop it before the double explode
     val buckets = exploded
       .filter(col("band_val").isNotNull)
       .groupBy(col("band_id"), col("band_val"))
       .agg(cappedIds(struct(col("doc_id"), col("bands")), maxBucket).as("_ms"))
-      .filter(maxBucket.map(cap => size(col("_ms")) <= cap)
-        .getOrElse(lit(true)))
+      .filter(size(col("_ms")) > 1 &&
+        maxBucket.map(cap => size(col("_ms")) <= cap).getOrElse(lit(true)))
     val ham = (0 until 4).map { j =>
       bit_count(get(col("a.bands"), lit(j)).bitwiseXOR(get(col("b.bands"), lit(j))))
     }.reduce(_ + _).cast(LongType)

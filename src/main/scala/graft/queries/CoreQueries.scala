@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import graft.gold.Features
 import graft.ops._
 import graft.silver.Silver
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,6 +21,10 @@ import org.apache.spark.sql.types._
 object CoreQueries {
 
   private val centsSql = (c: String) => s"CAST(round($c * 100, 0) AS BIGINT)"
+
+  /** Where d04, d05 and j04 write their tables: the session's warehouse
+    * directory, so two checkouts (or two warehouses) never share a path. */
+  private def outRoot(s: SparkSession): String = s.conf.get("spark.sql.warehouse.dir")
 
   /** Shared oracle for the book-summary shape (a05 and the s02 JSON
     * roundtrip — same values, different Spark-side plumbing). */
@@ -128,7 +132,7 @@ object CoreQueries {
       val silver = s.table("events").select(col("event_id"), col("ts"),
         col("event_type"), col("user_id"), Norms.cents(col("value")).as("value_c"))
       graft.silver.Catalog.materialize(s, silver,
-        s"/tmp/graft_silver_${new java.io.File(dir).getName}/events", "silver_events")
+        s"${outRoot(s)}/graft_silver_${new java.io.File(dir).getName}/events", "silver_events")
       s.sql("""SELECT event_type, count(*) AS n, CAST(sum(value_c) AS BIGINT) AS vol_c
               |FROM silver_events WHERE user_id < 50 GROUP BY event_type""".stripMargin)
     },
@@ -400,7 +404,7 @@ object CoreQueries {
          |       count(*) AS n, CAST(sum(${centsSql("value")}) AS BIGINT) AS vol_c
          |FROM events WHERE event_type = 'click' GROUP BY 1
          |""".stripMargin) { (s, dir) =>
-      val out = s"/tmp/graft_bronze_${new java.io.File(dir).getName}"
+      val out = s"${outRoot(s)}/graft_bronze_${new java.io.File(dir).getName}"
       Tables.events(s, dir).withColumn("day", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
       s.read.parquet(out)
@@ -546,16 +550,16 @@ object CoreQueries {
       val lt = s"g_lineitem_$tag"
       val ot = s"g_orders_$tag"
       if (!s.catalog.tableExists(lt)) {
-        // external tables under /tmp: the warehouse survives across
+        // external tables under the warehouse: its files survive across
         // sessions while the in-memory catalog does not, and a managed
         // saveAsTable onto a leftover location fails
         s.sql(s"DROP TABLE IF EXISTS $lt")
         s.sql(s"DROP TABLE IF EXISTS $ot")
         Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice")
-          .write.mode("overwrite").option("path", s"/tmp/graft_bucketed/$tag/$lt")
+          .write.mode("overwrite").option("path", s"${outRoot(s)}/graft_bucketed/$tag/$lt")
           .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
         Tables.orders(s, dir).select("o_orderkey", "o_orderpriority")
-          .write.mode("overwrite").option("path", s"/tmp/graft_bucketed/$tag/$ot")
+          .write.mode("overwrite").option("path", s"${outRoot(s)}/graft_bucketed/$tag/$ot")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
       }
       // hint("merge"): at test scale Spark would broadcast the small side,
