@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. A warm-up query runs untimed first so JVM/
@@ -9,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.hostCpus()
     // Ambient host load, read at PROCESS START before this JVM creates
     // any load of its own (r17): hypervisor steal cannot see SAME-HOST
     // competitors — the r16 sf1 bench read a05/a10/d01 at 5-14× their
@@ -31,20 +30,7 @@ object Bench {
       System.err.println(f"[bench] WARNING: ambient load1 $ambientLoad1%.1f " +
         s"on $cpus cpus at process start — another process is competing " +
         "for this host; readings will be marked host_noisy")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // single-file fixtures: a low split size keeps scans (and
-      // map-side persists of scans) parallel — see Verify.scala; the
-      // committed sf≤0.1 files are single-row-group (unsplittable), so
-      // this only matters for multi-row-group tiers like sf1
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     // optional args: query-name prefixes ("x61 x63") time just that
     // subset — the iterate-on-one-query loop; no args = the full suite
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -101,7 +87,7 @@ object Bench {
       val t0 = System.nanoTime()
       // bit_xor, not sum: ANSI mode makes a long sum of 640 M hashes
       // overflow; xor is closed over Long and just as unfoldable
-      spark.range(0L, 640000000L, 1L, cpus.toInt)
+      spark.range(0L, 640000000L, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) as s").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -125,7 +111,7 @@ object Bench {
     def memProbe(): Double = {
       val t0 = System.nanoTime()
       val n = 8 * 1024 * 1024 // 8M longs = 64 MiB per task
-      spark.range(0L, cpus.toLong, 1L, cpus.toInt).rdd.map { p =>
+      spark.range(0L, cpus.toLong, 1L, cpus).rdd.map { p =>
         val a = new Array[Long](n)
         var i = 0
         while (i < n) { a(i) = p * 2654435761L + i; i += 1 }

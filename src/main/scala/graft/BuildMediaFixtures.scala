@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regeneration CLI for the staged x87/x89 media corpora (the
   * TrainClassifier discipline): deletes nothing, (re)materializes both
   * fixture tables for the full doc-id universe through the REAL codec
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object BuildMediaFixtures {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse(graft.multimodal.MediaFixtures.defaultDir)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val universe = spark.range(graft.multimodal.MediaFixtures.UniverseDocs)
       .toDF("doc_id")
     graft.streaming.BatchStore.writeSlot(

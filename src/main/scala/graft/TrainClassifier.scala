@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot trainer for the x72 quality classifier: builds the
@@ -18,14 +17,7 @@ object TrainClassifier {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse(graft.text.Classifier.DefaultWeightsPath)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val labeled = graft.text.Classifier.labeledFixture(Tables.documents(spark, sfDir))
     val epochs = args.lift(3).map(_.toInt).getOrElse(100)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,31 +8,12 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for fast local
     // single-query oracle checks (the driver always passes two args)
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_NO_CODEGEN=1: run the whole dump fully interpreted
     // (wholeStage off, NO_CODEGEN factories) so the DuckDB compare can
     // certify the eval() path of every native expression — the dual-path
     // parity mode (see CodegenSuiteParitySpec for the in-JVM gate)
     val noCodegen = sys.env.get("SPARK_GRAFT_NO_CODEGEN").contains("1")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet has TIMESTAMP(NANOS) — readable only as raw longs;
-      // Tables.events converts back to TimestampType (µs-aligned values).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // single-file fixtures: without a low split size every scan (and
-      // every map-side persist of a scan) packs into 1-2 tasks — at sf1
-      // that made shingle staging single-threaded (a 100-TB input is
-      // thousands of files, so this is a fixture artifact to neutralize,
-      // not a production setting)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-    val spark = (if (noCodegen)
-      builder.config("spark.sql.codegen.wholeStage", "false")
-        .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(interpreted = noCodegen)
     if (noCodegen) System.err.println(
       "[verify] NO_CODEGEN mode: all queries run interpreted")
     new java.io.File(outDir).mkdirs()

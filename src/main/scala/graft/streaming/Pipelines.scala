@@ -80,19 +80,25 @@ object Pipelines {
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
 
-  /** K2/W7: the per-batch bronze write. Partitioning by batch id with
-    * DYNAMIC partition overwrite makes a replayed micro-batch replace its
-    * own partition instead of appending duplicates — this is what turns
-    * the checkpointed source's at-least-once redelivery into effective
-    * exactly-once on a plain file sink, upgrading the reference's
-    * duplicate-on-crash contract (`db_writer.py:48-50`, README.md:107). */
-  def bronzeBatchWrite(path: String, tsCol: String)(batch: DataFrame, id: Long): Unit =
-    batch.withColumn("ingest_date", to_date(col(tsCol)))
-      .withColumn("batch_id", lit(id))
+  /** W7: the replay-safe write every per-batch sink shares. Partitioning
+    * by batch id (then `parts`) with DYNAMIC partition overwrite makes a
+    * replayed micro-batch replace its own partitions instead of appending
+    * duplicates — this is what turns the checkpointed source's
+    * at-least-once redelivery into effective exactly-once on a plain file
+    * sink, upgrading the reference's duplicate-on-crash contract
+    * (`db_writer.py:48-50`, README.md:107). */
+  private def writeBatch(df: DataFrame, id: Long, path: String, parts: String*): Unit =
+    df.withColumn("batch_id", lit(id))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "ingest_date")
+      .partitionBy("batch_id" +: parts: _*)
       .parquet(path)
+
+  /** K2/W7: the per-batch bronze write, partitioned by (batch id, ingest
+    * date) through [[writeBatch]]. */
+  def bronzeBatchWrite(path: String, tsCol: String)(batch: DataFrame, id: Long): Unit =
+    writeBatch(batch.withColumn("ingest_date", to_date(col(tsCol))), id, path,
+      "ingest_date")
 
   /** K2: bronze writer — idempotent parquet partitioned by (batch id,
     * ingest date); the date partition is the pruning analog of the
@@ -113,14 +119,10 @@ object Pipelines {
     * test drives). Exposed separately so specs can replay a batch id
     * directly. */
   def routedBronzeBatchWrite(root: String)(batch: DataFrame, id: Long): Unit =
-    batch.select(col("topic"), col("value").cast("string").as("payload"),
+    writeBatch(batch.select(col("topic"), col("value").cast("string").as("payload"),
         col("timestamp").as("ingested_at"),
-        to_date(col("timestamp")).as("ingest_date"))
-      .withColumn("batch_id", lit(id))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "topic", "ingest_date")
-      .parquet(root)
+        to_date(col("timestamp")).as("ingest_date")),
+      id, root, "topic", "ingest_date")
 
   /** K3: multi-topic router — one bronze directory per topic from a single
     * subscribe-pattern source, the analog of `db_writer.py:121-136`'s
@@ -131,19 +133,27 @@ object Pipelines {
     raw.writeStream.option("checkpointLocation", checkpoint)
       .foreachBatch(routedBronzeBatchWrite(root) _)
 
+  /** K4's per-batch write: split one micro-batch into (good, errors),
+    * each side batch-id-addressed through [[writeBatch]], so a replayed
+    * batch replaces its rows on both sides instead of landing twice.
+    * Exposed separately so specs can replay a batch id directly. */
+  def errorChannelBatchWrite(isError: Column, goodPath: String, errorPath: String)
+                            (batch: DataFrame, id: Long): Unit = {
+    val b = batch.persist()
+    try {
+      writeBatch(b.filter(!isError), id, goodPath)
+      writeBatch(b.filter(isError), id, errorPath)
+    } finally { b.unpersist(); () }
+  }
+
   /** K4: error-event side channel (`user_positions_tracker.py:139-151`):
     * split one parsed stream into (good, errors) inside foreachBatch so
-    * both writes share the micro-batch boundary. */
+    * both writes share the micro-batch boundary. Both paths are
+    * partitioned by batch_id (see [[errorChannelBatchWrite]]). */
   def withErrorChannel(df: DataFrame, isError: Column, goodPath: String,
                        errorPath: String, checkpoint: String): DataStreamWriter[Row] =
     df.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        try {
-          b.filter(!isError).write.mode("append").parquet(goodPath)
-          b.filter(isError).write.mode("append").parquet(errorPath)
-        } finally { b.unpersist(); () }
-      }
+      .foreachBatch(errorChannelBatchWrite(isError, goodPath, errorPath) _)
 
   /** P2/W3 streaming form: last-value-wins decimation to one row per
     * (key, bucket) with watermarked state cleanup. Same max_by shape as
@@ -373,14 +383,9 @@ object Pipelines {
                    htmlMinRatio: Double = 0.05): DataStreamWriter[Row] =
     stream.writeStream.option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        curateBatch(batch, idCol, textCol, corpusIndex, gopherMinWords,
-            c4MinWords, c4MinKeptLines, boilerMinDocs, minJaccard,
-            htmlMinRatio)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
+        writeBatch(curateBatch(batch, idCol, textCol, corpusIndex,
+            gopherMinWords, c4MinWords, c4MinKeptLines, boilerMinDocs,
+            minJaccard, htmlMinRatio), id, outPath)
       }
 
   /** The static side of [[streamingIncrementalNearDup]]: the corpus

@@ -1,0 +1,49 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+/** The one session factory: its settings, Verify's interpreted mode, the
+  * cpus rule, and that no other file under src/ configures a session. */
+class GraftSessionSpec extends SparkSpec {
+
+  test("the shared test session carries every factory setting") {
+    val want = GraftSession.settings(SparkSpec.cpus)
+    assert(want === Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.files.maxPartitionBytes" -> "4m"))
+    // the context's conf, not spark.conf: specs may change runtime SQL
+    // settings, but what the session was built with stays here
+    val built = spark.sparkContext.getConf
+    want.foreach { case (k, v) => assert(built.get(k) === v, k) }
+  }
+
+  test("interpreted mode turns whole-stage codegen and codegen'd factories off") {
+    assert(GraftSession.settings(4, interpreted = true).toSet --
+      GraftSession.settings(4).toSet === Set(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+  }
+
+  test("cpus: SPARK_GRAFT_CPUS wins, else the JVM's available processors") {
+    assert(GraftSession.hostCpus(Map("SPARK_GRAFT_CPUS" -> "3")) === 3)
+    assert(GraftSession.hostCpus(Map.empty) ===
+      Runtime.getRuntime.availableProcessors())
+  }
+
+  test("GraftSession is the only file under src/ that calls the session builder") {
+    // split so this file does not match itself
+    val needle = "SparkSession" + ".builder"
+    val files = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains(needle))
+      .map(_.toString).toSeq
+    assert(files === Seq("src/main/scala/graft/GraftSession.scala"))
+  }
+}

@@ -9,14 +9,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the driver testdata writes nanosecond timestamps; same setting as
-    // the Verify/Bench sessions so plan-audit specs can read it
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  /** Pinned at 4 cores whatever the host, so partition-sensitive specs
+    * see the same plans everywhere. */
+  val cpus = 4
+  lazy val session: SparkSession = GraftSession.build(cpus)
 }

@@ -257,6 +257,19 @@ class PipelinesSpec extends SparkSpec {
       assert(spark.read.parquet(s"$base/errors").select("k").as[Long]
         .collect().toSet === Set(2L))
     } finally q.stop()
+    // a crashed-and-restarted query redelivers the same batch id: each
+    // row still lands once on its side
+    val replay = Files.createTempDirectory("graft_errch_replay").toString
+    val write = Pipelines.errorChannelBatchWrite(col("v") < 0L,
+      s"$replay/good", s"$replay/errors") _
+    val batch = Seq(Tick(1L, ts("2026-01-01 10:00:00"), 5L),
+      Tick(2L, ts("2026-01-01 10:00:01"), -1L)).toDF()
+    write(batch, 3L)
+    write(batch, 3L)
+    assert(spark.read.parquet(s"$replay/good").select("k").as[Long]
+      .collect().toSeq === Seq(1L))
+    assert(spark.read.parquet(s"$replay/errors").select("k").as[Long]
+      .collect().toSeq === Seq(2L))
   }
 
   test("K1: kafkaSink's value projection serializes the whole row as reference-shaped JSON") {

@@ -3,10 +3,10 @@ package graft.streaming.kafka
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import graft.GraftSession
 import graft.ops.Norms
 import graft.schemas.EventSchemas
 import graft.streaming.{Lifecycle, Pipelines}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
@@ -43,20 +43,15 @@ object StreamingSoak {
   def main(args: Array[String]): Unit = {
     val waves = args.headOption.map(_.toInt).getOrElse(60)
     val perWave = args.drop(1).headOption.map(_.toInt).getOrElse(10000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 8, NOT cpus: three concurrent stateful queries x 32 HDFS state
-      // partitions x sub-second triggers starved the state-store
-      // coordinator RPC on the first soak attempt (a task parked inside
-      // reportCommitToCoordinator, wedging the control plane's batch
-      // forever). The state here is small (8 markets / 8 window keys);
-      // 8 partitions is the right sizing AND avoids the pileup.
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.hostCpus()
+    val spark = GraftSession.build(cpus)
+    // 8, NOT cpus: three concurrent stateful queries x 32 HDFS state
+    // partitions x sub-second triggers starved the state-store
+    // coordinator RPC on the first soak attempt (a task parked inside
+    // reportCommitToCoordinator, wedging the control plane's batch
+    // forever). The state here is small (8 markets / 8 window keys);
+    // 8 partitions is the right sizing AND avoids the pileup.
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     import spark.implicits._
 
     // per-query trigger progress: (name, rows, triggerExecution ms)
