@@ -6,11 +6,13 @@ a number a human has to remember to divide by).
 Usage: python3 scripts/check_bench_delta.py OLD.json NEW.json [--top N]
        python3 scripts/check_bench_delta.py --git-prev NEW.json
 
-Both inputs are full-fidelity Bench artifacts (BENCH_LOCAL.json shape:
-total_sec, probe_sec, queries{name:{sec, spread, ...}}). --git-prev
-reads the committed version of NEW's path from git HEAD as OLD — the
-one-command wiring for "did this round regress against what's
-committed?".
+Both inputs are Bench artifacts (total_sec, probe_sec, sf, cpus,
+queries{name:{sec, ok, reps[]}}). --git-prev reads the committed
+version of NEW's path from git HEAD as OLD — the one-command wiring for
+"did this round regress against what's committed?".
+
+Artifacts of different (sf, cpus) are refused with exit 2: the probe
+divides out host-speed drift, not a different tier or core count.
 
 Normalization: each artifact's totals and per-query seconds are
 divided by ITS OWN probe_sec (the fixed 640M-row xxhash64 reference
@@ -24,7 +26,7 @@ Verdicts:
   - TOTAL normalized ratio > 1.15           -> FAIL (exit 1)
   - any query normalized ratio > 2.0 with
     >= 1 s absolute growth and outside both
-    artifacts' recorded rep spreads         -> FAIL (exit 1)
+    artifacts' rep spreads (median/fastest) -> FAIL (exit 1)
   - otherwise                               -> PASS (exit 0)
 
 On FAIL the prescribed escalation is the PLANS.md r19 paired A/B:
@@ -35,21 +37,31 @@ reading. A failed delta gate is a reason to MEASURE, not a reason to
 re-run until it passes.
 """
 import json
+import os
 import subprocess
 import sys
 
 
-def load(path):
-    with open(path) as fh:
-        doc = json.load(fh)
-    qs = {k: v["sec"] for k, v in doc.get("queries", {}).items()}
-    spreads = {k: v.get("spread", 1.0) for k, v in doc.get("queries", {}).items()}
+def spread(q):
+    """The reported median over the fastest rep: the old harness's
+    default-policy spread (second-fastest over fastest at 3 reps)."""
+    reps = q.get("reps")
+    if isinstance(reps, list):
+        s = sorted(reps)
+        return s[len(s) // 2] / max(s[0], 1e-9)
+    return q.get("spread", 1.0)  # artifacts from before reps were lists
+
+
+def load(text):
+    doc = json.loads(text)
+    qs = doc.get("queries", {})
     return {
-        "total": float(doc.get("total_sec", sum(qs.values()))),
+        "total": float(doc.get("total_sec", sum(v["sec"] for v in qs.values()))),
         "probe": float(doc.get("probe_sec", -1)),
-        "noisy": bool(doc.get("host_noisy", False)),
-        "qs": qs,
-        "spreads": spreads,
+        "sf": os.path.basename(os.path.normpath(doc.get("sf", "?"))),
+        "cpus": doc.get("cpus", "?"),
+        "qs": {k: v["sec"] for k, v in qs.items()},
+        "spreads": {k: spread(v) for k, v in qs.items()},
         "ts": doc.get("ts", "?"),
     }
 
@@ -66,34 +78,26 @@ def main():
                   file=sys.stderr)
             sys.exit(2)
         new_path = args[0]
-        blob = subprocess.run(
+        old = load(subprocess.run(
             ["git", "show", f"HEAD:{new_path}"],
-            capture_output=True, text=True, check=True).stdout
-        old = json.loads(blob)
-        oldqs = {k: v["sec"] for k, v in old.get("queries", {}).items()}
-        old = {"total": float(old.get("total_sec", sum(oldqs.values()))),
-               "probe": float(old.get("probe_sec", -1)),
-               "noisy": bool(old.get("host_noisy", False)),
-               "qs": oldqs,
-               "spreads": {k: v.get("spread", 1.0)
-                           for k, v in old.get("queries", {}).items()},
-               "ts": old.get("ts", "?")}
-        new = load(new_path)
-        old_name = f"HEAD:{new_path}"
-        new_name = new_path
+            capture_output=True, text=True, check=True).stdout)
+        old_name, new_name = f"HEAD:{new_path}", new_path
     else:
         if len(args) != 2:
             print("usage: check_bench_delta.py OLD.json NEW.json [--top N]\n"
                   "       check_bench_delta.py --git-prev NEW.json",
                   file=sys.stderr)
             sys.exit(2)
-        old, new = load(args[0]), load(args[1])
-        old_name, new_name = args[0], args[1]
+        old = load(open(args[0]).read())
+        old_name, new_name = args
+    new = load(open(new_name).read())
 
-    for name, art in ((old_name, old), (new_name, new)):
-        if art["noisy"]:
-            print(f"WARNING: {name} is marked host_noisy — its numbers "
-                  "carry contamination; the verdict below is advisory")
+    if (old["sf"], old["cpus"]) != (new["sf"], new["cpus"]):
+        print(f"REFUSED: {old_name} is sf={old['sf']} cpus={old['cpus']}, "
+              f"{new_name} is sf={new['sf']} cpus={new['cpus']}; the probe "
+              "cannot normalize a different tier or core count",
+              file=sys.stderr)
+        sys.exit(2)
 
     normalized = old["probe"] > 0 and new["probe"] > 0
     op = old["probe"] if normalized else 1.0

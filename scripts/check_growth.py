@@ -3,22 +3,24 @@
 (r18 verdict task 4: "the next quadratic costs a red gate, not 628 s
 of judge wall-clock").
 
-Usage: python3 scripts/check_growth.py sf10_results.jsonl
+Usage: python3 scripts/check_growth.py [--partial] SF0.1.json SF1.json sf10_results.jsonl
        python3 scripts/check_growth.py --selftest
 
-The jsonl path is REQUIRED (r19 judge finding: the old default of
+All three paths are REQUIRED (r19 judge finding: the old default of
 /tmp/sf10_results.jsonl silently produced verdicts from a stale file
-left by a previous session). Gate coverage is two-sided: every query
-in the jsonl must have lower-tier readings, and every family in
-EXPECTED_GATED (the committed run_sf10.sh default list) must appear
-in the jsonl — a rename, crash, or QUERIES-list edit cannot silently
-ungate a family in either direction.
+left by a previous session). run_sf10.sh passes the sf0.1 and sf1
+Bench artifacts at its own core count, named by Bench's (sf, cpus)
+path rule. Gate coverage is two-sided: every query in the jsonl must
+have lower-tier readings, and every family in EXPECTED_GATED (the
+committed run_sf10.sh default list) must appear in the jsonl — a
+rename, crash, or QUERIES-list edit cannot silently ungate a family in
+either direction.
 
-Reads the committed BENCH_LOCAL.json (sf0.1) and BENCH_SF1.json (sf1)
-full-fidelity artifacts plus the sf10 spot-tier jsonl (one Bench JSON
-line per query, short-code keys), fits the exponent b in t = a * n^b
-by least squares over log-log across the three decades, and FAILS
-(exit 1) any query whose fitted exponent exceeds its class bound:
+Reads the sf0.1 and sf1 Bench artifacts plus the sf10 spot-tier jsonl
+(one Bench JSON line per query, short-code keys), fits the exponent b
+in t = a * n^b by least squares over log-log across the three decades,
+and FAILS (exit 1) any query whose fitted exponent exceeds its class
+bound:
 
   connected-components family (x23/x46/x92/x94):  b <= 1.00
     (pointer-jumping is linear work times ~log n rounds; the measured
@@ -108,16 +110,23 @@ def main():
         selftest()
     partial = "--partial" in sys.argv
     paths = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if len(paths) != 1:
-        print("usage: check_growth.py [--partial] sf10_results.jsonl\n"
-              "(the path is required: a default would silently read a "
-              "stale file from a previous session)", file=sys.stderr)
+    if len(paths) != 3:
+        print("usage: check_growth.py [--partial] SF0.1.json SF1.json "
+              "sf10_results.jsonl\n(the paths are required: a default "
+              "would silently read a stale file from a previous session)",
+              file=sys.stderr)
         sys.exit(2)
-    path = paths[0]
-    with open("BENCH_LOCAL.json") as fh:
-        local = json.load(fh)["queries"]
-    with open("BENCH_SF1.json") as fh:
-        sf1 = json.load(fh)["queries"]
+    tiers = []
+    for p in paths[:2]:
+        try:
+            with open(p) as fh:
+                tiers.append(json.load(fh)["queries"])
+        except OSError as e:
+            print(f"FAIL: lower-tier artifact {p} unreadable ({e.strerror}) "
+                  "— bench that tier at this core count first")
+            sys.exit(1)
+    local, sf1 = tiers
+    path = paths[2]
     # full-name lookup by unique short code (the jsonl carries codes)
     by_code = {}
     for name in local:

@@ -1,14 +1,13 @@
 #!/bin/bash
 # Fast single-query oracle check: scripts/check_one.sh q1,q2 [sfDir]
-# Uses the classpath exported to /tmp/graft_cp.txt (sbt 'export
-# Runtime/fullClasspath' | tail -1 > /tmp/graft_cp.txt) to skip sbt.
+# Runs graft.Verify on this checkout's cached classpath
+# (scripts/classpath.sh) instead of through sbt.
 set -e
 . "$(dirname "$0")/host_size.sh"
+. "$(dirname "$0")/classpath.sh"
 QS="$1"
 SF="${2:-/root/testdata/sf0.01}"
 OUT=/tmp/graft_one
-CP=$(cat /tmp/graft_cp.txt)
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM \
   -cp "$CP" graft.Verify "$SF" "$OUT" "$QS"
 python3 - "$QS" "$SF" "$OUT" <<'EOF'

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Per-family growth exponents across the sf0.1 / sf1 / sf10 decades.
 
-Usage: python3 scripts/growth_exponents.py [BENCH_SF10.json]
+Usage: python3 scripts/growth_exponents.py SF0.1.json SF1.json SF10.json
+  e.g. the committed history: BENCH_LOCAL.json BENCH_SF1.json BENCH_SF10.json
 
-Reads the committed BENCH_LOCAL.json (sf0.1) and BENCH_SF1.json (sf1)
-plus the sf10 subset artifact, and prints per-query wall-clock growth
+Reads one Bench artifact per tier, and prints per-query wall-clock growth
 ratios and the fitted exponent b in t = a * n^b (least squares over
 log-log across the three tiers). Compute seconds only (the `sec`
 field) — the repartition(1) result dump is Verify plumbing, not plan
@@ -18,9 +18,9 @@ import json
 import math
 import sys
 
-SF10 = sys.argv[1] if len(sys.argv) > 1 else "BENCH_SF10.json"
-
-tiers = [(0.1, "BENCH_LOCAL.json"), (1.0, "BENCH_SF1.json"), (10.0, SF10)]
+if len(sys.argv) != 4:
+    sys.exit("usage: growth_exponents.py SF0.1.json SF1.json SF10.json")
+tiers = list(zip((0.1, 1.0, 10.0), sys.argv[1:]))
 data = []
 for sf, f in tiers:
     with open(f) as fh:

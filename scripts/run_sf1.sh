@@ -15,6 +15,7 @@
 set -e
 cd "$(dirname "$0")/.."
 . scripts/host_size.sh
+. scripts/classpath.sh
 SF=${SPARK_GRAFT_SF1_DIR:-/tmp/graft_sf1}
 OUT=${SPARK_GRAFT_SF1_OUT:-/tmp/graft_verify_sf1}
 FIX=${GRAFT_MEDIA_FIXTURE_DIR:-/tmp/graft_media_sf1}
@@ -24,17 +25,6 @@ if [ ! -f "$SF/documents.parquet" ]; then
   python3 scripts/make_sf1.py /root/testdata/sf0.1 "$SF"
 fi
 
-# regenerate the classpath cache unless it exists AND looks like a
-# classpath (a failed sbt would otherwise cache garbage forever: the
-# pipeline's exit status is tail's, so set -e can't catch it)
-if ! grep -q "target/scala" /tmp/graft_cp.txt 2>/dev/null; then
-  sbt -batch "export Runtime/fullClasspath" 2>/dev/null | tail -1 > /tmp/graft_cp.txt.tmp
-  grep -q "target/scala" /tmp/graft_cp.txt.tmp || {
-    echo "[sf1] classpath export failed"; rm -f /tmp/graft_cp.txt.tmp; exit 1; }
-  mv /tmp/graft_cp.txt.tmp /tmp/graft_cp.txt
-fi
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-
 QFILTER=""
 ONLY=()
 if [ $# -gt 0 ]; then
@@ -43,7 +33,7 @@ if [ $# -gt 0 ]; then
 fi
 
 GRAFT_MEDIA_UNIVERSE_DOCS=50000 GRAFT_MEDIA_FIXTURE_DIR="$FIX" \
-java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$(cat /tmp/graft_cp.txt)" \
+java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$CP" \
   graft.Verify "$SF" "$OUT" $QFILTER
 
 python3 scripts/compare_timeout.py "${ONLY[@]}" "$SF" "$OUT" \

@@ -11,6 +11,7 @@ set -e
 set -o pipefail
 cd "$(dirname "$0")/.."
 . scripts/host_size.sh
+. scripts/classpath.sh
 SF=${SPARK_GRAFT_SF10_DIR:-/tmp/graft_sf10}
 OUT=${1:-/tmp/sf10_results.jsonl}
 shift || true
@@ -21,13 +22,6 @@ if [ ! -f "$SF/documents.parquet" ] || [ -L "$SF/events.parquet" ] \
    || [ -L "$SF/lineitem.parquet" ]; then
   python3 scripts/make_sf10.py /root/testdata/sf0.1 "$SF"
 fi
-if ! grep -q "target/scala" /tmp/graft_cp.txt 2>/dev/null; then
-  sbt -batch "export Runtime/fullClasspath" 2>/dev/null | tail -1 > /tmp/graft_cp.txt.tmp
-  grep -q "target/scala" /tmp/graft_cp.txt.tmp || {
-    echo "[sf10] classpath export failed"; rm -f /tmp/graft_cp.txt.tmp; exit 1; }
-  mv /tmp/graft_cp.txt.tmp /tmp/graft_cp.txt
-fi
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 
 QUERIES=("$@")
 if [ ${#QUERIES[@]} -eq 0 ]; then
@@ -46,16 +40,15 @@ else
 fi
 
 : > "$OUT"
-# per-query FULL-fidelity artifacts (reps/spread/steal/policy — the
-# r19 verdict's evidentiary-standard gap: events-tier readings were
-# single-shot stdout lines while the doc families carried rep fields)
+# per-query full artifacts (every rep, the median, ok), so each
+# reading carries its own spread, not just the stdout line's median
 FULLDIR=${SPARK_GRAFT_SF10_FULL:-/tmp/sf10_full}
 mkdir -p "$FULLDIR"
 for q in "${QUERIES[@]}"; do
   echo "[sf10] $q ..." >&2
   SPARK_GRAFT_SF_DIR="$SF" \
   SPARK_GRAFT_BENCH_OUT="$FULLDIR/$q.json" \
-  java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$(cat /tmp/graft_cp.txt)" \
+  java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$CP" \
     graft.Bench "$q" 2>/tmp/sf10_q_err.log | grep '"metric"' >> "$OUT" \
     || echo "{\"failed\":\"$q\"}" >> "$OUT"
 done
@@ -71,7 +64,6 @@ for q in qs:
         continue
     doc = json.load(open(p))
     det = doc.get("queries", {}).get(q, {})
-    det["host_noisy"] = doc.get("host_noisy", False)
     det["probe_sec"] = doc.get("probe_sec", -1)
     out[q] = det
 with open(os.path.join(d, "detail.json"), "w") as fh:
@@ -83,13 +75,19 @@ EOF
 # assert the linear-class gen_pairs bounds (check_sf10_audit.py) —
 # wall-clock says "slow", the audit says WHICH family went quadratic
 echo "[sf10] h01 audit bounds ..." >&2
-java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$(cat /tmp/graft_cp.txt)" \
+java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM -cp "$CP" \
   graft.Verify "$SF" /tmp/graft_verify_sf10 h01_lsh_bucket_audit \
   2>/tmp/sf10_q_err.log >/dev/null
 python3 scripts/check_sf10_audit.py /tmp/graft_verify_sf10/h01_lsh_bucket_audit
 # the growth-exponent gate (r18 verdict task 4): a fitted exponent past
 # its class bound is a RED exit, not a number someone has to notice.
-# Red-teamed via `python3 scripts/check_growth.py --selftest`.
+# Red-teamed via `python3 scripts/check_growth.py --selftest`. The
+# lower tiers are the sf0.1 and sf1 artifacts at THIS core count, named
+# by Bench's (sf, cpus) path rule: readings taken at another core count
+# do not belong on one growth curve.
 echo "[sf10] growth-exponent gate ..." >&2
-python3 scripts/check_growth.py $GROWTH_MODE "$OUT"
+python3 scripts/check_growth.py $GROWTH_MODE \
+  "BENCH_sf0.1.c$SPARK_GRAFT_CPUS.json" \
+  "BENCH_$(basename "${SPARK_GRAFT_SF1_DIR:-/tmp/graft_sf1}").c$SPARK_GRAFT_CPUS.json" \
+  "$OUT"
 echo "[sf10] done -> $OUT" >&2
