@@ -5,9 +5,8 @@ gate beyond the driver's standard sf0.01 check — see PLANS.md
 "Adversarial oracle sweeps").
 
 Usage: python3 scripts/adversarial.py [sfBase]   (default sf0.001)
-Set ADVERSARIAL_JSON=<path> to also record per-sweep verdicts as a
-committed artifact (the ADVERSARIAL_r{N}.json the round bookkeeping
-expects).
+Set ADVERSARIAL_JSON=<path> to also record per-sweep verdicts in a
+JSON file.
 
 Each sweep copies sfBase and replaces ONE table family:
   docs   — 1..25-char texts (below shingle length), whitespace-collapse,

@@ -11,8 +11,8 @@ All three paths are REQUIRED (r19 judge finding: the old default of
 left by a previous session). run_sf10.sh passes the sf0.1 and sf1
 Bench artifacts at its own core count, named by Bench's (sf, cpus)
 path rule. Gate coverage is two-sided: every query in the jsonl must
-have lower-tier readings, and every family in EXPECTED_GATED (the
-committed run_sf10.sh default list) must appear in the jsonl — a
+have lower-tier readings, and every family in scripts/sf10_gated.txt
+(also run_sf10.sh's default list) must appear in the jsonl — a
 rename, crash, or QUERIES-list edit cannot silently ungate a family in
 either direction.
 
@@ -40,18 +40,15 @@ family (must be flagged) and a fabricated linear one (must pass).
 """
 import json
 import math
+import os
 import sys
 
 CC_FAMILY = {"x23", "x46", "x92", "x94"}
-# the committed gated-family set — MUST match run_sf10.sh's default
-# QUERIES list; a full-tier jsonl missing any of these is a hard FAIL
-EXPECTED_GATED = {
-    "x02", "x03", "x04", "x05", "x34", "x16", "x64",
-    "x23", "x46", "x92", "x94", "h01",
-    "j05", "w03", "a05", "s02",
-    "f01", "f02", "f03", "f04", "f05", "f06", "f07",
-    "x120", "x121",
-}
+# the gated families: run_sf10.sh's default QUERIES list reads the same
+# file, so a full-tier jsonl missing any of these is a hard FAIL
+with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "sf10_gated.txt")) as _fh:
+    EXPECTED_GATED = {name.split("_")[0] for name in _fh.read().split()}
 CC_BOUND = 1.00
 DEFAULT_BOUND = 1.15
 MIN_SF10_SEC = 1.0

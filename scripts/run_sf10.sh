@@ -25,15 +25,7 @@ fi
 
 QUERIES=("$@")
 if [ ${#QUERIES[@]} -eq 0 ]; then
-  QUERIES=(x02_minhash_lsh x03_jaccard_verify x04_simhash x05_simhash_pairs \
-           x34_winnow_overlap x16_embedding_neardup x64_semdedup_banded \
-           x23_neardup_clusters x46_keep_best x92_cluster_splits \
-           x94_cluster_spectrum h01_lsh_bucket_audit \
-           j05_range_join w03_session_window a05_book_summary \
-           s02_ws_json_roundtrip f01_price_momentum f02_volatility \
-           f03_imbalance_signal f04_whale_deltas f05_concentration_hhi \
-           f06_top_share f07_ewma \
-           x120_h264_intra_decode x121_h264_i16_decode)
+  mapfile -t QUERIES < scripts/sf10_gated.txt
   GROWTH_MODE=""        # full default list -> completeness-checked gate
 else
   GROWTH_MODE="--partial"  # explicit subset -> skip the expected-family check

@@ -48,14 +48,6 @@ final case class KeyframeStats(media_id: Long, n_samples: Long, n_idr: Long,
 final case class IdrFrameSample(media_id: Long, n_samples: Long, n_idr: Long,
                                 n_selected: Long, first_sel_idx: Long,
                                 sel_idx_checksum: Long, sel_bytes: Long)
-final case class H264Pixels(media_id: Long, n_samples: Long, n_idr: Long,
-                            n_decoded: Long, width: Long, height: Long,
-                            first_checksum: Long, frames_checksum: Long)
-final case class H264MixedPixels(media_id: Long, n_samples: Long, n_idr: Long,
-                                 n_decoded: Long, n_seam: Long,
-                                 width: Long, height: Long,
-                                 i16_checksum: Long, pcm_checksum: Long,
-                                 i4_checksum: Long, cabac_checksum: Long)
 
 /** Codec seam. PNG and WAV are decoded for real (pure-JVM
   * `javax.imageio` / `javax.sound.sampled`, no native deps): a payload
@@ -366,184 +358,6 @@ object FakeCodec {
       else slice
     }
     mp4Asset(samples)
-  }
-
-  /** PCM sample value k (bitstream order: 256 luma raster, 64 Cb,
-    * 64 Cr) of frame `f` in asset `mediaId` — shared by the encoder
-    * below and the DuckDB oracle, so a green row certifies the whole
-    * real H.264 round trip (Exp-Golomb headers + emulation-prevention
-    * escape → ISO-BMFF wrap → sample-table walk → [[H264]] bitstream
-    * decode) reproduces every sample byte exactly. */
-  def avcPcmSample(mediaId: Long, f: Int, k: Int): Int =
-    ((mediaId * 131 + f * 29 + k * 17 + 7) % 256).toInt
-
-  /** Spec-conformant intra-only H.264 mp4: every `gop`-th sample is a
-    * self-contained sync point — in-band SPS + PPS + an IDR slice of
-    * I_PCM macroblocks ([[H264.encodeIdrIPcm]]) over one 16×16 MB with
-    * [[avcPcmSample]] planes — and the samples between are opaque
-    * non-IDR slices (type-1 NALs), exactly the shape [[idrFrameSample]]
-    * selects from: only the sync points are independently decodable,
-    * and now they really do decode to pixels. */
-  def avcIntraAsset(mediaId: Long, nFrames: Int, gop: Int): Array[Byte] = {
-    require(nFrames > 0 && gop > 0)
-    def avcc(nal: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(4)
-      bb.putInt(nal.length)
-      bb.array() ++ nal
-    }
-    def opaque(i: Int): Array[Byte] = {
-      val payloadLen = 5 + ((mediaId + i) % 7).toInt
-      val body = new Array[Byte](1 + payloadLen)
-      body(0) = ((2 << 5) | 1).toByte
-      var k = 0
-      while (k < payloadLen) {
-        body(1 + k) = (((mediaId * 131 + i) * 31 + k * 7 + 1) % 251).toByte
-        k += 1
-      }
-      avcc(body)
-    }
-    val samples = (0 until nFrames).map { f =>
-      if (f % gop == 0) {
-        val y = Array.tabulate[Byte](256)(k => avcPcmSample(mediaId, f, k).toByte)
-        val cb = Array.tabulate[Byte](64)(k => avcPcmSample(mediaId, f, 256 + k).toByte)
-        val cr = Array.tabulate[Byte](64)(k => avcPcmSample(mediaId, f, 320 + k).toByte)
-        avcc(H264.encodeSps(1, 1)) ++ avcc(H264.encodePps()) ++
-          avcc(H264.encodeIdrIPcm(1, 1, f % 16, y, cb, cr))
-      } else opaque(f)
-    }
-    mp4Asset(samples)
-  }
-
-  /** Planted Intra16x16DCLevel coefficient (zigzag scan position `k`)
-    * for the mixed asset's predicted sync point — shared with the
-    * DuckDB oracle. Nonzero at every (id+k)%3==0 position (≤6 per MB,
-    * inside the verified short-codeword CAVLC region), values in
-    * {-2,-1,1,2} so trailing-one signs, regular levels, total_zeros
-    * and run_before all get exercised on every document. */
-  def i16DcLevel(mediaId: Long, k: Int): Int =
-    if ((mediaId + k) % 3 != 0) 0
-    else {
-      val v = ((mediaId * 31 + k * 7) % 4).toInt
-      if (v < 2) v - 2 else v - 1
-    }
-
-  /** Planted Intra_16x16 AC coefficient at zigzag position `k` (1..15)
-    * of luma block `blk` — shared with the DuckDB oracle. Density
-    * class by blk % 3 (sparse / medium / every-other-coefficient) so
-    * the CAVLC nC neighbor contexts of one macroblock walk through
-    * every Table 9-5 column on every document; values in {-2,-1,1,2}. */
-  def i16AcLevel(mediaId: Long, blk: Int, k: Int): Int = {
-    val hit = (blk % 3: @unchecked) match {
-      case 0 => (mediaId + blk + k) % 5 == 0
-      case 1 => (mediaId + blk + k) % 3 == 0
-      case 2 => k % 2 == 1
-    }
-    if (!hit) 0
-    else {
-      val v = ((mediaId * 29 + blk * 11 + k * 3) % 4).toInt
-      if (v < 2) v - 2 else v - 1
-    }
-  }
-
-  /** Planted Intra_4x4 prediction mode for block `blk` of the mixed
-    * asset's single-MB I_4x4 sync point — restricted to V/H/DC so the
-    * DuckDB oracle can replay the sequential reconstruction in a
-    * recursive CTE (the DECODER implements all nine §8.3.1.2 modes;
-    * H264Spec pins modes 3-8 against hand-computed arithmetic).
-    * Availability-correct by construction: the top-left block is DC,
-    * the top row never needs a top neighbor, the left column never a
-    * left one. */
-  def i4x4Mode(mediaId: Long, blk: Int): Int = {
-    val bx = H264.Blk4x(blk); val by = H264.Blk4y(blk)
-    if (blk == 0) 2
-    else if (by == 0) { if ((mediaId + blk) % 2 == 0) 1 else 2 }
-    else if (bx == 0) { if ((mediaId + blk) % 2 == 0) 0 else 2 }
-    else ((mediaId + blk) % 3).toInt
-  }
-
-  /** Planted Intra_4x4 residual coefficient at zigzag position `k`
-    * (0..15, DC included) of block `blk`; blocks with blk % 4 == 3 are
-    * dense (every even position) so neighbor nC contexts reach the
-    * [4,8) and ≥ 8 classes; values in {-2,-1,1,2}. */
-  def i4x4Level(mediaId: Long, blk: Int, k: Int): Int = {
-    val hit = (mediaId + blk * 7 + k) % 5 == 0 ||
-      (blk % 4 == 3 && k % 2 == 0)
-    if (!hit) 0
-    else {
-      val v = ((mediaId * 31 + blk * 13 + k * 7) % 4).toInt
-      if (v < 2) v - 2 else v - 1
-    }
-  }
-
-  /** Planted CABAC I_4x4 residual coefficient at zigzag position `k`
-    * (0..15) of block `blk` — the r20 seam-closure plant, distinct
-    * from [[i4x4Level]] so the CABAC class's checksum cannot be
-    * satisfied by re-reading the CAVLC sample. Block 2's DC position
-    * carries an ESCAPE level (|level| = 16 + mediaId%9 → |level|-1 >
-    * uCoff 14) so every fixture document drives the UEG0 bypass
-    * suffix; other hits stay in {-2,-1,1,2}. */
-  def cabacLevel(mediaId: Long, blk: Int, k: Int): Int =
-    if (blk == 2 && k == 0) {
-      val mag = (16 + mediaId % 9).toInt
-      if (mediaId % 2 == 1) -mag else mag
-    } else if ((mediaId + blk * 11 + k) % 4 == 0 ||
-      (blk % 4 == 1 && k % 3 == 0)) {
-      val v = ((mediaId * 37 + blk * 17 + k * 5) % 4).toInt
-      if (v < 2) v - 2 else v - 1
-    } else 0
-
-  /** Decode-class fixture (x121): five samples spanning every decode
-    * class of the [[H264]] layer —
-    *   0: SPS+PPS+IDR of ONE Intra_16x16 macroblock, DC prediction,
-    *      FULL luma residual (cbp_luma 15: [[i16DcLevel]] DC +
-    *      [[i16AcLevel]] AC whose densities walk the nC context
-    *      through every Table 9-5 column) → the predicted-MB path;
-    *   1: opaque non-IDR slice (inter frame; never decodable here);
-    *   2: SPS+PPS+IDR of I_PCM macroblocks ([[avcPcmSample]] planes)
-    *      → decodes through the PCM path;
-    *   3: SPS+PPS+IDR of ONE real I_4x4 macroblock ([[i4x4Mode]]
-    *      V/H/DC modes + [[i4x4Level]] residual) → the sub-16x16
-    *      intra-partition path (the r18 seam, now real);
-    *   4: SPS+CABAC-PPS+IDR of ONE CABAC-coded I_4x4 macroblock
-    *      ([[i4x4Mode]] modes, [[cabacLevel]] residual incl. a UEG0
-    *      escape level, mb_qp_delta = mediaId%3 - 1 → QPy 25/26/27)
-    *      → the §9.3 entropy path (the r19 seam, closed in r20).
-    * All four IDR classes decode to pixels; every checksum is exactly
-    * reproducible by arithmetic, so the oracle holds the decoder to
-    * byte-level truth across the full class taxonomy (n_seam = 0). */
-  def avcMixedAsset(mediaId: Long): Array[Byte] = {
-    def avcc(nal: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(4)
-      bb.putInt(nal.length)
-      bb.array() ++ nal
-    }
-    val i16 = avcc(H264.encodeSps(1, 1)) ++ avcc(H264.encodePps()) ++
-      avcc(H264.encodeIdrI16Ac(1, 1, 0,
-        (_, _) => Array.tabulate(16)(k => i16DcLevel(mediaId, k)),
-        (_, _, blk) => Array.tabulate(15)(k0 => i16AcLevel(mediaId, blk, k0 + 1))))
-    val opaque = {
-      val body = new Array[Byte](6)
-      body(0) = ((2 << 5) | 1).toByte
-      (1 until 6).foreach(k => body(k) = ((mediaId * 31 + k) % 251).toByte)
-      avcc(body)
-    }
-    val pcm = {
-      val y = Array.tabulate[Byte](256)(k => avcPcmSample(mediaId, 2, k).toByte)
-      val cb = Array.tabulate[Byte](64)(k => avcPcmSample(mediaId, 2, 256 + k).toByte)
-      val cr = Array.tabulate[Byte](64)(k => avcPcmSample(mediaId, 2, 320 + k).toByte)
-      avcc(H264.encodeSps(1, 1)) ++ avcc(H264.encodePps()) ++
-        avcc(H264.encodeIdrIPcm(1, 1, 2, y, cb, cr))
-    }
-    val i4x4 = avcc(H264.encodeSps(1, 1)) ++ avcc(H264.encodePps()) ++
-      avcc(H264.encodeIdrI4x4(1, 1, 3,
-        (_, _, blk) => i4x4Mode(mediaId, blk),
-        (_, _, blk) => Array.tabulate(16)(k => i4x4Level(mediaId, blk, k))))
-    val cabac = avcc(H264.encodeSps(1, 1)) ++ avcc(H264.encodePpsCabac()) ++
-      avcc(Cabac.encodeIdrI4x4(1, 1, 4,
-        (_, _, blk) => i4x4Mode(mediaId, blk),
-        (_, _, blk) => Array.tabulate(16)(k => cabacLevel(mediaId, blk, k)),
-        qpDelta = (mediaId % 3).toInt - 1))
-    mp4Asset(Seq(i16, opaque, pcm, i4x4, cabac))
   }
 
   private def isMp4(content: Array[Byte]): Boolean =
@@ -990,101 +804,6 @@ object Multimodal {
       }
     }(Encoders.product[IdrFrameSample])
   }
-
-  /** Intra H.264 pixel decode (x120): the step past [[idrFrameSample]]'s
-    * selection — for every sync-point sample, actually DECODE the IDR
-    * picture through the real [[H264]] bitstream layer (RBSP unescape,
-    * Exp-Golomb SPS/PPS/slice-header parse, §7.3.5 I_PCM macroblock
-    * read) to raw 4:2:0 planes. `n_idr` counts sync points, `n_decoded`
-    * the ones whose slices were PCM-coded and parsed clean — predicted
-    * macroblocks (CAVLC residual + intra prediction) stay the declared
-    * seam and count into the gap, observable per asset. Emits the first
-    * decoded frame's dimensions + plane checksum and a mod-P sum of all
-    * decoded frames' checksums (the oracle certifies every decoded
-    * byte, not just counts).
-    *
-    * Scale shape: partition-local mapPartitions at the codec seam,
-    * media bytes never shuffle, one 8-field row out per asset. */
-  def h264IntraDecode(ds: Dataset[MediaRow]): Dataset[H264Pixels] =
-    ds.mapPartitions { it =>
-      it.map { m =>
-        val samples =
-          if (m.meta.format == "mp4")
-            FakeCodec.mp4Samples(m.content).getOrElse(IndexedSeq.empty)
-          else IndexedSeq.empty
-        var nIdr = 0L; var nDec = 0L
-        var firstCs = -1L; var framesCs = 0L
-        var w = 0L; var h = 0L
-        samples.foreach { case (off, sz) =>
-          val bytes = java.util.Arrays.copyOfRange(
-            m.content, off.toInt, (off + sz).toInt)
-          val tps = FakeCodec.nalTypes(bytes).getOrElse(Seq.empty)
-          if (tps.contains(5)) {
-            nIdr += 1
-            H264.decodeAvccSample(bytes).foreach { fr =>
-              nDec += 1
-              var cs = 0L
-              fr.y.foreach(b => cs = (cs * 31 + (b & 0xff)) % P)
-              fr.cb.foreach(b => cs = (cs * 31 + (b & 0xff)) % P)
-              fr.cr.foreach(b => cs = (cs * 31 + (b & 0xff)) % P)
-              framesCs = (framesCs + cs) % P
-              if (firstCs < 0) { firstCs = cs; w = fr.width; h = fr.height }
-            }
-          }
-        }
-        H264Pixels(m.media_id, samples.length.toLong, nIdr, nDec, w, h,
-          math.max(firstCs, 0L), framesCs)
-      }
-    }(Encoders.product[H264Pixels])
-
-  /** x121: walk a [[FakeCodec.avcMixedAsset]]-shaped sample table and
-    * decode every IDR through the full [[H264]] layer — the first
-    * decodable sync point is the Intra_16x16 CAVLC-coded one (checksum
-    * certifies prediction + dequant + inverse transforms through every
-    * Table 9-5 nC column), the second is I_PCM, the third the real
-    * I_4x4 reconstruction, the fourth the CABAC-coded I_4x4 (§9.3
-    * arithmetic decode → the same reconstruction); `n_seam` counts
-    * IDRs that refuse, which since the r20 seam closure is ZERO — the
-    * decoder's envelope stays a pinned, oracle-checked NUMBER instead
-    * of prose. Same scale shape as [[h264IntraDecode]]:
-    * partition-local, media bytes never shuffle. */
-  def h264MixedDecode(ds: Dataset[MediaRow]): Dataset[H264MixedPixels] =
-    ds.mapPartitions { it =>
-      it.map { m =>
-        val samples =
-          if (m.meta.format == "mp4")
-            FakeCodec.mp4Samples(m.content).getOrElse(IndexedSeq.empty)
-          else IndexedSeq.empty
-        var nIdr = 0L; var nDec = 0L; var nSeam = 0L
-        var i16Cs = 0L; var pcmCs = 0L; var i4Cs = 0L; var cabacCs = 0L
-        var w = 0L; var h = 0L
-        samples.foreach { case (off, sz) =>
-          val bytes = java.util.Arrays.copyOfRange(
-            m.content, off.toInt, (off + sz).toInt)
-          val tps = FakeCodec.nalTypes(bytes).getOrElse(Seq.empty)
-          if (tps.contains(5)) {
-            nIdr += 1
-            H264.decodeAvccSample(bytes) match {
-              case Some(fr) =>
-                nDec += 1
-                var cs = 0L
-                fr.y.foreach(b => cs = (cs * 31 + (b & 0xff)) % P)
-                fr.cb.foreach(b => cs = (cs * 31 + (b & 0xff)) % P)
-                fr.cr.foreach(b => cs = (cs * 31 + (b & 0xff)) % P)
-                // decodable sync points in fixture order: Intra_16x16,
-                // I_PCM, I_4x4 (CAVLC), I_4x4 (CABAC)
-                if (nDec == 1) { i16Cs = cs; w = fr.width; h = fr.height }
-                else if (nDec == 2) pcmCs = cs
-                else if (nDec == 3) i4Cs = cs
-                else if (nDec == 4) cabacCs = cs
-              case None => nSeam += 1
-            }
-          }
-        }
-        H264MixedPixels(m.media_id, samples.length.toLong, nIdr, nDec, nSeam,
-          w, h, i16Cs, pcmCs, i4Cs, cabacCs)
-      }
-    }(Encoders.product[H264MixedPixels])
 
   /** Deterministic grayscale test pattern for the x87 image-dedup
     * corpus: pixel (y, x) of document `d`'s base image. Multiplicative

@@ -3313,255 +3313,6 @@ object ExtraQueries {
       Multimodal.idrFrameSample(media, everyK = 2).toDF()
     },
 
-    // ----- intra H.264 pixel decode: the step past x118's selection —
-    //       sync-point samples actually decode to pixels through the
-    //       real bitstream layer (I_PCM macroblocks; prediction stays
-    //       the declared seam and counts into n_idr - n_decoded)
-    QueryDef("x120_h264_intra_decode",
-      "intra-only H.264 pixel decode: synthesize a spec-conformant AVCC mp4 per doc (5 samples, every 2nd a self-contained sync point: in-band SPS+PPS+an IDR slice of I_PCM macroblocks with arithmetic-planted 4:2:0 planes; opaque non-IDR slices between), walk the real sample table, and DECODE each sync point through the real H.264 bitstream layer — RBSP emulation-prevention unescape, Exp-Golomb SPS/PPS/slice-header parse, I_PCM macroblock read — to raw planes; the oracle recomputes every decoded byte by arithmetic, no codec, so a green row certifies the whole encode->demux->bitstream-decode round trip byte-for-byte")(
-      """WITH fr AS (SELECT unnest([0, 2, 4]) AS f),
-        |pf AS (
-        |  SELECT d.doc_id, fr.f,
-        |    list_reduce(
-        |      list_prepend(CAST(0 AS BIGINT),
-        |        list_transform(range(0, 384),
-        |          k -> (d.doc_id * 131 + fr.f * 29 + k * 17 + 7) % 256)),
-        |      (a, b) -> (a * 31 + b) % 1000000007) AS cs
-        |  FROM documents d CROSS JOIN fr)
-        |SELECT doc_id AS media_id, CAST(5 AS BIGINT) AS n_samples,
-        |  CAST(3 AS BIGINT) AS n_idr, CAST(3 AS BIGINT) AS n_decoded,
-        |  CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-        |  CAST(max(CASE WHEN f = 0 THEN cs END) AS BIGINT) AS first_checksum,
-        |  CAST(sum(cs) % 1000000007 AS BIGINT) AS frames_checksum
-        |FROM pf GROUP BY doc_id
-        |""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      import graft.multimodal.{FakeCodec, MediaMeta, MediaRow, Multimodal}
-      // conditional spread before the per-row synthesis + decode (guide
-      // §2.5): the doc-id scan is one split at the committed fixture
-      // sizes, and without it the whole decode runs on one task
-      val media = graft.ops.Spread.toCores(
-          Tables.documents(s, dir).select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => MediaRow(id, "video",
-          FakeCodec.avcIntraAsset(id, nFrames = 5, gop = 2),
-          MediaMeta("mp4", 0, 0))))
-      Multimodal.h264IntraDecode(media).toDF()
-    },
-
-    // ----- H.264 full-taxonomy decode: x120's layer extended past I_PCM —
-    //       CAVLC Intra_16x16, I_PCM, CAVLC I_4x4 AND CABAC I_4x4 sync
-    //       points ALL decode through real prediction + dequant +
-    //       inverse transforms (the CABAC one through the §9.3
-    //       arithmetic engine); n_seam — still an oracle-pinned
-    //       NUMBER — is now 0
-    QueryDef("x121_h264_i16_decode",
-      "H.264 full-taxonomy decode: per doc a 5-sample mp4 spanning every decode class — an Intra_16x16 IDR with FULL luma residual (cbp_luma 15: DC Hadamard path + per-block AC whose densities walk the CAVLC nC context through every Table 9-5 column), an opaque inter frame, an I_PCM IDR, a CAVLC I_4x4 IDR (per-block V/H/DC prediction modes, 16-coefficient residuals, sequential in-MB reconstruction) and a CABAC I_4x4 IDR (ITU-T §9.3 arithmetic decode: context-modeled significance maps, UEG0 escape levels, mb_qp_delta shifting QPy to 25/26/27 per doc); ALL FOUR IDR classes decode to pixels (checksums = prediction + dequant + inverse-transform arithmetic, byte-for-byte — both I_4x4 classes replayed by 16-step recursive CTEs, the CABAC one at its per-doc QP scale row) → n_seam = 0 — the oracle recomputes every decoded byte AND the class taxonomy by arithmetic, no codec")(
-      """WITH RECURSIVE ids AS (SELECT doc_id AS d FROM documents),
-        |-- ---- Intra_16x16 DC path (planted zigzag DC levels -> Hadamard)
-        |lv AS (SELECT d, k,
-        |         CASE WHEN (d + k) % 3 = 0 THEN
-        |           CASE WHEN (d*31 + k*7) % 4 < 2 THEN (d*31 + k*7) % 4 - 2
-        |                ELSE (d*31 + k*7) % 4 - 1 END
-        |         ELSE 0 END AS lvl
-        |       FROM ids, range(0,16) rk(k)),
-        |-- zigzag scatter: c in 4x4 raster order
-        |cl AS (SELECT d, list(lvl ORDER BY [0,1,4,8,5,2,3,6,9,12,13,10,7,11,14,15][k+1]) AS c
-        |       FROM lv GROUP BY d),
-        |-- f = A * c * A (4x4 Hadamard, entries +-1)
-        |f AS (SELECT cl.d, i.i, j.j,
-        |        sum([1,1,1,1, 1,1,-1,-1, 1,-1,-1,1, 1,-1,1,-1][i.i*4 + u.u + 1]
-        |          * c[u.u*4 + v.v + 1]
-        |          * [1,1,1,1, 1,1,-1,-1, 1,-1,-1,1, 1,-1,1,-1][v.v*4 + j.j + 1]) AS f
-        |      FROM cl, range(0,4) i(i), range(0,4) j(j),
-        |           range(0,4) u(u), range(0,4) v(v)
-        |      GROUP BY cl.d, i.i, j.j),
-        |-- dc = (f*16*13 + 2) >> 2 (QP 26); arithmetic >> is FLOOR division
-        |-- and DuckDB // truncates, so shifts use the floor-div idiom
-        |dcv AS (SELECT d, i, j,
-        |          (f*208 + 2 - (((f*208 + 2) % 4) + 4) % 4) // 4 AS dc
-        |        FROM f),
-        |-- ---- per-block dequantized coefficient lists, raster order.
-        |-- Position scales at QP 26: 208/320/256 by (row,col) parity.
-        |-- i16 blocks: position 0 carries the Hadamard-path DC; AC from
-        |-- the i16AcLevel plant (zigzag k=1..15, density class blk%3).
-        |i16rows AS (
-        |  SELECT i.d, rb.b, rk.k,
-        |    [0,1,4,8,5,2,3,6,9,12,13,10,7,11,14,15][rk.k+1] AS r,
-        |    CASE WHEN rk.k = 0 THEN 0 ELSE
-        |      [208,256,208,256,256,320,256,320,208,256,208,256,256,320,256,320]
-        |        [[0,1,4,8,5,2,3,6,9,12,13,10,7,11,14,15][rk.k+1] + 1]
-        |      * (CASE WHEN (CASE WHEN rb.b % 3 = 0 THEN CASE WHEN (i.d + rb.b + rk.k) % 5 = 0 THEN 1 ELSE 0 END
-        |                    WHEN rb.b % 3 = 1 THEN CASE WHEN (i.d + rb.b + rk.k) % 3 = 0 THEN 1 ELSE 0 END
-        |                    ELSE rk.k % 2 END) = 1
-        |         THEN CASE WHEN (i.d*29 + rb.b*11 + rk.k*3) % 4 < 2
-        |                   THEN (i.d*29 + rb.b*11 + rk.k*3) % 4 - 2
-        |                   ELSE (i.d*29 + rb.b*11 + rk.k*3) % 4 - 1 END
-        |         ELSE 0 END) END AS dv
-        |  FROM ids i, range(0,16) rb(b), range(0,16) rk(k)),
-        |i16dl AS (
-        |  SELECT w.d, w.b,
-        |    list(CASE WHEN w.r = 0 THEN v.dc ELSE w.dv END ORDER BY w.r) AS dl
-        |  FROM i16rows w JOIN dcv v ON v.d = w.d
-        |    AND v.i = [0,0,1,1,0,0,1,1,2,2,3,3,2,2,3,3][w.b+1]
-        |    AND v.j = [0,1,0,1,2,3,2,3,0,1,0,1,2,3,2,3][w.b+1]
-        |  GROUP BY w.d, w.b),
-        |-- i4 blocks: all 16 zigzag positions from the i4x4Level plant
-        |-- (dense every-even-position blocks at blk%4==3)
-        |i4rows AS (
-        |  SELECT i.d, rb.b, rk.k,
-        |    [0,1,4,8,5,2,3,6,9,12,13,10,7,11,14,15][rk.k+1] AS r,
-        |    [208,256,208,256,256,320,256,320,208,256,208,256,256,320,256,320]
-        |      [[0,1,4,8,5,2,3,6,9,12,13,10,7,11,14,15][rk.k+1] + 1]
-        |    * (CASE WHEN (i.d + rb.b*7 + rk.k) % 5 = 0
-        |              OR (rb.b % 4 = 3 AND rk.k % 2 = 0)
-        |       THEN CASE WHEN (i.d*31 + rb.b*13 + rk.k*7) % 4 < 2
-        |                 THEN (i.d*31 + rb.b*13 + rk.k*7) % 4 - 2
-        |                 ELSE (i.d*31 + rb.b*13 + rk.k*7) % 4 - 1 END
-        |       ELSE 0 END) AS dv
-        |  FROM ids i, range(0,16) rb(b), range(0,16) rk(k)),
-        |i4dl AS (SELECT d, b, list(dv ORDER BY r) AS dl
-        |         FROM i4rows GROUP BY d, b),
-        |-- cabac class (fam 2): the cabacLevel plant — block 2 position 0
-        |-- carries a UEG0 escape level (|lvl| = 16 + d%9), other hits in
-        |-- {-2,-1,1,2} — dequantized at the PER-DOC QP scale row:
-        |-- mb_qp_delta = d%3 - 1 -> QPy in {25,26,27} -> qp%6 in {1,2,3}
-        |-- -> 16*normAdjust rows (176/288/224), (208/320/256), (224/368/288)
-        |cabrows AS (
-        |  SELECT i.d, rb.b, rk.k,
-        |    [0,1,4,8,5,2,3,6,9,12,13,10,7,11,14,15][rk.k+1] AS r,
-        |    [[176,224,176,224,224,288,224,288,176,224,176,224,224,288,224,288],
-        |     [208,256,208,256,256,320,256,320,208,256,208,256,256,320,256,320],
-        |     [224,288,224,288,288,368,288,368,224,288,224,288,288,368,288,368]]
-        |      [(i.d % 3) + 1]
-        |      [[0,1,4,8,5,2,3,6,9,12,13,10,7,11,14,15][rk.k+1] + 1]
-        |    * (CASE WHEN rb.b = 2 AND rk.k = 0
-        |         THEN (16 + i.d % 9) * (CASE WHEN i.d % 2 = 1 THEN -1 ELSE 1 END)
-        |       WHEN (i.d + rb.b*11 + rk.k) % 4 = 0
-        |              OR (rb.b % 4 = 1 AND rk.k % 3 = 0)
-        |         THEN CASE WHEN (i.d*37 + rb.b*17 + rk.k*5) % 4 < 2
-        |                   THEN (i.d*37 + rb.b*17 + rk.k*5) % 4 - 2
-        |                   ELSE (i.d*37 + rb.b*17 + rk.k*5) % 4 - 1 END
-        |       ELSE 0 END) AS dv
-        |  FROM ids i, range(0,16) rb(b), range(0,16) rk(k)),
-        |cabdl AS (SELECT d, b, list(dv ORDER BY r) AS dl
-        |          FROM cabrows GROUP BY d, b),
-        |-- ---- shared 8.5.12 inverse core transform + (g+32)>>6 residual.
-        |-- Every halved entry is even by construction (AC = level *
-        |-- even scale; the possibly-odd Hadamard DC sits at position 0,
-        |-- which the butterflies never halve), so // is exact there.
-        |alldl AS (
-        |  SELECT 0 AS fam, d, b, dl FROM i16dl
-        |  UNION ALL SELECT 1, d, b, dl FROM i4dl
-        |  UNION ALL SELECT 2, d, b, dl FROM cabdl),
-        |el AS (SELECT fam, d, b,
-        |  flatten([[ (dl[i*4+1]+dl[i*4+3]) + (dl[i*4+2] + dl[i*4+4]//2),
-        |             (dl[i*4+1]-dl[i*4+3]) + (dl[i*4+2]//2 - dl[i*4+4]),
-        |             (dl[i*4+1]-dl[i*4+3]) - (dl[i*4+2]//2 - dl[i*4+4]),
-        |             (dl[i*4+1]+dl[i*4+3]) - (dl[i*4+2] + dl[i*4+4]//2)]
-        |           FOR i IN range(0,4)]) AS e
-        |  FROM alldl),
-        |rl AS (SELECT fam, d, b,
-        |  [CASE (k//4)
-        |     WHEN 0 THEN ((e[k%4+1]+e[k%4+9]) + (e[k%4+5] + e[k%4+13]//2) + 32
-        |       - ((((e[k%4+1]+e[k%4+9]) + (e[k%4+5] + e[k%4+13]//2) + 32) % 64) + 64) % 64) // 64
-        |     WHEN 1 THEN ((e[k%4+1]-e[k%4+9]) + (e[k%4+5]//2 - e[k%4+13]) + 32
-        |       - ((((e[k%4+1]-e[k%4+9]) + (e[k%4+5]//2 - e[k%4+13]) + 32) % 64) + 64) % 64) // 64
-        |     WHEN 2 THEN ((e[k%4+1]-e[k%4+9]) - (e[k%4+5]//2 - e[k%4+13]) + 32
-        |       - ((((e[k%4+1]-e[k%4+9]) - (e[k%4+5]//2 - e[k%4+13]) + 32) % 64) + 64) % 64) // 64
-        |     ELSE ((e[k%4+1]+e[k%4+9]) - (e[k%4+5] + e[k%4+13]//2) + 32
-        |       - ((((e[k%4+1]+e[k%4+9]) - (e[k%4+5] + e[k%4+13]//2) + 32) % 64) + 64) % 64) // 64
-        |   END FOR k IN range(0,16)] AS resid
-        |  FROM el),
-        |-- ---- Intra_16x16 pixels: DC prediction with no neighbors = 128
-        |i16p AS (SELECT d, list(resid ORDER BY b) AS rb
-        |         FROM rl WHERE fam = 0 GROUP BY d),
-        |cs1 AS (SELECT d, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          [CAST(least(greatest(128 +
-        |             rb[[0,1,4,5,2,3,6,7,8,9,12,13,10,11,14,15]
-        |                  [((k//16)//4)*4 + ((k%16)//4) + 1] + 1]
-        |               [((k//16)%4)*4 + ((k%16)%4) + 1], 0), 255) AS BIGINT)
-        |           FOR k IN range(0,256)]
-        |          || [CAST(128 AS BIGINT) FOR k IN range(0,128)]),
-        |          (a, b) -> (a * 31 + b) % 1000000007) AS i16cs
-        |        FROM i16p),
-        |-- ---- I_4x4: sequential 6.4.3 reconstruction as a 16-step
-        |-- recursion; prediction (V/H/DC by the i4x4Mode plant) reads
-        |-- the already-reconstructed pixel state
-        |i4rec AS (
-        |  SELECT d, f.fam, 0 AS step,
-        |         [CAST(0 AS BIGINT) FOR k IN range(0,256)] AS pix
-        |  FROM ids, (SELECT unnest([1, 2]) AS fam) f
-        |  UNION ALL
-        |  SELECT d, fam, step + 1,
-        |    [CASE WHEN (k//16)//4 = by AND (k%16)//4 = bx
-        |       THEN least(greatest(
-        |         CASE md
-        |           WHEN 0 THEN pix[(by*4 - 1)*16 + (k%16) + 1]
-        |           WHEN 1 THEN pix[(k//16)*16 + bx*4]
-        |           ELSE dcval END
-        |         + resid[((k//16)%4)*4 + (k%16)%4 + 1], 0), 255)
-        |       ELSE pix[k+1] END FOR k IN range(0,256)] AS pix
-        |  FROM (
-        |    SELECT q.*, r.resid,
-        |      CASE WHEN q.by > 0 AND q.bx > 0 THEN (q.st + q.sl + 4)//8
-        |           WHEN q.by > 0 THEN (q.st + 2)//4
-        |           WHEN q.bx > 0 THEN (q.sl + 2)//4
-        |           ELSE 128 END AS dcval
-        |    FROM (
-        |      SELECT d, fam, step, pix, bx, by,
-        |        CASE WHEN step = 0 THEN 2
-        |             WHEN by = 0 THEN CASE WHEN (d + step) % 2 = 0 THEN 1 ELSE 2 END
-        |             WHEN bx = 0 THEN CASE WHEN (d + step) % 2 = 0 THEN 0 ELSE 2 END
-        |             ELSE (d + step) % 3 END AS md,
-        |        CASE WHEN by > 0 THEN
-        |          list_sum([pix[(by*4 - 1)*16 + bx*4 + i + 1] FOR i IN range(0,4)])
-        |        ELSE 0 END AS st,
-        |        CASE WHEN bx > 0 THEN
-        |          list_sum([pix[(by*4 + i)*16 + bx*4] FOR i IN range(0,4)])
-        |        ELSE 0 END AS sl
-        |      FROM (
-        |        SELECT d, fam, step, pix,
-        |          [0,1,0,1,2,3,2,3,0,1,0,1,2,3,2,3][step+1] AS bx,
-        |          [0,0,1,1,0,0,1,1,2,2,3,3,2,2,3,3][step+1] AS by
-        |        FROM i4rec WHERE step < 16) q0) q
-        |    JOIN rl r ON r.fam = q.fam AND r.d = q.d AND r.b = q.step) z),
-        |cs4 AS (SELECT d, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          [CAST(pix[k+1] AS BIGINT) FOR k IN range(0,256)]
-        |          || [CAST(128 AS BIGINT) FOR k IN range(0,128)]),
-        |          (a, b) -> (a * 31 + b) % 1000000007) AS i4cs
-        |        FROM i4rec WHERE step = 16 AND fam = 1),
-        |cs5 AS (SELECT d, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          [CAST(pix[k+1] AS BIGINT) FOR k IN range(0,256)]
-        |          || [CAST(128 AS BIGINT) FOR k IN range(0,128)]),
-        |          (a, b) -> (a * 31 + b) % 1000000007) AS cabcs
-        |        FROM i4rec WHERE step = 16 AND fam = 2),
-        |pc AS (SELECT d, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |         [CAST((d*131 + 58 + k*17 + 7) % 256 AS BIGINT) FOR k IN range(0,384)]),
-        |         (a, b) -> (a * 31 + b) % 1000000007) AS pcmcs
-        |       FROM ids)
-        |SELECT c1.d AS media_id, CAST(5 AS BIGINT) AS n_samples,
-        |  CAST(4 AS BIGINT) AS n_idr, CAST(4 AS BIGINT) AS n_decoded,
-        |  CAST(0 AS BIGINT) AS n_seam,
-        |  CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-        |  CAST(c1.i16cs AS BIGINT) AS i16_checksum,
-        |  CAST(p.pcmcs AS BIGINT) AS pcm_checksum,
-        |  CAST(c4.i4cs AS BIGINT) AS i4_checksum,
-        |  CAST(c5.cabcs AS BIGINT) AS cabac_checksum
-        |FROM cs1 c1 JOIN pc p ON c1.d = p.d JOIN cs4 c4 ON c4.d = c1.d
-        |  JOIN cs5 c5 ON c5.d = c1.d
-        |""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      import graft.multimodal.{FakeCodec, MediaMeta, MediaRow, Multimodal}
-      // conditional spread before the per-row synthesis + decode (guide
-      // §2.5): the doc-id scan is one split at the committed fixture
-      // sizes, and without it the whole decode runs on one task
-      val media = graft.ops.Spread.toCores(
-          Tables.documents(s, dir).select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => MediaRow(id, "video",
-          FakeCodec.avcMixedAsset(id), MediaMeta("mp4", 0, 0))))
-      Multimodal.h264MixedDecode(media).toDF()
-    },
-
     // ----- exact longest-substring decontam via a generalized suffix
     //       automaton over the benchmark (Lee et al. exact-substring at
     //       token grain) — what fixed 8-gram coverage dilutes at

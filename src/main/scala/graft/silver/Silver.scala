@@ -240,11 +240,13 @@ object Silver {
     // have been folded into n_rows instead of counted as a novel key —
     // the struct marker cannot collide with any payload). The counted
     // table is days x keys — cacheable at any scale — and is persisted
-    // EAGERLY because two tiny consumers below would otherwise race the
-    // whole pass back into existence. CACHE LIFETIME: the persist is
-    // read by the returned lazy frame, so it cannot unpersist here —
-    // callers clear it after consuming the result (Verify/Bench
-    // clearCache per query; the Dedup class-level contract).
+    // so the consumers below share one aggregation pass. The persist is
+    // lazy: the first scan of it fills the cache (each cached partition
+    // is computed once), so building this frame starts no Spark job.
+    // CACHE LIFETIME: the persist is read by the returned lazy frame,
+    // so it cannot unpersist here — callers clear it after consuming the
+    // result (Verify/Bench clearCache per query; the Dedup class-level
+    // contract).
     val keyStruct = "array<struct<r:boolean,key:string>>"
     val counted = bronze
       .select(bucket.as("bucket"),
@@ -258,7 +260,6 @@ object Silver {
       .groupBy(col("bucket"), col("k.r").as("r"), col("k.key").as("key"))
       .agg(count(lit(1)).as("n"))
       .persist()
-    counted.count()
     val totals = counted.filter(col("r"))
       .select(col("bucket"), col("n").as("n_rows"))
     val present = counted.filter(!col("r"))

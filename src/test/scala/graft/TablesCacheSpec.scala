@@ -2,10 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,30 +17,6 @@ class TablesCacheSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_tables").toString
     write(df, dir)
     dir
-  }
-
-  /** `body`'s result and the Spark jobs it started (resolving a parquet
-    * path runs one schema-inference job). Jobs are counted by a job group
-    * set on this thread; threads started inside `body` inherit it. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-cache-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesCacheSpec")
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("a second read of a table launches no Spark job") {

@@ -173,4 +173,15 @@ class SilverSpec extends SparkSpec {
       (2, "b", "expected", 0L, 2L, true),
       (2, "c", "novel", 1L, 2L, true)))
   }
+
+  test("building keyArrival starts no Spark job") {
+    val rows = Seq((1, """{"a": 1}"""), (2, "not json")).toDF("bucket", "payload")
+    val (df, jobs) = jobsDuring(
+      Silver.keyArrival(rows, col("payload"), col("bucket"), Seq("a")))
+    assert(jobs === 0)
+    val got = df.select("bucket", "n_present", "n_rows").as[(Int, Long, Long)]
+      .collect().toSet
+    assert(got === Set((1, 1L, 1L), (2, 0L, 1L)))
+    spark.catalog.clearCache()
+  }
 }
