@@ -37,6 +37,9 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# the checkout this script belongs to (scripts/..), wherever it lives
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 LANGS = ["en", "de", "fr", "es", "zh"]
 
@@ -309,7 +312,7 @@ def main():
         out_dir = f"/tmp/graft_adv_out_{name}"
         r = subprocess.run(
             ["python3", "scripts/compare.py", d, out_dir],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=CHECKOUT)
         tail = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "(no output)"
         ok = r.returncode == 0
         if ok and name in post_checks:

@@ -14,6 +14,9 @@ import json, os, subprocess, sys
 import duckdb
 import pyarrow.parquet as pq
 
+# the checkout this script belongs to (scripts/..), wherever it lives
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -34,7 +37,7 @@ if not SKIP_SBT:
         cmd = ["java"] + opts + ["-cp", cp, "graft.Verify", SF_DIR, OUT]
     else:
         cmd = ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}']
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=CHECKOUT)
     sys.stdout.write(r.stdout[-3000:] if len(r.stdout) > 3000 else r.stdout)
     if r.returncode != 0:
         print(r.stderr[-3000:])

@@ -14,21 +14,21 @@ import org.apache.spark.sql.types._
   *     keys before the single shuffle; no raw text ever shuffles.
   *   - near-dup NEVER does an all-pairs join. MinHash signatures are
   *     per-row narrow work; the LSH band explode multiplies rows by the
-  *     (small, constant) band count; candidate generation is an equi-join
-  *     on (band_id, band_key) — i.e. a shuffle whose key cardinality
-  *     grows with the corpus, so bucket sizes stay bounded and skew is
-  *     governed by real duplicate clusters, exactly the rows we want
-  *     co-located. Exact Jaccard runs only on candidate pairs.
+  *     (small, constant) band count; candidate generation groups the
+  *     band rows by (band_id, band_key) — one shuffle whose key
+  *     cardinality grows with the corpus, so bucket sizes stay bounded
+  *     and skew is governed by real duplicate clusters, exactly the rows
+  *     we want co-located — and expands each bucket into its pairs
+  *     ([[bucketPairs]]). Exact Jaccard runs only on candidate pairs.
   *   - SimHash pairs band a 64-bit fingerprint Manku-style (4×16-bit
   *     bands; Hamming ≤ 3 guarantees an exact match on ≥ 1 band) so
-  *     candidate generation is the same bounded-bucket equi-join shape
-  *     as MinHash banding — never a constant-way partition of the space.
+  *     candidate generation is the same bounded-bucket shape as MinHash
+  *     banding — never a constant-way partition of the space.
   *
-  * CACHE LIFETIME CONTRACT: pair-generating operators persist() their
-  * staged fingerprints because both sides of the candidate self-join
-  * read them (Spark has no cross-join codegen CSE). The cache must stay
-  * live until the RETURNED (lazy) DataFrame has been consumed, so these
-  * methods cannot unpersist internally; in a long-lived session, call
+  * CACHE LIFETIME CONTRACT: operators that persist() a staged frame
+  * several plan branches read (lshBucketAudit's normalized text) must
+  * keep the cache live until the RETURNED (lazy) DataFrame has been
+  * consumed, so they cannot unpersist internally; in a long-lived session, call
   * `spark.catalog.clearCache()` (or unpersist the returned frame's
   * cached children) after consuming the result — graft's Verify/Bench
   * mains do exactly that per query.
@@ -80,79 +80,75 @@ object Dedup {
           get(sig, lit(b * rows + r)).cast(StringType)): _*).as("band_key"))
     }: _*)
 
-  /** Candidate pairs from bucket membership in ONE pass (r20): group the
-    * exploded (key..., doc_id) relation by its bucket key, collect each
-    * bucket's member ids, and emit every a < b combination via two
-    * generators. Replaces the former persist + equi-self-join shape: the
-    * upstream fingerprint pipeline is computed ONCE (the self-join's two
-    * AQE-scheduled sides raced on the cold cache and duplicated the whole
-    * banding pass — measured as twin multi-second stages plus
-    * "Block already exists" churn), and the bucket rows cross the network
-    * once instead of twice. The emitted pair mass is exactly the
-    * Σ pop·(pop−1)/2 the h01 audit bounds — identical to what the join
-    * emitted, so the audit's model is unchanged. Null keys cannot pair
-    * (equi-join semantics) and are filtered before grouping.
+  /** The one bucket→pairs primitive every LSH family pairs through:
+    * group the keyed rows by their bucket key, collect each bucket's
+    * `member` values, and emit every a < b combination (ordered by
+    * `idOf(member)`) via two generators, as columns `names`. Buckets of
+    * 2..cap members pair; a singleton yields nothing and is dropped
+    * before the double explode. Null keys cannot pair (equi-join
+    * semantics) and are filtered before grouping. Callers keep only
+    * their own tail (minhash: distinct; Hamming: exact-distance filter
+    * then distinct; winnow: shared-count gate).
     *
-    * CAP BEFORE COLLECT (r21): when a cap is declared, the collect is
-    * [[graft.plans.CappedCollectList]] with limit = cap + 1 — the
+    * ONE PASS (r20): replaces the former persist + equi-self-join
+    * shape. The upstream fingerprint pipeline is computed ONCE (the
+    * self-join's two AQE-scheduled sides raced on the cold cache and
+    * duplicated the whole banding pass — measured as twin multi-second
+    * stages plus "Block already exists" churn), and the bucket rows
+    * cross the network once instead of twice. The emitted pair mass is
+    * exactly the Σ pop·(pop−1)/2 the h01 audit bounds.
+    *
+    * CAP BEFORE COLLECT (r21): with a cap the collect is
+    * [[graft.plans.CappedCollectList]] at limit cap + 1 — the
     * aggregation BUFFER is bounded at cap + 1 elements by construction,
     * so no degenerate bucket can build an oversized array at any scale;
-    * buckets whose population is ≤ cap collect completely (output
-    * identical to collect_list) and over-cap buckets arrive truncated
-    * at cap + 1, which the size filter drops before their (partition-
-    * order-dependent) truncated content can reach the output. Two
-    * rejected forms, both measured at sf10 (~10⁷ exploded rows): a
-    * count window riding the collect's exchange buffers every bucket
-    * group through ExternalAppendOnlyUnsafeRowArray's 4096-row spill
-    * threshold (x34 13.1 s → 107 s, x03 14.4 s → 48 s); a pre-count +
-    * key semi-join pays a second pass plus a sort-merge join of the
-    * full exploded stream (x34 ~74 s). This form keeps the r20 single
-    * hash aggregation — no sort, no join, no second pass. Without a
-    * cap (the declared LSH candidate semantics of
-    * [[minhashCandidates]] — every bucket pairs), plain collect_list
-    * runs and a degenerate hot bucket still becomes one pop-sized
-    * array row: bounded only by the corpus's duplicate structure.
-    * Callers that can declare a cap (mirrored in their oracle) should
-    * pass one; h01's max_pop audit row is the standing early-warning
-    * for this exact shape. */
-  private def bucketPairs(keyed: DataFrame, keyCols: Seq[String],
-                          maxBucket: Option[Long] = None): DataFrame = {
-    maxBucket.foreach(cap =>
-      require(cap > 1, s"maxBucket must exceed 1, got $cap"))
+    * buckets of ≤ cap members collect completely (output identical to
+    * collect_list) and over-cap buckets arrive truncated at cap + 1,
+    * which the size filter drops before their (partition-order-
+    * dependent) truncated content can reach the output. Two rejected
+    * forms, both measured at sf10 (~10⁷ exploded rows): a count window
+    * riding the collect's exchange buffers every bucket group through
+    * ExternalAppendOnlyUnsafeRowArray's 4096-row spill threshold (x34
+    * 13.1 s → 107 s, x03 14.4 s → 48 s); a pre-count + key semi-join
+    * pays a second pass plus a sort-merge join of the full exploded
+    * stream (x34 ~74 s). This form keeps the single hash aggregation —
+    * no sort, no join, no second pass. Without a cap plain collect_list
+    * runs and a degenerate hot bucket still becomes one pop-sized array
+    * row, bounded only by the corpus's duplicate structure; h01's
+    * max_pop audit row is the standing early-warning for this shape. A
+    * cap is a DECLARED semantic: mirror it in the caller's oracle. */
+  private def bucketPairs(keyed: DataFrame, keyCols: Seq[String], member: Column,
+                          maxBucket: Option[Long],
+                          names: (String, String) = ("doc_a", "doc_b"),
+                          idOf: Column => Column = identity): DataFrame = {
+    maxBucket.foreach(cap => require(cap > 1 && cap < Int.MaxValue,
+      s"bucket cap must be in (1, Int.MaxValue), got $cap"))
+    val (a, b) = names
+    val collected = maxBucket match {
+      case Some(cap) => graft.plans.functions.capped_collect(member, (cap + 1).toInt)
+      case None => collect_list(member)
+    }
     keyed
       .filter(keyCols.map(c => col(c).isNotNull).reduce(_ && _))
       .groupBy(keyCols.map(col): _*)
-      .agg(cappedIds(col("doc_id"), maxBucket).as("_ids"))
-      .filter(size(col("_ids")) > 1 &&
-        maxBucket.map(cap => size(col("_ids")) <= cap).getOrElse(lit(true)))
-      .select(explode(col("_ids")).as("doc_a"), col("_ids"))
-      .select(col("doc_a"), explode(col("_ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
+      .agg(collected.as("_ids"))
+      .filter(maxBucket.fold(size(col("_ids")) > 1)(size(col("_ids")).between(2, _)))
+      .select(explode(col("_ids")).as(a), col("_ids"))
+      .select(col(a), explode(col("_ids")).as(b))
+      .filter(idOf(col(a)) < idOf(col(b)))
   }
 
-  /** The cap-before-collect collector: bounded-buffer capped collect at
-    * cap + 1 when a cap is declared, plain collect_list otherwise. */
-  private def cappedIds(c: Column, maxBucket: Option[Long]): Column =
-    maxBucket match {
-      case Some(cap) =>
-        require(cap < Int.MaxValue, s"bucket cap $cap exceeds array bounds")
-        graft.plans.functions.capped_collect(c, (cap + 1).toInt)
-      case None => collect_list(c)
-    }
-
-  /** Shared banding pipeline: norm → shingles → signature → exploded
-    * (band_id, band_key) rows. */
-  private def bandedKeys(docs: DataFrame, id: Column, text: Column,
-                         k: Int, nHashes: Int,
-                         bands: Int, rows: Int): DataFrame =
-    spread(docs)
-      .select(id.as("doc_id"), TextOps.norm(text).as("_t"))
-      .select(col("doc_id"), shingleHashes(col("_t"), k).as("_hs"))
-      .select(col("doc_id"), minhashSignature(col("_hs"), nHashes).as("_sig"))
-      .select(col("doc_id"), explode(lshBands(col("_sig"), bands, rows)).as("b"))
-      .select(col("doc_id"), col("b.band_id"), col("b.band_key"))
+  /** The one MinHash band-row stage: shingle hashes `hs` → signature →
+    * exploded (band_id, band_key) rows, the `carry` columns (evaluated
+    * over `df`, then referenced by name) carried through every step. */
+  private[graft] def minhashBandRows(df: DataFrame, hs: Column, carry: Seq[Column],
+                                     nHashes: Int = 12, bands: Int = 3,
+                                     rows: Int = 4): DataFrame = {
+    val sig = df.select(carry :+ minhashSignature(hs, nHashes).as("_sig"): _*)
+    val kept = sig.columns.init.toSeq.map(col)
+    sig.select(kept :+ explode(lshBands(col("_sig"), bands, rows)).as("b"): _*)
+      .select(kept ++ Seq(col("b.band_id"), col("b.band_key")): _*)
+  }
 
   /** Near-dup candidate pairs via banded MinHash-LSH. Input: (id, text).
     * Output: distinct (doc_a, doc_b) with doc_a < doc_b.
@@ -167,17 +163,23 @@ object Dedup {
     *
     * `maxBucket` (default None — every bucket pairs, the declared LSH
     * semantics of all current callers): buckets past the cap are dropped
-    * BEFORE their member list is materialized ([[bucketPairs]]'s
-    * cap-before-collect) — the boilerplate-hot-bucket valve for corpora
-    * where one band key captures a corpus fraction. A cap is a DECLARED
-    * semantic: mirror it in the caller's oracle exactly like
-    * [[winnowOverlapPairs]]' maxDf. */
+    * before their member list is materialized ([[bucketPairs]]). */
   def minhashCandidates(docs: DataFrame, id: Column, text: Column,
                         k: Int = 7, nHashes: Int = 12,
                         bands: Int = 3, rows: Int = 4,
                         maxBucket: Option[Long] = None): DataFrame =
-    bucketPairs(bandedKeys(docs, id, text, k, nHashes, bands, rows),
-      Seq("band_id", "band_key"), maxBucket)
+    minhashPairs(minhashBandRows(
+      spread(docs)
+        .select(id.as("doc_id"), TextOps.norm(text).as("_t"))
+        .select(col("doc_id"), shingleHashes(col("_t"), k).as("_hs")),
+      col("_hs"), Seq(col("doc_id")), nHashes, bands, rows), maxBucket)
+
+  /** MinHash's tail on the primitive: distinct (doc_a, doc_b) — a pair
+    * agreeing on several bands surfaces once. */
+  private def minhashPairs(banded: DataFrame,
+                           maxBucket: Option[Long] = None): DataFrame =
+    bucketPairs(banded, Seq("band_id", "band_key"), col("doc_id"), maxBucket)
+      .distinct()
 
   /** Shared staging for every shingle consumer: spread for parallelism,
     * norm materialized once, then the native shingle pass. Output:
@@ -193,7 +195,8 @@ object Dedup {
     * (doc_a, doc_b); `docs` provides (id, text). */
   def jaccardVerify(pairs: DataFrame, docs: DataFrame, id: Column, text: Column,
                     k: Int = 7): DataFrame =
-    jaccardOnStaged(pairs, stagedShingles(docs, id, text, k))
+    shingleJaccard(pairShingles(pairs, stagedShingles(docs, id, text, k)),
+      "doc_a", "doc_b")
 
   /** persist + materialize NOW: a persisted frame whose multiple readers
     * are sibling AQE stages of one execution is raced — each side's tasks
@@ -212,17 +215,24 @@ object Dedup {
     df
   }
 
-  /** Exact Jaccard against an already-staged (_id, _sh) relation —
-    * callers persist `sh` since both pair sides join it. */
-  private def jaccardOnStaged(pairs: DataFrame, sh: DataFrame): DataFrame =
+  /** (doc_b, doc_a, …, sh_a, sh_b): each candidate pair joined to both
+    * members' shingle arrays from a staged (_id, _sh) relation. */
+  private def pairShingles(pairs: DataFrame, sh: DataFrame): DataFrame =
     pairs
       .join(sh.select(col("_id").as("doc_a"), col("_sh").as("sh_a")), "doc_a")
       .join(sh.select(col("_id").as("doc_b"), col("_sh").as("sh_b")), "doc_b")
-      // stage the intersect size so it is computed once, not once per use
-      .select(col("doc_a"), col("doc_b"),
+
+  /** The one shingle-set Jaccard: (keyA, keyB, jaccard) from the joined
+    * shingle arrays `sh_a`/`sh_b` — |A∩B| / |A∪B| from integer set
+    * sizes, the intersect size staged so it is computed once, one
+    * double division at the end, rounded to 6 places. */
+  private[graft] def shingleJaccard(joined: DataFrame, keyA: String,
+                                    keyB: String): DataFrame =
+    joined
+      .select(col(keyA), col(keyB),
         size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType).as("_i"),
         (size(col("sh_a")) + size(col("sh_b"))).cast(DoubleType).as("_s"))
-      .select(col("doc_a"), col("doc_b"),
+      .select(col(keyA), col(keyB),
         round(col("_i") / (col("_s") - col("_i")), 6).as("jaccard"))
 
   /** Exact shingle CONTAINMENT for candidate pairs (Broder's second
@@ -244,11 +254,8 @@ object Dedup {
     * candidate set against the staged shingle relation; cost scales
     * with candidate volume, never all-pairs. */
   def containmentVerify(pairs: DataFrame, docs: DataFrame, id: Column,
-                        text: Column, k: Int = 7): DataFrame = {
-    val sh = stagedShingles(docs, id, text, k)
-    pairs
-      .join(sh.select(col("_id").as("doc_a"), col("_sh").as("sh_a")), "doc_a")
-      .join(sh.select(col("_id").as("doc_b"), col("_sh").as("sh_b")), "doc_b")
+                        text: Column, k: Int = 7): DataFrame =
+    pairShingles(pairs, stagedShingles(docs, id, text, k))
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType).as("_i"),
         size(col("sh_a")).cast(DoubleType).as("_sa"),
@@ -257,7 +264,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         round(col("_i") / least(col("_sa"), col("_sb")), 6).as("containment"),
         when(col("_sa") <= col("_sb"), "a").otherwise("b").as("contained"))
-  }
 
   /** Fused candidates + verification: normalize and shingle the corpus
     * ONCE (the dominant narrow cost), derive the MinHash banding from
@@ -269,12 +275,8 @@ object Dedup {
                          k: Int = 7, nHashes: Int = 12,
                          bands: Int = 3, rows: Int = 4): DataFrame = {
     val sh = stagedShingles(docs, id, text, k)
-    val banded = sh
-      .select(col("_id").as("doc_id"), minhashSignature(col("_sh"), nHashes).as("_sig"))
-      .select(col("doc_id"), explode(lshBands(col("_sig"), bands, rows)).as("b"))
-      .select(col("doc_id"), col("b.band_id"), col("b.band_key"))
-    val cand = bucketPairs(banded, Seq("band_id", "band_key"))
-    jaccardOnStaged(cand, sh)
+    shingleJaccard(pairShingles(minhashPairs(minhashBandRows(sh, col("_sh"),
+      Seq(col("_id").as("doc_id")), nHashes, bands, rows)), sh), "doc_a", "doc_b")
   }
 
   /** Incremental near-dup: LSH candidates between a NEW batch and the
@@ -295,24 +297,17 @@ object Dedup {
                          minJaccard: Double = 0.5): DataFrame = {
     val csh = stagedShingles(corpus, cid, ctext, k)
     val bsh = stagedShingles(batch, bid, btext, k)
-    def bandedOf(sh: DataFrame) = sh
-      .select(col("_id").as("doc_id"),
-        minhashSignature(col("_sh"), nHashes).as("_sig"))
-      .select(col("doc_id"), explode(lshBands(col("_sig"), bands, rows)).as("b"))
-      .select(col("doc_id"), col("b.band_id"), col("b.band_key"))
+    def bandedOf(sh: DataFrame) = minhashBandRows(sh, col("_sh"),
+      Seq(col("_id").as("doc_id")), nHashes, bands, rows)
     val cand = bandedOf(csh).as("c").join(bandedOf(bsh).as("n"),
         col("c.band_id") === col("n.band_id") &&
           col("c.band_key") === col("n.band_key"))
       .select(col("c.doc_id").as("corpus_id"), col("n.doc_id").as("batch_id"))
       .distinct()
-    cand
+    shingleJaccard(cand
       .join(csh.select(col("_id").as("corpus_id"), col("_sh").as("sh_a")), "corpus_id")
-      .join(bsh.select(col("_id").as("batch_id"), col("_sh").as("sh_b")), "batch_id")
-      .select(col("batch_id"), col("corpus_id"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType).as("_i"),
-        (size(col("sh_a")) + size(col("sh_b"))).cast(DoubleType).as("_s"))
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("_i") / (col("_s") - col("_i")), 6).as("jaccard"))
+      .join(bsh.select(col("_id").as("batch_id"), col("_sh").as("sh_b")), "batch_id"),
+      "batch_id", "corpus_id")
       .filter(col("jaccard") >= minJaccard)
   }
 
@@ -328,7 +323,7 @@ object Dedup {
     * (doc_id, split, n_train_dups, max_jaccard) for leaked eval docs.
     *
     * Scale shape: candidates come from [[verifiedCandidates]]'s banded
-    * equi-join (never all-pairs); split assignment is a narrow
+    * buckets (never all-pairs); split assignment is a narrow
     * projection joined onto the (tiny, verified) pair set; orientation
     * is a row-local filter; the report agg is doc-keyed and map-side
     * combinable. Nothing here adds a corpus-sized shuffle beyond the
@@ -366,10 +361,10 @@ object Dedup {
     graft.plans.functions.winnow_hashes(normText, k, w)
 
   /** Partial-overlap pairs via winnowing: explode each document's
-    * selected fingerprints, equi-join on the hash, and keep pairs
-    * sharing ≥ `minShared` fingerprints (selected sets are distinct per
-    * doc, so the join count IS the intersection size). The join key
-    * cardinality grows with corpus content diversity — the same
+    * selected fingerprints, pair each fingerprint bucket
+    * ([[bucketPairs]]), and keep pairs sharing ≥ `minShared`
+    * fingerprints (selected sets are distinct per doc, so the pair
+    * count IS the intersection size). The bucket key cardinality grows with corpus content diversity — the same
     * bounded-bucket banding contract as minhashCandidates, never an
     * all-pairs scan.
     *
@@ -394,33 +389,16 @@ object Dedup {
                          k: Int = 20, w: Int = 8,
                          minShared: Long = 3L,
                          maxDf: Long = DefaultWinnowMaxDf): DataFrame = {
-    require(maxDf > 1 && maxDf < Int.MaxValue,
-      s"maxDf must be in (1, Int.MaxValue), got $maxDf")
     val e = spread(docs)
       .select(id.as("doc_id"), TextOps.norm(text).as("_t"))
       .select(col("doc_id"), explode_outer(winnowFingerprints(col("_t"), k, w)).as("h"))
-    // ONE pass over the exploded fingerprints (r20, was persist +
-    // df-table semi-join + equi-self-join — three shuffles of the same
-    // rows plus an AQE cache race): per-doc selected sets are distinct,
-    // so each fingerprint's bucket size IS its document frequency — the
-    // df cap is a count filter on the same bucket rows, and the a<b pair
-    // expansion is the same Σ pop·(pop−1)/2 mass the self-join emitted.
-    // h is null only for the no-fingerprint explode_outer row, which the
-    // old equi-join could never pair — filtered here for the same effect.
-    // CAP BEFORE COLLECT (r21): the collect is the bounded-buffer
-    // capped_collect at maxDf + 1 — a boilerplate bucket past maxDf can
-    // never materialize more than maxDf + 1 elements, and the df size
-    // filter drops it before its truncated content reaches the output
-    // (see bucketPairs for the two rejected gating forms and their
-    // measured sf10 cost).
-    e.filter(col("h").isNotNull)
-      .groupBy("h")
-      .agg(graft.plans.functions.capped_collect(
-        col("doc_id"), (maxDf + 1).toInt).as("_ids"))
-      .filter(size(col("_ids")).between(2, maxDf))
-      .select(explode(col("_ids")).as("doc_a"), col("_ids"))
-      .select(col("doc_a"), explode(col("_ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
+    // per-doc selected sets are distinct, so each fingerprint's bucket
+    // size IS its document frequency: the df cap is the primitive's
+    // bucket cap, and the pair count over surviving buckets is the
+    // shared low-df fingerprint count. h is null only for the
+    // no-fingerprint explode_outer row, which the primitive's null-key
+    // filter drops.
+    bucketPairs(e, Seq("h"), col("doc_id"), Some(maxDf))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
@@ -856,8 +834,8 @@ object Dedup {
   /** SimHash near-dup pairs, Manku-style banded Hamming-LSH: the 64-bit
     * fingerprint splits into 4 bands of 16 bits; any pair within Hamming
     * ≤ 3 agrees exactly on at least one band (pigeonhole), so candidate
-    * generation is an EQUI-JOIN on (band_id, band_value) — never an
-    * all-pairs scan. Unlike a constant bucket split, band-value
+    * generation buckets on (band_id, band_val) — never an all-pairs
+    * scan. Unlike a constant bucket split, band-value
     * cardinality (up to 2¹⁶ per band, 2¹⁸ keys total) grows with corpus
     * diversity and duplicate clusters are exactly the rows that should
     * co-locate; exact Hamming over the carried bands then filters the
@@ -947,8 +925,9 @@ object Dedup {
   /** Banded Hamming-LSH pairing over ANY 4×16-bit fingerprint table
     * (doc_id, bands) — text SimHash and image dHash share this exact
     * machinery ([[simhashPairs]], [[graft.multimodal.Multimodal
-    * .imagePHashPairs]]): explode the candidate keys, equi-join on
-    * (band_id, band_value), exact-Hamming-filter the candidates. Never
+    * .imagePHashPairs]]): explode the candidate keys, pair each
+    * (band_id, band_val) bucket through [[bucketPairs]] (members carry
+    * their bands), exact-Hamming-filter the candidates. Never
     * an all-pairs scan; `blocks` picks the key scheme (4 = the bands
     * themselves, 6 = Manku 3-block combinations for corpora past 2¹⁸
     * rows — [[scaledBlocks]]); the output pair set is identical either
@@ -968,41 +947,16 @@ object Dedup {
       .select(col("doc_id"), col("bands"),
         explode(array(bandKeys(blocks): _*)).as("b"))
       .select(col("doc_id"), col("bands"), col("b.band_id"), col("b.band_val"))
-    // ONE pass over the exploded keys (r20, was persist + equi-self-join
-    // — the persisted fingerprint pipeline, including any real media
-    // decode feeding it, was raced by the join's two AQE sides and
-    // computed twice): group by candidate key, collect the bucket's
-    // (doc_id, bands) members, expand a < b combinations, and Hamming-
-    // filter. The optional hot-bucket cap — a band value shared by a
-    // large corpus fraction (all-silence audio → flat contour; a blank
-    // image → constant dHash) is a population² false-candidate
-    // generator, while genuinely near-dup pairs still agree on a
-    // discriminating band — is enforced INSIDE the collect: with a cap
-    // the collector is the bounded-buffer capped_collect at cap + 1,
-    // so no bucket can materialize an array past the cap, and the size
-    // filter drops over-cap buckets before their truncated content
-    // reaches the output (cap-before-collect, r21; see [[bucketPairs]]
-    // for the two rejected gating forms and their measured sf10 cost).
-    // Off by default; the cap is a declared semantic (mirror it in any
-    // oracle), not a silent truncation — without it plain collect_list
-    // runs and a degenerate hot bucket is bounded only by the corpus's
-    // duplicate structure.
-    maxBucket.foreach(cap =>
-      require(cap > 1, s"maxBucket must exceed 1, got $cap"))
-    // a singleton bucket yields no pair: drop it before the double explode
-    val buckets = exploded
-      .filter(col("band_val").isNotNull)
-      .groupBy(col("band_id"), col("band_val"))
-      .agg(cappedIds(struct(col("doc_id"), col("bands")), maxBucket).as("_ms"))
-      .filter(size(col("_ms")) > 1 &&
-        maxBucket.map(cap => size(col("_ms")) <= cap).getOrElse(lit(true)))
+    // the optional hot-bucket cap: a band value shared by a large corpus
+    // fraction (all-silence audio → flat contour; a blank image →
+    // constant dHash) is a population² false-candidate generator, while
+    // genuinely near-dup pairs still agree on a discriminating band
     val ham = (0 until 4).map { j =>
       bit_count(get(col("a.bands"), lit(j)).bitwiseXOR(get(col("b.bands"), lit(j))))
     }.reduce(_ + _).cast(LongType)
-    buckets
-      .select(explode(col("_ms")).as("a"), col("_ms"))
-      .select(col("a"), explode(col("_ms")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
+    bucketPairs(exploded, Seq("band_id", "band_val"),
+        struct(col("doc_id"), col("bands")), maxBucket, ("a", "b"),
+        _.getField("doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         ham.as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1050,13 +1004,10 @@ object Dedup {
       spread(docs).select(id.as("doc_id"), TextOps.norm(text).as("_t")))
     def popsOf(entries: DataFrame): DataFrame =
       entries.groupBy("family", "bkey").agg(count(lit(1)).as("pop"))
-    val mh = popsOf(normed
-      .select(shingleHashes(col("_t"), 7).as("_hs"))
-      .select(minhashSignature(col("_hs"), 12).as("_sig"))
-      .select(explode(lshBands(col("_sig"), 3, 4)).as("b"))
+    val mh = popsOf(minhashBandRows(normed, shingleHashes(col("_t"), 7), Nil)
       .select(lit("minhash").as("family"),
-        concat(col("b.band_id").cast(StringType), lit("|"),
-          col("b.band_key")).as("bkey")))
+        concat(col("band_id").cast(StringType), lit("|"),
+          col("band_key")).as("bkey")))
     // corpus-scaled Manku blocks, the SAME config simhashPairs runs at
     // this corpus size ([[scaledBlocks]]): past 2^18 docs the queries
     // join on 3-block combo keys, so auditing the 4x16 bands there

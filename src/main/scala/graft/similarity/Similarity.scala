@@ -54,12 +54,27 @@ object Similarity {
   /** Brute-force cosine top-k: every query vector against the whole
     * corpus. `queries` must be small (it is broadcast). Output:
     * (q_id, vec_id, cos) with k rows per query. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val scored = corpus.crossJoin(broadcast(queries))
-      .select(col("q_id"), col("vec_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    TopK.perGroup(scored, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
-  }
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(scored(corpus.crossJoin(broadcast(queries))), k)
+
+  /** (q_id, vec_id, cos): exact cosine of every joined (query, corpus)
+    * row — the verify step every ANN route ends in. */
+  private def scored(joined: DataFrame): DataFrame =
+    joined.select(col("q_id"), col("vec_id"),
+      cosine(col("q_emb"), col("embedding")).as("cos"))
+
+  /** Per-query top-k by (cos desc, vec_id) over scored candidates. */
+  private def topK(scoredRows: DataFrame, k: Int): DataFrame =
+    TopK.perGroup(scoredRows, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
+
+  /** Exact-cosine rerank of candidate (q_id, vec_id) pairs: join the
+    * corpus vectors and the broadcast query batch, score, top-k. The
+    * candidate pool is |q|·pool rows, so the join is scan-independent. */
+  private def rerankTopK(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                         k: Int): DataFrame =
+    topK(scored(cand.select("q_id", "vec_id")
+      .join(corpus, "vec_id")
+      .join(broadcast(queries), "q_id")), k)
 
   /** Hard-negative mining for contrastive training (x71) — the DPR
     * (Karpukhin et al. 2020) / SimCSE negative-selection step: for each
@@ -293,12 +308,6 @@ object Similarity {
         round(col("_m").getField("cos"), 6).as("max_cos"))
   }
 
-  /** Assign each row to its `nprobe` nearest centroids by cosine
-    * (broadcast centroids + per-row top-nprobe argmax — one narrow pass
-    * over the big side, no shuffle of embeddings). With `keepScore` the
-    * winning centroid cosine survives as `ccos` (the prototypicality
-    * signal x98 ranks on); default drops it — most callers only need
-    * the cell id. */
   /** Collect a deterministic, bounded-by-construction tiny relation —
     * centroid / codebook tables, capped at ≤ 65,536 rows by
     * [[scaledCells]]/[[scaledCells2]]/nCodes — into a driver-LOCAL
@@ -314,6 +323,18 @@ object Similarity {
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
+  /** The deterministic centroid seed every cell quantizer here starts
+    * from: the first `n` vectors by vec_id, as (cid, c_emb). */
+  private def firstCells(corpus: DataFrame, n: Int): DataFrame =
+    corpus.orderBy(col("vec_id")).limit(n)
+      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+
+  /** Assign each row to its `nprobe` nearest centroids by cosine
+    * (broadcast centroids + per-row top-nprobe argmax — one narrow pass
+    * over the big side, no shuffle of embeddings). With `keepScore` the
+    * winning centroid cosine survives as `ccos` (the prototypicality
+    * signal x98 ranks on); default drops it — most callers only need
+    * the cell id. */
   def assignCells(df: DataFrame, idCol: String, emb: String,
                   centroids: DataFrame, nprobe: Int = 1,
                   keepScore: Boolean = false): DataFrame = {
@@ -356,8 +377,7 @@ object Similarity {
   def cellBalancedSample(corpus: DataFrame, perCell: Int,
                          nCells: Int): DataFrame = {
     val p = 1000000007L
-    val init = corpus.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+    val init = firstCells(corpus, nCells)
     assignCells(corpus, "vec_id", "embedding", init, 1)
       .select(col("vec_id"), col("cell"),
         (((col("vec_id") % p) * 1103515245L + 12345L) % p).as("hk"))
@@ -475,8 +495,7 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int = 8,
               nprobe: Int = 1, kmeansIters: Int = 0,
               checkpointDir: Option[String] = None): DataFrame = {
-    val init = corpus.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+    val init = firstCells(corpus, nCells)
     val cents = localRel(if (kmeansIters > 0)
                    kmeansRefine(corpus, init, kmeansIters, checkpointDir)
                  else init)
@@ -485,10 +504,7 @@ object Similarity {
       .select("q_id", "q_emb", "cell")
     // corpus vectors live in exactly one cell, so probing nprobe disjoint
     // cells never duplicates a (q_id, vec_id) candidate
-    val scored = c.join(broadcast(q), "cell")
-      .select(col("q_id"), col("vec_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    TopK.perGroup(scored, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
+    topK(scored(c.join(broadcast(q), "cell")), k)
   }
 
   /** x83: IVF cells + int8 scoring — the composition of the coarse
@@ -506,8 +522,7 @@ object Similarity {
   def ivfTopKInt8(corpus: DataFrame, queries: DataFrame, k: Int,
                   nCells: Int = 8, nprobe: Int = 1): DataFrame = {
     import graft.plans.functions.{int_dot_fold, int_sqnorm_fold, quantize_int8}
-    val cents = localRel(corpus.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb")))
+    val cents = localRel(firstCells(corpus, nCells))
     // quantize ONCE, then fold over the materialized column (see int8TopK)
     val c = assignCells(corpus, "vec_id", "embedding", cents, 1)
       .select(col("cell"), col("vec_id"), quantize_int8(col("embedding")).as("qv"))
@@ -546,8 +561,7 @@ object Similarity {
                nprobeCoarse: Int = 1, nprobeSub: Int = 1,
                kmeansIters: Int = 0, kmeansItersSub: Int = 0,
                checkpointDir: Option[String] = None): DataFrame = {
-    val init = corpus.orderBy(col("vec_id")).limit(nCoarse)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+    val init = firstCells(corpus, nCoarse)
     // Level-1 Lloyd (`kmeansIters`) and level-2 CELL-LOCAL Lloyd
     // (`kmeansItersSub`) are independent knobs: coarse boundaries
     // dominate reachability (a neighbor in an unprobed coarse cell is
@@ -587,10 +601,7 @@ object Similarity {
         .select("q_id", "q_emb", "cell"),
       "q_id", "q_emb", nprobeSub, perCell = true)
       .select("q_id", "q_emb", "cell", "sub")
-    val scored = asg2.join(broadcast(q2), Seq("cell", "sub"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    TopK.perGroup(scored, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
+    topK(scored(asg2.join(broadcast(q2), Seq("cell", "sub"))), k)
   }
 
   /** Product-quantization top-k (Jégou et al. 2011, the FAISS PQ/ADC
@@ -618,37 +629,59 @@ object Similarity {
              dim: Int, nSub: Int = 4, nCodes: Int = 16,
              rerank: Int = 10): DataFrame = {
     require(nSub > 0 && dim % nSub == 0, s"dim $dim not divisible by nSub $nSub")
-    val subDim = dim / nSub
-    def subs(df: DataFrame, idc: String, emb: String): DataFrame = df
-      .select(col(idc), explode(array((0 until nSub).map { s =>
-        struct(lit(s).as("s"),
-          slice(col(emb), s * subDim + 1, subDim).as("sub"))
-      }: _*)).as("t"))
-      .select(col(idc), col("t.s"), col("t.sub"))
     // codebook: code j in subspace s = the (j+1)-th lowest-id seed
     // vector's subvector; the rank window spans <= nCodes rows
-    // pmod(vec_id, 1) is an always-zero partition key that the optimizer
-    // CANNOT constant-fold away (a bare lit(0) is folded out of the
-    // partition spec, leaving a warn-worthy global window): same
-    // single-partition plan over this post-limit <= nCodes frame, but
-    // explicit, so the "No Partition Defined" warning never fires and
-    // PlanAuditSpec's no-global-window invariant can assert cleanly
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pmod(col("vec_id"), lit(1L)))
-      .orderBy(col("vec_id"))
     val seeds = corpus.orderBy(col("vec_id")).limit(nCodes)
       .select(col("vec_id"), col("embedding"),
-        (row_number().over(w) - 1).as("code"))
+        (row_number().over(seedOrder) - 1).as("code"))
+    val cand = adcCandidates(corpus, queries, nSub, dim / nSub,
+      seeds.drop("vec_id"), corpus, "embedding", None, rerank)
+    rerankTopK(cand, corpus, queries, k)
+  }
+
+  /** Rank window over a post-`limit` seed frame of ≤ nCells + nCodes
+    * rows. pmod(vec_id, 1) is an always-zero partition key that the
+    * optimizer CANNOT constant-fold away (a bare lit(0) is folded out of
+    * the partition spec, leaving a warn-worthy global window): same
+    * single-partition plan, but explicit, so the "No Partition Defined"
+    * warning never fires and PlanAuditSpec's no-global-window invariant
+    * can assert cleanly. */
+  private def seedOrder = org.apache.spark.sql.expressions.Window
+    .partitionBy(pmod(col("vec_id"), lit(1L)))
+    .orderBy(col("vec_id"))
+
+  /** The ADC stage [[pqTopK]] and [[ivfPqTopK]] share: split vectors
+    * into nSub subspaces, build the codebook from `seeds` (code, `emb`)
+    * subvectors, encode every `toEncode` (vec_id, `emb`) subvector to its
+    * nearest code by exact L2 (d² as one fold-built expression, ties to
+    * the lowest code, so both engines agree), score queries against the
+    * codes through the LUT dot(q_s, centroid), and keep the top `rerank`
+    * (q_id, vec_id) per query by approximate cosine (exact per-vector
+    * norms). `cells` is IVF-PQ's coarse term: the (vec_id, cell)
+    * membership and the probed (q_id, cell, _qc = dot(q, c_cell)) rows;
+    * a candidate's cell term is ADDED to the finished subspace fold (one
+    * association both engines share) — using it as the fold's init
+    * would associate (((qc+t1)+t2)+…) where DuckDB's list_reduce gives
+    * qc+(((t1+t2)+…)), a genuinely different double. */
+  private def adcCandidates(corpus: DataFrame, queries: DataFrame,
+                            nSub: Int, subDim: Int,
+                            seeds: DataFrame, toEncode: DataFrame, emb: String,
+                            cells: Option[(DataFrame, DataFrame)],
+                            rerank: Int): DataFrame = {
+    def subs(df: DataFrame, idc: String, e: String): DataFrame = df
+      .select(col(idc), explode(array((0 until nSub).map { s =>
+        struct(lit(s).as("s"),
+          slice(col(e), s * subDim + 1, subDim).as("sub"))
+      }: _*)).as("t"))
+      .select(col(idc), col("t.s"), col("t.sub"))
     // nSub x nCodes rows, read by the encode join AND the query LUT —
     // localized so both broadcast builds cost zero jobs (see localRel)
-    val codebook = localRel(subs(seeds.drop("vec_id"), "code", "embedding")
+    val codebook = localRel(subs(seeds, "code", emb)
       .select(col("s"), col("code"), col("sub").as("c_sub")))
-    // encode: argmin exact L2 per (vec, subspace); d2 built from the
-    // same three folds the oracle mirrors, ties to the lowest code
     val d2 = sqNorm(col("sub")) + sqNorm(col("c_sub")) -
       lit(2.0) * dot(col("sub"), col("c_sub"))
     val encoded = TopK.perGroup(
-      subs(corpus, "vec_id", "embedding")
+      subs(toEncode, "vec_id", emb)
         .join(broadcast(codebook), "s")
         .select(col("vec_id"), col("s"), col("code"), d2.as("_d2")),
       Seq(col("vec_id"), col("s")), Seq(col("_d2"), col("code")), 1)
@@ -660,22 +693,26 @@ object Similarity {
       .select(col("q_id"), col("s"), col("code"),
         dot(col("sub"), col("c_sub")).as("_pd"))
     val qNorms = queries.select(col("q_id"), sqrt(sqNorm(col("q_emb"))).as("_qn"))
-    val adot = encoded.join(broadcast(lut), Seq("s", "code"))
-      .groupBy("q_id", "vec_id")
-      .agg(aggregate(transform(array_sort(collect_list(struct(col("s"), col("_pd")))),
-        _.getField("_pd")), lit(0.0), (acc, x) => acc + x).as("_adot"))
+    // the subspace terms folded in s order
+    val fold = aggregate(transform(array_sort(collect_list(struct(col("s"), col("_pd")))),
+      _.getField("_pd")), lit(0.0), (acc, x) => acc + x)
+    val adot = cells match {
+      case None => encoded.join(broadcast(lut), Seq("s", "code"))
+          .groupBy("q_id", "vec_id")
+          .agg(fold.as("_adot"))
+      case Some((vecCells, qCells)) => encoded.join(vecCells, "vec_id")
+          .join(broadcast(qCells), "cell")
+          .join(broadcast(lut), Seq("q_id", "s", "code"))
+          .groupBy("q_id", "vec_id")
+          // _qc is constant within the group (one cell per vec)
+          .agg((max(col("_qc")) + fold).as("_adot"))
+    }
     val approx = adot.join(norms, "vec_id").join(broadcast(qNorms), "q_id")
       .select(col("q_id"), col("vec_id"),
         when(col("_qn") * col("_vn") === 0.0, 0.0)
           .otherwise(col("_adot") / (col("_qn") * col("_vn"))).as("_acos"))
-    val cand = TopK.perGroup(approx, Seq(col("q_id")),
+    TopK.perGroup(approx, Seq(col("q_id")),
       Seq(col("_acos").desc, col("vec_id")), rerank)
-    val exact = cand.select("q_id", "vec_id")
-      .join(corpus, "vec_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    TopK.perGroup(exact, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
   }
 
   /** IVF-PQ top-k (the FAISS IVFADC composition): coarse cells bound
@@ -699,11 +736,9 @@ object Similarity {
                 nSub: Int = 4, nCodes: Int = 16,
                 rerank: Int = 10): DataFrame = {
     require(nSub > 0 && dim % nSub == 0, s"dim $dim not divisible by nSub $nSub")
-    val subDim = dim / nSub
     // ≤ nCells rows, read by corpus assignment, the residual join and
     // the query probe — localized (zero-job broadcasts; see localRel)
-    val cents = localRel(corpus.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb")))
+    val cents = localRel(firstCells(corpus, nCells))
     val asg = assignCells(corpus, "vec_id", "embedding", cents, 1)
       .join(broadcast(cents.withColumnRenamed("cid", "cell")), "cell")
       .select(col("vec_id"), col("cell"), col("embedding"),
@@ -714,74 +749,19 @@ object Similarity {
     // their residuals are identically zero, and seeding from them
     // (first draft of this operator) produced an all-zero codebook
     // that silently degenerated ADC to cell-centroid-only scoring
-    // pmod(vec_id, 1) is an always-zero partition key that the optimizer
-    // CANNOT constant-fold away (a bare lit(0) is folded out of the
-    // partition spec, leaving a warn-worthy global window): same
-    // single-partition plan over this post-limit <= nCodes frame, but
-    // explicit, so the "No Partition Defined" warning never fires and
-    // PlanAuditSpec's no-global-window invariant can assert cleanly
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pmod(col("vec_id"), lit(1L)))
-      .orderBy(col("vec_id"))
     val seeds = asg.orderBy(col("vec_id")).limit(nCells + nCodes)
-      .select(col("_res"), (row_number().over(w) - 1).as("_rk"))
+      .select(col("_res"), (row_number().over(seedOrder) - 1).as("_rk"))
       .filter(col("_rk") >= nCells)
       .select(col("_res"), (col("_rk") - nCells).as("code"))
-    // defined below via subs(); localized like pqTopK's codebook
-    def subs(df: DataFrame, idc: String, emb: String): DataFrame = df
-      .select(col(idc), explode(array((0 until nSub).map { s =>
-        struct(lit(s).as("s"),
-          slice(col(emb), s * subDim + 1, subDim).as("sub"))
-      }: _*)).as("t"))
-      .select(col(idc), col("t.s"), col("t.sub"))
-    val codebook = localRel(subs(seeds, "code", "_res")
-      .select(col("s"), col("code"), col("sub").as("c_sub")))
-    val d2 = sqNorm(col("sub")) + sqNorm(col("c_sub")) -
-      lit(2.0) * dot(col("sub"), col("c_sub"))
-    val encoded = TopK.perGroup(
-      subs(asg.select(col("vec_id"), col("_res")), "vec_id", "_res")
-        .join(broadcast(codebook), "s")
-        .select(col("vec_id"), col("s"), col("code"), d2.as("_d2")),
-      Seq(col("vec_id"), col("s")), Seq(col("_d2"), col("code")), 1)
-      .select("vec_id", "s", "code")
-      .join(asg.select("vec_id", "cell"), "vec_id")
-    val norms = corpus.select(col("vec_id"),
-      sqrt(sqNorm(col("embedding"))).as("_vn"))
-    // query side: probed cells with the cell term dot(q, c_cell), plus
-    // the shared LUT dot(q_s, residual-centroid)
+    // query side: probed cells with the cell term dot(q, c_cell)
     val qCells = assignCells(queries, "q_id", "q_emb", cents, nprobe)
       .join(broadcast(cents.withColumnRenamed("cid", "cell")), "cell")
       .select(col("q_id"), col("cell"),
         dot(col("q_emb"), col("c_emb")).as("_qc"))
-    val lut = subs(queries, "q_id", "q_emb")
-      .join(broadcast(codebook), "s")
-      .select(col("q_id"), col("s"), col("code"),
-        dot(col("sub"), col("c_sub")).as("_pd"))
-    val qNorms = queries.select(col("q_id"), sqrt(sqNorm(col("q_emb"))).as("_qn"))
-    // candidates = codes in probed cells; approx dot = cell term + the
-    // subspace terms folded in s order. The cell term is ADDED to the
-    // finished fold (one association both engines share) — using it as
-    // the fold's init would associate (((qc+t1)+t2)+…) where DuckDB's
-    // list_reduce gives qc+(((t1+t2)+…)), a genuinely different double
-    val adot = encoded.join(broadcast(qCells), "cell")
-      .join(broadcast(lut), Seq("q_id", "s", "code"))
-      .groupBy("q_id", "vec_id")
-      .agg((max(col("_qc")) + // constant within the group (one cell per vec)
-        aggregate(transform(array_sort(collect_list(struct(col("s"), col("_pd")))),
-          _.getField("_pd")), lit(0.0), (acc, x) => acc + x))
-        .as("_adot"))
-    val approx = adot.join(norms, "vec_id").join(broadcast(qNorms), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        when(col("_qn") * col("_vn") === 0.0, 0.0)
-          .otherwise(col("_adot") / (col("_qn") * col("_vn"))).as("_acos"))
-    val cand = TopK.perGroup(approx, Seq(col("q_id")),
-      Seq(col("_acos").desc, col("vec_id")), rerank)
-    val exact = cand.select("q_id", "vec_id")
-      .join(corpus, "vec_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    TopK.perGroup(exact, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
+    val cand = adcCandidates(corpus, queries, nSub, dim / nSub, seeds,
+      asg.select(col("vec_id"), col("_res")), "_res",
+      Some((asg.select("vec_id", "cell"), qCells)), rerank)
+    rerankTopK(cand, corpus, queries, k)
   }
 
   /** SemDeDup-style semantic dedup: partition the corpus into cells
@@ -824,8 +804,7 @@ object Similarity {
         "cell route's within-cell pair mass is O(n^1.5) BY DESIGN and past " +
         "this size the linear-candidate semanticDedupBanded is the scale " +
         "path (pass a larger maxCorpus to opt in to the superlinear join)")
-    val init = corpus.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+    val init = firstCells(corpus, nCells)
     val cents = if (kmeansIters > 0)
       kmeansRefine(corpus, init, kmeansIters, checkpointDir) else init
     val assigned = assignCells(corpus, "vec_id", "embedding", cents, 1)
@@ -884,26 +863,22 @@ object Similarity {
     * never a cross product. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int = 4,
               tables: Int = 1): DataFrame = {
-    val scored =
+    val cand =
       if (tables == 1) {
         val c = corpus.withColumn("bucket", signBucket(col("embedding"), bits))
         val q = queries.withColumn("bucket", signBucket(col("q_emb"), bits))
-        c.join(broadcast(q), "bucket")
-          .select(col("q_id"), col("vec_id"),
-            cosine(col("q_emb"), col("embedding")).as("cos"))
+        scored(c.join(broadcast(q), "bucket"))
       } else {
         def banded(df: DataFrame, emb: String) = df.select(col("*"),
             explode(array((0 until tables).map { s =>
               struct(lit(s).as("seed"), signBucket(col(emb), bits, s).as("bucket"))
             }: _*)).as("t"))
           .select(col("*"), col("t.seed"), col("t.bucket")).drop("t")
-        banded(corpus, "embedding")
-          .join(broadcast(banded(queries, "q_emb")), Seq("seed", "bucket"))
-          .select(col("q_id"), col("vec_id"),
-            cosine(col("q_emb"), col("embedding")).as("cos"))
+        scored(banded(corpus, "embedding")
+            .join(broadcast(banded(queries, "q_emb")), Seq("seed", "bucket")))
           .distinct() // a pair may collide in several tables
       }
-    TopK.perGroup(scored, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
+    topK(cand, k)
   }
 
   /** MMR (maximal marginal relevance) diversity re-rank: from the
@@ -964,23 +939,6 @@ object Similarity {
     df.withColumn("amax", graft.plans.functions.absmax_fold(col(emb)))
       .withColumn("qvec", graft.plans.functions.quantize_int8(col(emb)))
 
-  /** x78: matryoshka two-stage ANN (Kusupati et al. 2022) — the third
-    * compression trade in the family (PQ = x41 codebooks, int8 = x75
-    * precision, this = DIMENSIONS): stage 1 ranks by cosine over the
-    * first `dims` of each vector and keeps a top-`m` candidate pool
-    * per query; stage 2 re-scores ONLY those m candidates with the
-    * full vectors and returns the top-k. With a materialized
-    * `slice(embedding, 1, dims)` prefix column the stage-1 scan reads
-    * dims/D of the bytes (16/64 = 4×, multiplicative with int8's 4×);
-    * stage 2 touches |q|·m rows — scan-independent. Both stages are
-    * the x06 shape (broadcast query side, WindowGroupLimit below the
-    * exchange); the stage-2 candidate pool joins back to the corpus as
-    * a small (AQE-broadcast) side. Recall is m-headroom-bounded and
-    * gated in Int8AnnSpec — on MRL-trained embeddings the prefix
-    * carries most of the signal; on the synthetic (energy-uniform)
-    * testdata the gate documents the m-vs-recall trade honestly.
-    * Output: (q_id, vec_id, cos) with k rows per query, `cos` exact
-    * full-dimension cosine. */
   /** x112 — JL two-stage ANN: stage 1 ranks by cosine in a
     * `outDims`-dim Rademacher-projected space
     * ([[graft.plans.JlProject]] — every output dim mixes ALL input
@@ -1005,28 +963,33 @@ object Similarity {
         jl_project(col("embedding"), outDims, seed).as("embedding")),
       queries.select(col("q_id"),
         jl_project(col("q_emb"), outDims, seed).as("q_emb")), m)
-      .select("q_id", "vec_id")
-    val re = cands
-      .join(corpus, "vec_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    TopK.perGroup(re, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
+    rerankTopK(cands, corpus, queries, k)
   }
 
+  /** x78: matryoshka two-stage ANN (Kusupati et al. 2022) — the third
+    * compression trade in the family (PQ = x41 codebooks, int8 = x75
+    * precision, this = DIMENSIONS): stage 1 ranks by cosine over the
+    * first `dims` of each vector and keeps a top-`m` candidate pool
+    * per query; stage 2 re-scores ONLY those m candidates with the
+    * full vectors and returns the top-k. With a materialized
+    * `slice(embedding, 1, dims)` prefix column the stage-1 scan reads
+    * dims/D of the bytes (16/64 = 4×, multiplicative with int8's 4×);
+    * stage 2 touches |q|·m rows — scan-independent. Both stages are
+    * the x06 shape (broadcast query side, WindowGroupLimit below the
+    * exchange); the stage-2 candidate pool joins back to the corpus as
+    * a small (AQE-broadcast) side. Recall is m-headroom-bounded and
+    * gated in Int8AnnSpec — on MRL-trained embeddings the prefix
+    * carries most of the signal; on the synthetic (energy-uniform)
+    * testdata the gate documents the m-vs-recall trade honestly.
+    * Output: (q_id, vec_id, cos) with k rows per query, `cos` exact
+    * full-dimension cosine. */
   def matryoshkaTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      dims: Int, m: Int): DataFrame = {
     require(dims > 0 && m >= k, s"need dims > 0 and rerank pool m >= k")
     val cands = bruteForceTopK(
       corpus.select(col("vec_id"), slice(col("embedding"), 1, dims).as("embedding")),
       queries.select(col("q_id"), slice(col("q_emb"), 1, dims).as("q_emb")), m)
-      .select("q_id", "vec_id")
-    val re = cands
-      .join(corpus, "vec_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    TopK.perGroup(re, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
+    rerankTopK(cands, corpus, queries, k)
   }
 
   /** x75: brute-force cosine top-k in the QUANTIZED space — integer dot
@@ -1077,8 +1040,7 @@ object Similarity {
   def embeddingDrift(oldSnap: DataFrame, newSnap: DataFrame,
                      nCells: Int): DataFrame = {
     require(nCells > 0, s"nCells must be positive, got $nCells")
-    val cents = oldSnap.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+    val cents = firstCells(oldSnap, nCells)
     def cellCounts(snap: DataFrame, as: String): DataFrame =
       assignCells(snap, "vec_id", "embedding", cents, 1)
         .groupBy(col("cell").as("cid")).agg(count(lit(1)).as(as))
@@ -1123,8 +1085,7 @@ object Similarity {
     require(nCells > 0, s"nCells must be positive, got $nCells")
     require(prunePct >= 0 && prunePct <= 100,
       s"prunePct must be in [0, 100], got $prunePct")
-    val cents = corpus.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+    val cents = firstCells(corpus, nCells)
     val assigned = assignCells(corpus, "vec_id", "embedding", cents, 1,
         keepScore = true)
       .select(col("vec_id"), col("cell"), col("ccos"))

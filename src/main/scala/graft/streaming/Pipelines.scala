@@ -236,17 +236,13 @@ object Pipelines {
                                  tsCol: String, watermark: String, maxLag: String,
                                  k: Int = 7, nHashes: Int = 12,
                                  bands: Int = 3, rows: Int = 4): DataFrame = {
-    import graft.dedup.Dedup
-    def banded(suffix: String) = docs
-      .select(col(idCol).as(s"doc$suffix"), col(tsCol).as(s"ts$suffix"),
-        graft.text.TextOps.norm(col(textCol)).as("_t"))
+    def banded(suffix: String) = graft.dedup.Dedup.minhashBandRows(
+        docs.select(col(idCol).as(s"doc$suffix"), col(tsCol).as(s"ts$suffix"),
+          graft.text.TextOps.norm(col(textCol)).as("_t")),
+        graft.dedup.Dedup.shingleHashes(col("_t"), k),
+        Seq(col(s"doc$suffix"), col(s"ts$suffix")), nHashes, bands, rows)
       .select(col(s"doc$suffix"), col(s"ts$suffix"),
-        Dedup.minhashSignature(Dedup.shingleHashes(col("_t"), k), nHashes).as("_sig"))
-      .select(col(s"doc$suffix"), col(s"ts$suffix"),
-        explode(Dedup.lshBands(col("_sig"), bands, rows)).as("b"))
-      .select(col(s"doc$suffix"), col(s"ts$suffix"),
-        col("b.band_id").as(s"band_id$suffix"),
-        col("b.band_key").as(s"band_key$suffix"))
+        col("band_id").as(s"band_id$suffix"), col("band_key").as(s"band_key$suffix"))
       .withWatermark(s"ts$suffix", watermark)
     banded("_a").join(banded("_b"),
         col("band_id_a") === col("band_id_b") &&
@@ -286,22 +282,10 @@ object Pipelines {
                                   k: Int = 7, nHashes: Int = 12,
                                   bands: Int = 3, rows: Int = 4,
                                   minJaccard: Double = 0.5): DataFrame = {
-    import graft.dedup.Dedup
-    val b = batch
-      .select(col(idCol).as("batch_id"),
-        graft.text.TextOps.norm(col(textCol)).as("_t"))
-      .select(col("batch_id"), Dedup.shingleHashes(col("_t"), k).as("sh_b"))
-      .select(col("batch_id"), col("sh_b"),
-        explode(Dedup.lshBands(
-          Dedup.minhashSignature(col("sh_b"), nHashes), bands, rows)).as("bd"))
-      .select(col("batch_id"), col("sh_b"),
-        col("bd.band_id"), col("bd.band_key"))
-    b.join(corpusIndex, Seq("band_id", "band_key"))
-      .select(col("batch_id"), col("corpus_id"),
-        size(array_intersect(col("sh_b"), col("sh_a"))).cast("double").as("_i"),
-        (size(col("sh_b")) + size(col("sh_a"))).cast("double").as("_s"))
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("_i") / (col("_s") - col("_i")), 6).as("jaccard"))
+    val b = nearDupBands(batch, idCol, textCol, "batch_id", "sh_b", k, nHashes,
+      bands, rows)
+    graft.dedup.Dedup.shingleJaccard(b.join(corpusIndex, Seq("band_id", "band_key")),
+        "batch_id", "corpus_id")
       .filter(col("jaccard") >= minJaccard)
   }
 
@@ -395,18 +379,19 @@ object Pipelines {
     * as on graft.dedup.Dedup). */
   def corpusNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                          k: Int = 7, nHashes: Int = 12,
-                         bands: Int = 3, rows: Int = 4): DataFrame = {
-    import graft.dedup.Dedup
-    corpus
-      .select(col(idCol).as("corpus_id"),
-        graft.text.TextOps.norm(col(textCol)).as("_t"))
-      .select(col("corpus_id"), Dedup.shingleHashes(col("_t"), k).as("sh_a"))
-      .select(col("corpus_id"), col("sh_a"),
-        explode(Dedup.lshBands(
-          Dedup.minhashSignature(col("sh_a"), nHashes), bands, rows)).as("bd"))
-      .select(col("bd.band_id"), col("bd.band_key"),
-        col("corpus_id"), col("sh_a"))
-  }
+                         bands: Int = 3, rows: Int = 4): DataFrame =
+    nearDupBands(corpus, idCol, textCol, "corpus_id", "sh_a", k, nHashes, bands, rows)
+      .select("band_id", "band_key", "corpus_id", "sh_a")
+
+  /** Both sides of the near-dup probe: (idAs, shAs, band_id, band_key),
+    * the shingle array carried through the band explode. */
+  private def nearDupBands(df: DataFrame, idCol: String, textCol: String,
+                           idAs: String, shAs: String, k: Int, nHashes: Int,
+                           bands: Int, rows: Int): DataFrame =
+    graft.dedup.Dedup.minhashBandRows(
+      df.select(col(idCol).as(idAs), graft.text.TextOps.norm(col(textCol)).as("_t"))
+        .select(col(idAs), graft.dedup.Dedup.shingleHashes(col("_t"), k).as(shAs)),
+      col(shAs), Seq(col(idAs), col(shAs)), nHashes, bands, rows)
 
   /** W7 streaming exact-dedup: drop redelivered events by key within the
     * watermark horizon (`dropDuplicatesWithinWatermark` — state per key

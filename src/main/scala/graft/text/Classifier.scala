@@ -62,8 +62,12 @@ object Classifier {
     * sits in hundreds of documents and flips them all. */
   val StructDim = 64
 
-  /** The committed trained artifact (see scripts in README / TrainClassifier). */
-  val DefaultWeightsPath = "/root/repo/fixtures/classifier_weights.parquet"
+  /** The committed trained artifact (see scripts in README / TrainClassifier),
+    * resolved against the JVM's working directory (the checkout root, as
+    * for MediaFixtures.defaultDir) — absolute, because the oracle SQL
+    * embeds it for DuckDB to read. */
+  val DefaultWeightsPath: String =
+    new java.io.File("fixtures/classifier_weights.parquet").getAbsolutePath
 
   /** Planted-junk doc_id offsets — shared by [[junkCorpus]], the x84
     * oracle SQL, and the fixture stamp below. */

@@ -208,6 +208,50 @@ class PlanAuditSpec extends SparkSpec {
       s"quantize_int8 fell out of whole-stage codegen:\n$p")
   }
 
+  test("x02/x05/x34 pair buckets in one pass: one collecting aggregate on the bucket key feeding two Generates, no join") {
+    // the r20 one-pass shape of Dedup.bucketPairs: a persist + equi-self-
+    // join on the bucket key coming back would run the fingerprint
+    // pipeline once per join side
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case _ => p
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
+    def pathTo(p: SparkPlan, target: SparkPlan): Option[Seq[SparkPlan]] =
+      if (p eq target) Some(Nil)
+      else p.children.iterator.map(pathTo(_, target)).collectFirst {
+        case Some(path) => p +: path
+      }
+    Seq("x02_minhash_lsh" -> Seq("band_id", "band_key"),
+      "x05_simhash_pairs" -> Seq("band_id", "band_val"),
+      "x34_winnow_overlap" -> Seq("h")).foreach { case (q, keys) =>
+      val root = unwrap(qe(q).executedPlan)
+      spark.catalog.clearCache()
+      val all = nodes(root)
+      val buckets = all.collect {
+        case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == keys &&
+          a.aggregateExpressions.nonEmpty &&
+          a.aggregateExpressions.forall(_.mode == Final) => a
+      }
+      assert(buckets.size === 1, s"$q: final aggregates on $keys:\n$root")
+      val agg = buckets.head
+      val gens = pathTo(root, agg).get.collect { case g: GenerateExec => g }
+      assert(gens.size === 2 && gens.forall(_.generator.references.exists(r =>
+          agg.output.exists(_.exprId == r.exprId))),
+        s"$q: expected two explodes of the collected bucket above it:\n$root")
+      val keyJoins = all.collect {
+        case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
+          .flatMap(_.references.map(_.name)).exists(keys.contains) => j
+      }
+      assert(keyJoins.isEmpty, s"$q: join on the bucket key:\n$root")
+    }
+  }
+
   /** WindowExec / WindowGroupLimitExec nodes whose partitionSpec is
     * EMPTY — a truly global window, i.e. one task sorting the whole
     * input. Bounded post-`limit` windows in this codebase carry an

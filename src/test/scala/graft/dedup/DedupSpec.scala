@@ -403,6 +403,42 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("bucket cap boundary: exactly cap members pair in full, cap + 1 pairs nothing, cap <= 1 is rejected") {
+    // one planted bucket of exactly `cap` identical members (ids 1..cap)
+    // and one of cap + 1 (ids 101..): every key of the first holds cap
+    // members, every key of the second cap + 1
+    val cap = 3L
+    val inCap = 1L to cap
+    val overCap = 101L to 101L + cap
+    val tIn = "the committee approved the harbour dredging budget after a long " +
+      "debate about silt and tides in the northern estuary"
+    val tOver = "a violinist rehearsed the sonata seven times before dawn while " +
+      "the neighbours complained about the noise from upstairs"
+    val docs = (inCap.map(_ -> tIn) ++ overCap.map(_ -> tOver)).toDF("doc_id", "text")
+    val fp = (inCap.map(_ -> Seq(7L, 8L, 9L, 10L)) ++
+      overCap.map(_ -> Seq(1L, 2L, 3L, 4L))).toDF("doc_id", "bands")
+    val callers: Seq[(String, Long => org.apache.spark.sql.DataFrame)] = Seq(
+      "minhashCandidates maxBucket" -> (c =>
+        Dedup.minhashCandidates(docs, col("doc_id"), col("text"), maxBucket = Some(c))),
+      "bandedHammingPairs maxBucket" -> (c =>
+        Dedup.bandedHammingPairs(fp, maxBucket = Some(c))),
+      "winnowOverlapPairs maxDf" -> (c =>
+        Dedup.winnowOverlapPairs(docs, col("doc_id"), col("text"), maxDf = c)))
+    val full = for (a <- inCap; b <- inCap if a < b) yield (a, b)
+    callers.foreach { case (name, run) =>
+      val got = run(cap).select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === full.toSet, s"$name at cap $cap")
+      // one past the boundary the in-cap bucket is over the cap too
+      val tighter = run(cap - 1).select("doc_a", "doc_b").collect()
+      assert(tighter.isEmpty, s"$name at cap ${cap - 1}: ${tighter.toSeq}")
+      Seq(1L, 0L).foreach { bad =>
+        intercept[IllegalArgumentException](run(bad))
+      }
+    }
+    spark.catalog.clearCache()
+  }
+
   test("clusterSizeSpectrum: planted cliques land in their size rows; n_docs sums to the corpus") {
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     val docs = Seq(
