@@ -88,14 +88,6 @@ object Bench {
     // warm-up: exercise scan + shuffle + codegen paths once, untimed
     try SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    // stage the x87/x89 media fixtures untimed: one-time corpus
-    // synthesis is ingestion's cost, not the dedup queries' — a fresh
-    // checkout would otherwise charge it to x87's first rep
-    if (queries.exists(q => q._1.startsWith("x87") || q._1.startsWith("x89")))
-      try {
-        graft.multimodal.MediaFixtures.ensureImages(spark)
-        graft.multimodal.MediaFixtures.ensureAudio(spark)
-      } catch { case _: Throwable => () }
     // Fixed reference probe: a deterministic pure-compute workload (no
     // IO, no data dependence, one reduce) whose median of 3 lets
     // check_bench_delta.py divide host-speed drift out of two runs.

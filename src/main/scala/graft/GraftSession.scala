@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft SparkSession is configured. Every entry point
-  * (Bench, Verify, TrainClassifier, BuildMediaFixtures) and the test
+  * (Bench, Verify, TrainClassifier) and the test
   * harness build their session here, so no setting can drift between
   * what is verified and what is measured. */
 object GraftSession {

@@ -923,12 +923,10 @@ object Dedup {
   val CcLocalEdgeThreshold: Long = 2000000L
 
   /** Banded Hamming-LSH pairing over ANY 4×16-bit fingerprint table
-    * (doc_id, bands) — text SimHash and image dHash share this exact
-    * machinery ([[simhashPairs]], [[graft.multimodal.Multimodal
-    * .imagePHashPairs]]): explode the candidate keys, pair each
-    * (band_id, band_val) bucket through [[bucketPairs]] (members carry
-    * their bands), exact-Hamming-filter the candidates. Never
-    * an all-pairs scan; `blocks` picks the key scheme (4 = the bands
+    * (doc_id, bands), used by [[simhashPairs]]: explode the candidate
+    * keys, pair each (band_id, band_val) bucket through [[bucketPairs]]
+    * (members carry their bands), exact-Hamming-filter the candidates.
+    * Never an all-pairs scan; `blocks` picks the key scheme (4 = the bands
     * themselves, 6 = Manku 3-block combinations for corpora past 2¹⁸
     * rows — [[scaledBlocks]]); the output pair set is identical either
     * way, both schemes are pigeonhole-complete for Hamming ≤ 3. */
@@ -948,8 +946,8 @@ object Dedup {
         explode(array(bandKeys(blocks): _*)).as("b"))
       .select(col("doc_id"), col("bands"), col("b.band_id"), col("b.band_val"))
     // the optional hot-bucket cap: a band value shared by a large corpus
-    // fraction (all-silence audio → flat contour; a blank image →
-    // constant dHash) is a population² false-candidate generator, while
+    // fraction (boilerplate text → one SimHash) is a population²
+    // false-candidate generator, while
     // genuinely near-dup pairs still agree on a discriminating band
     val ham = (0 until 4).map { j =>
       bit_count(get(col("a.bands"), lit(j)).bitwiseXOR(get(col("b.bands"), lit(j))))

@@ -137,10 +137,6 @@ object GraftExtensions {
       a => SimHash16(a.head)),
     fn("simhash64_bands", classOf[SimHash64Bands], 1, "simhash64_bands(array<bigint>)")(
       a => SimHash64Bands(a.head)),
-    fn("dhash64_bands", classOf[DHash64Bands], 3, "dhash64_bands(binary, width, channels)")(
-      a => DHash64Bands(a.head, a(1), intArg("dhash64_bands", "channels", a(2)))),
-    fn("gradient64_bands", classOf[Gradient64Bands], 1, "gradient64_bands(array<bigint>)")(
-      a => Gradient64Bands(a.head)),
     fn("dot_fold", classOf[DotFold], 2, "dot_fold(array<float>, array<float>)")(
       a => DotFold(a(0), a(1))),
     fn("sqnorm_fold", classOf[SqNormFold], 1, "sqnorm_fold(array<float>)")(
@@ -225,13 +221,6 @@ object functions {
 
   def simhash64_bands(c: Column): Column =
     GraftBridge.column(SimHash64Bands(GraftBridge.expression(c)))
-
-  def dhash64_bands(pixels: Column, width: Column, channels: Int): Column =
-    GraftBridge.column(DHash64Bands(GraftBridge.expression(pixels),
-      GraftBridge.expression(width), channels))
-
-  def gradient64_bands(contour: Column): Column =
-    GraftBridge.column(Gradient64Bands(GraftBridge.expression(contour)))
 
   def sign_bucket_rh(c: Column, bits: Int, seed: Int): Column =
     GraftBridge.column(SignBucketRH(GraftBridge.expression(c), bits, seed))

@@ -57,73 +57,6 @@ object HashUtil {
     acc
   }
 
-  /** 64-bit perceptual difference-hash (dHash) of a row-major pixel
-    * buffer, returned as four 16-bit band values (the Manku banded
-    * layout [[SimHash64Bands]] uses, so the same Hamming-LSH pairing
-    * machinery applies). Pixels are `channels` bytes each (RGB → BT.601
-    * integer luma (299R+587G+114B)/1000; 1 channel → the byte itself),
-    * average-pooled onto a 9×8 grid (source pixel (y, x) lands in cell
-    * (y·8/h, x·9/w) — all integer divisions), and bit cy·8+cx is set iff
-    * cell (cy, cx) > cell (cy, cx+1). Neighbor comparisons make the
-    * hash invariant to global brightness shifts and, with the pooling,
-    * robust to re-encoding and rescaling — the standard image near-dup
-    * fingerprint. Trailing bytes past the last full row are ignored;
-    * empty cells (inputs narrower than 9 or shorter than 8 pixels) read
-    * as 0. */
-  def dhash64Bands(bytes: Array[Byte], width: Int, channels: Int): ArrayData = {
-    val npix = bytes.length / channels
-    val h = npix / width
-    val sum = new Array[Long](72)
-    val cnt = new Array[Long](72)
-    var p = 0
-    val full = h * width
-    while (p < full) {
-      val y = p / width
-      val x = p - y * width
-      val base = p * channels
-      val g =
-        if (channels >= 3)
-          (299 * (bytes(base) & 0xff) + 587 * (bytes(base + 1) & 0xff)
-            + 114 * (bytes(base + 2) & 0xff)) / 1000
-        else bytes(base) & 0xff
-      val cell = (y * 8 / h) * 9 + (x * 9 / width)
-      sum(cell) += g
-      cnt(cell) += 1
-      p += 1
-    }
-    val bands = new Array[Long](4)
-    var i = 0
-    while (i < 64) {
-      val cy = i >> 3
-      val cx = i & 7
-      val l = if (cnt(cy * 9 + cx) == 0) 0L else sum(cy * 9 + cx) / cnt(cy * 9 + cx)
-      val r = if (cnt(cy * 9 + cx + 1) == 0) 0L else sum(cy * 9 + cx + 1) / cnt(cy * 9 + cx + 1)
-      if (l > r) bands(i >> 4) |= 1L << (i & 15)
-      i += 1
-    }
-    ArrayData.toArrayData(bands)
-  }
-
-  /** 64 neighbor-gradient bits over a 65-element energy contour,
-    * returned as four 16-bit bands (the same Manku layout as
-    * [[dhash64Bands]] / [[simhash64Bands]], so one Hamming-LSH pairing
-    * serves text, image, and audio fingerprints). Bit i is set iff
-    * contour(i) > contour(i+1) — invariant to any strictly
-    * order-preserving rescale of the contour (an exact k× gain leaves
-    * every bit unchanged), which is the property that makes it an audio
-    * near-dup fingerprint over frame energies. */
-  def gradient64Bands(es: ArrayData): ArrayData = {
-    require(es.numElements() >= 65,
-      s"gradient64_bands needs >= 65 contour points, got ${es.numElements()}")
-    val bands = new Array[Long](4)
-    var i = 0
-    while (i < 64) {
-      if (es.getLong(i) > es.getLong(i + 1)) bands(i >> 4) |= 1L << (i & 15)
-      i += 1
-    }
-    ArrayData.toArrayData(bands)
-  }
-
   /** Distinct Lehmer-mixed hashes of word bigrams ("w1_w2"), matching
     * split(t, " ") semantics (-1 limit) with unigram fallback for
     * single-word input. One native pass; ≡ the HOF pipeline
@@ -587,55 +520,6 @@ case class HashedWeightSum(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): HashedWeightSum =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "hashed_weight_sum"
-}
-
-/** dhash64_bands(pixels binary, width int, channels const): ARRAY<LONG>
-  * — 64-bit perceptual dHash as four 16-bit bands in one native pass
-  * over the decoded pixel buffer (see [[HashUtil.dhash64Bands]]).
-  * Width is per-row (images of mixed sizes hash in one projection);
-  * channels is a plan constant. */
-case class DHash64Bands(left: Expression, right: Expression, channels: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(channels > 0, "channels must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"dhash64_bands requires (BINARY, INT), got " +
-        s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override protected def nullSafeEval(bytes: Any, width: Any): Any =
-    HashUtil.dhash64Bands(bytes.asInstanceOf[Array[Byte]],
-      width.asInstanceOf[Int], channels)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, w) =>
-      s"${ev.value} = graft.plans.HashUtil.dhash64Bands($b, $w, $channels);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DHash64Bands =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dhash64_bands"
-}
-
-/** gradient64_bands(array<bigint>): ARRAY<LONG> — 64 neighbor-gradient
-  * bits of a >= 65-point energy contour as four 16-bit Manku bands (see
-  * [[HashUtil.gradient64Bands]]); the audio member of the perceptual-
-  * fingerprint family (text SimHash, image dHash, audio energy-gradient
-  * hash all share the banded Hamming pairing). */
-case class Gradient64Bands(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"gradient64_bands requires ARRAY<BIGINT>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.gradient64Bands(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.HashUtil.gradient64Bands($c);")
-  override protected def withNewChildInternal(newChild: Expression): Gradient64Bands =
-    copy(child = newChild)
-  override def prettyName: String = "gradient64_bands"
 }
 
 case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {

@@ -1102,61 +1102,6 @@ object ExtraQueries {
         .select(col("doc_id"), TextOps.fingerprint(col("_t")).as("fp"))
     },
 
-    // ----- multimodal: binary decode + feature extraction (mapPartitions)
-    QueryDef("x13_media_features",
-      "opaque binary media column + typed metadata: partition-local decode + checksum/quadrant features, no shuffle")(
-      """WITH n AS (SELECT doc_id, text,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind
-        |  FROM documents),
-        |c AS (SELECT doc_id, kind,
-        |  [ord(substr(text, i, 1)) FOR i IN range(1, len(text)+1)]::BIGINT[] AS bs FROM n)
-        |SELECT doc_id AS media_id, kind, CAST(len(bs) AS BIGINT) AS byte_len,
-        |  list_reduce(bs, (acc, x) -> (acc * 31 + x) % 1000000007) AS checksum,
-        |  CAST(len(list_filter(bs, b -> b // 32 = 1)) AS BIGINT) AS q1,
-        |  CAST(len(list_filter(bs, b -> b // 32 = 2)) AS BIGINT) AS q2,
-        |  CAST(len(list_filter(bs, b -> b // 32 = 3)) AS BIGINT) AS q3
-        |FROM c
-        |""".stripMargin) { (s, dir) =>
-      graft.multimodal.Multimodal.features(
-        graft.multimodal.Multimodal.media(Tables.documents(s, dir))).toDF()
-    },
-
-    // ----- multimodal: frame sampling over the binary payload
-    QueryDef("x14_frame_sample",
-      "keyframe-style sampling: every 2nd 16-byte block of the binary payload, partition-local")(
-      """SELECT doc_id AS media_id,
-        |  CAST(((len(text) + 15) // 16 + 1) // 2 AS BIGINT) AS n_frames,
-        |  list_reduce([ord(substr(text, i, 1)) FOR i IN range(1, least(len(text), 16)+1)]::BIGINT[],
-        |              (acc, x) -> (acc * 31 + x) % 1000000007) AS frame_checksum
-        |FROM documents
-        |""".stripMargin) { (s, dir) =>
-      graft.multimodal.Multimodal.frameSample(
-        graft.multimodal.Multimodal.media(Tables.documents(s, dir)),
-        frameBytes = 16, everyN = 2).toDF()
-    },
-
-    // ----- multimodal: nearest-neighbor resize over the decoded payload
-    QueryDef("x35_media_resize",
-      "resize stage of the media pipeline: decoded payload as a 16-wide byte grid, integer nearest-neighbor to 8x8, checksum of the resized buffer — partition-local, no shuffle")(
-      """WITH c AS (SELECT doc_id,
-        |  [ord(substr(text, i, 1)) FOR i IN range(1, len(text)+1)]::BIGINT[] AS bs
-        |  FROM documents),
-        |d AS (SELECT doc_id, bs, len(bs) AS n, (len(bs) + 15) // 16 AS src_h FROM c),
-        |r AS (SELECT doc_id, [
-        |    CASE WHEN ((i // 8) * src_h // 8) * 16 + ((i % 8) * 16 // 8) < n
-        |         THEN bs[((i // 8) * src_h // 8) * 16 + ((i % 8) * 16 // 8) + 1]
-        |         ELSE 0 END
-        |    FOR i IN range(0, 64)] AS px FROM d)
-        |SELECT doc_id AS media_id, CAST(8 AS INTEGER) AS out_w,
-        |       CAST(8 AS INTEGER) AS out_h,
-        |       list_reduce(px, (acc, x) -> (acc * 31 + x) % 1000000007) AS resize_checksum
-        |FROM r
-        |""".stripMargin) { (s, dir) =>
-      graft.multimodal.Multimodal.resize(
-        graft.multimodal.Multimodal.media(Tables.documents(s, dir)),
-        outW = 8, outH = 8).toDF()
-    },
-
     // ----- PII detection + C4-style scrub (emails/URLs → placeholder tokens)
     QueryDef("x19_pii_scrub",
       "count email/URL patterns per doc and fingerprint the scrubbed text — dialect-neutral regexes, planted PII rows")(
@@ -2430,31 +2375,6 @@ object ExtraQueries {
         col("doc_id"), col("text"), out)
     },
 
-    // ----- multimodal: REAL per-frame pixel decode of image-coded mp4
-    QueryDef("x62_frame_pixels",
-      "MJPEG-style per-frame pixel decode: synthesize an image-coded mp4 per doc (3 one-pixel PNG frames with arithmetic-planted RGB), walk the real sample table, ImageIO-decode every frame — the oracle recomputes the planted pixels without any image library, so a green row proves the full encode→demux→decode pipeline reproduces them exactly")(
-      """SELECT doc_id AS media_id, CAST(3 AS BIGINT) AS n_frames,
-        |  CAST(3 AS BIGINT) AS n_decoded,
-        |  CAST(1 AS BIGINT) AS width, CAST(1 AS BIGINT) AS height,
-        |  CAST((((doc_id * 7) % 256) * 31 + (doc_id * 11) % 256) * 31
-        |       + (doc_id * 3) % 256 AS BIGINT) % 1000000007 AS pixel_checksum
-        |FROM documents
-        |""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      import graft.multimodal.{FakeCodec, MediaMeta, MediaRow, Multimodal}
-      // conditional spread before the per-row synthesis + decode (guide
-      // §2.5): the doc-id scan is one split at the committed fixture
-      // sizes, and without it the whole decode runs on one task
-      val media = graft.ops.Spread.toCores(
-          Tables.documents(s, dir).select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id =>
-          MediaRow(id, "video", FakeCodec.mjpegAsset(id, 3), MediaMeta("mp4", 1, 1))))
-      Multimodal.framePixelDecode(media, everyN = 1)
-        .toDF().withColumnRenamed("media_id", "media_id")
-        .select(col("media_id"), col("n_frames"), col("n_decoded"),
-          col("width"), col("height"), col("pixel_checksum"))
-    },
-
     // ----- BPE merge-pair vocabulary (iterative tokenizer training)
     QueryDef("x61_bpe_merges",
       "BPE tokenizer training behind the probe-and-dispatch trainer: one distributed (word, count) inventory pass, then driver merge rounds when the vocabulary fits maxInventory (bit-for-bit equal to the distributed rounds — TextOpsSpec pins it) or distributed rounds otherwise; oracle replays each round as a materialized CTE with the same greedy leftmost fold")(
@@ -3207,112 +3127,6 @@ object ExtraQueries {
       ep(0L).unionAll(ep(2L))
     },
 
-    // ----- image perceptual-hash near-dup (REAL PNG encode/decode;
-    // planted re-encoded + resized/brightened duplicates)
-    QueryDef("x87_image_phash_pairs",
-      "image near-dup via 64-bit perceptual dHash (BT.601 luma, 9x8 average pool, neighbor-gradient bits) over REAL ImageIO encode->decode round-trips — per doc: base 36x32 PNG, a re-encoded copy, a 2x nearest-neighbor upscale with +4 clamped brightness; Manku 4x16-band Hamming-LSH pairing (equi-join candidates, exact Hamming <= 3), the same machinery as text SimHash — oracle recomputes the planted pixels and the whole hash by pure arithmetic, no image library")(
-      s"""WITH ids AS (SELECT doc_id AS d FROM documents),
-         |base AS (
-         |  SELECT d, y, x,
-         |    ((d*97+13)*(y*5+x*11+7) + d*31 + y*x*((d%7)+1)) % 256 AS g
-         |  FROM ids, range(0,32) ry(y), range(0,36) rx(x)),
-         |img AS (
-         |  SELECT d AS id, 36 AS w, 32 AS h, y, x, g FROM base
-         |  UNION ALL SELECT d+20000000, 36, 32, y, x, g FROM base
-         |  UNION ALL
-         |  SELECT d+40000000 AS id, 72 AS w, 64 AS h, y, x,
-         |    least(((d*97+13)*((y//2)*5+(x//2)*11+7) + d*31
-         |           + (y//2)*(x//2)*((d%7)+1)) % 256 + 4, 255) AS g
-         |  FROM ids, range(0,64) ry(y), range(0,72) rx(x)),
-         |cells AS (SELECT id, y*8//h AS cy, x*9//w AS cx, sum(g)//count(*) AS v
-         |          FROM img GROUP BY id, cy, cx),
-         |grid AS (SELECT id, list(v ORDER BY cy*9+cx) AS vs FROM cells GROUP BY id),
-         |bnd AS (SELECT id, [
-         |    CAST(list_sum([CASE WHEN vs[(((bb*16+i)//8)*9) + ((bb*16+i)%8) + 1]
-         |                        > vs[(((bb*16+i)//8)*9) + ((bb*16+i)%8) + 2]
-         |                   THEN (1::BIGINT << i) ELSE 0 END FOR i IN range(0,16)]) AS BIGINT)
-         |    FOR bb IN range(0,4)] AS bands FROM grid),
-         |fbx AS (SELECT id AS doc_id, bands, b AS band_id, bands[b+1] AS band_val
-         |        FROM bnd, range(0,4) r(b)),
-         |pr AS (SELECT DISTINCT a.doc_id AS id_a, k.doc_id AS id_b,
-         |        CAST(bit_count(xor(a.bands[1], k.bands[1])) + bit_count(xor(a.bands[2], k.bands[2]))
-         |           + bit_count(xor(a.bands[3], k.bands[3])) + bit_count(xor(a.bands[4], k.bands[4])) AS BIGINT) AS hamming
-         |       FROM fbx a JOIN fbx k
-         |         ON a.band_id = k.band_id AND a.band_val = k.band_val AND a.doc_id < k.doc_id)
-         |SELECT id_a, id_b, hamming FROM pr WHERE hamming <= 3
-         |""".stripMargin) { (s, dir) =>
-      // staged corpus (MediaFixtures): read-and-semi-join instead of
-      // re-encoding 15k PNGs per run — same rows, codec proof unchanged
-      graft.multimodal.Multimodal.imagePHashPairs(
-        graft.multimodal.MediaFixtures.stagedImages(Tables.documents(s, dir)))
-    },
-
-    // ----- H.264 keyframe scan: real demux + NAL walk, IDR sync points
-    QueryDef("x88_keyframe_scan",
-      "H.264 keyframe classification: synthesize an AVCC-framed mp4 per doc (3+d%5 samples, IDR every 1+d%3, SPS/PPS in sample 0), walk the REAL sample table, parse the length-prefixed NAL units, classify IDR vs non-IDR per sample — the sync-point index frame sampling needs to pick decodable frames from inter-coded tracks; the rolling IDR-bitmask checksum certifies every sample's classification, and the oracle recomputes it all by arithmetic, no codec")(
-      """WITH p AS (SELECT doc_id, 3 + doc_id % 5 AS nf, 1 + doc_id % 3 AS gop
-        |           FROM documents),
-        |m AS (SELECT doc_id, nf, gop,
-        |  list_reduce([CASE WHEN i % gop = 0 THEN 1 ELSE 0 END
-        |               FOR i IN range(0, nf)]::BIGINT[],
-        |              (acc, x) -> (acc * 31 + x) % 1000000007) AS cs
-        |  FROM p)
-        |SELECT doc_id AS media_id, CAST(nf AS BIGINT) AS n_samples,
-        |  CAST((nf + gop - 1) // gop AS BIGINT) AS n_idr,
-        |  CAST(1 AS BIGINT) AS n_sps, CAST(1 AS BIGINT) AS n_pps,
-        |  CAST(0 AS BIGINT) AS first_idr_idx,
-        |  CAST(cs AS BIGINT) AS idr_mask_checksum
-        |FROM m
-        |""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      import graft.multimodal.{FakeCodec, MediaMeta, MediaRow, Multimodal}
-      // conditional spread before the per-row synthesis + decode (guide
-      // §2.5): the doc-id scan is one split at the committed fixture
-      // sizes, and without it the whole decode runs on one task
-      val media = graft.ops.Spread.toCores(
-          Tables.documents(s, dir).select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => MediaRow(id, "video",
-          FakeCodec.avcAsset(id, (3 + id % 5).toInt, (1 + id % 3).toInt),
-          MediaMeta("mp4", 0, 0))))
-      Multimodal.keyframeStats(media).toDF()
-    },
-
-    // ----- IDR-gated frame sampling: x88's NAL classification composed
-    //       with x14's cadence — sample only decodable sync points
-    QueryDef("x118_idr_sample",
-      "IDR-gated frame sampling: walk the real mp4 sample table, classify each sample's NAL units, and take every 2nd frame of the IDR SEQUENCE (cadence in keyframe-ordinal space) — on an inter-coded track every selected frame is a sync point, decodable without its reference chain, so no decode budget lands on undecodable samples; emits selected-index rolling checksum (certifying exactly WHICH samples got picked) and the selected byte total (the budget actually spent) — oracle reproduces sample sizes and the whole selection by arithmetic, no codec")(
-      """WITH p AS (SELECT doc_id AS d, 3 + doc_id % 5 AS nf, 1 + doc_id % 3 AS gop
-        |           FROM documents),
-        |sel AS (SELECT d, i AS idx,
-        |          10 + (d + i) % 7 + CASE WHEN i = 0 THEN 16 ELSE 0 END AS sz
-        |        FROM p, range(0, 8) r(i)
-        |        WHERE i < nf AND i % gop = 0 AND (i // gop) % 2 = 0),
-        |agg AS (SELECT d, count(*) AS n_selected, min(idx) AS first_sel,
-        |          list_reduce(list(idx ORDER BY idx)::BIGINT[],
-        |                      (a, x) -> (a * 31 + x) % 1000000007) AS cs,
-        |          sum(sz) AS bytes
-        |        FROM sel GROUP BY d)
-        |SELECT p.d AS media_id, CAST(p.nf AS BIGINT) AS n_samples,
-        |  CAST((p.nf + p.gop - 1) // p.gop AS BIGINT) AS n_idr,
-        |  CAST(a.n_selected AS BIGINT) AS n_selected,
-        |  CAST(a.first_sel AS BIGINT) AS first_sel_idx,
-        |  CAST(a.cs AS BIGINT) AS sel_idx_checksum,
-        |  CAST(a.bytes AS BIGINT) AS sel_bytes
-        |FROM p JOIN agg a ON p.d = a.d
-        |""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      import graft.multimodal.{FakeCodec, MediaMeta, MediaRow, Multimodal}
-      // conditional spread before the per-row synthesis + decode (guide
-      // §2.5): the doc-id scan is one split at the committed fixture
-      // sizes, and without it the whole decode runs on one task
-      val media = graft.ops.Spread.toCores(
-          Tables.documents(s, dir).select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => MediaRow(id, "video",
-          FakeCodec.avcAsset(id, (3 + id % 5).toInt, (1 + id % 3).toInt),
-          MediaMeta("mp4", 0, 0))))
-      Multimodal.idrFrameSample(media, everyK = 2).toDF()
-    },
-
     // ----- exact longest-substring decontam via a generalized suffix
     //       automaton over the benchmark (Lee et al. exact-substring at
     //       token grain) — what fixed 8-gram coverage dilutes at
@@ -3367,81 +3181,6 @@ object ExtraQueries {
         .select(col("doc_id"),
           least(col("longest_match"), lit(24L)).as("longest_match"),
           col("contaminated"))
-    },
-
-    // ----- audio fingerprint near-dup: energy-gradient hash over real
-    //       javax.sound WAV encode->decode round-trips (the audio member
-    //       of the perceptual-dedup family: text SimHash, image dHash,
-    //       audio gradient hash share one banded-Hamming machinery)
-    QueryDef("x89_audio_fp_pairs",
-      "audio near-dup via 64-bit energy-gradient fingerprint (16-sample frame |PCM| energies, neighbor-gradient bits, Manku 4x16-band Hamming-LSH pairing, exact Hamming <= 3) over REAL javax.sound WAV encode->decode round-trips — per doc: base 1040-sample mono 16-bit track, a re-encoded copy (sample-identical second codec round-trip), a 2x-gain copy with alternate-sample dither (gain is fingerprint-exact by gradient invariance; dither may flip near-tie bits, absorbed by the threshold) — oracle recomputes the planted samples and the whole hash by pure arithmetic, no audio library")(
-      s"""WITH ids AS (SELECT doc_id AS d FROM documents),
-         |mixv AS (
-         |  SELECT d, s, (d*1000003 + s*7919 + 13) % 1000000007 AS v
-         |  FROM ids, range(0,1040) rs(s)),
-         |samp AS (
-         |  SELECT d, s, (v*v % 1000000007) % 32768 - 16384 AS a FROM mixv),
-         |aud AS (
-         |  SELECT d AS id, s, abs(a) AS m FROM samp
-         |  UNION ALL SELECT d+20000000, s, abs(a) FROM samp
-         |  UNION ALL SELECT d+40000000, s, abs(2*a + (s%2)) FROM samp),
-         |en AS (SELECT id, s//16 AS f, sum(m) AS e FROM aud GROUP BY id, f),
-         |grid AS (SELECT id, list(e ORDER BY f) AS es FROM en GROUP BY id),
-         |bnd AS (SELECT id, [
-         |    CAST(list_sum([CASE WHEN es[bb*16+i+1] > es[bb*16+i+2]
-         |                   THEN (1::BIGINT << i) ELSE 0 END FOR i IN range(0,16)]) AS BIGINT)
-         |    FOR bb IN range(0,4)] AS bands FROM grid),
-         |fbx AS (SELECT id AS doc_id, bands, b AS band_id, bands[b+1] AS band_val
-         |        FROM bnd, range(0,4) r(b)),
-         |pr AS (SELECT DISTINCT a.doc_id AS id_a, k.doc_id AS id_b,
-         |        CAST(bit_count(xor(a.bands[1], k.bands[1])) + bit_count(xor(a.bands[2], k.bands[2]))
-         |           + bit_count(xor(a.bands[3], k.bands[3])) + bit_count(xor(a.bands[4], k.bands[4])) AS BIGINT) AS hamming
-         |       FROM fbx a JOIN fbx k
-         |         ON a.band_id = k.band_id AND a.band_val = k.band_val AND a.doc_id < k.doc_id)
-         |SELECT id_a, id_b, hamming FROM pr WHERE hamming <= 3
-         |""".stripMargin) { (s, dir) =>
-      graft.multimodal.Multimodal.audioFpPairs(
-        graft.multimodal.MediaFixtures.stagedAudio(Tables.documents(s, dir)))
-    },
-
-    // ----- video scene-cut detection: real demux + per-frame decode +
-    //       consecutive-frame SAD (the shot-boundary index a video
-    //       training pipeline samples one frame per scene from)
-    QueryDef("x91_scene_cuts",
-      "video scene-cut detection: synthesize a 6-frame 8x6 multi-scene MJPEG-style mp4 per doc (scene length 2+d%2; +1/frame phase drift within a scene, +-97/103 per-pixel jumps at scene boundaries), walk the REAL sample table, ImageIO-decode every frame, compute consecutive-frame sum-of-absolute-differences, flag boundaries with SAD > 1000 — rolling checksums over BOTH the cut bitmask and the raw SAD sequence make the oracle certify every boundary's arithmetic; oracle recomputes the planted pixels and diffs without any image library")(
-      s"""WITH p AS (SELECT doc_id AS d, 2 + doc_id % 2 AS s FROM documents),
-         |pix AS (SELECT d, s, j, y, x,
-         |  CASE WHEN j % s != 0 THEN 3
-         |  ELSE 3 * abs((d*53 + (j//s)*97 + y*7 + x*11) % 200
-         |             - ((d*53 + (j//s - 1)*97 + y*7 + x*11) % 200 + s - 1)) END AS pd
-         |  FROM p, range(1,6) rj(j), range(0,6) ry(y), range(0,8) rx(x)),
-         |df AS (SELECT d, s, j, sum(pd) AS diff FROM pix GROUP BY d, s, j),
-         |agg AS (SELECT d,
-         |  sum(CASE WHEN diff > 1000 THEN 1 ELSE 0 END) AS n_cuts,
-         |  min(CASE WHEN diff > 1000 THEN j END) AS first_cut,
-         |  list_reduce(list(CASE WHEN diff > 1000 THEN 1 ELSE 0 END ORDER BY j)::BIGINT[],
-         |              (a, x) -> (a * 31 + x) % 1000000007) AS cut_cs,
-         |  list_reduce(list(diff ORDER BY j)::BIGINT[],
-         |              (a, x) -> (a * 31 + x) % 1000000007) AS diff_cs
-         |  FROM df GROUP BY d)
-         |SELECT d AS media_id, CAST(6 AS BIGINT) AS n_frames,
-         |  CAST(n_cuts AS BIGINT) AS n_cuts,
-         |  CAST(coalesce(first_cut, -1) AS BIGINT) AS first_cut_idx,
-         |  CAST(cut_cs AS BIGINT) AS cut_checksum,
-         |  CAST(diff_cs AS BIGINT) AS diff_checksum
-         |FROM agg
-         |""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      import graft.multimodal.{MediaMeta, MediaRow, Multimodal}
-      // conditional spread before the per-row synthesis + decode (guide
-      // §2.5): the doc-id scan is one split at the committed fixture
-      // sizes, and without it the whole decode runs on one task
-      val media = graft.ops.Spread.toCores(
-          Tables.documents(s, dir).select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => MediaRow(id, "video",
-          Multimodal.sceneAsset(id, nFrames = 6, sceneLen = 2 + (id % 2).toInt),
-          MediaMeta("mp4", 8, 6))))
-      Multimodal.sceneCuts(media, threshold = 1000L).toDF()
     },
 
     // ----- corpus novelty curve: diminishing-returns diagnostic over

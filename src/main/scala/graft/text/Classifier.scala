@@ -63,9 +63,8 @@ object Classifier {
   val StructDim = 64
 
   /** The committed trained artifact (see scripts in README / TrainClassifier),
-    * resolved against the JVM's working directory (the checkout root, as
-    * for MediaFixtures.defaultDir) — absolute, because the oracle SQL
-    * embeds it for DuckDB to read. */
+    * resolved against the JVM's working directory (the checkout root) —
+    * absolute, because the oracle SQL embeds it for DuckDB to read. */
   val DefaultWeightsPath: String =
     new java.io.File("fixtures/classifier_weights.parquet").getAbsolutePath
 
@@ -75,13 +74,12 @@ object Classifier {
   val JunkSymbolOffset = 30000000L
   val JunkNumberOffset = 40000000L
 
-  /** Generator constants the committed artifact was trained under — the
-    * MediaFixtures stamp discipline applied to the classifier weights:
-    * if any of these change at HEAD, the committed parquet silently
-    * stops matching the features/oracles that read it, so the stamp
-    * (a `.meta` sidecar — the artifact itself is a single parquet
-    * FILE) must be regenerated WITH the artifact (TrainClassifier),
-    * and FixtureStampSpec fails until it is. */
+  /** Generator constants the committed artifact was trained under, as a
+    * stamp on the classifier weights: if any of these change at HEAD,
+    * the committed parquet silently stops matching the features/oracles
+    * that read it, so the stamp (a `.meta` sidecar — the artifact itself
+    * is a single parquet FILE) must be regenerated WITH the artifact
+    * (TrainClassifier), and FixtureStampSpec fails until it is. */
   def stampText: String =
     s"dim=$Dim;structDim=$StructDim;" +
       s"junk=$JunkBoilerplateOffset,$JunkSymbolOffset,$JunkNumberOffset;gen=1"
@@ -231,9 +229,9 @@ object Classifier {
     require(fs.rename(part.head.getPath, new Path(path)),
       s"rename ${part.head.getPath} -> $path failed")
     fs.delete(new Path(tmp), true)
-    // stamp AFTER the artifact commit (MediaFixtures discipline): a
-    // crash between the two leaves an unstamped artifact that
-    // FixtureStampSpec rejects, never a stamped stale one
+    // stamp AFTER the artifact commit: a crash between the two leaves
+    // an unstamped artifact that FixtureStampSpec rejects, never a
+    // stamped stale one
     val sp = new Path(stampPath(path))
     val out = fs.create(sp, true)
     try out.write(stampText.getBytes("UTF-8")) finally out.close()
@@ -249,8 +247,7 @@ object Classifier {
       cache.getOrElseUpdate(path, {
         // gate at LOAD time, not only in FixtureStampSpec: a weights
         // artifact regenerated under older constants (or with a stale
-        // sidecar) must fail the run that would silently score with
-        // it — the MediaFixtures.reusable discipline applied here
+        // sidecar) must fail the run that would silently score with it
         require(stampOk(spark, path),
           s"classifier weights at $path carry no stamp matching HEAD's " +
             s"generator constants ('$stampText') — regenerate with " +

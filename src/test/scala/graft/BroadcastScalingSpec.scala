@@ -29,14 +29,10 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
   * those pin intent, this pins measured rows. */
 class BroadcastScalingSpec extends SparkSpec {
 
-  /** Queries allowed a corpus-linear broadcast, each justified:
-    * x87/x89 semi-join the STAGED media fixture against the current
-    * slice's doc-id set — a test-environment staging artifact (the
-    * fixture universe is a superset of every SF slice), not a
-    * production operator; at production scale the media corpus IS the
-    * input and no doc-id semi-join exists. */
-  private val corpusLinearLicensed: Set[String] =
-    Set("x87_image_phash_pairs", "x89_audio_fp_pairs")
+  /** Queries allowed a corpus-linear broadcast, each justified. None is
+    * licensed today; an entry added here must keep broadcasting a side
+    * that grows, or the whitelist test below fails. */
+  private val corpusLinearLicensed: Set[String] = Set.empty
 
   /** Per-broadcast output rows with stats/AQE auto-broadcast DISABLED:
     * under threshold −1 the only joins that still plan a
@@ -54,8 +50,8 @@ class BroadcastScalingSpec extends SparkSpec {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.queryExecution.toRdd.count() // execute: AQE finalizes + metrics fill
       // descend through AQE wrappers, query stages, AND persisted
-      // subtrees (x87/x89's forced semi-join broadcast runs inside the
-      // cache-materialization job — the final plan only shows the
+      // subtrees (a forced broadcast inside a cached subtree runs in
+      // the cache-materialization job — the final plan only shows the
       // InMemoryTableScan); identity-dedup so a cache read from both
       // sides of a self-join counts its broadcasts once
       val seen = java.util.Collections.newSetFromMap(
@@ -121,7 +117,7 @@ class BroadcastScalingSpec extends SparkSpec {
 
   test("licensed corpus-linear broadcasts stay licensed (whitelist does not rot)") {
     // each licensed query must actually still broadcast something that
-    // grows — if the staging semi-join is ever restructured away, the
+    // grows — if its growing side is ever restructured away, the
     // entry must leave the whitelist so new growth cannot hide under it
     val stale = corpusLinearLicensed.toSeq.sorted.flatMap { n =>
       val small = broadcastRows(n, "/root/testdata/sf0.001")

@@ -40,7 +40,7 @@ class CodegenSuiteParitySpec extends SparkSpec {
   }
 
   /** Sorted canonical rows + schema; cache cleared so per-query
-    * persist() intermediates never leak across the ~170×2 runs. */
+    * persist() intermediates never leak across the ~160×2 runs. */
   private def rows(name: String): (String, Seq[String]) = {
     val df = SparkEntry.queries(name)(spark, sfDir)
     try (df.schema.catalogString,

@@ -1,21 +1,16 @@
 package graft
 
-/** Fixture-metadata audit (r17 verdict task 6): every committed or
-  * locally-staged fixture must carry a stamp matching HEAD's generator
-  * constants, so a regenerated corpus can never silently pair with
-  * stale artifacts (the r16 failure class: a fixture built under an
-  * older id-stride scheme was accepted while the semi-join had moved
-  * on, dropping every planted variant row).
+/** Fixture-metadata audit (r17 verdict task 6): every committed
+  * fixture must carry a stamp matching HEAD's generator constants, so a
+  * regenerated artifact can never silently pair with stale code (the
+  * r16 failure class: a fixture built under an older id-stride scheme
+  * was accepted while the semi-join had moved on, dropping every planted
+  * variant row).
   *
   *  - classifier_weights.parquet (COMMITTED): its `.meta` sidecar must
   *    match `Classifier.stampText` — changing Dim / StructDim / junk
   *    offsets at HEAD without retraining fails here, not as a silent
-  *    x72/x84 score shift;
-  *  - media_corpus images/audio (staged per checkout): when present,
-  *    their in-dir stamp must match MediaFixtures' current
-  *    universe/stride/generator — a stale local staging dir would
-  *    otherwise poison every x87/x89 run on this machine. Absent dirs
-  *    pass (they will be regenerated fresh, stamped correctly). */
+  *    x72/x84 score shift. */
 class FixtureStampSpec extends SparkSpec {
 
   test("committed classifier weights carry a stamp matching HEAD's constants") {
@@ -25,21 +20,8 @@ class FixtureStampSpec extends SparkSpec {
         "runMain graft.TrainClassifier (saveWeights writes the stamp)")
   }
 
-  test("staged media fixtures, when present, match HEAD's universe/stride/generator") {
-    import graft.multimodal.MediaFixtures
-    val dir = MediaFixtures.defaultDir
-    Seq("images" -> MediaFixtures.imagesPath(dir),
-      "audio" -> MediaFixtures.audioPath(dir)).foreach { case (what, path) =>
-      if (new java.io.File(path).exists())
-        assert(MediaFixtures.reusable(spark, path),
-          s"staged $what fixture at $path has a missing/stale stamp — " +
-            "delete the directory; the next x87/x89 run regenerates it")
-    }
-  }
-
   test("the stamp check itself still detects drift (negative control)") {
     // a bogus path must read as not-stamped, never as vacuously ok
     assert(!graft.text.Classifier.stampOk(spark, "/tmp/no_such_weights.parquet"))
-    assert(!graft.multimodal.MediaFixtures.reusable(spark, "/tmp/no_such_media"))
   }
 }

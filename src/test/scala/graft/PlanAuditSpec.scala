@@ -131,8 +131,6 @@ class PlanAuditSpec extends SparkSpec {
     "x108_span_scrub",            // benchmark gram set (eval-set bounded)
     "x111_cms_freq",              // single-row CMS sketch (depth*width longs)
     "x112_jl_ann",                // fixed query set (JL-projected x78 shape)
-    "x87_image_phash_pairs",      // doc-id set (SF-bounded) semi-joining the staged media fixture
-    "x89_audio_fp_pairs",         // doc-id set (SF-bounded) semi-joining the staged media fixture
     "x119_sam_decontam"           // benchmark token arrays (eval-set bounded, 3 docs)
   )
 

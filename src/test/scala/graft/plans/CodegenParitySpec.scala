@@ -98,11 +98,6 @@ class CodegenParitySpec extends SparkSpec {
     "simhash16" -> (w => F.simhash16(w(longs(977L, -12345L, 0x7fffffffffffL)))),
     "simhash64_bands" -> (w =>
       F.simhash64_bands(w(longs(977L, -12345L, 31337L, 0L)))),
-    "dhash64_bands" -> (w => F.dhash64_bands(
-      w(lit((0 until 90).map(i => ((i * 37 + 11) % 256).toByte).toArray)),
-      lit(9), 1)),
-    "gradient64_bands" -> (w =>
-      F.gradient64_bands(w(longs((0 until 70).map(i => (i * i % 97).toLong): _*)))),
     "dot_fold" -> (w =>
       F.dot_fold(w(floats(1.5f, -2.25f, 0.0f, 3.75f)),
         floats(0.5f, 4.0f, -1.0f, 2.0f))),
