@@ -4,8 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Atomic batch-slot store shared by the streaming monitors
-  * ([[StreamingHeavyHitters]] / [[DriftMonitor]] / [[BlocklistMonitor]] /
-  * [[QualityMonitor]]) and [[StreamingIvf]]'s per-batch appends.
+  * ([[QualityMonitor]] / [[SchemaDriftMonitor]]).
   *
   * The naive `mode("overwrite").parquet(batches/batch=<id>)` is NOT
   * atomic: overwrite deletes the slot, then a multi-task job commits

@@ -12,7 +12,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale: state is one Int per key with consecutive failures — O(active
   * failing keys), partitioned by the groupByKey shuffle; keys emit and
-  * reset at the threshold so state never grows with failure count.
+  * reset at the threshold so state never grows with failure count, and
+  * an open run expires `ttl` after its key's last probe so state never
+  * grows with key churn either.
   */
 object ErrorThreshold {
 
@@ -38,59 +40,29 @@ object ErrorThreshold {
       }
     }
 
-  /** Spark-4 `transformWithState` form of the same operator — the
-    * next-gen keyed-state API (requires the RocksDB state store
-    * provider). Two upgrades over the fMGWS form that matter at scale:
-    * typed per-key `ValueState` lives in the store (not a single
-    * serialized blob per key), and the TTL evicts state for keys that
-    * simply stop arriving — unbounded key churn (users come and go)
-    * cannot accumulate state forever even when no success row ever
-    * shows up to clear it. */
-  class ThresholdProcessor(threshold: Int, ttl: java.time.Duration)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Probe, ErrorEvent] {
-    @transient private var run: org.apache.spark.sql.streaming.ValueState[RunState] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      run = getHandle.getValueState[RunState]("run",
-        Encoders.product[RunState],
-        org.apache.spark.sql.streaming.TTLConfig(ttl))
-    override def handleInputRows(key: String, rows: Iterator[Probe],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[ErrorEvent] = {
-      val st = if (run.exists()) run.get() else RunState(0)
-      val (ns, out) = step(st, rows.toSeq.sortBy(_.tsMs), threshold)
-      // run 0 ≡ absent (see fMGWS form)
-      if (ns.consecutive == 0) run.clear() else run.update(ns)
-      out.iterator
-    }
-  }
-
-  /** [[run]] on `transformWithState`: same pure `step` core, store-native
-    * state with TTL eviction. */
-  def runTws(probes: Dataset[Probe], threshold: Int = DefaultThreshold,
-             ttl: java.time.Duration = java.time.Duration.ofDays(1)): Dataset[ErrorEvent] = {
-    implicit val ee = Encoders.product[ErrorEvent]
-    probes.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new ThresholdProcessor(threshold, ttl),
-        // TTL is clock-based state expiry → the store needs a time mode
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(), OutputMode.Append())
-  }
-
-  /** Streaming wrapper: keyed consecutive-failure detection. */
+  /** Streaming wrapper: keyed consecutive-failure detection. A key's
+    * open run expires `ttl` after its last probe, so keys that simply
+    * stop arriving (a market whose polling ends mid-run) cannot hold
+    * state forever even when no success row ever clears it. */
   def run(probes: Dataset[Probe],
-          threshold: Int = DefaultThreshold): Dataset[ErrorEvent] = {
+          threshold: Int = DefaultThreshold,
+          ttl: java.time.Duration = java.time.Duration.ofDays(1)): Dataset[ErrorEvent] = {
     implicit val ee = Encoders.product[ErrorEvent]
     implicit val ke = Encoders.STRING
     probes.groupByKey(_.key)
       .flatMapGroupsWithState[RunState, ErrorEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         (_: String, it: Iterator[Probe], gs: GroupState[RunState]) =>
-          val st = gs.getOption.getOrElse(RunState(0))
-          val (ns, out) = step(st, it.toSeq.sortBy(_.tsMs), threshold)
-          // run 0 ≡ absent: never store it, so the state map holds only
-          // keys with an open failure run
-          if (ns.consecutive == 0) { if (gs.exists) gs.remove() }
-          else gs.update(ns)
-          out.iterator
+          if (gs.hasTimedOut) { gs.remove(); Iterator.empty }
+          else {
+            val st = gs.getOption.getOrElse(RunState(0))
+            val (ns, out) = step(st, it.toSeq.sortBy(_.tsMs), threshold)
+            // run 0 ≡ absent: never store it, so the state map holds only
+            // keys with an open failure run
+            if (ns.consecutive == 0) { if (gs.exists) gs.remove() }
+            else { gs.update(ns); gs.setTimeoutDuration(ttl.toMillis) }
+            out.iterator
+          }
       }(Encoders.product[RunState], ee)
   }
 }

@@ -170,71 +170,6 @@ object Lifecycle {
       case _ => (None, Seq.empty)
     }
 
-  /** Spark-4 `transformWithState` form (requires the RocksDB state
-    * store): the SAME pure core, but timers are first-class — each
-    * market registers an ABSOLUTE-time timer at its nextActionMs
-    * (`registerTimer`) and the engine calls `handleExpiredTimer` per
-    * fired key, instead of fMGWS's single per-key timeout duration that
-    * must be re-armed on every event. State is a typed ValueState in
-    * the store; a market's removal clears state and its pending timer. */
-  class LifecycleProcessor(timing: Timing)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, MarketMsg, Transition] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[MarketState] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[MarketState]("market",
-        Encoders.product[MarketState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[MarketMsg],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Transition] = {
-      val cur = if (st.exists()) Some(st.get()) else None
-      val (ns, out) = onMessages(key, rows.toSeq.sortBy(_.tsMs), cur, timing)
-      applyState(cur, ns, timerConsumed = false)
-      out.iterator
-    }
-    override def handleExpiredTimer(key: String,
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Transition] = {
-      if (!st.exists()) Iterator.empty
-      else {
-        val cur = st.get()
-        val (ns, out) =
-          onTimeout(key, cur, timers.getCurrentProcessingTimeInMs(), timing)
-        applyState(Some(cur), ns, timerConsumed = true)
-        out.iterator
-      }
-    }
-    /** Persist the transition result and re-arm the absolute timer when
-      * the action time moved (timers are registered at nextActionMs
-      * verbatim, so the old one is deletable by the same value; a
-      * past-due timestamp just fires on the next batch). When the call
-      * came from an EXPIRED timer, the old timer is already consumed —
-      * re-register unconditionally or a nextActionMs that happens to
-      * repeat (e.g. firstPollDelayMs = 0) would leave the key stuck
-      * with state but no timer. */
-    private def applyState(prev: Option[MarketState], ns: Option[MarketState],
-                           timerConsumed: Boolean): Unit = {
-      val moved = prev.exists(p => ns.forall(_.nextActionMs != p.nextActionMs))
-      if (moved && !timerConsumed) getHandle.deleteTimer(prev.get.nextActionMs)
-      ns match {
-        case Some(s) =>
-          st.update(s)
-          if (prev.isEmpty || moved || timerConsumed)
-            getHandle.registerTimer(s.nextActionMs)
-        case None => st.clear()
-      }
-    }
-  }
-
-  /** [[run]] on `transformWithState` with first-class absolute timers. */
-  def runTws(msgs: Dataset[MarketMsg],
-             timing: Timing = DefaultTiming): Dataset[Transition] = {
-    implicit val te = Encoders.product[Transition]
-    msgs.groupByKey(_.marketId)(Encoders.STRING)
-      .transformWithState(new LifecycleProcessor(timing),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(), OutputMode.Append())
-  }
-
   /** flatMapGroupsWithState wrapper: keyed by market_id, processing-time
     * timeouts armed at the state's nextActionMs. */
   def run(msgs: Dataset[MarketMsg],

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.LongType
   * writes with. Batch-grain matters: a contract break is visible the
   * batch it arrives, not at the next nightly dbt run — and the
   * per-batch violation history localizes WHEN an upstream producer
-  * broke (the same argument as [[DriftMonitor]], for schema contracts
-  * instead of distributions).
+  * broke (the same argument as [[SchemaDriftMonitor]], for data
+  * contracts instead of key arrivals).
   *
   * Semantics note: `unique` is checked WITHIN the batch (cheap, catches
   * producer-side duplication); cross-batch uniqueness is the bronze
@@ -21,10 +21,11 @@ import org.apache.spark.sql.types.LongType
   * parent-key side of `relationships` is a static dim (stream-static,
   * the P11/S4 shape).
   *
-  * Store discipline ([[DriftMonitor]] / [[StreamingHeavyHitters]]):
-  * one 4-row result per batch written whole to `batches/batch=<id>` —
-  * batch-id-addressed overwrite, replay-idempotent; reads fold the
-  * store, summary-sized, restart-recoverable by construction. */
+  * Store discipline (shared with [[SchemaDriftMonitor]]): one 4-row
+  * result per batch written whole to `batches/batch=<id>` via
+  * [[BatchStore]] — batch-id-addressed overwrite, replay-idempotent;
+  * reads fold the store, summary-sized, restart-recoverable by
+  * construction. */
 final class QualityMonitor private (val storeDir: String,
                                     parentKeys: DataFrame,
                                     accepted: Seq[String]) {

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * silently forever; this store pins WHICH micro-batch the envelope
   * changed in, which is what triages a producer deploy.
   *
-  * Store discipline ([[QualityMonitor]] / [[DriftMonitor]]): one
+  * Store discipline (shared with [[QualityMonitor]]): one
   * (key, kind, n_present, n_rows) summary per batch written whole to
   * `batches/batch=<id>` via [[BatchStore]] — batch-id-addressed
   * overwrite, replay-idempotent; reads fold the store (summary-sized,
@@ -46,8 +46,8 @@ final class SchemaDriftMonitor private (val storeDir: String,
     // one row: batch size + presence count per declared key
     // count(when(...)) not sum(when(...)): over ZERO rows sum returns
     // null (getLong would NPE on the no-data batches Structured
-    // Streaming delivers for watermark advancement) while count returns
-    // 0 — same discipline as DriftMonitor / ContaminationMonitor.
+    // Streaming delivers for watermark advancement) while count
+    // returns 0.
     val aggs = count(lit(1)).as("n_rows") +:
       expectedKeys.zipWithIndex.map { case (k, i) =>
         count(when(array_contains(col("_ks"), k), 1)).as(s"_k$i")

@@ -23,16 +23,10 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
   * the ratio — AQE-converted broadcasts are threshold-bounded by
   * construction, which is exactly the safe case.
   *
-  * The one LICENSED corpus-linear broadcast class is whitelisted below
-  * with its justification; everything else that grows linearly fails
-  * the build. Complements (does not replace) the static whitelists:
-  * those pin intent, this pins measured rows. */
+  * Every forced broadcast that grows linearly fails the build.
+  * Complements (does not replace) the static whitelists: those pin
+  * intent, this pins measured rows. */
 class BroadcastScalingSpec extends SparkSpec {
-
-  /** Queries allowed a corpus-linear broadcast, each justified. None is
-    * licensed today; an entry added here must keep broadcasting a side
-    * that grows, or the whitelist test below fails. */
-  private val corpusLinearLicensed: Set[String] = Set.empty
 
   /** Per-broadcast output rows with stats/AQE auto-broadcast DISABLED:
     * under threshold −1 the only joins that still plan a
@@ -97,7 +91,7 @@ class BroadcastScalingSpec extends SparkSpec {
 
   test("no FORCED broadcast grows with the corpus (measured rows, sf0.001 vs sf0.1)") {
     val MaxGrowth = 5.0
-    val names = hinted.toSeq.sorted.filterNot(corpusLinearLicensed)
+    val names = hinted.toSeq.sorted
     assert(names.nonEmpty, "hint detection broke: no hinted queries found")
     val offenders = names.flatMap { n =>
       val small = broadcastRows(n, "/root/testdata/sf0.001").sorted
@@ -113,22 +107,5 @@ class BroadcastScalingSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"forced-broadcast growth regressions:\n${offenders.mkString("\n")}")
-  }
-
-  test("licensed corpus-linear broadcasts stay licensed (whitelist does not rot)") {
-    // each licensed query must actually still broadcast something that
-    // grows — if its growing side is ever restructured away, the
-    // entry must leave the whitelist so new growth cannot hide under it
-    val stale = corpusLinearLicensed.toSeq.sorted.flatMap { n =>
-      val small = broadcastRows(n, "/root/testdata/sf0.001")
-      val big = broadcastRows(n, "/root/testdata/sf0.1")
-      if (small.size == big.size &&
-        !small.sorted.zip(big.sorted).exists { case (s, b) => b > s * 5.0 })
-        Some(s"$n: small=$small big=$big")
-      else None
-    }
-    assert(stale.isEmpty,
-      s"whitelisted queries no longer broadcast a corpus-linear side:\n" +
-        stale.mkString("\n"))
   }
 }

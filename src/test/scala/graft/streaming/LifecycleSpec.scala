@@ -159,53 +159,10 @@ class LifecycleSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState form: absolute timers drive close → poll_due → resolved (RocksDB)") {
+  test("state and pending timers survive kill → restart from checkpoint") {
     val s = spark
     import s.implicits._
     implicit val sc = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val timing = Timing(firstPollDelayMs = 300L, baseBackoffMs = 200L,
-      maxBackoffMs = 400L, maxAttempts = 20)
-    val in = MemoryStream[MarketMsg]
-    val q = Lifecycle.runTws(in.toDS(), timing)
-      .writeStream.format("memory").queryName("lc_tws")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-      .start()
-    try {
-      val end = System.currentTimeMillis() + 1000L
-      in.addData(MarketMsg("mT", "discovered", 1L, Seq("t1"), end,
-        closed = false, "", 0, 0))
-      assert(awaitSink("lc_tws") { df =>
-        val ts = df.as[Transition].collect().map(_.transition)
-        ts.contains("close") && ts.contains("poll_due")
-      }, "expected close + poll_due via registered timers")
-      in.addData(MarketMsg("mT", "poll_result", 2L, Nil, 0L,
-        closed = true, "resolved", 0.0, 1.0))
-      assert(awaitSink("lc_tws") { df =>
-        df.as[Transition].collect()
-          .exists(t => t.transition == "resolved" && t.detail == "Up")
-      }, "expected resolved transition with winner Up")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
-  test("transformWithState: state and pending timers survive kill → restart from checkpoint (RocksDB)") {
-    val s = spark
-    import s.implicits._
-    implicit val sc = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // the crash happens BEFORE the close timer (due at end = now + 20 s)
     // can fire: subscribe is emitted by the very first batch, so the
     // pre-crash phase needs only startup latency, leaving ~15 s of
@@ -228,7 +185,7 @@ class LifecycleSpec extends SparkSpec {
         Thread.sleep(100)
       pred(transitions())
     }
-    def startQ(name: String) = Lifecycle.runTws(in.toDS(), timing)
+    def startQ(name: String) = Lifecycle.run(in.toDS(), timing)
       .writeStream.queryName(name)
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", ckpt)
@@ -242,8 +199,8 @@ class LifecycleSpec extends SparkSpec {
       val end = System.currentTimeMillis() + 20000L
       in.addData(MarketMsg("mR", "discovered", 1L, Seq("t1"), end,
         closed = false, "", 0, 0))
-      // the subscription is live and its close timer (due at `end`) is
-      // registered in the RocksDB store
+      // the subscription is live and its close timeout (due at `end`)
+      // is armed in the state store
       assert(awaitFiles()(_.map(_.transition).contains("subscribe")),
         "expected subscribe before the crash")
       // let the batch's offsets commit so the restart genuinely resumes
@@ -267,9 +224,9 @@ class LifecycleSpec extends SparkSpec {
       in.addData(MarketMsg("mNudge", "discovered", 3L, Seq("tn"),
         System.currentTimeMillis() + 3600000L, closed = false, "", 0, 0))
       // the recovered incarnation must fire the pre-crash timer: state
-      // (subscribed, with its close timer) survived RocksDB checkpoint
-      // restore. A lost store would leave this key silent forever.
-      // atMs ≥ crash time pins the emission to the restarted process;
+      // (subscribed, with its close timer) survived state-store
+      // checkpoint restore. A lost store would leave this key silent
+      // forever. atMs ≥ crash time pins the emission to the restarted process;
       // the 300 ms poll delay then yields poll_due from recovered state.
       assert(awaitFiles()(_.exists(t =>
         t.transition == "close" && t.atMs >= crashWallMs)),
@@ -285,13 +242,7 @@ class LifecycleSpec extends SparkSpec {
       assert(awaitFiles()(_.exists(t =>
         t.transition == "resolved" && t.detail == "Down")),
         "expected resolution against the recovered state")
-    } finally {
-      q2.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally q2.stop()
   }
 
   test("flatMapGroupsWithState wrapper: subscribe transitions flow through a MemoryStream") {
