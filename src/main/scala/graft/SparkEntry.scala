@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Queries are assembled from per-domain registries; each QueryDef pairs
   * the Spark implementation with the DuckDB oracle SQL the driver runs
@@ -10,10 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private def registries: Seq[QueryDef] =
-    queries_impl
-
-  private lazy val queries_impl: Seq[QueryDef] =
+  private[graft] lazy val registry: Seq[QueryDef] =
     graft.queries.CoreQueries.defs ++
       graft.queries.ExtraQueries.defs
 
@@ -25,10 +22,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registries.map(q => q.name -> q.fn).toMap
+    registry.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    registries.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -64,24 +64,19 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")
 }
 
-/** One verifiable operator: a Spark query plus (optionally) the ANSI SQL
-  * a DuckDB oracle runs over the same parquet tables. Column names of the
-  * Spark result and the oracle result must match exactly (driver sorts
+/** One verifiable operator: a Spark query plus the ANSI SQL a DuckDB
+  * oracle runs over the same parquet tables. Column names of the Spark
+  * result and the oracle result must match exactly (driver sorts
   * columns by name before hashing).
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
+    oracle: String,
     doc: String = "")
 
 object QueryDef {
   def apply(name: String, doc: String)(sql: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(sql), doc)
-
-  /** Non-SQL-expressible op: driver records a weaker rows-only check. */
-  def noOracle(name: String, doc: String)(
-      fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None, doc)
+    QueryDef(name, fn, sql, doc)
 }

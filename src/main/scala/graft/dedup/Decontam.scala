@@ -149,7 +149,7 @@ object Decontam {
     // keyed spread over the corpus scan (guide §2.5, r21): the n-gram
     // fingerprint pass and the word explode are heavy narrow compute
     // directly above the scan, and a single-row-group file ran BOTH on
-    // one task (Profile: x108 Σ run ≈ Σ stage wall — zero parallelism).
+    // one task (measured: x108 Σ run ≈ Σ stage wall — zero parallelism).
     // Hash-partitioning by doc id keeps the downstream (doc, pos) join
     // and doc-keyed reassembly on the same exchange.
     val c = graft.ops.Spread.byKeys(

@@ -542,7 +542,7 @@ object Dedup {
     // union-find + one parallelize — the [[graft.text.TextOps
     // .bpeMergesLocal]] discipline applied to the other iterative
     // operator. The distributed loop's cost at this size was never the
-    // data: Profile read x23 at 39 driver jobs with Σ stage wall 1.9 s
+    // data: measured x23 at 39 driver jobs with Σ stage wall 1.9 s
     // against 3.9 s query wall — a ~50 ms-per-job AQE/job-dispatch
     // cascade the r20 round could only shave (90 → 40 jobs), not
     // remove. The threshold bounds driver memory exactly like the r20

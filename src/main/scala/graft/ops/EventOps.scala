@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Per-event projections, filters and demux (SURVEY.md P1, P2, P9, P10,
-  * P12, P13; reference `producers/coinbase_producer.py:35-48`,
+/** Per-event projections, filters and demux (SURVEY.md P2, P9, P10,
+  * P12, P13; reference `producers/coinbase_producer.py:43-48`,
   * `producers/polymarket_ws_manager.py:48-162`,
   * `producers/user_positions_tracker.py:81-88`).
   *
@@ -13,11 +13,6 @@ import org.apache.spark.sql.functions._
   * codegen'd, scale linearly with input splits.
   */
 object EventOps {
-
-  /** P1: type-gate + 4-field projection (the Coinbase ticker path,
-    * reference `producers/coinbase_producer.py:35-41`). */
-  def tickerProject(df: DataFrame, typeCol: Column, keep: Seq[Column]): DataFrame =
-    df.filter(typeCol === "ticker").select(keep: _*)
 
   /** P2: last-value-wins rate decimation to one row per (key, bucket)
     * (reference `producers/coinbase_producer.py:43-48`). Latest by
@@ -189,15 +184,10 @@ object Resolution {
     df.filter(closed && status === "resolved")
 }
 
-/** P3/P4: discovery filters (reference `producers/market_discovery.py:35-73`). */
+/** P3: discovery filter (reference `producers/market_discovery.py:35-73`). */
 object Discovery {
 
   /** P3: case-insensitive keyword containment. */
   def keywordFilter(df: DataFrame, text: Column, keywords: Seq[String]): DataFrame =
     df.filter(keywords.map(k => lower(text).contains(k)).reduce(_ || _))
-
-  /** P4: point-in-interval predicate — rows whose
-    * [start, start + widthMinutes) window contains `at`. */
-  def containsPoint(df: DataFrame, start: Column, widthMinutes: Int, at: Column): DataFrame =
-    df.filter(start <= at && at < start + expr(s"INTERVAL $widthMinutes MINUTES"))
 }

@@ -20,9 +20,6 @@ object Norms {
     * and never near a rounding boundary. */
   def cents(c: Column): Column = round(c * 100, 0).cast(LongType)
 
-  /** Back to display units with a single deterministic double division. */
-  def fromCents(c: Column): Column = c.cast(DoubleType) / 100.0
-
   /** ISO-8601 parse, `Z`-suffixed or naive (SURVEY P6; reference
     * `producers/polymarket_ws_manager.py:165-166` replaces Z manually —
     * Spark's to_timestamp handles both forms natively with UTC session TZ). */

@@ -165,28 +165,3 @@ object EventSchemas {
     "user-positions"             -> position,
     "service-errors"             -> serviceError)
 }
-
-/** Typed event models for the Dataset/streaming surface. */
-object Models {
-  case class AssetPrice(symbol: String, price: Double, timestamp: String, volume: Double)
-
-  case class MarketUpdate(
-      market_id: String, condition_id: String, question: String,
-      yes_price: Double, no_price: Double, token_ids: Seq[String],
-      start_time: String, end_time: String, active: Boolean, slug: String)
-
-  case class BookLevel(price: String, size: String)
-
-  case class PriceChange(asset_id: String, price: String, size: String, side: String)
-
-  case class WsEvent(
-      event_type: String, asset_id: String, market: String,
-      bids: Seq[BookLevel], asks: Seq[BookLevel],
-      price_changes: Seq[PriceChange],
-      price: String, side: String, size: String, timestamp: String)
-
-  case class Position(
-      market_id: String, condition_id: String, snapshot_time: String,
-      user: String, asset_id: String, outcome: String,
-      outcome_index: Int, balance: Long)
-}

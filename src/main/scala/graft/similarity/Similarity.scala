@@ -315,7 +315,7 @@ object Similarity {
     * ZERO Spark jobs: a BroadcastExchange over a LocalTableScan builds
     * on the driver without submitting a job, where the distributed form
     * paid one AQE materialization job per reader re-running the
-    * TakeOrdered/window that produced the table (Profile read x43 at 26
+    * TakeOrdered/window that produced the table (measured: x43 at 26
     * driver jobs, most of them ~80 ms one-task stages over exactly
     * these frames). Values are bit-identical — collect preserves floats
     * exactly — so this is plan shape only, never semantics. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 
@@ -219,180 +219,6 @@ object Pipelines {
           col(rightTs) <= col(leftTs),
         joinType)
 
-  /** Streaming NEAR-dup candidates: the banded MinHash-LSH candidate
-    * join (graft.dedup.Dedup.minhashCandidates) as a watermarked
-    * stream-stream self-join — near-duplicate detection at ingestion
-    * time, before documents ever land. Fingerprinting (norm → native
-    * shingle hashes → native signature → band explode) is the same
-    * narrow, codegen'd pipeline the batch oracle verifies; candidates
-    * are an equi-join on (band_id, band_key) with a SYMMETRIC event-time
-    * bound of ±`maxLag`, so Spark derives a state-eviction horizon for
-    * both buffers — state is bounded by watermark + maxLag, never the
-    * stream's history (same contract as [[intervalJoin]]). A pair may
-    * surface once per agreeing band; collapse downstream with
-    * [[dedupWithinWatermark]] on (doc_a, doc_b) or an idempotent sink.
-    * Output: (doc_a, ts_a, doc_b, ts_b). */
-  def streamingNearDupCandidates(docs: DataFrame, idCol: String, textCol: String,
-                                 tsCol: String, watermark: String, maxLag: String,
-                                 k: Int = 7, nHashes: Int = 12,
-                                 bands: Int = 3, rows: Int = 4): DataFrame = {
-    def banded(suffix: String) = graft.dedup.Dedup.minhashBandRows(
-        docs.select(col(idCol).as(s"doc$suffix"), col(tsCol).as(s"ts$suffix"),
-          graft.text.TextOps.norm(col(textCol)).as("_t")),
-        graft.dedup.Dedup.shingleHashes(col("_t"), k),
-        Seq(col(s"doc$suffix"), col(s"ts$suffix")), nHashes, bands, rows)
-      .select(col(s"doc$suffix"), col(s"ts$suffix"),
-        col("band_id").as(s"band_id$suffix"), col("band_key").as(s"band_key$suffix"))
-      .withWatermark(s"ts$suffix", watermark)
-    banded("_a").join(banded("_b"),
-        col("band_id_a") === col("band_id_b") &&
-          col("band_key_a") === col("band_key_b") &&
-          col("doc_a") < col("doc_b") &&
-          col("ts_b") >= col("ts_a") - expr(s"INTERVAL $maxLag") &&
-          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $maxLag"))
-      .select(col("doc_a"), col("ts_a"), col("doc_b"), col("ts_b"))
-  }
-
-  /** Streaming incremental near-dup: each arriving document is banded
-    * and checked against a STATIC already-ingested corpus — the
-    * continuous form of the x45 appending-crawl workflow ("is this new
-    * page a near-copy of anything we already hold?"), run as the crawl
-    * lands instead of in nightly batches. Emits
-    * (batch_id, corpus_id, jaccard) for stream docs whose exact
-    * shingle-Jaccard against a banding candidate reaches `minJaccard`.
-    * A pair may surface once per agreeing band (the stateless-join
-    * price; same contract as [[streamingNearDupCandidates]]) —
-    * collapse downstream with [[dedupWithinWatermark]] on
-    * (batch_id, corpus_id) or an idempotent sink.
-    *
-    * Scale shape: every stream-side op is a stateless narrow
-    * projection (norm → shingle hashes → minhash bands), and both
-    * joins are stream-STATIC equi-joins — no streaming state at all,
-    * so memory is bounded by the micro-batch, not the stream history.
-    * The stream row carries its shingle array through the band explode
-    * (bands× duplication of one long array, bounded per doc) so the
-    * verify step needs no second pass over the stream; the corpus side
-    * is banded ONCE into `corpusIndex` (call it at setup, persist the
-    * result — the cache contract is the caller's, since a static plan
-    * inside a streaming query re-executes per micro-batch otherwise).
-    * On a real cluster the corpus index is the thing to bucket by
-    * band_key so each micro-batch's probe co-locates. */
-  def streamingIncrementalNearDup(batch: DataFrame, idCol: String,
-                                  textCol: String, corpusIndex: DataFrame,
-                                  k: Int = 7, nHashes: Int = 12,
-                                  bands: Int = 3, rows: Int = 4,
-                                  minJaccard: Double = 0.5): DataFrame = {
-    val b = nearDupBands(batch, idCol, textCol, "batch_id", "sh_b", k, nHashes,
-      bands, rows)
-    graft.dedup.Dedup.shingleJaccard(b.join(corpusIndex, Seq("band_id", "band_key")),
-        "batch_id", "corpus_id")
-      .filter(col("jaccard") >= minJaccard)
-  }
-
-  /** The full curation gate chain over ONE micro-batch — the streaming
-    * composition of the batch-verified curation tier (x70 HTML→text
-    * extraction → x66 encoding hygiene + NFC fix → x49 C4 line/page
-    * rules → x36 cross-doc boilerplate strike → x30 Gopher document
-    * rules → x45 incremental near-dup against the already-ingested
-    * corpus). Order matters: markup extraction first (every later gate
-    * must score the text a trainer would see, not tags and scripts —
-    * and a mostly-markup page should die at the cheapest stage),
-    * encoding hygiene next so every later hash sees canonical bytes,
-    * line-grain cleaning next, near-dup last
-    * so fingerprints are computed on fully cleaned text (a boilerplate
-    * footer shared by every page would otherwise dominate the shingle
-    * set and glue unrelated docs into near-dups). Returns the surviving
-    * documents as (doc_id, text, n_tokens).
-    *
-    * Scale shape: every stage is the already-audited batch operator —
-    * C4 and Gopher are narrow projections + one doc-keyed reassembly;
-    * boilerplate runs UNCACHED (its duplicate line-hash scan is bounded
-    * by the micro-batch; a per-batch persist would leak across batches
-    * and clearCache would evict the caller's corpus index); the
-    * near-dup probe is a stream-static equi-join on band keys, so the
-    * only per-batch state anywhere is the micro-batch itself. The
-    * corpus index is the caller's: band it once with
-    * [[corpusNearDupIndex]], persist it, and hand it in. */
-  def curateBatch(batch: DataFrame, idCol: String, textCol: String,
-                  corpusIndex: DataFrame,
-                  gopherMinWords: Int = 50, c4MinWords: Int = 5,
-                  c4MinKeptLines: Long = 3L, boilerMinDocs: Long = 5L,
-                  minJaccard: Double = 0.5,
-                  htmlMinRatio: Double = 0.05): DataFrame = {
-    import graft.text.TextOps
-    // markup extraction first: strip script/style/tags, decode entities,
-    // reject mostly-markup pages — every later gate scores extracted
-    // text, and the cheapest stage kills the biggest volume
-    val extracted = TextOps.htmlExtract(batch, col(idCol), col(textCol),
-        htmlMinRatio)
-      .filter(col("keep"))
-      .select(col("doc_id"), col("extracted").as("text"))
-    // encoding hygiene next: reject undecodable docs (U+FFFD / control /
-    // mojibake) and hand the NFC-FIXED text to every downstream gate, so
-    // line hashes and shingles never see decomposed/composed variants of
-    // the same content as different bytes
-    val uni = TextOps.unicodeGate(extracted, col("doc_id"), col("text"))
-      .filter(col("keep"))
-      .select(col("doc_id"), col("nfc_text").as("text"))
-    val c4 = TextOps.c4LineClean(uni, col("doc_id"), col("text"),
-        c4MinWords, c4MinKeptLines)
-      .filter(col("page_pass"))
-      .select(col("doc_id"), col("cleaned").as("text"))
-    val boiled = TextOps.removeBoilerplateLines(c4, col("doc_id"), col("text"),
-        boilerMinDocs, cache = false)
-      .filter(col("cleaned") =!= "")
-      .select(col("doc_id"), col("cleaned").as("text"))
-    val gophered = boiled.join(
-      TextOps.gopherFlags(boiled, col("doc_id"), col("text"), gopherMinWords)
-        .filter(col("passes")).select("doc_id"),
-      Seq("doc_id"), "left_semi")
-    val dupHits = streamingIncrementalNearDup(gophered, "doc_id", "text",
-        corpusIndex, minJaccard = minJaccard)
-      .select(col("batch_id").as("doc_id"))
-    gophered.join(dupHits, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("text"),
-        TextOps.wsTokenCount(col("text")).as("n_tokens"))
-  }
-
-  /** The curation chain as a streaming sink: [[curateBatch]] inside
-    * foreachBatch, landing batch_id-partitioned parquet with DYNAMIC
-    * partition overwrite — a replayed micro-batch replaces its own
-    * partition, so the curated corpus stays exactly-once under
-    * redelivery (same idempotence contract as [[bronzeSink]]). */
-  def curationSink(stream: DataFrame, idCol: String, textCol: String,
-                   corpusIndex: DataFrame, outPath: String, checkpoint: String,
-                   gopherMinWords: Int = 50, c4MinWords: Int = 5,
-                   c4MinKeptLines: Long = 3L, boilerMinDocs: Long = 5L,
-                   minJaccard: Double = 0.5,
-                   htmlMinRatio: Double = 0.05): DataStreamWriter[Row] =
-    stream.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeBatch(curateBatch(batch, idCol, textCol, corpusIndex,
-            gopherMinWords, c4MinWords, c4MinKeptLines, boilerMinDocs,
-            minJaccard, htmlMinRatio), id, outPath)
-      }
-
-  /** The static side of [[streamingIncrementalNearDup]]: the corpus
-    * banded once — (band_id, band_key, corpus_id, sh_a). Persist the
-    * returned frame before starting the query (a static sub-plan
-    * re-executes per micro-batch; the cache contract is the caller's,
-    * as on graft.dedup.Dedup). */
-  def corpusNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
-                         k: Int = 7, nHashes: Int = 12,
-                         bands: Int = 3, rows: Int = 4): DataFrame =
-    nearDupBands(corpus, idCol, textCol, "corpus_id", "sh_a", k, nHashes, bands, rows)
-      .select("band_id", "band_key", "corpus_id", "sh_a")
-
-  /** Both sides of the near-dup probe: (idAs, shAs, band_id, band_key),
-    * the shingle array carried through the band explode. */
-  private def nearDupBands(df: DataFrame, idCol: String, textCol: String,
-                           idAs: String, shAs: String, k: Int, nHashes: Int,
-                           bands: Int, rows: Int): DataFrame =
-    graft.dedup.Dedup.minhashBandRows(
-      df.select(col(idCol).as(idAs), graft.text.TextOps.norm(col(textCol)).as("_t"))
-        .select(col(idAs), graft.dedup.Dedup.shingleHashes(col("_t"), k).as(shAs)),
-      col(shAs), Seq(col(idAs), col(shAs)), nHashes, bands, rows)
-
   /** W7 streaming exact-dedup: drop redelivered events by key within the
     * watermark horizon (`dropDuplicatesWithinWatermark` — state per key
     * is evicted once the watermark passes, so memory is bounded by the
@@ -405,15 +231,7 @@ object Pipelines {
     df.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** W2: 10-second cadence trigger (`user_positions_tracker.py:12`). */
-  val snapshotTrigger: Trigger = Trigger.ProcessingTime("10 seconds")
-
   /** S8: console debug consumer (`consumers/simple_consumer.py`). */
   def consoleSink(df: DataFrame): DataStreamWriter[Row] =
     df.writeStream.format("console").option("truncate", "false")
-
-  /** Start helper pinning the trigger + query name. */
-  def start(w: DataStreamWriter[Row], name: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    w.queryName(name).trigger(trigger).start()
 }

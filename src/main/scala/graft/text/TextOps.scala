@@ -594,7 +594,7 @@ object TextOps {
     // Spread under feats (r21, guide §2.5) moves the heavy norm/split/
     // explode/fingerprint pass above a cheap exchange of the raw text:
     // off a single-row-group scan it previously ran on ONE task below
-    // the shared exchange (Profile: x39's feature stage wall ≈ its
+    // the shared exchange (measured: x39's feature stage wall ≈ its
     // single task). uni+big both read the spread exchange (reused, one
     // shuffle), so the pass runs at full parallelism on both branches.
     val rawF = feats(graft.ops.Spread.byKeys(
@@ -1057,18 +1057,11 @@ object TextOps {
     * returned plan reads the cache, so callers clear it after
     * consuming results (Verify/Bench do, per query). */
   def removeBoilerplateLines(docs: DataFrame, id: Column, text: Column,
-                             minDocs: Long = 5L,
-                             // cache=false for callers that cannot own the
-                             // cache lifetime (foreachBatch micro-batches,
-                             // where per-batch persists would accumulate
-                             // forever and clearCache() would evict the
-                             // caller's static corpus index): the line
-                             // hashing then runs twice, bounded per batch
-                             cache: Boolean = true): DataFrame = {
-    val lines0 = docs.select(id.as("doc_id"),
+                             minDocs: Long = 5L): DataFrame = {
+    val lines = docs.select(id.as("doc_id"),
         posexplode(split(text, "\n")).as(Seq("pos", "line")))
       .withColumn("lh", fingerprint(norm(col("line"))))
-    val lines = if (cache) lines0.persist() else lines0
+      .persist()
     val boiler = lines.select("lh", "doc_id").distinct()
       .groupBy("lh").agg(count(lit(1)).as("_df"))
       .filter(col("_df") >= minDocs).select(col("lh"), lit(true).as("_b"))

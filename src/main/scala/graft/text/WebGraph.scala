@@ -51,7 +51,7 @@ object WebGraph {
     * exact long arithmetic (order-free by design — that is the
     * operator's declared numeric discipline), so the replay is
     * bit-identical while removing the per-iteration AQE job cascade
-    * (Profile read x100 at 22 driver jobs for 3 iterations over a
+    * (measured: x100 at 22 driver jobs for 3 iterations over a
     * ~100-host graph). 2M rows bounds the collect at tens of MB — the
     * [[graft.dedup.Dedup.CcLocalEdgeThreshold]] discipline; host graphs
     * are corpus-sublinear but NOT constant, so past the bound the

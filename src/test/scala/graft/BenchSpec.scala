@@ -40,6 +40,14 @@ class BenchSpec extends AnyFunSuite {
     assert(exitCode(Seq(bad)) !== 0)
   }
 
+  test("the 160 query names are unique, so no query shadows another in the map") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size === 160)
+    assert(names.diff(names.distinct).isEmpty)
+    assert(SparkEntry.queries.size === names.size)
+    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+  }
+
   test("stdout line and artifact carry every query of the full suite, untruncated") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     assert(names.size >= 160)

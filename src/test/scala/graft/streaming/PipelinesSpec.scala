@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 final case class Tick(k: Long, ts: Timestamp, v: Long)
-final case class Doc(doc_id: Long, ts: Timestamp, text: String)
 final case class Quote(qk: Long, qts: Timestamp, px: Long)
 final case class KafkaRec(topic: String, value: String, timestamp: Timestamp)
 
@@ -97,46 +96,6 @@ class PipelinesSpec extends SparkSpec {
     // a NEW batch id appends
     Pipelines.bronzeBatchWrite(s"$dir/data", "ts")(batch, 8L)
     assert(spark.read.parquet(s"$dir/data").count() === 4)
-  }
-
-  test("streaming incremental near-dup: arriving docs checked against the static corpus index") {
-    val s = spark
-    import s.implicits._
-    implicit val sc = s.sqlContext
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (2L, "completely different corpus text about spark physical planning rules"))
-      .toDF("doc_id", "text")
-    // 6 bands × 2 rows: at tail-dup Jaccard ≈ 0.85 the default 3×4
-    // banding has a real (deterministic-per-string) miss chance
-    // (0.85⁴ per band); 2-row bands push recall to ~0.999
-    val idx = Pipelines.corpusNearDupIndex(corpus, "doc_id", "text",
-      bands = 6, rows = 2).persist()
-    val in = MemoryStream[(Long, String)]
-    val out = Pipelines.streamingIncrementalNearDup(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx,
-      bands = 6, rows = 2)
-    val q = out.writeStream.format("memory").queryName("inc_nd").start()
-    try {
-      in.addData(
-        // near-copy of corpus doc 1 (tail-appended)
-        (100L, "the quick brown fox jumps over the lazy dog again and again today more words"),
-        // shares nothing with the corpus
-        (101L, "totally unrelated fresh crawl content nothing here overlaps at all"))
-      q.processAllAvailable()
-      val rows = spark.table("inc_nd")
-        .select("batch_id", "corpus_id", "jaccard").collect()
-      // doc 100 flags against corpus doc 1 only (possibly once per band);
-      // doc 101 and corpus doc 2 never surface
-      val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct.toSet
-      assert(pairs === Set((100L, 1L)))
-      assert(rows.map(_.getDouble(2)).forall(_ >= 0.5))
-      // a second micro-batch re-probes the SAME static index (no state
-      // carried): a redelivered doc flags again — idempotent-sink contract
-      in.addData((100L, "the quick brown fox jumps over the lazy dog again and again today more words"))
-      q.processAllAvailable()
-      assert(spark.table("inc_nd").select("batch_id").distinct().count() === 1)
-    } finally { q.stop(); idx.unpersist() }
   }
 
   test("the flagship batch operator (Book.summarize) runs unchanged in a streaming query") {
@@ -336,32 +295,6 @@ class PipelinesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming near-dup candidates: LSH self-join finds copies within the time bound only") {
-    val s = spark
-    import s.implicits._
-    implicit val sc = s.sqlContext
-    val docs = MemoryStream[Doc]
-    val pairs = Pipelines.streamingNearDupCandidates(docs.toDF(),
-      idCol = "doc_id", textCol = "text", tsCol = "ts",
-      watermark = "5 seconds", maxLag = "10 minutes")
-    val q = pairs.writeStream.format("memory").queryName("nd_out")
-      .outputMode("append").start()
-    try {
-      val body = "the polymarket order book streamed another fifteen minute bitcoin window"
-      docs.addData(
-        Doc(1L, ts("2026-01-01 00:00:01"), body),
-        Doc(2L, ts("2026-01-01 00:00:05"), body + " tail"), // near-dup, in window
-        Doc(3L, ts("2026-01-01 00:00:07"), "completely different content about nothing shared"),
-        Doc(4L, ts("2026-01-01 02:00:00"), body)) // exact copy, 2h late — outside maxLag
-      q.processAllAvailable()
-      val got = spark.table("nd_out").select("doc_a", "doc_b")
-        .as[(Long, Long)].collect().toSet
-      assert(got.contains((1L, 2L)), "in-window near-dup must surface")
-      assert(!got.exists(p => p._1 == 3L || p._2 == 3L), "unrelated doc must not pair")
-      assert(!got.exists(p => p._2 == 4L), "copy outside the time bound must not pair")
-    } finally q.stop()
-  }
-
   test("left-outer interval join emits unmatched left events with nulls after the watermark closes") {
     val s = spark
     import s.implicits._
@@ -446,141 +379,6 @@ class PipelinesSpec extends SparkSpec {
     } finally {
       q.stop()
       spark.streams.removeListener(counters)
-    }
-  }
-
-  test("curation pipeline end-to-end: C4 + boilerplate + Gopher + incremental near-dup over multiple micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val sc = s.sqlContext
-
-    val footer = "subscribe to our newsletter for daily updates."
-    val contentA = Seq( // = corpus doc 1: batch doc 104 is its near-copy
-      "the market closed higher after steady morning trading today.",
-      "investors watched a rally of technology shares with caution.",
-      "volume stayed strong through the afternoon session yesterday.",
-      "analysts expect further gains in the coming quarter ahead.",
-      "the closing numbers showed a broad based advance overall.")
-    val contentB = Seq( // doc 101: unique, should survive everything
-      "heavy rain fell across the northern valley during early evening.",
-      "rivers rose quickly and a flood warning was issued locally.",
-      "emergency crews moved residents of low areas to higher ground.",
-      "the storm weakened before midnight according to the forecast office.",
-      "damage assessments will continue through the weekend in every district.")
-    val contentC = Seq( // = corpus doc 2: batch-2 doc 202 is its near-copy
-      "the committee approved a new budget for the public library.",
-      "several members praised the plan during a long open meeting.",
-      "funding of local programs will increase slightly next year.",
-      "the vote passed with a clear majority after debate ended.",
-      "residents can read the full proposal at the town office.")
-    val contentD = Seq( // doc 201: unique, should survive in batch 2
-      "a small bakery opened near the old station this spring.",
-      "locals line up early for fresh bread and warm pastry.",
-      "the owner trained abroad and returned home with new recipes.",
-      "weekend mornings bring the longest queues of the whole week.",
-      "reviews in the paper called it the best shop around.")
-    val contentE = Seq( // doc 203: unique, decomposed NFC — fixed, survives
-      "the riverside cafe\u0301 began serving breakfast at dawn today.",
-      "regulars praised the quiet terrace and the fresh coffee there.",
-      "a new menu will arrive before the busy summer season starts.",
-      "students often stay for hours with books and slow drinks.",
-      "the owners plan to extend opening hours on weekend evenings.")
-    val contentF = Seq( // doc 105: unique but carries a replacement char
-      "the annual fair returned to the central square this weekend.",
-      "children enjoyed rides while vendors sold crafts and sweets.",
-      "organizers reported record attendance despite the cloudy sky.",
-      "music continued into the evening with several local bands.",
-      "the mayor thanked volunteers for months of \uFFFD careful planning.")
-
-    val contentG = Seq( // doc 106: arrives as an HTML page — extracted, survives
-      "the old lighthouse on the point was repainted last month.",
-      "visitors climb the narrow stairs for a wide harbor view.",
-      "a small museum at the base displays the original lamp.",
-      "guides tell stories of storms and ships from the past.",
-      "the keeper cottage now serves tea on summer afternoons.")
-    val html106 = "<html><head><style>body{margin:0}</style></head><body>" +
-      contentG.map(l => s"<p>$l</p>").mkString +
-      "<script>track();</script></body></html>"
-
-    val corpus = Seq((1L, contentA.mkString("\n")), (2L, contentC.mkString("\n")))
-      .toDF("doc_id", "text")
-    val index = Pipelines.corpusNearDupIndex(corpus, "doc_id", "text").persist()
-
-    val dir = Files.createTempDirectory("graft_curated").toString
-    val ckpt = Files.createTempDirectory("graft_cur_ckpt").toString
-    val in = MemoryStream[Doc]
-    val q = Pipelines.curationSink(in.toDF(), "doc_id", "text", index,
-      s"$dir/data", ckpt, gopherMinWords = 20, boilerMinDocs = 2).start()
-    try {
-      // batch 0: 101 survives; 102 fails C4 (curly); 103 fails Gopher
-      // (15 words < 20); 104 passes the gates but near-dups corpus doc 1
-      in.addData(
-        Doc(101L, ts("2026-01-01 00:00:00"), (contentB :+ footer).mkString("\n")),
-        Doc(102L, ts("2026-01-01 00:00:01"),
-          "function f() { return 0; }\nthis page is mostly code content here."),
-        Doc(103L, ts("2026-01-01 00:00:02"),
-          Seq("the quick brown fox runs.", "a lazy dog sleeps nearby.",
-            "birds fly over the field.", footer).mkString("\n")),
-        Doc(104L, ts("2026-01-01 00:00:03"), (contentA :+ footer).mkString("\n")),
-        Doc(105L, ts("2026-01-01 00:00:04"), contentF.mkString("\n")),
-        // 106: an HTML page — the extraction stage strips markup and
-        // rebuilds line structure from </p> boundaries, then survives
-        // every later gate; 107: mostly script, dies at the ratio gate
-        Doc(106L, ts("2026-01-01 00:00:05"), html106),
-        Doc(107L, ts("2026-01-01 00:00:06"),
-          "<script>" + "var x = 1; " * 60 + "</script><p>tiny</p>"))
-      q.processAllAvailable()
-      // batch 1: 201 survives; 202 near-dups corpus doc 2; 203 carries
-      // decomposed NFC — the gate fixes it and it survives composed
-      in.addData(
-        Doc(201L, ts("2026-01-01 00:01:00"), contentD.mkString("\n")),
-        Doc(202L, ts("2026-01-01 00:01:01"), contentC.mkString("\n")),
-        Doc(203L, ts("2026-01-01 00:01:02"), contentE.mkString("\n")))
-      q.processAllAvailable()
-
-      val out = spark.read.parquet(s"$dir/data")
-      val byBatch = out.select(col("batch_id").cast("long"), col("doc_id"),
-          col("text"), col("n_tokens"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-      assert(byBatch.map(_._2).toSet === Set(101L, 106L, 201L, 203L),
-        s"exactly the clean unique docs survive, got ${byBatch.toList}")
-      // the HTML page came out as its five content lines, markup gone,
-      // line structure rebuilt from the </p> block boundaries
-      val (_, _, text106, _) = byBatch.find(_._2 == 106L).get
-      assert(text106 === contentG.mkString("\n"))
-      // batch isolation: each survivor sits in its own batch partition
-      assert(byBatch.collect { case (b, 101L, _, _) => b }.head === 0L)
-      assert(byBatch.collect { case (b, 201L, _, _) => b }.head === 1L)
-      // 105 (replacement char) was rejected by the encoding gate; 203's
-      // decomposed accent came through COMPOSED (the NFC fix applied)
-      val (_, _, text203, _) = byBatch.find(_._2 == 203L).get
-      assert(text203 === contentE.mkString("\n").replace("e\u0301", "\u00e9"))
-      // the shared footer was struck BEFORE fingerprinting/counting
-      val (_, _, text101, tok101) = byBatch.find(_._2 == 101L).get
-      assert(text101 === contentB.mkString("\n"), "kept lines in order, footer gone")
-      assert(tok101 === contentB.map(_.split(" ").length).sum.toLong)
-      // the whole chain is stream-static: ZERO streaming state rows
-      val state = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      assert(state.forall(_.numRowsTotal == 0L),
-        s"curation must hold no streaming state, got $state")
-
-      // ---- the full hand-off: curated corpus → packed training export.
-      // The curationSink output IS the packedExport input — this is the
-      // complete ingestion→curation→training-artifact path in one run
-      val packDir = Files.createTempDirectory("graft_cur_packed").toString
-      val manifest = graft.silver.Export.packedExport(
-        out.select("doc_id", "text"), col("doc_id"), col("text"),
-        packDir, seqLen = 16, nShards = 2)
-      // every curated token lands in exactly one packed span
-      val curatedTok = out.agg(sum("n_tokens")).head().getLong(0)
-      assert(manifest.agg(sum("n_tokens")).head().getLong(0) === curatedTok)
-      // both survivors present in the packed artifact
-      val packedDocs = spark.read.parquet(packDir)
-        .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-      assert(packedDocs === Set(101L, 106L, 201L, 203L))
-    } finally {
-      q.stop()
-      index.unpersist()
     }
   }
 }
