@@ -22,8 +22,14 @@ slower including untouched code. Artifacts predating the probe
 (r18 and earlier) lack probe_sec; the comparison then falls back to
 raw seconds and says so.
 
+The total ratio sums only the queries both artifacts hold, so a query
+cut from (or added to) the suite cannot ease (or trip) the total gate;
+both raw totals and the count of queries in only one artifact are
+printed next to it.
+
 Verdicts:
-  - TOTAL normalized ratio > 1.15           -> FAIL (exit 1)
+  - TOTAL normalized ratio > 1.15 (shared
+    queries only)                           -> FAIL (exit 1)
   - any query normalized ratio > 2.0 with
     >= 1 s absolute growth and outside both
     artifacts' rep spreads (median/fastest) -> FAIL (exit 1)
@@ -109,18 +115,28 @@ def main():
           f"probe={old['probe']:.3f}")
     print(f"new: {new_name} ts={new['ts']} total={new['total']:.1f}s "
           f"probe={new['probe']:.3f}")
-    ratio = (new["total"] / np_) / (old["total"] / op)
-    print(f"total ratio ({mode}): {ratio:.3f}  "
-          f"[{old['total'] / op:.1f} -> {new['total'] / np_:.1f}]")
+    common = set(old["qs"]) & set(new["qs"])
+    if not common:
+        print("REFUSED: the two artifacts share no query", file=sys.stderr)
+        sys.exit(2)
+    only_old = sorted(set(old["qs"]) - common)
+    only_new = sorted(set(new["qs"]) - common)
+    old_shared = sum(old["qs"][q] for q in common)
+    new_shared = sum(new["qs"][q] for q in common)
+    print(f"shared: {len(common)} queries, total {old_shared:.1f}s -> "
+          f"{new_shared:.1f}s; {len(only_old) + len(only_new)} queries in "
+          f"only one artifact ({len(only_old)} old, {len(only_new)} new)")
+    ratio = (new_shared / np_) / (old_shared / op)
+    print(f"total ratio over shared queries ({mode}): {ratio:.3f}  "
+          f"[{old_shared / op:.1f} -> {new_shared / np_:.1f}]")
 
     fail = ratio > 1.15
     if fail:
         print(f"FAIL total: normalized ratio {ratio:.3f} > 1.15")
 
-    shared = sorted(set(old["qs"]) & set(new["qs"]),
-                    key=lambda q: (new["qs"][q] / np_)
+    shared = sorted(common, key=lambda q: (new["qs"][q] / np_)
                     / max(old["qs"][q] / op, 1e-9), reverse=True)
-    missing = sorted(set(old["qs"]) ^ set(new["qs"]))
+    missing = only_old + only_new
     if missing:
         print(f"note: {len(missing)} queries in only one artifact: "
               f"{', '.join(missing[:6])}{'...' if len(missing) > 6 else ''}")

@@ -154,14 +154,6 @@ object GraftExtensions {
     fn("mmr_select", classOf[MmrSelect], 3, "mmr_select(array<struct>, k, lam)")(
       a => MmrSelect(a.head, intArg("mmr_select", "k", a(1)),
         doubleArg("mmr_select", "lam", a(2)))),
-    fn("absmax_fold", classOf[AbsMaxFold], 1, "absmax_fold(array<float>)")(
-      a => AbsMaxFold(a.head)),
-    fn("quantize_int8", classOf[QuantizeInt8], 1, "quantize_int8(array<float>)")(
-      a => QuantizeInt8(a.head)),
-    fn("int_dot_fold", classOf[IntDotFold], 2, "int_dot_fold(array<int>, array<int>)")(
-      a => IntDotFold(a(0), a(1))),
-    fn("int_sqnorm_fold", classOf[IntSqNormFold], 1, "int_sqnorm_fold(array<int>)")(
-      a => IntSqNormFold(a.head)),
     fn("misra_gries", classOf[MisraGriesAgg], 2, "misra_gries(item, k)")(
       a => MisraGriesAgg(a.head, intArg("misra_gries", "k", a(1)))),
     fn("lz78_phrases", classOf[Lz78Phrases], 1, "lz78_phrases(str)")(
@@ -171,9 +163,6 @@ object GraftExtensions {
     fn("cms_sketch", classOf[CmsSketchAgg], 3, "cms_sketch(hash, depth, width)")(
       a => CmsSketchAgg(a.head, intArg("cms_sketch", "depth", a(1)),
         intArg("cms_sketch", "width", a(2)))),
-    fn("jl_project", classOf[JlProject], 3, "jl_project(array<float>, k, seed)")(
-      a => JlProject(a.head, intArg("jl_project", "k", a(1)),
-        intArg("jl_project", "seed", a(2)))),
     fn("gram_matrix", classOf[GramMatrixAgg], 2, "gram_matrix(array<bigint>, dim)")(
       a => GramMatrixAgg(a.head, intArg("gram_matrix", "dim", a(1)))),
     fn("ac_match_counts", classOf[AcMatchCounts], 2, "ac_match_counts(str, array<string>)")(
@@ -243,18 +232,6 @@ object functions {
   def mmr_select(c: Column, k: Int, lam: Double): Column =
     GraftBridge.column(MmrSelect(GraftBridge.expression(c), k, lam))
 
-  def absmax_fold(c: Column): Column =
-    GraftBridge.column(AbsMaxFold(GraftBridge.expression(c)))
-
-  def quantize_int8(c: Column): Column =
-    GraftBridge.column(QuantizeInt8(GraftBridge.expression(c)))
-
-  def int_dot_fold(a: Column, b: Column): Column =
-    GraftBridge.column(IntDotFold(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  def int_sqnorm_fold(a: Column): Column =
-    GraftBridge.column(IntSqNormFold(GraftBridge.expression(a)))
-
   def misra_gries(item: Column, k: Int): Column =
     GraftBridge.column(
       MisraGriesAgg(GraftBridge.expression(item), k).toAggregateExpression())
@@ -273,9 +250,6 @@ object functions {
   def kmv_sketch(hash: Column, k: Int): Column =
     GraftBridge.column(
       KmvSketchAgg(GraftBridge.expression(hash), k).toAggregateExpression())
-
-  def jl_project(vec: Column, k: Int, seed: Int): Column =
-    GraftBridge.column(JlProject(GraftBridge.expression(vec), k, seed))
 
   def cms_sketch(hash: Column, depth: Int, width: Int): Column =
     GraftBridge.column(

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * composes with groupBy and rides whole plans, not RDDs).
   *
   * Exactness: inputs are LONGS (the caller quantizes floats with a
-  * fixed scale, e.g. floor(x·2¹⁵+0.5) — the x74 convention), so every
-  * cell is an exact integer sum — commutative, associative, identical
+  * fixed scale, e.g. floor(x·2¹⁵+0.5)), so every cell is an exact
+  * integer sum — commutative, associative, identical
   * under any partitioning/merge order, and replayable in any engine.
   * For unit-norm embeddings at scale 2¹⁵, |q·q| ≤ 2³⁰, so the sum is
   * overflow-safe to ~2³³ rows (~8.6 B vectors); beyond that, shard the

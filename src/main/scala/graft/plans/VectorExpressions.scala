@@ -40,89 +40,6 @@ object VecUtil {
     acc
   }
 
-  /** Order-free max of |xᵢ| in double precision (the int8 quantization
-    * scale numerator). max is associative/commutative over exact
-    * float→double promotions, so unlike the sum folds this needs no
-    * sequential-order contract to be engine-reproducible. Empty → 0.0. */
-  def absMaxFold(a: ArrayData): Double = {
-    val n = a.numElements()
-    var m = 0.0
-    var i = 0
-    while (i < n) {
-      val x = math.abs(a.getFloat(i).toDouble)
-      if (x > m) m = x
-      i += 1
-    }
-    m
-  }
-
-  /** Symmetric per-vector int8 quantization: qᵢ = ⌊xᵢ·127/amax + 0.5⌋
-    * with amax = max|xᵢ| (so qᵢ ∈ [−127, 127] by construction — the
-    * endpoint products (amax·127)/amax land within [127, 127+3ulp] and
-    * floor(·+0.5) cannot reach 128). All-zero vectors quantize to all
-    * zeros. Every step is an IEEE double op in fixed order, and
-    * ⌊·+0.5⌋ (round-half-toward-+∞) is the same expression the DuckDB
-    * oracle evaluates — no engine-specific round() semantics involved.
-    * Output element type is INT (not TINYINT) so the oracle-side list
-    * arithmetic needs no narrowing casts; a storage-bound materializer
-    * would cast to TINYINT on write for the 4× scan saving.
-    *
-    * FINITE-INPUT contract, enforced: a NaN element would be ignored by
-    * absMaxFold (NaN > m is false) and floor(NaN)=NaN would .toInt to 0
-    * — a silently-wrong quantization the DuckDB oracle (which propagates
-    * amax=NaN) would diverge from. Rather than let the parity claim
-    * quietly fail on a corrupt embedding, a non-finite element fails the
-    * task fast with the offending index. */
-  def quantizeInt8(a: ArrayData): ArrayData = {
-    val n = a.numElements()
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x))
-        throw new IllegalArgumentException(
-          s"quantize_int8: non-finite element $x at index $i — " +
-            "int8 quantization requires finite embeddings")
-      i += 1
-    }
-    val amax = absMaxFold(a)
-    val out = new Array[Int](n)
-    if (amax != 0.0) {
-      i = 0
-      while (i < n) {
-        out(i) = math.floor(a.getFloat(i).toDouble * 127.0 / amax + 0.5).toInt
-        i += 1
-      }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Exact integer dot product of two int arrays (long accumulator —
-    * order-free, no rounding: |q| ≤ 127 and d ≤ 2²⁰ keeps the sum far
-    * inside long range). */
-  def intDotFold(a: ArrayData, b: ArrayData): Long = {
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += a.getInt(i).toLong * b.getInt(i)
-      i += 1
-    }
-    acc
-  }
-
-  /** Exact integer squared L2 norm of an int array. */
-  def intSqNormFold(a: ArrayData): Long = {
-    val n = a.numElements()
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val x = a.getInt(i).toLong
-      acc += x * x
-      i += 1
-    }
-    acc
-  }
-
   /** Greedy MMR (maximal marginal relevance) selection over a BOUNDED
     * candidate array: picks `k` elements maximizing `lam·rel − (1−lam)·
     * max_cos_to_selected` (signed cosine — a negatively-correlated
@@ -207,35 +124,6 @@ object VecUtil {
     (v & 1L) == 1L
   }
 
-  /** Johnson–Lindenstrauss Rademacher projection: output dimension i is
-    * the SAME sequential left-fold Σ_d ±emb[d] that [[signBucketRH]]
-    * accumulates for its bit i — this keeps the whole VALUE where
-    * sign-LSH keeps only the sign, so projected cosines approximate
-    * true cosines (the JL inner-product guarantee for ±1 matrices,
-    * Achlioptas 2003) instead of collapsing to a bucket id. The 1/√k
-    * scale is omitted: it cancels in cosine, the only consumer. Each
-    * accumulated double rounds once to float (IEEE round-to-nearest —
-    * the same single rounding in any engine), making the projected
-    * vector itself oracle-reproducible. */
-  def jlProject(emb: ArrayData, k: Int, seed: Int): ArrayData = {
-    val n = emb.numElements()
-    val acc = new Array[Double](k)
-    var d = 0
-    while (d < n) {
-      val x = emb.getFloat(d).toDouble
-      var i = 0
-      while (i < k) {
-        acc(i) += (if (radSign(i, d, seed)) x else -x)
-        i += 1
-      }
-      d += 1
-    }
-    val out = new Array[Float](k)
-    var i = 0
-    while (i < k) { out(i) = acc(i).toFloat; i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
   /** Random-hyperplane sign-LSH bucket: bit i is the sign of the
     * sequential left-fold (in dimension order — oracle-reproducible) of
     * ±emb[d] with Rademacher signs. One pass over the vector accumulates
@@ -258,29 +146,6 @@ object VecUtil {
     while (i < bits) { if (acc(i) >= 0.0) bucket |= (1L << i); i += 1 }
     bucket
   }
-}
-
-/** jl_project(array<float>, k, seed): ARRAY<FLOAT> — Rademacher
-  * Johnson–Lindenstrauss projection to k dims (the dense-mixing
-  * compression axis: matryoshka truncates dims, int8 narrows elements,
-  * JL mixes ALL input dims into each output dim — robust where the
-  * head dims carry no structure). */
-case class JlProject(child: Expression, k: Int, seed: Int) extends UnaryExpression {
-  require(k >= 1 && k <= 4096, "jl_project k must be in [1, 4096]")
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"jl_project requires ARRAY<FLOAT>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    VecUtil.jlProject(input.asInstanceOf[ArrayData], k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.VecUtil.jlProject($c, $k, $seed);")
-  override protected def withNewChildInternal(newChild: Expression): JlProject =
-    copy(child = newChild)
-  override def prettyName: String = "jl_project"
 }
 
 /** dot_fold(array<float>, array<float>): DOUBLE — sequential left-fold
@@ -372,74 +237,4 @@ object MmrSelect {
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("vec_id", LongType, nullable = false),
     StructField("score", DoubleType, nullable = false))), containsNull = false)
-}
-
-/** absmax_fold(array<float>): DOUBLE — max |xᵢ| (the int8 scale). */
-case class AbsMaxFold(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"absmax_fold requires ARRAY<FLOAT>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    VecUtil.absMaxFold(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.plans.VecUtil.absMaxFold($c);")
-  override protected def withNewChildInternal(newChild: Expression): AbsMaxFold =
-    copy(child = newChild)
-  override def prettyName: String = "absmax_fold"
-}
-
-/** quantize_int8(array<float>): ARRAY<INT> — symmetric per-vector int8
-  * quantization, qᵢ ∈ [−127, 127] (see VecUtil.quantizeInt8). */
-case class QuantizeInt8(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quantize_int8 requires ARRAY<FLOAT>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    VecUtil.quantizeInt8(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.plans.VecUtil.quantizeInt8($c);")
-  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
-    copy(child = newChild)
-  override def prettyName: String = "quantize_int8"
-}
-
-/** int_dot_fold(array<int>, array<int>): BIGINT — exact integer dot. */
-case class IntDotFold(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"int_dot_fold requires two ARRAY<INT>, got ${l.catalogString}, ${r.catalogString}")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecUtil.intDotFold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.VecUtil.intDotFold($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): IntDotFold =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "int_dot_fold"
-}
-
-/** int_sqnorm_fold(array<int>): BIGINT — exact integer squared L2. */
-case class IntSqNormFold(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"int_sqnorm_fold requires ARRAY<INT>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    VecUtil.intSqNormFold(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.plans.VecUtil.intSqNormFold($c);")
-  override protected def withNewChildInternal(newChild: Expression): IntSqNormFold =
-    copy(child = newChild)
-  override def prettyName: String = "int_sqnorm_fold"
 }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The LLM-data-pipeline tier: dedup (exact, MinHash-LSH, SimHash,
-  * Jaccard), similarity search over embeddings, and text analysis —
-  * the operations a training-data pipeline needs at 100 TB, expressed
-  * over the `documents` and `embeddings` testdata tables.
+  * Jaccard), similarity search over embeddings (exact, IVF and IVF-PQ
+  * top-k), and text analysis — the operations a training-data pipeline
+  * needs at 100 TB, expressed over the `documents` and `embeddings`
+  * testdata tables.
   *
   * Oracle discipline: every numeric path is either exact integer math,
   * engine-portable digests (md5 hex strings), or LEFT-FOLD double sums
@@ -167,10 +168,7 @@ object ExtraQueries {
        |fb AS (SELECT doc_id, bands, b AS band_id, bands[b+1] AS band_val
        |       FROM fp64, range(0,4) r(b))""".stripMargin
 
-  /** Left-fold cosine fragments for the oracle (≡ Similarity.dot/sqNorm). */
-  private val dotD =
-    """list_reduce(list_transform(list_zip(q_emb, embedding),
-      |  z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (acc, x) -> acc + x)""".stripMargin
+  /** Left-fold squared norm ≡ graft.plans.SqNormFold. */
   private def sqNormD(c: String) =
     s"list_reduce(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, x) -> acc + x)"
   /** Left-fold dot product ≡ graft.plans.DotFold. */
@@ -226,19 +224,6 @@ object ExtraQueries {
        |        THEN CAST($c[d+1] AS DOUBLE) ELSE -CAST($c[d+1] AS DOUBLE) END
        |   FOR d IN range(0, len($c))], (acc, x) -> acc + x) >= 0
        |  THEN (1::BIGINT << i) ELSE 0 END FOR i IN range(0, $bits)]) AS BIGINT)""".stripMargin
-
-  /** JL Rademacher projection fragment ≡ graft.plans.JlProject: output
-    * dim i is the [[rhBucketD]] accumulator VALUE (same Lehmer-mixed
-    * signs, same dimension-order left fold) kept as a float instead of
-    * collapsed to a sign bit. Fold starts at the first element where
-    * Spark starts at 0.0 — identical under IEEE (0.0 + x = x) up to
-    * the sign of a -0.0 total, which SQL value-equality ignores. */
-  private def jlVecD(c: String, k: Int, seed: Int) =
-    s"""[CAST(list_reduce(
-       |  [CASE WHEN ((((((d+1)*(2*i+1) + 7919*($seed)) % 2147483647) * 48271 % 2147483647) * 69621 % 2147483647) & 1) = 1
-       |        THEN CAST($c[d+1] AS DOUBLE) ELSE -CAST($c[d+1] AS DOUBLE) END
-       |   FOR d IN range(0, len($c))], (acc, x) -> acc + x) AS FLOAT)
-       | FOR i IN range(0, $k)]""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -444,35 +429,6 @@ object ExtraQueries {
           round(col("cos"), 6).as("cos_r"), col("label"))
     },
 
-    // ----- sign-LSH bucketed ANN (the sublinear scale path)
-    QueryDef("x07_ann_lsh_cosine",
-      "sign-LSH bucketed cosine top-3: equi-join on 4 random-hyperplane sign bits instead of cross product")(
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb,
-         |             ${rhBucketD("embedding", "4", "0")} AS bucket
-         |           FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id, embedding, ${rhBucketD("embedding", "4", "0")} AS bucket FROM embeddings),
-         |dotn AS (
-         |  SELECT q.q_id, c.vec_id,
-         |    list_reduce(list_transform(list_zip(q.q_emb, c.embedding),
-         |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (acc, x) -> acc + x) AS dot,
-         |    ${sqNormD("q.q_emb")} AS nq,
-         |    ${sqNormD("c.embedding")} AS nv
-         |  FROM q JOIN c ON q.bucket = c.bucket),
-         |cs AS (SELECT q_id, vec_id,
-         |         CASE WHEN nq * nv = 0 THEN 0.0 ELSE dot / sqrt(nq * nv) END AS cos
-         |       FROM dotn)
-         |SELECT q_id, vec_id, round(cos, 6) AS cos_r FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-         |  FROM cs)
-         |WHERE rn <= 3
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      Similarity.lshTopK(emb.select("vec_id", "embedding"), queries, 3)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
-    },
-
     // ----- IVF-style ANN: coarse-quantizer cells, nprobe=1
     QueryDef("x15_ann_ivf_cosine",
       "IVF ANN: corpus in corpus-scaled ceil(sqrt(n)) centroid cells (assignment O(n*cells) and cell-join O(n^2/cells) balance at sqrt), queries probe their top-2 cells (nprobe=2), top-3")(
@@ -518,103 +474,6 @@ object ExtraQueries {
       // O(n^1.5) instead of letting a fixed cell count go quadratic
       val nCells = Similarity.scaledCells(emb.count())
       Similarity.ivfTopK(emb, queries, 3, nCells = nCells, nprobe = 2)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
-    },
-
-    // ----- two-level IVF ANN (the past-10^9-vectors scale form of x15)
-    QueryDef("x40_ann_ivf2_cosine",
-      "two-level IVF: ceil(cbrt(n)) coarse cells (only broadcast that grows), each split into ceil(cbrt(n)) sub-cells assigned via an equi-join on the coarse cell — O(n^{4/3}) assignment+search vs flat's O(n^{1.5}); queries probe 2 coarse x 2 sub, top-3")(
-      s"""WITH p AS (SELECT count(*) AS n FROM embeddings),
-         |cc AS (SELECT greatest(CAST(min(r) AS BIGINT), 4) AS c
-         |       FROM range(1, 4097) t(r) WHERE r*r*r >= (SELECT n FROM p)),
-         |cent1 AS (SELECT vec_id AS cid, embedding AS c_emb FROM (
-         |           SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id) AS crn
-         |           FROM embeddings)
-         |         WHERE crn <= (SELECT c FROM cc)),
-         |sc1 AS (SELECT e.vec_id, e.embedding, c.cid,
-         |         row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |           ${cosD("e.embedding", "c.c_emb")} DESC, c.cid) AS rn
-         |       FROM embeddings e, cent1 c),
-         |asg1 AS (SELECT vec_id, embedding, cid AS cell FROM sc1 WHERE rn = 1),
-         |cent2 AS (SELECT cell, vec_id AS sid, embedding AS s_emb FROM (
-         |           SELECT cell, vec_id, embedding,
-         |                  row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS srn
-         |           FROM asg1)
-         |         WHERE srn <= (SELECT c FROM cc)),
-         |sc2 AS (SELECT a.vec_id, a.embedding, a.cell, s.sid,
-         |         row_number() OVER (PARTITION BY a.vec_id ORDER BY
-         |           ${cosD("a.embedding", "s.s_emb")} DESC, s.sid) AS rn
-         |       FROM asg1 a JOIN cent2 s USING (cell)),
-         |asg2 AS (SELECT vec_id, embedding, cell, sid AS sub FROM sc2 WHERE rn = 1),
-         |q1 AS (SELECT vec_id AS q_id, embedding AS q_emb, cid AS cell
-         |       FROM sc1 WHERE vec_id < 5 AND rn <= 2),
-         |sq2 AS (SELECT q.q_id, q.q_emb, q.cell, s.sid,
-         |         row_number() OVER (PARTITION BY q.q_id, q.cell ORDER BY
-         |           ${cosD("q.q_emb", "s.s_emb")} DESC, s.sid) AS rn
-         |       FROM q1 q JOIN cent2 s USING (cell)),
-         |q2 AS (SELECT q_id, q_emb, cell, sid AS sub FROM sq2 WHERE rn <= 2),
-         |cs AS (SELECT q.q_id, a.vec_id,
-         |         ${cosD("q.q_emb", "a.embedding")} AS cos
-         |       FROM q2 q JOIN asg2 a USING (cell, sub))
-         |SELECT q_id, vec_id, round(cos, 6) AS cos_r FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-         |  FROM cs)
-         |WHERE rn <= 3
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val c = Similarity.scaledCells2(emb.count())
-      Similarity.ivfTopK2(emb, queries, 3, nCoarse = c, nSub = c,
-          nprobeCoarse = 2, nprobeSub = 2)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
-    },
-
-    // ----- product-quantization top-k with exact re-rank (FAISS PQ/ADC)
-    QueryDef("x41_pq_topk_cosine",
-      "PQ/ADC top-k: 4 subspaces x 16 L2-assigned codes per vector (64x smaller scan representation), query-codebook lookup-table scoring with exact norms, exact-cosine re-rank of the top-10 — the memory-bounded ANN scan")(
-      s"""WITH sd AS (SELECT unnest(range(0, 4)) AS s),
-         |seeds AS (SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id) - 1 AS code
-         |          FROM embeddings ORDER BY vec_id LIMIT 16),
-         |cb AS (SELECT sd.s, seeds.code,
-         |         seeds.embedding[sd.s*16+1 : sd.s*16+16] AS c_sub
-         |       FROM seeds, sd),
-         |cs AS (SELECT e.vec_id, sd.s, e.embedding[sd.s*16+1 : sd.s*16+16] AS sub
-         |       FROM embeddings e, sd),
-         |enc0 AS (SELECT c.vec_id, c.s, b.code,
-         |          row_number() OVER (PARTITION BY c.vec_id, c.s ORDER BY
-         |            ${sqNormD("c.sub")} + ${sqNormD("b.c_sub")}
-         |              - 2 * ${dotD("c.sub", "b.c_sub")}, b.code) AS rn
-         |        FROM cs c JOIN cb b USING (s)),
-         |enc AS (SELECT vec_id, s, code FROM enc0 WHERE rn = 1),
-         |vn AS (SELECT vec_id, sqrt(${sqNormD("embedding")}) AS vnorm FROM embeddings),
-         |q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
-         |qs AS (SELECT q.q_id, sd.s, q.q_emb[sd.s*16+1 : sd.s*16+16] AS sub FROM q, sd),
-         |lut AS (SELECT qs.q_id, qs.s, b.code, ${dotD("qs.sub", "b.c_sub")} AS pd
-         |        FROM qs JOIN cb b USING (s)),
-         |qn AS (SELECT q_id, sqrt(${sqNormD("q_emb")}) AS qnorm FROM q),
-         |ad AS (SELECT l.q_id, e.vec_id,
-         |         list_reduce(list(l.pd ORDER BY l.s), (a, x) -> a + x) AS adot
-         |       FROM enc e JOIN lut l USING (s, code) GROUP BY 1, 2),
-         |ac AS (SELECT ad.q_id, ad.vec_id,
-         |         CASE WHEN qn.qnorm * vn.vnorm = 0 THEN 0.0
-         |              ELSE ad.adot / (qn.qnorm * vn.vnorm) END AS acos
-         |       FROM ad JOIN vn USING (vec_id) JOIN qn USING (q_id)),
-         |cand AS (SELECT q_id, vec_id FROM (
-         |          SELECT *, row_number() OVER (PARTITION BY q_id
-         |            ORDER BY acos DESC, vec_id) AS rn FROM ac)
-         |         WHERE rn <= 10),
-         |ex AS (SELECT c.q_id, c.vec_id, ${cosD("q.q_emb", "e.embedding")} AS cos
-         |       FROM cand c JOIN embeddings e USING (vec_id) JOIN q USING (q_id))
-         |SELECT q_id, vec_id, round(cos, 6) AS cos_r FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-         |  FROM ex)
-         |WHERE rn <= 3
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      Similarity.pqTopK(emb, queries, 3, dim = 64)
         .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
     },
 
@@ -2391,82 +2250,6 @@ object ExtraQueries {
         nMerges = 12)
     },
 
-    // ----- int8 embedding quantization (the ANN tier's 4× storage/IO
-    // path): per-vector symmetric scale, exact integer checksums + the
-    // fp32 reconstruction error the quality claim rests on
-    QueryDef("x74_embed_quantize",
-      "symmetric per-vector int8 quantization of the embedding column: amax scale, q = floor(x*127/amax + 0.5), exact integer sum/sq-sum checksums and the max fp32 reconstruction error — one codegen'd zero-shuffle projection; cast to TINYINT on write = 4x smaller ANN scans")(
-      s"""WITH q AS (
-         |  SELECT vec_id, embedding,
-         |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax
-         |  FROM embeddings),
-         |qq AS (
-         |  SELECT vec_id, embedding, amax,
-         |    CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-         |         ELSE list_transform(embedding,
-         |                x -> CAST(floor(CAST(x AS DOUBLE) * CAST(127 AS DOUBLE) / amax
-         |                           + CAST(0.5 AS DOUBLE)) AS INT)) END AS qvec
-         |  FROM q)
-         |SELECT vec_id, round(amax, 6) AS amax_r,
-         |  CAST(list_sum(qvec) AS BIGINT) AS qsum,
-         |  CAST(list_sum(list_transform(qvec, v -> CAST(v AS BIGINT) * v)) AS BIGINT) AS qssq,
-         |  round(list_max(list_transform(list_zip(embedding, qvec),
-         |    z -> abs(CAST(z[1] AS DOUBLE)
-         |             - CAST(z[2] AS DOUBLE) * amax / CAST(127 AS DOUBLE)))), 6) AS maxerr_r
-         |FROM qq
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      Similarity.quantizeInt8(emb)
-        .select(col("vec_id"), round(col("amax"), 6).as("amax_r"),
-          expr("CAST(aggregate(qvec, CAST(0 AS BIGINT), (a, x) -> a + x) AS BIGINT)").as("qsum"),
-          expr("CAST(aggregate(qvec, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT) * x) AS BIGINT)").as("qssq"),
-          round(expr("array_max(zip_with(embedding, qvec," +
-            " (x, q) -> abs(CAST(x AS DOUBLE)" +
-            " - CAST(q AS DOUBLE) * amax / CAST(127 AS DOUBLE))))"), 6).as("maxerr_r"))
-    },
-
-    // ----- ANN in the quantized space: exact integer dots/norms, one
-    // IEEE division — same plan as x06 over a 4x smaller scan
-    QueryDef("x75_int8_ann",
-      "brute-force cosine top-3 per query in int8-quantized space: exact integer dot products and squared norms (order-free longs), one final IEEE division — broadcast query batch, narrow corpus scan, WindowGroupLimit below the exchange; recall vs fp32 gated in Int8AnnSpec")(
-      s"""WITH z AS (
-         |  SELECT vec_id, embedding,
-         |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax
-         |  FROM embeddings),
-         |qv AS (
-         |  SELECT vec_id,
-         |    CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-         |         ELSE list_transform(embedding,
-         |                x -> CAST(floor(CAST(x AS DOUBLE) * CAST(127 AS DOUBLE) / amax
-         |                           + CAST(0.5 AS DOUBLE)) AS INT)) END AS qvec
-         |  FROM z),
-         |qn AS (
-         |  SELECT vec_id, qvec,
-         |    CAST(list_sum(list_transform(qvec, v -> CAST(v AS BIGINT) * v)) AS BIGINT) AS nrm
-         |  FROM qv),
-         |dq AS (
-         |  SELECT q.vec_id AS q_id, v.vec_id AS vec_id,
-         |    list_reduce(list_transform(list_zip(q.qvec, v.qvec),
-         |      z -> CAST(z[1] AS BIGINT) * z[2]), (a, x) -> a + x) AS dot_q,
-         |    q.nrm AS nq, v.nrm AS nv
-         |  FROM qn q, qn v WHERE q.vec_id < 5),
-         |cs AS (
-         |  SELECT q_id, vec_id,
-         |    CASE WHEN nq * nv = 0 THEN 0.0
-         |         ELSE CAST(dot_q AS DOUBLE) / sqrt(CAST(nq AS DOUBLE) * CAST(nv AS DOUBLE)) END AS cosq
-         |  FROM dq)
-         |SELECT q_id, vec_id, round(cosq, 6) AS cosq_r FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosq DESC, vec_id) AS rn
-         |  FROM cs)
-         |WHERE rn <= 3
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      Similarity.int8TopK(emb.select("vec_id", "embedding"), queries, 3)
-        .select(col("q_id"), col("vec_id"), round(col("cosq"), 6).as("cosq_r"))
-    },
-
     // ----- small-file compaction planning (the OPTIMIZE step for the
     // sharded export layout); file inventory synthesized from documents
     // (file per doc, bytes = char length) — the plan arithmetic is the
@@ -2523,60 +2306,6 @@ object ExtraQueries {
       TextOps.packStats(
         TextOps.pack(Tables.documents(s, dir), col("doc_id"), col("text")),
         seqLen = 128)
-    },
-
-    // ----- matryoshka two-stage ANN: dims as the compression axis
-    // (PQ = x41 codebooks, int8 = x75 precision, this = prefix dims)
-    QueryDef("x78_matryoshka_ann",
-      "matryoshka two-stage ANN: rank by cosine over the first 16 of 64 dims, keep top-12 candidates per query, re-score ONLY those with full vectors, return exact-cosine top-3 — prefix-column stage-1 scan reads dims/D of the bytes; stage 2 touches |q|*m rows")(
-      s"""WITH tr AS (
-         |  SELECT q.vec_id AS q_id, v.vec_id AS vec_id,
-         |    ${cosD("q.embedding[1:16]", "v.embedding[1:16]")} AS tcos,
-         |    q.embedding AS qe, v.embedding AS ve
-         |  FROM embeddings q, embeddings v WHERE q.vec_id < 5),
-         |c1 AS (SELECT q_id, vec_id, qe, ve,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY tcos DESC, vec_id) AS rn
-         |       FROM tr),
-         |cand AS (SELECT q_id, vec_id, ${cosD("qe", "ve")} AS cos FROM c1 WHERE rn <= 12)
-         |SELECT q_id, vec_id, round(cos, 6) AS cos_r FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn2
-         |  FROM cand)
-         |WHERE rn2 <= 3
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      Similarity.matryoshkaTopK(emb, queries, k = 3, dims = 16, m = 12)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
-    },
-
-    // ----- JL two-stage ANN (dense-mixing compression axis: every
-    //       output dim mixes ALL input dims — robust where matryoshka's
-    //       prefix carries no structure)
-    QueryDef("x112_jl_ann",
-      "JL two-stage ANN: rank by cosine in a 16-dim Rademacher projection (jl_project — deterministic Lehmer signs, no stored matrix), keep top-12 per query, re-score ONLY those with exact full-dim cosine, return top-3 — the distribution-free counterpart to x78's prefix truncation; projected corpus column scans outDims/D of the bytes, multiplicative with int8")(
-      s"""WITH pj AS (SELECT vec_id, embedding,
-         |              ${jlVecD("embedding", 16, 0)} AS pe
-         |            FROM embeddings),
-         |tr AS (
-         |  SELECT q.vec_id AS q_id, v.vec_id AS vec_id,
-         |    ${cosD("q.pe", "v.pe")} AS tcos,
-         |    q.embedding AS qe, v.embedding AS ve
-         |  FROM pj q, pj v WHERE q.vec_id < 5),
-         |c1 AS (SELECT q_id, vec_id, qe, ve,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY tcos DESC, vec_id) AS rn
-         |       FROM tr),
-         |cand AS (SELECT q_id, vec_id, ${cosD("qe", "ve")} AS cos FROM c1 WHERE rn <= 12)
-         |SELECT q_id, vec_id, round(cos, 6) AS cos_r FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn2
-         |  FROM cand)
-         |WHERE rn2 <= 3
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      Similarity.jlTopK(emb, queries, k = 3, outDims = 16, m = 12)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
     },
 
     // ----- exact distributed PCA (one-pass Gram aggregate + driver
@@ -2941,65 +2670,6 @@ object ExtraQueries {
          |""".stripMargin) { (s, dir) =>
       TextOps.packOffsets(
         TextOps.pack(Tables.documents(s, dir), col("doc_id"), col("text")))
-    },
-
-    // ----- IVF + int8 scoring (the production "IVF,SQ8" ANN config:
-    // fp32 cell assignment, integer-quantized candidate scans — cell
-    // pruning and the 4x cheaper read multiply)
-    QueryDef("x83_ivf_int8",
-      "IVF ANN scored in int8 space: corpus in ceil(sqrt(n)) cells (fp32 centroid argmax), queries probe top-2 cells, candidates scored with exact integer dots/norms over quantized vectors — the IVF,SQ8 composition; top-3 per query")(
-      s"""WITH p AS (SELECT least(greatest(CAST(ceil(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT), 8), 65536) AS nc
-         |           FROM embeddings),
-         |cent AS (SELECT vec_id AS cid, embedding AS c_emb FROM (
-         |           SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id) AS crn
-         |           FROM embeddings)
-         |         WHERE crn <= (SELECT nc FROM p)),
-         |sc AS (
-         |  SELECT e.vec_id, c.cid,
-         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |      CASE WHEN ${sqNormD("e.embedding")} * ${sqNormD("c.c_emb")} = 0 THEN 0.0
-         |           ELSE list_reduce(list_transform(list_zip(e.embedding, c.c_emb),
-         |                  z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (acc, x) -> acc + x)
-         |                / sqrt(${sqNormD("e.embedding")} * ${sqNormD("c.c_emb")}) END DESC,
-         |      c.cid) AS rn
-         |  FROM embeddings e, cent c),
-         |asg AS (SELECT vec_id, cid AS cell FROM sc WHERE rn = 1),
-         |q AS (SELECT vec_id AS q_id, cid AS cell FROM sc WHERE vec_id < 5 AND rn <= 2),
-         |z AS (SELECT vec_id,
-         |        list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax,
-         |        embedding FROM embeddings),
-         |qv AS (SELECT vec_id,
-         |         CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-         |              ELSE list_transform(embedding,
-         |                     x -> CAST(floor(CAST(x AS DOUBLE) * CAST(127 AS DOUBLE) / amax
-         |                                + CAST(0.5 AS DOUBLE)) AS INT)) END AS qvec
-         |       FROM z),
-         |qn AS (SELECT vec_id, qvec,
-         |         CAST(list_sum(list_transform(qvec, v -> CAST(v AS BIGINT) * v)) AS BIGINT) AS nrm
-         |       FROM qv),
-         |dq AS (
-         |  SELECT q.q_id, c.vec_id,
-         |    list_reduce(list_transform(list_zip(a.qvec, b.qvec),
-         |      z -> CAST(z[1] AS BIGINT) * z[2]), (acc, x) -> acc + x) AS dot_q,
-         |    a.nrm AS nq, b.nrm AS nv
-         |  FROM q JOIN asg c ON q.cell = c.cell
-         |  JOIN qn a ON a.vec_id = q.q_id
-         |  JOIN qn b ON b.vec_id = c.vec_id),
-         |cs AS (SELECT q_id, vec_id,
-         |         CASE WHEN nq * nv = 0 THEN 0.0
-         |              ELSE CAST(dot_q AS DOUBLE) / sqrt(CAST(nq AS DOUBLE) * CAST(nv AS DOUBLE)) END AS cosq
-         |       FROM dq)
-         |SELECT q_id, vec_id, round(cosq, 6) AS cosq_r FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosq DESC, vec_id) AS rn
-         |  FROM cs)
-         |WHERE rn <= 3
-         |""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val nCells = Similarity.scaledCells(emb.count())
-      Similarity.ivfTopKInt8(emb, queries, 3, nCells = nCells, nprobe = 2)
-        .select(col("q_id"), col("vec_id"), round(col("cosq"), 6).as("cosq_r"))
     },
 
     // ----- cross-signal calibration: classifier score bins vs the

@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Similarity search over embedding columns (Array[Float]) for the
-  * LLM-data-pipeline tier: brute-force cosine top-k as the exact baseline
-  * and a sign-LSH bucketed variant as the sublinear scale path.
+  * LLM-data-pipeline tier. Top-k by cosine has three routes: the exact
+  * brute-force scan ([[bruteForceTopK]]), which every recall check uses as
+  * its reference, and two candidate → exact-verify routes, IVF cells
+  * ([[ivfTopK]]) and IVF-PQ codes ([[ivfPqTopK]]).
   *
   * Numeric discipline: dot products and norms are LEFT FOLDS in double
   * precision over the array order (`aggregate` HOF). float×float promoted
@@ -20,13 +22,14 @@ import org.apache.spark.sql.types._
   * Scale design: the query side is small and broadcast — the corpus scan
   * stays shuffle-free narrow work; top-k uses the two-phase salted TopK
   * (graft.ops.TopK) so no single task sorts a whole query's scores. The
-  * LSH variant turns the cross product into an equi-join on bucket id.
+  * IVF routes turn the cross product into an equi-join on cell id.
   *
-  * CACHE LIFETIME CONTRACT: neardupPairs / ivfTopK persist() staging
-  * (bucketed vectors, trained centroids) that the returned lazy plan
-  * reads more than once, so they cannot unpersist internally. Long-lived
-  * sessions should `spark.catalog.clearCache()` after consuming results
-  * (Verify/Bench do, per query); see the same note on graft.dedup.Dedup.
+  * CACHE LIFETIME CONTRACT: neardupPairs / semanticDedup / ivfPqTopK
+  * persist() staging (bucketed vectors, cell assignments) that the
+  * returned lazy plan reads more than once, so they cannot unpersist
+  * internally. Long-lived sessions should `spark.catalog.clearCache()`
+  * after consuming results (Verify/Bench do, per query); see the same
+  * note on graft.dedup.Dedup.
   */
 object Similarity {
 
@@ -97,41 +100,12 @@ object Similarity {
     * with k′ > k headroom — the gate composes unchanged because it
     * filters before ranking. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
-                    dupCos: Double = 0.98): DataFrame =
-    rankNegatives(corpus.crossJoin(broadcast(queries))
+                    dupCos: Double = 0.98): DataFrame = {
+    val f = corpus.crossJoin(broadcast(queries))
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-        cosine(col("q_emb"), col("embedding")).as("cos")), k, dupCos)
-
-  /** [[hardNegatives]] fed from [[ivfTopK]]'s probed candidates instead
-    * of the exact corpus scan — the route past the scale where scoring
-    * every vector per query stops being affordable. `kCand` > k is the
-    * required headroom: the ANN ranking cannot see the exclusions, so
-    * positives/near-dups occupy candidate slots and are filtered out
-    * AFTER retrieval; over-fetch, exclude, re-rank. Recall inherits
-    * ivfTopK's knobs (nprobe, kmeansIters). The exclusion + ranking
-    * gate is literally the shared [[rankNegatives]] — the composition
-    * claim the exact operator's scaladoc makes, as code. */
-  def hardNegativesIvf(corpus: DataFrame, queries: DataFrame, k: Int,
-                       kCand: Int, nCells: Int = 8, nprobe: Int = 1,
-                       kmeansIters: Int = 0,
-                       dupCos: Double = 0.98): DataFrame = {
-    require(kCand >= k, s"candidate headroom kCand=$kCand must be >= k=$k")
-    val cand = ivfTopK(corpus.select("vec_id", "embedding"), queries
-        .select(col("q_id"), col("q_emb")), kCand, nCells, nprobe, kmeansIters)
-    rankNegatives(cand
-      .join(corpus.select(col("vec_id"), col("label")), "vec_id")
-      .join(broadcast(queries.select(col("q_id"), col("q_label"))), "q_id"),
-      k, dupCos)
-  }
-
-  /** Shared by [[hardNegatives]] / [[hardNegativesIvf]]: exclusions
-    * BEFORE ranking (an excluded row must never hold a top-k slot),
-    * then the row_number-filtered per-query top-k (WindowGroupLimit
-    * pre-truncates below the exchange). */
-  private def rankNegatives(scored: DataFrame, k: Int,
-                            dupCos: Double): DataFrame = {
-    val f = scored.filter(col("vec_id") =!= col("q_id") &&
-      col("label") =!= col("q_label") && col("cos") < dupCos)
+        cosine(col("q_emb"), col("embedding")).as("cos"))
+      .filter(col("vec_id") =!= col("q_id") &&
+        col("label") =!= col("q_label") && col("cos") < dupCos)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     f.withColumn("_rn", row_number().over(w))
@@ -215,22 +189,6 @@ object Similarity {
   def scaledCells(n: Long, minCells: Int = 8, maxCells: Int = 65536): Int =
     math.min(math.max(math.ceil(math.sqrt(n.toDouble)).toInt, minCells), maxCells)
 
-  /** Two-level quantizer sizing: the smallest c with c³ ≥ n, by EXACT
-    * integer search — `Math.cbrt` is not guaranteed correctly rounded,
-    * so a double cube root could disagree with another engine's at cube
-    * boundaries, shifting every cell assignment. With c coarse cells
-    * and c sub-cells per coarse cell, total cells ≈ n^{2/3}: coarse
-    * assignment costs O(n·c) = O(n^{4/3}), sub-assignment O(n·c) again
-    * (each vector scores only its OWN coarse cell's c sub-centroids via
-    * the equi-join), and the within-cell search join O(n²/n^{2/3}) =
-    * O(n^{4/3}) — balanced, with only the c = ∛n coarse centroids
-    * broadcast (~2 MB at n = 10¹⁰ vs the flat quantizer's ~67 MB cap). */
-  def scaledCells2(n: Long, minCells: Int = 4): Int = {
-    var c = 1
-    while (c.toLong * c * c < n) c += 1
-    math.max(c, minCells)
-  }
-
   /** Embedding near-dup pairs: sign-LSH bucket self-join per hash table
     * (bits scaled to the corpus via scaledBits), candidates unioned
     * across `tables` independent seeds for recall, then the exact cosine
@@ -310,7 +268,7 @@ object Similarity {
 
   /** Collect a deterministic, bounded-by-construction tiny relation —
     * centroid / codebook tables, capped at ≤ 65,536 rows by
-    * [[scaledCells]]/[[scaledCells2]]/nCodes — into a driver-LOCAL
+    * [[scaledCells]]/nCodes — into a driver-LOCAL
     * relation (r21, guide §1.2/§2.4). Every later reader then costs
     * ZERO Spark jobs: a BroadcastExchange over a LocalTableScan builds
     * on the driver without submitting a job, where the distributed form
@@ -361,8 +319,8 @@ object Similarity {
     *
     * Scale shape: assignment is the [[assignCells]] narrow
     * broadcast-argmax pass (size `nCells` with [[scaledCells]] — the
-    * √n-broadcast trade of x15, with [[ivfTopK2]]'s two-level split as
-    * the past-10⁹ path); the quota rank is a per-CELL window whose
+    * √n-broadcast trade of x15, with a two-level quantizer as the
+    * past-10⁹ path); the quota rank is a per-CELL window whose
     * partitions hold one cell's members, ~√n rows by construction —
     * sublinear in the corpus, unlike the per-stratum window the x37
     * ledger note rules out (tens of strata → corpus-sized partitions).
@@ -413,48 +371,6 @@ object Similarity {
     finally checkpointDir.foreach(_ => graft.dedup.ReliableCheckpoints.release())
   }
 
-  /** Cell-local Lloyd for level-2 sub-centroids: assign each vector to
-    * its nearest sub-centroid WITHIN its own coarse cell (equi-join on
-    * the cell id — the sub-centroid table is never broadcast, same
-    * contract as [[ivfTopK2]]'s assignment), then per-(cell, sub)
-    * element-wise exact-decimal means; empty sub-cells keep their
-    * previous centroid. Each iteration is one equi-join + one
-    * (cell, sub, dim)-keyed aggregation — nothing quadratic, nothing
-    * corpus-sized on the driver; rounds are lineage-pinned exactly like
-    * [[kmeansLoop]]. `asg1` is (vec_id, embedding, cell); `init2` is
-    * (cell, sid, s_emb). */
-  private def kmeansLocalLoop(asg1: DataFrame, init2: DataFrame, iters: Int,
-                              reliable: Boolean): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) {
-        df.persist()
-        try df.checkpoint(true) finally { df.unpersist(); () }
-      } else df.localCheckpoint(true)
-    var cents = pin(init2)
-    for (_ <- 0 until iters) {
-      val assigned = TopK.perGroup(
-        asg1.join(cents, "cell")
-          .withColumn("_scos", cosine(col("embedding"), col("s_emb")))
-          .drop("s_emb"),
-        Seq(col("vec_id")), Seq(col("_scos").desc, col("sid")), 1)
-      val means = assigned
-        .select(col("cell"), col("sid"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("cell", "sid", "pos")
-        .agg((sum(col("x").cast(DecimalType(38, 12))) / count(lit(1)))
-          .cast(FloatType).as("m"))
-        .groupBy("cell", "sid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          _.getField("m")).as("_new"))
-      val next = pin(cents.join(means, Seq("cell", "sid"), "left")
-        .select(col("cell"), col("sid"),
-          coalesce(col("_new"), col("s_emb")).as("s_emb")))
-      cents.unpersist()
-      cents = next
-    }
-    cents
-  }
-
   private def kmeansLoop(corpus: DataFrame, init: DataFrame, iters: Int,
                          reliable: Boolean): DataFrame = {
     def pin(df: DataFrame): DataFrame =
@@ -493,150 +409,16 @@ object Similarity {
     * [[scaledCells]] — a fixed count leaves each cell holding n/nCells
     * vectors and the search join degenerates toward quadratic at scale. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int = 8,
-              nprobe: Int = 1, kmeansIters: Int = 0,
-              checkpointDir: Option[String] = None): DataFrame = {
+              nprobe: Int = 1, kmeansIters: Int = 0): DataFrame = {
     val init = firstCells(corpus, nCells)
-    val cents = localRel(if (kmeansIters > 0)
-                   kmeansRefine(corpus, init, kmeansIters, checkpointDir)
-                 else init)
+    val cents = localRel(if (kmeansIters > 0) kmeansRefine(corpus, init, kmeansIters)
+                         else init)
     val c = assignCells(corpus, "vec_id", "embedding", cents, 1)
     val q = assignCells(queries, "q_id", "q_emb", cents, nprobe)
       .select("q_id", "q_emb", "cell")
     // corpus vectors live in exactly one cell, so probing nprobe disjoint
     // cells never duplicates a (q_id, vec_id) candidate
     topK(scored(c.join(broadcast(q), "cell")), k)
-  }
-
-  /** x83: IVF cells + int8 scoring — the composition of the coarse
-    * quantizer ([[ivfTopK]]) with scalar quantization ([[int8TopK]]),
-    * i.e. the `IVF,SQ8` configuration production ANN systems default
-    * to: cell assignment stays fp32 (centroid argmax is a narrow pass
-    * whose cost doesn't touch the stored corpus), while the
-    * within-cell candidate scoring — the part that actually scans
-    * stored vectors — runs on the 4× smaller int8 column with exact
-    * integer dots/norms. The two compressions multiply with the cell
-    * pruning: candidates shrink ~nCells/nprobe× AND each candidate
-    * read is 4× cheaper. Centroids are driver-local ([[localRel]]) —
-    * nothing persists here. Recall vs the fp32 IVF route
-    * at identical cells/probes is gated in Int8AnnSpec. */
-  def ivfTopKInt8(corpus: DataFrame, queries: DataFrame, k: Int,
-                  nCells: Int = 8, nprobe: Int = 1): DataFrame = {
-    import graft.plans.functions.{int_dot_fold, int_sqnorm_fold, quantize_int8}
-    val cents = localRel(firstCells(corpus, nCells))
-    // quantize ONCE, then fold over the materialized column (see int8TopK)
-    val c = assignCells(corpus, "vec_id", "embedding", cents, 1)
-      .select(col("cell"), col("vec_id"), quantize_int8(col("embedding")).as("qv"))
-      .select(col("cell"), col("vec_id"), col("qv"), int_sqnorm_fold(col("qv")).as("nv"))
-    val q = assignCells(queries, "q_id", "q_emb", cents, nprobe)
-      .select(col("cell"), col("q_id"), quantize_int8(col("q_emb")).as("qq"))
-      .select(col("cell"), col("q_id"), col("qq"), int_sqnorm_fold(col("qq")).as("nq"))
-    val scored = c.join(broadcast(q), "cell")
-      .select(col("q_id"), col("vec_id"),
-        when(col("nq") * col("nv") === 0L, 0.0)
-          .otherwise(int_dot_fold(col("qq"), col("qv")).cast("double") /
-            sqrt(col("nq").cast("double") * col("nv").cast("double"))).as("cosq"))
-    TopK.perGroup(scored, Seq(col("q_id")), Seq(col("cosq").desc, col("vec_id")), k)
-  }
-
-  /** Two-level IVF ANN — the scale form of [[ivfTopK]] past ~10⁹
-    * vectors, where the flat quantizer's √n-centroid broadcast and
-    * O(n^1.5) assignment become the binding costs (see [[scaledCells]]).
-    * Level 1 partitions the corpus into `nCoarse` cells (broadcast
-    * argmax — the ONLY broadcast that grows with the corpus, at ∛n
-    * rows); level 2 splits each coarse cell into `nSub` sub-cells whose
-    * centroids are the cell's lowest-id members, assigned via an
-    * EQUI-JOIN on the coarse cell id — each vector scores only its own
-    * cell's nSub sub-centroids, and the sub-centroid table (n^{2/3}
-    * rows at scale) is never broadcast: AQE picks the join strategy.
-    * Queries probe their `nprobeCoarse` nearest coarse cells and, within
-    * each, `nprobeSub` nearest sub-cells; the search is an equi-join on
-    * (cell, sub). Sub-cell membership is unique per vector, so probed
-    * (cell, sub) pairs never duplicate a candidate. Size both levels
-    * with [[scaledCells2]]. Centroid picks and argmaxes tie-break by id,
-    * so assignment is deterministic and engine-reproducible; sub-centroid
-    * selection uses the salted two-phase TopK, never a one-task-per-cell
-    * sort. */
-  def ivfTopK2(corpus: DataFrame, queries: DataFrame, k: Int,
-               nCoarse: Int, nSub: Int,
-               nprobeCoarse: Int = 1, nprobeSub: Int = 1,
-               kmeansIters: Int = 0, kmeansItersSub: Int = 0,
-               checkpointDir: Option[String] = None): DataFrame = {
-    val init = firstCells(corpus, nCoarse)
-    // Level-1 Lloyd (`kmeansIters`) and level-2 CELL-LOCAL Lloyd
-    // (`kmeansItersSub`) are independent knobs: coarse boundaries
-    // dominate reachability (a neighbor in an unprobed coarse cell is
-    // lost at any nprobeSub), but once the coarse cell is probed,
-    // sub-centroid placement decides whether a planted cluster sits in
-    // ONE sub-cell or straddles several — the case where lowest-id
-    // seeding measurably loses recall and local Lloyd wins it back
-    // (RecallProbeSpec planted-cluster fixture; PLANS.md "ANN recall").
-    val cents1 = localRel(if (kmeansIters > 0)
-                    kmeansRefine(corpus, init, kmeansIters, checkpointDir)
-                  else init)
-    val asg1 = assignCells(corpus, "vec_id", "embedding", cents1, 1)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-      .persist() // read by sub-centroid pick + sub-assignment; cache
-                 // contract as on Dedup
-    val cents2init = TopK.perGroup(asg1, Seq(col("cell")), Seq(col("vec_id")), nSub)
-      .select(col("cell"), col("vec_id").as("sid"), col("embedding").as("s_emb"))
-    val cents2 = if (kmeansItersSub > 0) {
-      checkpointDir.foreach(d =>
-        graft.dedup.ReliableCheckpoints.acquire(corpus.sparkSession, d))
-      try kmeansLocalLoop(asg1, cents2init, kmeansItersSub,
-        reliable = checkpointDir.isDefined)
-      finally checkpointDir.foreach(_ =>
-        graft.dedup.ReliableCheckpoints.release())
-    } else cents2init
-    def subAssign(df: DataFrame, idCol: String, emb: String, np: Int,
-                  perCell: Boolean): DataFrame = {
-      val scored = df.join(cents2, "cell")
-        .withColumn("_scos", cosine(col(emb), col("s_emb"))).drop("s_emb")
-      val grp = if (perCell) Seq(col(idCol), col("cell")) else Seq(col(idCol))
-      TopK.perGroup(scored, grp, Seq(col("_scos").desc, col("sid")), np)
-        .withColumnRenamed("sid", "sub").drop("_scos")
-    }
-    val asg2 = subAssign(asg1, "vec_id", "embedding", 1, perCell = false)
-    val q2 = subAssign(
-      assignCells(queries, "q_id", "q_emb", cents1, nprobeCoarse)
-        .select("q_id", "q_emb", "cell"),
-      "q_id", "q_emb", nprobeSub, perCell = true)
-      .select("q_id", "q_emb", "cell", "sub")
-    topK(scored(asg2.join(broadcast(q2), Seq("cell", "sub"))), k)
-  }
-
-  /** Product-quantization top-k (Jégou et al. 2011, the FAISS PQ/ADC
-    * scheme) with exact re-ranking: split each vector into `nSub`
-    * subspaces, quantize every subvector to its nearest of `nCodes`
-    * per-subspace centroids (codebook = the first nCodes vectors'
-    * subvectors, deterministic), and score queries against the CODES —
-    * approx dot(q, x) ≈ Σ_s LUT[s, code_s(x)] where the lookup table
-    * holds dot(q_s, centroid) for every (subspace, centroid) — then
-    * re-rank the top `rerank` candidates per query by exact cosine.
-    *
-    * Why it matters at 100 TB: the scored representation is nSub
-    * small ints + one norm per vector (4 codes ≈ 64× smaller than 64
-    * float dims), so the scan that ranks the whole corpus never
-    * touches raw embeddings — only the re-rank join reads the
-    * `rerank`·|queries| winning vectors. Codebook (nSub·nCodes rows)
-    * and LUT (|queries|·nSub·nCodes rows) are constant-bounded
-    * broadcasts; encoding assigns by exact L2 (d² as one fold-built
-    * expression, ties to the lowest code, so both engines agree);
-    * the per-candidate subspace sum is a position-ordered fold over
-    * nSub elements (engine-portable). Approximate cosine uses EXACT
-    * per-vector norms (kept alongside the codes — one scalar each).
-    * `dim` must be the embedding width, divisible by nSub. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             dim: Int, nSub: Int = 4, nCodes: Int = 16,
-             rerank: Int = 10): DataFrame = {
-    require(nSub > 0 && dim % nSub == 0, s"dim $dim not divisible by nSub $nSub")
-    // codebook: code j in subspace s = the (j+1)-th lowest-id seed
-    // vector's subvector; the rank window spans <= nCodes rows
-    val seeds = corpus.orderBy(col("vec_id")).limit(nCodes)
-      .select(col("vec_id"), col("embedding"),
-        (row_number().over(seedOrder) - 1).as("code"))
-    val cand = adcCandidates(corpus, queries, nSub, dim / nSub,
-      seeds.drop("vec_id"), corpus, "embedding", None, rerank)
-    rerankTopK(cand, corpus, queries, k)
   }
 
   /** Rank window over a post-`limit` seed frame of ≤ nCells + nCodes
@@ -650,23 +432,23 @@ object Similarity {
     .partitionBy(pmod(col("vec_id"), lit(1L)))
     .orderBy(col("vec_id"))
 
-  /** The ADC stage [[pqTopK]] and [[ivfPqTopK]] share: split vectors
-    * into nSub subspaces, build the codebook from `seeds` (code, `emb`)
-    * subvectors, encode every `toEncode` (vec_id, `emb`) subvector to its
-    * nearest code by exact L2 (d² as one fold-built expression, ties to
-    * the lowest code, so both engines agree), score queries against the
-    * codes through the LUT dot(q_s, centroid), and keep the top `rerank`
-    * (q_id, vec_id) per query by approximate cosine (exact per-vector
-    * norms). `cells` is IVF-PQ's coarse term: the (vec_id, cell)
-    * membership and the probed (q_id, cell, _qc = dot(q, c_cell)) rows;
-    * a candidate's cell term is ADDED to the finished subspace fold (one
+  /** [[ivfPqTopK]]'s ADC stage: split vectors into nSub subspaces,
+    * build the codebook from `seeds` (code, `emb`) subvectors, encode
+    * every `toEncode` (vec_id, `emb`) subvector to its nearest code by
+    * exact L2 (d² as one fold-built expression, ties to the lowest code,
+    * so both engines agree), score queries against the codes through the
+    * LUT dot(q_s, centroid), and keep the top `rerank` (q_id, vec_id) per
+    * query by approximate cosine (exact per-vector norms). The coarse
+    * term comes from `vecCells`, the (vec_id, cell) membership, and
+    * `qCells`, the probed (q_id, cell, _qc = dot(q, c_cell)) rows; a
+    * candidate's cell term is ADDED to the finished subspace fold (one
     * association both engines share) — using it as the fold's init
     * would associate (((qc+t1)+t2)+…) where DuckDB's list_reduce gives
     * qc+(((t1+t2)+…)), a genuinely different double. */
   private def adcCandidates(corpus: DataFrame, queries: DataFrame,
                             nSub: Int, subDim: Int,
                             seeds: DataFrame, toEncode: DataFrame, emb: String,
-                            cells: Option[(DataFrame, DataFrame)],
+                            vecCells: DataFrame, qCells: DataFrame,
                             rerank: Int): DataFrame = {
     def subs(df: DataFrame, idc: String, e: String): DataFrame = df
       .select(col(idc), explode(array((0 until nSub).map { s =>
@@ -696,17 +478,12 @@ object Similarity {
     // the subspace terms folded in s order
     val fold = aggregate(transform(array_sort(collect_list(struct(col("s"), col("_pd")))),
       _.getField("_pd")), lit(0.0), (acc, x) => acc + x)
-    val adot = cells match {
-      case None => encoded.join(broadcast(lut), Seq("s", "code"))
-          .groupBy("q_id", "vec_id")
-          .agg(fold.as("_adot"))
-      case Some((vecCells, qCells)) => encoded.join(vecCells, "vec_id")
-          .join(broadcast(qCells), "cell")
-          .join(broadcast(lut), Seq("q_id", "s", "code"))
-          .groupBy("q_id", "vec_id")
-          // _qc is constant within the group (one cell per vec)
-          .agg((max(col("_qc")) + fold).as("_adot"))
-    }
+    val adot = encoded.join(vecCells, "vec_id")
+      .join(broadcast(qCells), "cell")
+      .join(broadcast(lut), Seq("q_id", "s", "code"))
+      .groupBy("q_id", "vec_id")
+      // _qc is constant within the group (one cell per vec)
+      .agg((max(col("_qc")) + fold).as("_adot"))
     val approx = adot.join(norms, "vec_id").join(broadcast(qNorms), "q_id")
       .select(col("q_id"), col("vec_id"),
         when(col("_qn") * col("_vn") === 0.0, 0.0)
@@ -717,8 +494,10 @@ object Similarity {
 
   /** IVF-PQ top-k (the FAISS IVFADC composition): coarse cells bound
     * WHERE to look ([[ivfTopK]]'s partition trade), a shared residual
-    * codebook bounds WHAT the scan reads ([[pqTopK]]'s compression
-    * trade) — together the standard billion-scale ANN architecture.
+    * codebook bounds WHAT the scan reads (product quantization's
+    * compression trade: nSub small codes + one norm per vector instead
+    * of the float embedding) — together the standard billion-scale ANN
+    * architecture.
     * Each vector stores its cell id, nSub residual codes, and one exact
     * norm; dot(q, x) = dot(q, c_cell) + dot(q, r) is approximated as
     * dot(q, c_cell) + Σ_s LUT[s, code_s], where the LUT holds
@@ -760,25 +539,25 @@ object Similarity {
         dot(col("q_emb"), col("c_emb")).as("_qc"))
     val cand = adcCandidates(corpus, queries, nSub, dim / nSub, seeds,
       asg.select(col("vec_id"), col("_res")), "_res",
-      Some((asg.select("vec_id", "cell"), qCells)), rerank)
+      asg.select("vec_id", "cell"), qCells, rerank)
     rerankTopK(cand, corpus, queries, k)
   }
 
   /** SemDeDup-style semantic dedup: partition the corpus into cells
-    * around deterministic centroids (first `nCells` vectors, optionally
-    * Lloyd-refined), generate candidate pairs only WITHIN a cell, gate
-    * on exact cosine ≥ `minCos`, and drop the higher-id member of each
-    * surviving pair — one representative per semantic-duplicate group.
+    * around deterministic centroids (the first `nCells` vectors),
+    * generate candidate pairs only WITHIN a cell, gate on exact cosine
+    * ≥ `minCos`, and drop the higher-id member of each surviving pair —
+    * one representative per semantic-duplicate group.
     * Output: (vec_id, cell, kept).
     *
     * Scale shape: assignment is one broadcast narrow pass (O(n·nCells));
     * candidates are a cell-keyed equi self-join (O(Σ cell²)). Balancing
     * the two means nCells grows with the corpus — size it with
     * [[scaledCells]] (⌈√n⌉, the classic IVF/SemDeDup trade) — semantic
-    * locality then bounds each cell the
-    * way x16's hyperplane buckets do, but with data-adaptive boundaries
-    * (trained centroids follow density; hyperplanes cannot). For a
-    * strictly linear candidate bound at the cost of that locality, use
+    * locality then bounds each cell the way x16's hyperplane buckets do,
+    * but with data-adaptive boundaries (centroids drawn from the data
+    * follow its density; hyperplanes cannot). For a strictly linear
+    * candidate bound at the cost of that locality, use
     * [[neardupPairs]]; the two share the exact-cosine gate.
     *
     * `maxCorpus` is the [[graft.text.TextOps.bpeMergesLocal]] discipline
@@ -794,8 +573,6 @@ object Similarity {
     * counted the corpus (every production site does, to size nCells)
     * pass `knownCount` so the guard costs no extra scan. */
   def semanticDedup(corpus: DataFrame, nCells: Int = 8, minCos: Double = 0.999,
-                    kmeansIters: Int = 0,
-                    checkpointDir: Option[String] = None,
                     maxCorpus: Long = DefaultSemanticDedupMaxCorpus,
                     knownCount: Option[Long] = None): DataFrame = {
     val n = knownCount.getOrElse(corpus.count())
@@ -804,10 +581,8 @@ object Similarity {
         "cell route's within-cell pair mass is O(n^1.5) BY DESIGN and past " +
         "this size the linear-candidate semanticDedupBanded is the scale " +
         "path (pass a larger maxCorpus to opt in to the superlinear join)")
-    val init = firstCells(corpus, nCells)
-    val cents = if (kmeansIters > 0)
-      kmeansRefine(corpus, init, kmeansIters, checkpointDir) else init
-    val assigned = assignCells(corpus, "vec_id", "embedding", cents, 1)
+    val assigned = assignCells(corpus, "vec_id", "embedding",
+        firstCells(corpus, nCells), 1)
       .select(col("vec_id"), col("embedding"), col("cell"))
       .persist() // cell self-join reads both sides; cache contract as on Dedup
     val dropped = assigned.as("a").join(assigned.as("k"),
@@ -848,37 +623,6 @@ object Similarity {
     corpus.select("vec_id")
       .join(dropped.withColumn("_d", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("_d").isNull.as("kept"))
-  }
-
-  /** Bucketed approximate top-k: candidates share the query's sign
-    * bucket, so the cross product becomes an equi-join on bucket id.
-    * Queries are broadcast; recall trades off against 2^bits and back
-    * up against `tables` (independent hash tables unioned before the
-    * top-k — a candidate counts once however many tables it collides
-    * in). Sign-LSH misses a true neighbor at angle θ with probability
-    * (θ/π)ᵇ per hyperplane set, so recall on MODERATE-similarity
-    * neighbors needs several tables; see the sf0.1 recall report in
-    * PLANS.md for measured numbers behind the defaults. Candidate work
-    * scales with tables × bucket population — still an equi-join,
-    * never a cross product. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int = 4,
-              tables: Int = 1): DataFrame = {
-    val cand =
-      if (tables == 1) {
-        val c = corpus.withColumn("bucket", signBucket(col("embedding"), bits))
-        val q = queries.withColumn("bucket", signBucket(col("q_emb"), bits))
-        scored(c.join(broadcast(q), "bucket"))
-      } else {
-        def banded(df: DataFrame, emb: String) = df.select(col("*"),
-            explode(array((0 until tables).map { s =>
-              struct(lit(s).as("seed"), signBucket(col(emb), bits, s).as("bucket"))
-            }: _*)).as("t"))
-          .select(col("*"), col("t.seed"), col("t.bucket")).drop("t")
-        scored(banded(corpus, "embedding")
-            .join(broadcast(banded(queries, "q_emb")), Seq("seed", "bucket")))
-          .distinct() // a pair may collide in several tables
-      }
-    topK(cand, k)
   }
 
   /** MMR (maximal marginal relevance) diversity re-rank: from the
@@ -923,101 +667,6 @@ object Similarity {
       .select((col("_p") + 1).cast(LongType).as("step"),
         col("_s").getField("vec_id").as("vec_id"),
         round(col("_s").getField("score"), 6).as("score"))
-  }
-
-  /** x74: symmetric per-vector int8 quantization of an embedding column
-    * — the storage/IO path for the ANN tier. At 100 TB of fp32
-    * embeddings, the quantized corpus (cast to TINYINT on write) is a
-    * 4× smaller scan for every downstream search; this operator is the
-    * one-time materialization pass that produces it. Adds `qvec`
-    * (ARRAY<INT>, values ∈ [−127, 127]) and `amax` (DOUBLE, the
-    * per-vector scale, max |xᵢ|). Pure codegen'd projection
-    * (graft.plans.QuantizeInt8 / AbsMaxFold), zero shuffles — runs at
-    * scan speed. qᵢ = ⌊xᵢ·127/amax + 0.5⌋; all-zero vectors → all-zero
-    * qvec with amax 0. */
-  def quantizeInt8(df: DataFrame, emb: String = "embedding"): DataFrame =
-    df.withColumn("amax", graft.plans.functions.absmax_fold(col(emb)))
-      .withColumn("qvec", graft.plans.functions.quantize_int8(col(emb)))
-
-  /** x112 — JL two-stage ANN: stage 1 ranks by cosine in a
-    * `outDims`-dim Rademacher-projected space
-    * ([[graft.plans.JlProject]] — every output dim mixes ALL input
-    * dims, the robust counterpart to [[matryoshkaTopK]]'s prefix
-    * truncation: a matryoshka prefix is only as good as the training
-    * recipe that front-loaded the information; the JL guarantee is
-    * distribution-free), keeps the top-`m` pool per query, and stage 2
-    * re-scores only those with exact full-dim cosine. The projection
-    * is a deterministic codegen'd expression (no stored projection
-    * matrix — signs are Lehmer-mixed from (dim, outDim, seed), the
-    * sign-LSH convention), so a projected corpus column can be
-    * materialized once and scanned at outDims/D of the bytes;
-    * multiplicative with int8 on both axes. Both stages plan as the
-    * x06 shape: broadcast query batch, WindowGroupLimit below the
-    * exchange, |q|·m-row rerank. */
-  def jlTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             outDims: Int, m: Int, seed: Int = 0): DataFrame = {
-    require(outDims > 0 && m >= k, s"need outDims > 0 and rerank pool m >= k")
-    import graft.plans.functions.jl_project
-    val cands = bruteForceTopK(
-      corpus.select(col("vec_id"),
-        jl_project(col("embedding"), outDims, seed).as("embedding")),
-      queries.select(col("q_id"),
-        jl_project(col("q_emb"), outDims, seed).as("q_emb")), m)
-    rerankTopK(cands, corpus, queries, k)
-  }
-
-  /** x78: matryoshka two-stage ANN (Kusupati et al. 2022) — the third
-    * compression trade in the family (PQ = x41 codebooks, int8 = x75
-    * precision, this = DIMENSIONS): stage 1 ranks by cosine over the
-    * first `dims` of each vector and keeps a top-`m` candidate pool
-    * per query; stage 2 re-scores ONLY those m candidates with the
-    * full vectors and returns the top-k. With a materialized
-    * `slice(embedding, 1, dims)` prefix column the stage-1 scan reads
-    * dims/D of the bytes (16/64 = 4×, multiplicative with int8's 4×);
-    * stage 2 touches |q|·m rows — scan-independent. Both stages are
-    * the x06 shape (broadcast query side, WindowGroupLimit below the
-    * exchange); the stage-2 candidate pool joins back to the corpus as
-    * a small (AQE-broadcast) side. Recall is m-headroom-bounded and
-    * gated in Int8AnnSpec — on MRL-trained embeddings the prefix
-    * carries most of the signal; on the synthetic (energy-uniform)
-    * testdata the gate documents the m-vs-recall trade honestly.
-    * Output: (q_id, vec_id, cos) with k rows per query, `cos` exact
-    * full-dimension cosine. */
-  def matryoshkaTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     dims: Int, m: Int): DataFrame = {
-    require(dims > 0 && m >= k, s"need dims > 0 and rerank pool m >= k")
-    val cands = bruteForceTopK(
-      corpus.select(col("vec_id"), slice(col("embedding"), 1, dims).as("embedding")),
-      queries.select(col("q_id"), slice(col("q_emb"), 1, dims).as("q_emb")), m)
-    rerankTopK(cands, corpus, queries, k)
-  }
-
-  /** x75: brute-force cosine top-k in the QUANTIZED space — integer dot
-    * products and integer squared norms (exact longs, order-free), one
-    * IEEE division at the end. Same plan shape as [[bruteForceTopK]]
-    * (broadcast query batch, narrow corpus scan, WindowGroupLimit
-    * pre-truncation below the exchange) but the corpus side reads the
-    * 4× smaller int8 column when the quantized corpus is materialized —
-    * at embedding-corpus scale the scan is the whole cost, so this is
-    * the same recall/latency trade PQ makes (x41) with a far simpler
-    * decode. Recall vs the fp32 scan is gated in Int8AnnSpec.
-    * `corpus` must have (vec_id, embedding); `queries` (q_id, q_emb).
-    * Output: (q_id, vec_id, cosq) with k rows per query. */
-  def int8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    import graft.plans.functions.{int_dot_fold, int_sqnorm_fold, quantize_int8}
-    // quantize ONCE into qv/qq, then fold over the materialized column —
-    // don't rely on Spark subexpression elimination to dedupe the work
-    // on every corpus scan
-    val qc = corpus.select(col("vec_id"), quantize_int8(col("embedding")).as("qv"))
-      .select(col("vec_id"), col("qv"), int_sqnorm_fold(col("qv")).as("nv"))
-    val qq = queries.select(col("q_id"), quantize_int8(col("q_emb")).as("qq"))
-      .select(col("q_id"), col("qq"), int_sqnorm_fold(col("qq")).as("nq"))
-    val scored = qc.crossJoin(broadcast(qq))
-      .select(col("q_id"), col("vec_id"),
-        when(col("nq") * col("nv") === 0L, 0.0)
-          .otherwise(int_dot_fold(col("qq"), col("qv")).cast("double") /
-            sqrt(col("nq").cast("double") * col("nv").cast("double"))).as("cosq"))
-    TopK.perGroup(scored, Seq(col("q_id")), Seq(col("cosq").desc, col("vec_id")), k)
   }
 
   /** x96 — embedding-space drift between two corpus snapshots: the
@@ -1112,7 +761,7 @@ object Similarity {
     * binning/whitening decisions.
     *
     * Determinism contract (hash-comparable against the DuckDB oracle):
-    *  - vectors quantize with the fixed x74-style grid
+    *  - vectors quantize with a fixed grid
     *    floor(x·2¹⁵ + 0.5) — so the Gram matrix is EXACT integer sums,
     *    order-free under any partitioning ([[graft.plans.GramMatrixAgg]]);
     *  - the power iteration (fixed `iters`, init 1/√dim) runs

@@ -116,9 +116,8 @@ object Pipelines {
     * `mode("append")` form silently duplicated every routed row when the
     * engine redelivered a batch after a crash between the sink write and
     * the checkpoint commit (the exact window TopologySpec's kill-restart
-    * test drives). Exposed separately so specs can replay a batch id
-    * directly. */
-  def routedBronzeBatchWrite(root: String)(batch: DataFrame, id: Long): Unit =
+    * test drives). */
+  private def routedBronzeBatchWrite(root: String)(batch: DataFrame, id: Long): Unit =
     writeBatch(batch.select(col("topic"), col("value").cast("string").as("payload"),
         col("timestamp").as("ingested_at"),
         to_date(col("timestamp")).as("ingest_date")),

@@ -40,9 +40,9 @@ class BenchSpec extends AnyFunSuite {
     assert(exitCode(Seq(bad)) !== 0)
   }
 
-  test("the 160 query names are unique, so no query shadows another in the map") {
+  test("the 152 query names are unique, so no query shadows another in the map") {
     val names = SparkEntry.registry.map(_.name)
-    assert(names.size === 160)
+    assert(names.size === 152)
     assert(names.diff(names.distinct).isEmpty)
     assert(SparkEntry.queries.size === names.size)
     assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
@@ -50,7 +50,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("stdout line and artifact carry every query of the full suite, untruncated") {
     val names = SparkEntry.queries.keys.toSeq.sorted
-    assert(names.size >= 160)
+    assert(names.size >= 152)
     // every seventh query failed: far more than a capped list would hold
     val rows = names.zipWithIndex.map { case (n, i) =>
       Row(n, Seq(1.25, 0.5 + i, 0.75), ok = i % 7 != 0)

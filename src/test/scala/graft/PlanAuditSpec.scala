@@ -60,7 +60,6 @@ class PlanAuditSpec extends SparkSpec {
     "x32_semantic_dedup",         // centroid set
     "x33_mixture_weights",        // singleton corpus-totals row
     "x39_dsir_weights",           // singleton (qtot, ptot) totals row
-    "x40_ann_ivf2_cosine",        // coarse-centroid set (cbrt-scaled)
     "x43_ivfpq_topk_cosine",      // coarse-centroid set (scaledCells)
     "x47_cell_sample",            // centroid set (scaledCells-capped)
     "x52_mmr_rerank",             // single-row query vector
@@ -68,19 +67,15 @@ class PlanAuditSpec extends SparkSpec {
     "x54_temp_sample",            // singleton token-totals row
     "x71_hard_negatives",         // fixed query batch (training-batch sized)
     "x73_epoch_plan",             // singleton source-count row
-    "x75_int8_ann",               // fixed query set (quantized x06 shape)
-    "x78_matryoshka_ann",         // fixed query set; stage-2 rerank broadcast
     "x80_triplets",               // fixed anchor batch (x71 composition)
     "x81_rrf_fusion",             // single-row dense query vector (x52 shape)
-    "x83_ivf_int8",               // centroid set (scaledCells-capped)
     "x85_recipe_apply",           // singleton totals + bounded normalizer rows
     "x90_novelty_curve",          // singleton max-doc-id row (range bucket)
     "x93_source_drift",           // singleton vocab-total row
     "x96_embedding_drift",        // centroid set (scaledCells) + totals row
     "x98_prototypicality",        // centroid set (scaledCells-capped)
     "x107_kmv_overlap",           // nGroups^2 pair join over k-value sketches
-    "x111_cms_freq",              // single-row CMS sketch (depth*width longs)
-    "x112_jl_ann"                 // fixed query set (JL-projected x78 shape)
+    "x111_cms_freq"               // single-row CMS sketch (depth*width longs)
   )
 
   // queries whose ANALYZED plan may carry a ResolvedHint (broadcast of a
@@ -96,7 +91,6 @@ class PlanAuditSpec extends SparkSpec {
     "p11_dim_lookup",             // token->outcome dim
     "p15_empty_snapshot",         // distinct windows
     "x06_cosine_topk",            // fixed query set
-    "x07_ann_lsh_cosine",         // fixed query set, banded
     "x15_ann_ivf_cosine",         // centroid set (scaledCells-capped)
     "x18_tfidf_topterms",         // singleton doc count
     "x22_quantile_sketch",        // per-event-type thresholds
@@ -106,8 +100,6 @@ class PlanAuditSpec extends SparkSpec {
     "x33_mixture_weights",        // singleton totals
     "x38_fuzzy_decontam",         // benchmark-gram set (eval-set bounded)
     "x39_dsir_weights",           // log-ratio table (<= m rows) + totals
-    "x40_ann_ivf2_cosine",        // coarse centroids + probed query set
-    "x41_pq_topk_cosine",         // codebook/LUT/query sets (constant-bounded)
     "x43_ivfpq_topk_cosine",      // centroids + codebook/LUT/query sets
     "x47_cell_sample",            // centroid set (scaledCells-capped)
     "x52_mmr_rerank",             // single-row query vector
@@ -118,11 +110,8 @@ class PlanAuditSpec extends SparkSpec {
     "x57_oov_stats",              // vocab (bounded by the V constant)
     "x71_hard_negatives",         // fixed query batch (training-batch sized)
     "x73_epoch_plan",             // singleton source-count row
-    "x75_int8_ann",               // fixed query set (quantized x06 shape)
-    "x78_matryoshka_ann",         // fixed query set (truncated-prefix stage 1)
     "x80_triplets",               // fixed anchor batch (x71 composition)
     "x81_rrf_fusion",             // single-row dense query vector + x53's bounded stats
-    "x83_ivf_int8",               // centroid set + probed query assignment
     "x85_recipe_apply",           // singleton token-totals + normalizer rows
     "x90_novelty_curve",          // singleton max-doc-id row (range bucket)
     "x93_source_drift",           // top-V vocab (bounded) + totals row
@@ -130,7 +119,6 @@ class PlanAuditSpec extends SparkSpec {
     "x98_prototypicality",        // centroid set (scaledCells-capped)
     "x108_span_scrub",            // benchmark gram set (eval-set bounded)
     "x111_cms_freq",              // single-row CMS sketch (depth*width longs)
-    "x112_jl_ann",                // fixed query set (JL-projected x78 shape)
     "x119_sam_decontam"           // benchmark token arrays (eval-set bounded, 3 docs)
   )
 
@@ -194,16 +182,6 @@ class PlanAuditSpec extends SparkSpec {
     val p = physical("x44_train_order")
     assert("hashpartitioning\\(_bkt#\\d+".r.findFirstIn(p).nonEmpty,
       s"bucketed rank partitioning lost — global one-task sort?\n$p")
-  }
-
-  test("x74 int8 quantization stays inside a whole-stage-codegen span") {
-    // the native quantize_int8/absmax_fold expressions carry doGenCode;
-    // if either regressed to CodegenFallback the scan-speed projection
-    // claim (and the 4x-IO materialization pass) silently slows ~10x —
-    // the starred Project must still contain the quantize call
-    val p = physical("x74_embed_quantize")
-    assert("\\*\\(\\d+\\) Project \\[[^\\]]*quantize_int8".r.findFirstIn(p).nonEmpty,
-      s"quantize_int8 fell out of whole-stage codegen:\n$p")
   }
 
   test("x02/x05/x34 pair buckets in one pass: one collecting aggregate on the bucket key feeding two Generates, no join") {

@@ -67,7 +67,6 @@ class CodegenParitySpec extends SparkSpec {
 
   private def floats(xs: Float*): Column = array(xs.map(lit(_)): _*)
   private def longs(xs: Long*): Column = array(xs.map(lit(_)): _*)
-  private def ints(xs: Int*): Column = array(xs.map(lit(_)): _*)
 
   // a bloom filter for bloom_might_contain (same construction the
   // decontam queries use — serialized bytes ride the plan as a literal)
@@ -112,15 +111,7 @@ class CodegenParitySpec extends SparkSpec {
         struct(lit(1L), lit(0.9), floats(1.0f, 0.0f)),
         struct(lit(2L), lit(0.8), floats(0.9f, 0.1f)),
         struct(lit(3L), lit(0.7), floats(0.0f, 1.0f)))), 2, 0.5)),
-    "absmax_fold" -> (w => F.absmax_fold(w(floats(0.5f, -3.5f, 2.0f)))),
-    "quantize_int8" -> (w => F.quantize_int8(w(floats(0.5f, -3.5f, 2.0f, 0.0f)))),
-    "int_dot_fold" -> (w =>
-      F.int_dot_fold(w(ints(5, -3, 127)), ints(2, 9, -128))),
-    "int_sqnorm_fold" -> (w => F.int_sqnorm_fold(w(ints(5, -3, 127, 0)))),
     "lz78_phrases" -> (w => F.lz78_phrases(w(lit("abababcabcabcd")))),
-    "jl_project" -> (w =>
-      F.jl_project(w(floats(1.0f, -2.0f, 3.0f, -4.0f, 5.0f, -6.0f, 7.0f, -8.0f)),
-        4, 7)),
     "ac_match_counts" -> (w =>
       F.ac_match_counts(w(lit("he said hers is where the herd is")),
         Seq("he", "she", "hers", "herd"))),

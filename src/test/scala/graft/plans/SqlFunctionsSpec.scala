@@ -70,27 +70,6 @@ class SqlFunctionsSpec extends SparkSpec {
     assert(sql.getDouble(5) === sql.getDouble(6))  // dot(v,v) == sqnorm(v)
   }
 
-  test("int8 family callable from SQL, matches the Column API, and composes end to end") {
-    GraftBridge.registerFunctions(spark)
-    Seq((Seq(0.5f, -0.25f, 0.125f, 1.0f), Seq(1.0f, 0.0f, 0.0f, 0.0f)))
-      .toDF("a", "b").createOrReplaceTempView("int8fns")
-    val sql = spark.sql(
-      """SELECT absmax_fold(a), quantize_int8(a),
-        |       int_dot_fold(quantize_int8(a), quantize_int8(b)),
-        |       int_sqnorm_fold(quantize_int8(a))
-        |FROM int8fns""".stripMargin).head()
-    val api = spark.table("int8fns").select(
-      functions.absmax_fold(col("a")),
-      functions.quantize_int8(col("a")),
-      functions.int_dot_fold(functions.quantize_int8(col("a")),
-        functions.quantize_int8(col("b"))),
-      functions.int_sqnorm_fold(functions.quantize_int8(col("a")))).head()
-    assert(sql.toSeq === api.toSeq)
-    assert(sql.getDouble(0) === 1.0)                       // amax of a
-    assert(sql.getSeq[Int](1) === Seq(64, -32, 16, 127))   // q = round(x*127)
-    assert(sql.getLong(2) === 64L * 127)                   // only dim 0 overlaps
-  }
-
   test("char_entropy_stats matches the explode+fold formulation, counts codepoints not UTF-16 units") {
     GraftBridge.registerFunctions(spark)
     val docs = Seq((1L, "aabbbb"), (2L, "abcdef"), (3L, "zzzzzz"),

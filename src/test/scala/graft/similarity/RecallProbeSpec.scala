@@ -15,7 +15,7 @@ class RecallProbeSpec extends SparkSpec {
   private def rs(df: org.apache.spark.sql.DataFrame) =
     df.select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("sf0.1 top-k recall: tuned LSH >= 0.95, IVF >= 0.95 vs brute force") {
+  test("sf0.1 top-k recall: trained IVF >= 0.95 vs brute force") {
     assume(new java.io.File(sfDir).isDirectory)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding").persist()
@@ -24,15 +24,8 @@ class RecallProbeSpec extends SparkSpec {
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val exact = rs(Similarity.bruteForceTopK(emb, queries, 3))
       // this corpus's true top-3 neighbors are only moderately similar
-      // (random synthetic embeddings), the hard regime for sign-LSH:
-      // recall comes from candidate volume — fewer bits (bigger
-      // buckets) × more tables. bits=3/tables=8 measured 0.967.
-      val lsh = rs(Similarity.lshTopK(emb, queries, 3, bits = 3, tables = 8))
-      val lshRecall = (exact intersect lsh).size.toDouble / exact.size
-      info(f"lshTopK(bits=3, tables=8) recall@3 = $lshRecall%.3f")
-      assert(lshRecall >= 0.95, s"lshTopK recall regressed: $lshRecall")
-      // IVF with trained centroids probes 4/16 cells: measured 0.983 —
-      // the better scale path for moderate-similarity top-k
+      // (random synthetic embeddings); IVF with trained centroids
+      // probing 4/16 cells measured 0.983
       val ivf = rs(Similarity.ivfTopK(emb, queries, 3,
         nCells = 16, nprobe = 4, kmeansIters = 2))
       val ivfRecall = (exact intersect ivf).size.toDouble / exact.size
@@ -72,118 +65,6 @@ class RecallProbeSpec extends SparkSpec {
       assert(recalls(2) >= 0.95, s"x15-config (nprobe=2) recall regressed: ${recalls(2)}")
       assert(recalls(4) >= 0.95, s"nprobe=4 recall regressed: ${recalls(4)}")
     } finally { emb.unpersist(); () }
-  }
-
-  test("sf0.1 ivfTopK2 recall sweep at cbrt-scaled sizing: probe grid (the x40 config)") {
-    assume(new java.io.File(sfDir).isDirectory)
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding").persist()
-    try {
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val exact = rs(Similarity.bruteForceTopK(emb, queries, 3))
-      // production x40 sizing: c = scaledCells2(n) = 13 at sf0.1 →
-      // 13 coarse × ≤13 sub ≈ as many total cells as flat's 45 but a
-      // 3.5× smaller broadcast; the grid measures how recall buys back
-      // with each probe axis
-      val c = Similarity.scaledCells2(emb.count())
-      def sweep(iters: Int) = Seq((1, 1), (2, 2), (2, 4), (4, 4)).map { case (pc, ps) =>
-        val got = rs(Similarity.ivfTopK2(emb, queries, 3,
-          nCoarse = c, nSub = c, nprobeCoarse = pc, nprobeSub = ps,
-          kmeansIters = iters))
-        spark.catalog.clearCache() // ivfTopK2 persists its assignment
-        val r = (exact intersect got).size.toDouble / exact.size
-        info(f"ivfTopK2(c=$c, probes=${pc}x$ps, iters=$iters) recall@3 = $r%.3f")
-        (pc, ps) -> r
-      }.toMap
-      val grid = sweep(0)
-      // the probed (cell, sub) set only grows along each axis → monotone
-      assert(grid((1, 1)) <= grid((2, 2)) && grid((2, 2)) <= grid((2, 4)),
-        s"recall not monotone in probes: $grid")
-      val trained = sweep(2)
-      // gates one notch below the measured values (deterministic
-      // seeding — only a real regression can trip them); measured
-      // numbers + the recall-vs-broadcast trade are recorded in
-      // PLANS.md "ANN recall at sf0.1". Level-1 training measurably
-      // LOWERS recall here (0.817 vs 0.883 at 2x2): Lloyd balances
-      // cell populations, which shrinks candidate volume at a fixed
-      // probe count, and on this weakly-similar corpus recall tracks
-      // candidate volume (the sign-LSH tuning story again) — so the
-      // trained gate sits below the untrained one on purpose, and the
-      // production x40 config stays untrained.
-      assert(grid((2, 2)) >= 0.85, s"x40-config (2x2) recall regressed: ${grid((2, 2))}")
-      assert(grid((4, 4)) >= 0.90, s"4x4 recall regressed: ${grid((4, 4))}")
-      assert(trained((2, 2)) >= 0.78, s"trained 2x2 recall regressed: ${trained((2, 2))}")
-      assert(trained((4, 4)) >= 0.83, s"trained 4x4 recall regressed: ${trained((4, 4))}")
-    } finally { emb.unpersist(); () }
-  }
-
-  test("planted-cluster fixture: cell-local level-2 Lloyd recovers recall that lowest-id sub-seeding loses") {
-    val s = spark
-    import s.implicits._
-    // Geometry (dim 8, all in the +e1 coarse hemisphere except filler):
-    // clusters A = e1+.5e2, B = e1-.5e2, C = e1+.5e3. C is EQUIDISTANT
-    // from A and B, so with sub-centroids seeded from the 3 lowest ids
-    // (two A members, one B member) each C member's tiny e2 jitter
-    // decides which seed it lands on — the planted cluster C straddles
-    // sub-cells and nprobeSub=1 queries from C lose their neighbors.
-    // Cell-local Lloyd must pull a centroid into C and make it whole.
-    def member(id: Long, base: Seq[Double], jitterDim: Int): (Long, Seq[Float]) = {
-      val j = (((id * 2654435761L) % 1000L) / 1000.0 - 0.5) * 0.1
-      val v = base.zipWithIndex.map { case (x, i) => if (i == jitterDim) x + j else x }
-      (id, v.map(_.toFloat))
-    }
-    // C members get TWO jitters built to DECORRELATE neighborhoods from
-    // the straddle: the e4 component (±0.4, linear hash with period ~4
-    // in id) decides who the TRUE nearest neighbors are — id±4 — while
-    // the tiny e2 straddle component's SIGN alternates with (id/4) % 2,
-    // so a query's nearest neighbors always sit on the opposite side of
-    // the A/B seed boundary and nprobeSub=1 cannot reach them untrained
-    def cMember(id: Long, base: Seq[Double]): (Long, Seq[Float]) = {
-      val sgn = if ((id / 4) % 2 == 0) -1.0 else 1.0
-      val straddle = sgn * (0.02 + ((id * 761L) % 1000L) / 1000.0 * 0.02)
-      val local = (((id * 1103515245L + 12345L) % 1000L) / 1000.0 - 0.5) * 0.8
-      val v = base.zipWithIndex.map { case (x, i) =>
-        if (i == 1) x + straddle else if (i == 3) x + local else x
-      }
-      (id, v.map(_.toFloat))
-    }
-    val a = Seq(1.0, 0.5, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    val b = Seq(1.0, -0.5, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    val c = Seq(1.0, 0.0, 0.5, 0.0, 0.0, 0.0, 0.0, 0.0)
-    val d = Seq(-1.0, 0.0, 0.0, 0.5, 0.0, 0.0, 0.0, 0.0) // other hemisphere
-    val rows =
-      // ids 0, 1 ∈ A and 2 ∈ B on purpose: the degenerate seeding
-      Seq(member(0L, a, 4), member(1L, a, 5), member(2L, b, 4)) ++
-        (3L to 40L).map(i => member(i, a, 4 + (i % 4).toInt)) ++
-        (41L to 80L).map(i => member(i, b, 4 + (i % 4).toInt)) ++
-        (81L to 120L).map(i => cMember(i, c)) ++
-        (121L to 160L).map(i => member(i, d, 4))
-    val corpus = rows.toDF("vec_id", "embedding").persist()
-    try {
-      val queries = corpus.filter(col("vec_id").between(81L, 90L))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val exact = rs(Similarity.bruteForceTopK(corpus, queries, 3))
-      def recall(itersSub: Int): Double = {
-        val got = rs(Similarity.ivfTopK2(corpus, queries, 3,
-          nCoarse = 2, nSub = 3, nprobeCoarse = 1, nprobeSub = 1,
-          kmeansItersSub = itersSub))
-        spark.catalog.clearCache() // ivfTopK2 persists its assignment
-        (exact intersect got).size.toDouble / exact.size
-      }
-      val untrained = recall(0)
-      val trained = recall(3)
-      info(f"ivfTopK2 planted-cluster recall@3, probes 1x1: untrained $untrained%.3f, subLloyd(3) $trained%.3f")
-      // the fixture is fully deterministic — these are exact replays.
-      // Untrained loses C's neighbors across the straddled sub-cells;
-      // trained must recover them at the SAME probe budget
-      // measured: untrained 0.833 (boundary ids keep one same-side
-      // neighbor, so the floor is above the naive 1/3), subLloyd 1.000
-      assert(trained >= untrained,
-        s"cell-local Lloyd regressed recall: $trained < $untrained")
-      assert(untrained <= 0.85, s"fixture no longer straddles: $untrained")
-      assert(trained >= 0.95, s"trained recall regressed: $trained")
-    } finally { corpus.unpersist(); () }
   }
 
   test("sf0.1 neardupPairs recall: 1.0 on true copies, >= 0.9 at cos 0.95 with default tables") {

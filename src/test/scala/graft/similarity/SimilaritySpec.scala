@@ -88,24 +88,6 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.forall(_._3 > 0.0), s"expected satisfied triplets: ${rows.toSeq}")
   }
 
-  test("hardNegativesIvf with full probing reproduces the exact route on testdata") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val q = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rnk", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val exact = rows(Similarity.hardNegatives(emb, q, k = 3))
-    // probe every cell -> the candidate set covers the corpus, so the
-    // composed gate must land on exactly the exact route's negatives
-    val ivf = rows(Similarity.hardNegativesIvf(emb, q, k = 3, kCand = 60,
-      nCells = 4, nprobe = 4, kmeansIters = 1))
-    assert(ivf === exact, s"IVF-route negatives diverged: ${ivf diff exact}")
-    spark.catalog.clearCache()
-  }
-
   test("sign bucket: deterministic, bounded, equal vectors collide, seeds independent") {
     val twice = corpus.unionAll(corpus)
     val out = twice.select(col("vec_id"),
@@ -160,80 +142,6 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ivfTopK(emb, queries, 3, nCells = 4, nprobe = 2, kmeansIters = 2))
     val recall = (exact intersect ivf).size.toDouble / exact.size
     assert(recall === 1.0, s"recall@3 $recall; missing ${exact diff ivf}")
-  }
-
-  test("scaledCells2 = exact integer ceil(cbrt(n)) floored at minCells") {
-    assert(Similarity.scaledCells2(1) === 4)       // floor kicks in
-    assert(Similarity.scaledCells2(64) === 4)      // exact cube = floor
-    assert(Similarity.scaledCells2(125) === 5)     // exact cube
-    assert(Similarity.scaledCells2(126) === 6)     // just past the cube
-    assert(Similarity.scaledCells2(500) === 8)     // sf0.01 corpus
-    assert(Similarity.scaledCells2(2000) === 13)   // sf0.1 corpus
-    assert(Similarity.scaledCells2(1000000000L) === 1000)
-    // two-level total cells ~ n^(2/3) always >= flat sqrt sizing's cells
-    // per broadcast row: the broadcast shrinks from sqrt(n) to cbrt(n)
-    Seq(10000L, 1000000L, 100000000L).foreach { n =>
-      val c = Similarity.scaledCells2(n)
-      assert(c.toLong * c * c >= n && (c - 1).toLong * (c - 1) * (c - 1) < n)
-    }
-  }
-
-  test("ivfTopK2: exact-copy queries always find their copies; recall vs brute force on testdata") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def resultSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val c = Similarity.scaledCells2(emb.count())
-    val out = Similarity.ivfTopK2(emb, queries, 3, nCoarse = c, nSub = c,
-      nprobeCoarse = 2, nprobeSub = 2)
-    val got = resultSet(out)
-    // a corpus-member query lands in its own (cell, sub) — its exact
-    // copy (itself, cos 1.0) is structurally always a candidate
-    (0L until 5L).foreach(q => assert(got.contains((q, q)), s"query $q missed itself"))
-    // shape: exactly k rows per query
-    val counts = out.groupBy("q_id").count().collect().map(_.getLong(1))
-    assert(counts.forall(_ === 3L))
-    // recall against the exact baseline — untrained two-level quantizer
-    // probing 2x2 cells on 200 vectors; gate generously, the oracle
-    // (x40) pins exactness, this pins usefulness
-    val exact = resultSet(Similarity.bruteForceTopK(emb, queries, 3))
-    val recall = (exact intersect got).size.toDouble / exact.size
-    assert(recall >= 0.6, s"recall@3 $recall vs brute force")
-    spark.catalog.clearCache()
-  }
-
-  test("pqTopK: seed queries self-reconstruct exactly; output deterministic, k rows per query") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    // queries drawn from the first-16 seed vectors: their subvectors ARE
-    // codebook centroids (d2 = 0), so approx self-cos is exactly 1.0 and
-    // each query must surface itself at rank 1 after re-rank
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def run() = Similarity.pqTopK(emb, queries, 3, dim = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, -t._3, t._2))
-    val out = run()
-    assert(out.groupBy(_._1).forall(_._2.size === 3))
-    (0L until 5L).foreach { q =>
-      val top = out.filter(_._1 == q).maxBy(_._3)
-      assert(top._2 === q && math.abs(top._3 - 1.0) < 1e-9,
-        s"seed query $q did not self-reconstruct: $top")
-    }
-    assert(run() === out) // codebook + ties fully deterministic
-    // recall vs brute force at this crude 4x16 setting is reported, not
-    // gated hard: PQ trades recall for a 64x smaller scan and the exact
-    // re-rank bounds the damage
-    def rsx(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = rsx(Similarity.bruteForceTopK(emb, queries, 3))
-    val recall = (exact intersect out.map(t => (t._1, t._2)).toSet).size.toDouble / exact.size
-    info(f"pqTopK(4x16, rerank=10) recall@3 = $recall%.3f")
-    assert(recall >= 0.4, s"pq recall collapsed: $recall")
-    spark.catalog.clearCache()
   }
 
   test("ivfPqTopK: seed queries self-reconstruct through residual codes; deterministic") {
