@@ -450,36 +450,19 @@ object Dedup {
     * COUNT per round — no row data ever reaches the driver.
     * Output: (doc_id, component = min doc_id in cluster, is_survivor).
     *
-    * `checkpointDir`: when set, each round is pinned with RELIABLE
-    * `checkpoint()` into that directory (set on the SparkContext) —
-    * survives executor loss, the right mode on a real cluster where a
-    * lost executor would otherwise have to recompute a truncated-lineage
-    * round from nothing. When None (default), `localCheckpoint()` —
-    * executor-local blocks, no filesystem round-trip, the right cost on
-    * local mode. Two contracts in reliable mode, both owned by
-    * [[ReliableCheckpoints]]: (1) the checkpoint dir is
-    * SparkContext-GLOBAL state — concurrent invocations on one session
-    * must pass the same dir, now ENFORCED (a conflicting in-flight dir
-    * throws instead of silently re-pointing; each round is also
-    * persisted around its checkpoint write, so the write reads the
-    * cache, not a recomputed lineage); (2) round files accumulate in
-    * the dir for the run's lifetime — Spark's context cleaner does not
-    * remove them by default, so either delete the dir after the
-    * returned DataFrame is consumed or consume it inside
-    * [[ReliableCheckpoints.withReliableCheckpoints]], which scopes the
-    * cleanup. */
+    * Each round is pinned with `localCheckpoint()`: executor-local
+    * blocks, no filesystem round-trip. Every session here is
+    * `local[cpus]`, so an executor dies only with the driver and a
+    * reliable checkpoint would recover nothing. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 60,
-                          starRounds: Int = 5,
-                          checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsAt(pairs, maxIter, starRounds, checkpointDir,
-      CcLocalEdgeThreshold)
+                          starRounds: Int = 5): DataFrame =
+    connectedComponentsAt(pairs, maxIter, starRounds, CcLocalEdgeThreshold)
 
   /** [[connectedComponents]] with an explicit local-dispatch threshold —
     * package-private so the equivalence spec can force the distributed
     * loop on a small graph and assert both paths agree. */
   private[graft] def connectedComponentsAt(pairs: DataFrame, maxIter: Int,
                                            starRounds: Int,
-                                           checkpointDir: Option[String],
                                            localThreshold: Long): DataFrame = {
     // checkpoint, NOT persist: an iterative loop's logical plan
     // embeds the previous iteration's plan twice per round, so without
@@ -487,9 +470,6 @@ object Dedup {
     // hangs long before any task runs (persist only short-circuits
     // physical recompute). Checkpointing pins each round's result as a
     // flat scan — every iteration analyzes an O(1)-size plan.
-    // dir acquisition guards the SparkContext-GLOBAL checkpoint dir:
-    // a concurrent invocation on a different dir throws instead of
-    // silently re-pointing it mid-run (ReliableCheckpoints class doc)
     // fail LOUDLY on a non-integral id type (r20 advice): the Σ label
     // convergence statistic casts labels to DECIMAL(38,0); a non-numeric
     // id would cast to null under non-ANSI, null-sum every round, and
@@ -503,33 +483,15 @@ object Dedup {
           s"${t.catalogString} (the exact-decimal label-sum convergence " +
           "proof needs lossless numeric labels)")
     }
-    checkpointDir.foreach(d => ReliableCheckpoints.acquire(pairs.sparkSession, d))
-    try ccLoop(pairs, maxIter, starRounds, reliable = checkpointDir.isDefined,
-      localThreshold)
-    finally checkpointDir.foreach(_ => ReliableCheckpoints.release())
-  }
-
-  private def ccLoop(pairs: DataFrame, maxIter: Int, starRounds: Int,
-                     reliable: Boolean, localThreshold: Long): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) {
-        // persist around the reliable checkpoint: checkpoint(true) runs
-        // the materializing job and THEN a separate checkpoint-write job
-        // that would otherwise recompute the round's full lineage
-        df.persist()
-        try df.checkpoint(true) finally { df.unpersist(); () }
-      } else df.localCheckpoint(true)
-    // LAZY pin (local mode): lineage is truncated immediately, but the
+    def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    // LAZY pin: lineage is truncated immediately, but the
     // materializing job is whatever reads the frame FIRST — used where
     // the next action over the frame is single-reader, so the round's
     // convergence statistic and its checkpoint share ONE job instead of
     // an eager-materialize job followed by a count job (r20: the old
     // two-jobs-per-round loop plus the AQE stage cascade of each put
-    // the CC family at ~90 driver jobs per query). Reliable mode keeps
-    // the eager write — on a real cluster the checkpoint must survive
-    // executor loss regardless of who reads it first.
-    def pinLazy(df: DataFrame): DataFrame =
-      if (reliable) pin(df) else df.localCheckpoint(false)
+    // the CC family at ~90 driver jobs per query).
+    def pinLazy(df: DataFrame): DataFrame = df.localCheckpoint(false)
     // candidate pairs are pinned FIRST and EAGERLY: und reads them twice
     // (both edge directions), so without this the entire candidate plan
     // (banding + pairing) is inlined — and computed — once per reader
@@ -540,9 +502,9 @@ object Dedup {
     // the whole loop is replaced by one bounded collect of the pinned
     // edges (a ~free count on the checkpoint decides) + driver
     // union-find + one parallelize — the [[graft.text.TextOps
-    // .bpeMergesLocal]] discipline applied to the other iterative
-    // operator. The distributed loop's cost at this size was never the
-    // data: measured x23 at 39 driver jobs with Σ stage wall 1.9 s
+    // .bpeMerges]] local-trainer discipline applied to the other
+    // iterative operator. The distributed loop's cost at this size was
+    // never the data: measured x23 at 39 driver jobs with Σ stage wall 1.9 s
     // against 3.9 s query wall — a ~50 ms-per-job AQE/job-dispatch
     // cascade the r20 round could only shave (90 → 40 jobs), not
     // remove. The threshold bounds driver memory exactly like the r20
@@ -729,9 +691,8 @@ object Dedup {
     * downstream of `pairs` moves longs only — so share it, never
     * recompute it per ending. */
   def keepBest(docs: DataFrame, id: Column, quality: Column,
-               pairs: DataFrame,
-               checkpointDir: Option[String] = None): DataFrame = {
-    val cc = connectedComponents(pairs, checkpointDir = checkpointDir)
+               pairs: DataFrame): DataFrame = {
+    val cc = connectedComponents(pairs)
       .select(col("doc_id"), col("component"))
     val labeled = docs.select(id.as("doc_id"), quality.as("quality"))
       .join(cc, Seq("doc_id"), "left")
@@ -770,13 +731,12 @@ object Dedup {
     * assignment itself is a narrow projection. */
   def clusterSafeSplits(docs: DataFrame, id: Column, text: Column,
                         weights: Seq[(String, Long)] =
-                          Seq(("train", 8L), ("val", 1L), ("test", 1L)),
-                        checkpointDir: Option[String] = None): DataFrame = {
+                          Seq(("train", 8L), ("val", 1L), ("test", 1L))): DataFrame = {
     require(weights.nonEmpty && weights.forall(_._2 > 0),
       s"weights must be positive, got $weights")
     val total = weights.map(_._2).sum
     val cand = minhashCandidates(docs, id, text)
-    val cc = connectedComponents(cand, checkpointDir = checkpointDir)
+    val cc = connectedComponents(cand)
       .select(col("doc_id"), col("component"))
     val keyed = docs.select(id.as("doc_id"))
       .join(cc, Seq("doc_id"), "left")
@@ -806,10 +766,9 @@ object Dedup {
     * jumping paths; then two count aggregations (cluster-keyed, then
     * size-keyed — both map-side combinable) over label rows. Output is
     * distinct-sizes-bounded (≤ √(2n) rows). */
-  def clusterSizeSpectrum(docs: DataFrame, id: Column, text: Column,
-                          checkpointDir: Option[String] = None): DataFrame = {
+  def clusterSizeSpectrum(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val cand = minhashCandidates(docs, id, text)
-    val cc = connectedComponents(cand, checkpointDir = checkpointDir)
+    val cc = connectedComponents(cand)
       .select(col("doc_id"), col("component"))
     docs.select(id.as("doc_id"))
       .join(cc, Seq("doc_id"), "left")
@@ -912,8 +871,8 @@ object Dedup {
   val DefaultWinnowMaxDf: Long = 64L
 
   /** Edge-count threshold under which [[connectedComponents]] runs the
-    * DRIVER-LOCAL union-find path (see ccLoop/ccLocal) instead of the
-    * distributed fixpoint loop: 2M edges is ~32 MB of collected edge
+    * DRIVER-LOCAL union-find path (see connectedComponentsAt/ccLocal)
+    * instead of the distributed fixpoint loop: 2M edges is ~32 MB of collected edge
     * longs and at most 4M result rows — the same driver-memory bound
     * the r20 broadcast-label optimization used (that broadcast held the
     * same rows on the driver AND every executor, so the local path is

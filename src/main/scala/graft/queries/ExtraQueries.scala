@@ -2236,17 +2236,17 @@ object ExtraQueries {
 
     // ----- BPE merge-pair vocabulary (iterative tokenizer training)
     QueryDef("x61_bpe_merges",
-      "BPE tokenizer training behind the probe-and-dispatch trainer: one distributed (word, count) inventory pass, then driver merge rounds when the vocabulary fits maxInventory (bit-for-bit equal to the distributed rounds — TextOpsSpec pins it) or distributed rounds otherwise; oracle replays each round as a materialized CTE with the same greedy leftmost fold")(
+      "BPE tokenizer training behind the probe-and-dispatch trainer: one distributed (word, count) inventory pass, then driver merge rounds when the vocabulary fits the local-inventory threshold (bit-for-bit equal to the distributed rounds — TextOpsSpec pins it) or distributed rounds otherwise; oracle replays each round as a materialized CTE with the same greedy leftmost fold")(
       bpeMergesOracleD(12)) { (s, dir) =>
-      TextOps.bpeMergesAuto(Tables.documents(s, dir), col("doc_id"), col("text"),
+      TextOps.bpeMerges(Tables.documents(s, dir), col("doc_id"), col("text"),
         nMerges = 12)
     },
 
     // ----- corpus BPE tokenization (applying the trained merges)
     QueryDef("x63_bpe_encode",
-      "corpus tokenization with the trained BPE behind the probe-and-dispatch trainer (driver merge rounds when the vocabulary fits maxInventory, bit-for-bit equal to the distributed rounds — TextOpsSpec pins both branches): segment the word inventory through the learned merge rounds, dictionary-join the doc word stream against it, per-doc BPE token counts + a mod-P segmentation-fingerprint sum — a green row certifies EVERY word's segmentation, not just counts")(
+      "corpus tokenization with the trained BPE behind the probe-and-dispatch trainer (driver merge rounds when the vocabulary fits the local-inventory threshold, bit-for-bit equal to the distributed rounds — TextOpsSpec pins both branches): segment the word inventory through the learned merge rounds, dictionary-join the doc word stream against it, per-doc BPE token counts + a mod-P segmentation-fingerprint sum — a green row certifies EVERY word's segmentation, not just counts")(
       bpeEncodeOracleD(12)) { (s, dir) =>
-      TextOps.bpeEncodeAuto(Tables.documents(s, dir), col("doc_id"), col("text"),
+      TextOps.bpeEncode(Tables.documents(s, dir), col("doc_id"), col("text"),
         nMerges = 12)
     },
 
@@ -2648,7 +2648,7 @@ object ExtraQueries {
     // ----- within-sequence token offsets (the attention-mask geometry
     // of the packed artifact: segment i spans [tok_off, tok_off + n))
     QueryDef("x82_pack_offsets",
-      "per-span token offsets inside each packed sequence (prefix sum of span lengths in doc order) — the document-boundary attention-mask geometry; window keyed by (shard, seq_id), every partition one sequence")(
+      "per-span token offsets inside each packed sequence (the prefix sum of span lengths in doc order, which the oracle windows over) — the document-boundary attention-mask geometry; derived by span arithmetic off pack's stream boundaries, no window or exchange beyond pack's shard cumsum")(
       s"""WITH n AS (SELECT doc_id, doc_id % 8 AS shard,
          |                  len(string_split($normD, ' ')) AS n_tok FROM documents),
          |o AS (SELECT doc_id, shard, n_tok,
@@ -2668,8 +2668,7 @@ object ExtraQueries {
          |         AS tok_off
          |FROM sp
          |""".stripMargin) { (s, dir) =>
-      TextOps.packOffsets(
-        TextOps.pack(Tables.documents(s, dir), col("doc_id"), col("text")))
+      TextOps.packWithOffsets(Tables.documents(s, dir), col("doc_id"), col("text"))
     },
 
     // ----- cross-signal calibration: classifier score bins vs the

@@ -153,15 +153,4 @@ object EventSchemas {
     StructField("restart_time", StringType),
     StructField("estimated_missed_snapshots", IntegerType),
     StructField("timestamp", StringType)))
-
-  /** topic name -> payload schema, the Spark equivalent of the reference's
-    * topic→table routing (`consumers/db_writer.py:122-130`). */
-  val byTopic: Map[String, StructType] = Map(
-    "asset-prices"               -> assetPrice,
-    "market-updates"             -> marketUpdate,
-    "polymarket-prices"          -> orderbookSummary,
-    "market-resolutions"         -> marketResolution,
-    "market-resolution-failures" -> resolutionFailure,
-    "user-positions"             -> position,
-    "service-errors"             -> serviceError)
 }

@@ -344,75 +344,18 @@ object Similarity {
       .select("vec_id", "cell", "hk")
   }
 
-  /** Deterministic Lloyd refinement of IVF centroids: assign → per-cell
-    * element-wise mean → repeat. The mean uses EXACT decimal sums per
-    * (cell, dimension) — order-independent regardless of partitioning, so
-    * the trained centroids (and hence cell assignment) are reproducible
-    * run to run on any cluster. Each iteration is one narrow assignment
-    * pass + one (cell, dim)-keyed aggregation; nothing quadratic. Empty
-    * cells keep their previous centroid (classic k-means convention).
-    * `checkpointDir`: same contract as Dedup.connectedComponents — when
-    * set, rounds pin with RELIABLE checkpoint() (executor-loss-tolerant,
-    * the real-cluster mode); None = localCheckpoint, the right cost on
-    * local mode. The dir is SparkContext-global (concurrent callers must
-    * share one) and round files are the caller's to delete after the
-    * trained centroids are consumed. */
-  def kmeansRefine(corpus: DataFrame, init: DataFrame, iters: Int,
-                   checkpointDir: Option[String] = None): DataFrame = {
-    // checkpoint per round: the iteration embeds the previous
-    // round's plan twice (assignment + empty-cell fallback join), so
-    // without lineage truncation analysis cost grows ~2^iters — the
-    // same hang Dedup.connectedComponents documents
-    // guarded acquisition of the SparkContext-global dir — a concurrent
-    // invocation on a different dir throws (ReliableCheckpoints doc)
-    checkpointDir.foreach(d =>
-      graft.dedup.ReliableCheckpoints.acquire(init.sparkSession, d))
-    try kmeansLoop(corpus, init, iters, reliable = checkpointDir.isDefined)
-    finally checkpointDir.foreach(_ => graft.dedup.ReliableCheckpoints.release())
-  }
-
-  private def kmeansLoop(corpus: DataFrame, init: DataFrame, iters: Int,
-                         reliable: Boolean): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) {
-        // persist around the write job — see Dedup.connectedComponents
-        df.persist()
-        try df.checkpoint(true) finally { df.unpersist(); () }
-      } else df.localCheckpoint(true)
-    var cents = pin(init)
-    for (_ <- 0 until iters) {
-      val means = assignCells(corpus, "vec_id", "embedding", cents, 1)
-        .select(col("cell").as("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg((sum(col("x").cast(DecimalType(38, 12))) / count(lit(1)))
-          .cast(FloatType).as("m"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          _.getField("m")).as("c_emb"))
-      val next = pin(cents.select(col("cid"), col("c_emb").as("_prev"))
-        .join(means.withColumnRenamed("c_emb", "_new"), Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("_new"), col("_prev")).as("c_emb")))
-      cents.unpersist()
-      cents = next
-    }
-    cents
-  }
-
   /** IVF ANN: partition the corpus into cells by nearest centroid
     * (coarse quantizer), then search only the query's `nprobe` nearest
-    * cells. Centroids start as a deterministic sample (first `nCells`
-    * vectors) and are optionally Lloyd-refined (`kmeansIters`);
-    * assignment is a broadcast cross join + per-vector argmax, so corpus
-    * assignment is one narrow pass and the search is an equi-join on
-    * cell id. Recall/latency trade: candidates shrink ~nCells/nprobe×;
-    * raise `nprobe` (or train centroids) for recall. Size `nCells` with
+    * cells. Centroids are a deterministic sample (the first `nCells`
+    * vectors); assignment is a broadcast cross join + per-vector argmax,
+    * so corpus assignment is one narrow pass and the search is an
+    * equi-join on cell id. Recall/latency trade: candidates shrink
+    * ~nCells/nprobe×; raise `nprobe` for recall. Size `nCells` with
     * [[scaledCells]] — a fixed count leaves each cell holding n/nCells
     * vectors and the search join degenerates toward quadratic at scale. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int = 8,
-              nprobe: Int = 1, kmeansIters: Int = 0): DataFrame = {
-    val init = firstCells(corpus, nCells)
-    val cents = localRel(if (kmeansIters > 0) kmeansRefine(corpus, init, kmeansIters)
-                         else init)
+              nprobe: Int = 1): DataFrame = {
+    val cents = localRel(firstCells(corpus, nCells))
     val c = assignCells(corpus, "vec_id", "embedding", cents, 1)
     val q = assignCells(queries, "q_id", "q_emb", cents, nprobe)
       .select("q_id", "q_emb", "cell")
@@ -560,8 +503,8 @@ object Similarity {
     * candidate bound at the cost of that locality, use
     * [[neardupPairs]]; the two share the exact-cosine gate.
     *
-    * `maxCorpus` is the [[graft.text.TextOps.bpeMergesLocal]] discipline
-    * applied to the one remaining by-design-superlinear route: nothing
+    * `maxCorpus` is an explicit size license that fails loudly, on the
+    * one remaining by-design-superlinear route: nothing
     * else STOPS a caller from running the ⌈√n⌉-cell O(n^1.5) pair join
     * at corpus scale, so past `maxCorpus` rows this operator refuses
     * loudly and names [[semanticDedupBanded]] (linear candidate mass by

@@ -92,11 +92,6 @@ object Lifecycle {
       java.lang.Math.floorMod(h, t.closeJitterMs)
     }
 
-  val FirstPollDelayMs = DefaultTiming.firstPollDelayMs
-  val BaseBackoffMs = DefaultTiming.baseBackoffMs
-  val MaxBackoffMs = DefaultTiming.maxBackoffMs
-  val MaxAttempts = DefaultTiming.maxAttempts
-
   /** Doubling backoff capped at the max: 30, 60, 120, 240, 300, 300, …
     * The shift is clamped only against Long overflow — the reachable
     * ceiling is maxBackoffMs itself, whatever the base/max ratio (a

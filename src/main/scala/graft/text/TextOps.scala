@@ -165,60 +165,28 @@ object TextOps {
     * Output: (doc_id, shard, seq_id, n_tok_in_seq) — one row per
     * (document, sequence) span; documents may straddle a cut. */
   def pack(docs: DataFrame, id: Column, text: Column,
-           seqLen: Int = 128, nShards: Int = 8): DataFrame = {
-    require(seqLen > 0 && nShards > 0, "need positive seqLen / nShards")
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-    docs.select(id.as("doc_id"), wsTokenCount(norm(text)).as("n_tok"))
-      .withColumn("shard", pmod(col("doc_id"), lit(nShards)).cast(LongType))
-      .withColumn("_end", sum(col("n_tok")).over(w))
-      .withColumn("_start", col("_end") - col("n_tok"))
-      .filter(col("n_tok") > 0)
-      .select(col("doc_id"), col("shard"), col("_start"), col("_end"),
-        explode(sequence(floor(col("_start") / seqLen).cast(LongType),
-          floor((col("_end") - 1) / seqLen).cast(LongType))).as("seq_id"))
-      .select(col("doc_id"), col("shard"), col("seq_id"),
-        (least(col("_end"), (col("seq_id") + 1) * seqLen)
-          - greatest(col("_start"), col("seq_id") * seqLen)).as("n_tok_in_seq"))
-  }
+           seqLen: Int = 128, nShards: Int = 8): DataFrame =
+    packWithOffsets(docs, id, text, seqLen, nShards).drop("tok_off")
 
-  /** x82 — within-sequence token offsets over a [[pack]] output: each
-    * (doc, sequence) span gains `tok_off`, its starting token position
-    * inside the sequence — exactly what a trainer needs to build the
+  /** x82 — [[pack]] plus `tok_off`, each span's starting token position
+    * inside its sequence: exactly what a trainer needs to build the
     * per-sequence document-boundary attention mask (segment i spans
-    * [tok_off, tok_off + n_tok_in_seq) of the packed sequence; the
-    * loss mask at a boundary starts where tok_off does). Offsets are
-    * the prefix sum of span lengths in doc_id order — the same order
-    * [[pack]]'s stream cumsum concatenates documents, so offsets are
-    * consistent with the actual token layout by construction.
-    *
-    * This is the POST-HOC form for a packed table whose stream
-    * boundaries are gone (a parquet read-back): one window keyed by
-    * (shard, seq_id) — every partition is a single training sequence,
-    * bounded by seqLen spans — at the cost of one extra exchange. At
-    * write time prefer [[packWithOffsets]], which derives the same
-    * column arithmetically with ZERO extra shuffle;
-    * TextOpsSpec pins their agreement. */
-  def packOffsets(packed: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("shard"), col("seq_id"))
-      .orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    packed.withColumn("tok_off",
-      coalesce(sum(col("n_tok_in_seq")).over(w), lit(0L)))
-  }
-
-  /** [[pack]] + `tok_off` in one pass: a span covering stream interval
-    * [max(start, seq·L), min(end, (seq+1)·L)) starts inside its
-    * sequence at max(start, seq·L) − seq·L — pure span arithmetic off
-    * the boundaries pack already computes, so the offset column costs
-    * no window and no exchange beyond pack's own shard cumsum. Output
-    * schema = [[packOffsets]](pack(...)) exactly (spec-pinned). */
+    * [tok_off, tok_off + n_tok_in_seq) of the packed sequence; the loss
+    * mask at a boundary starts where tok_off does). A span covering
+    * stream interval [max(start, seq·L), min(end, (seq+1)·L)) starts
+    * inside its sequence at max(start, seq·L) − seq·L — pure span
+    * arithmetic off the boundaries pack already computes, so the offset
+    * column costs no window and no exchange beyond pack's own shard
+    * cumsum, and it equals the prefix sum of span lengths in doc_id
+    * order within each (shard, seq_id) (TextOpsSpec pins the tiling).
+    * [[pack]] drops the column, and the optimizer prunes its
+    * expression. */
   def packWithOffsets(docs: DataFrame, id: Column, text: Column,
                       seqLen: Int = 128, nShards: Int = 8): DataFrame = {
     require(seqLen > 0 && nShards > 0, "need positive seqLen / nShards")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
+    val lo = greatest(col("_start"), col("seq_id") * seqLen)
     docs.select(id.as("doc_id"), wsTokenCount(norm(text)).as("n_tok"))
       .withColumn("shard", pmod(col("doc_id"), lit(nShards)).cast(LongType))
       .withColumn("_end", sum(col("n_tok")).over(w))
@@ -228,10 +196,8 @@ object TextOps {
         explode(sequence(floor(col("_start") / seqLen).cast(LongType),
           floor((col("_end") - 1) / seqLen).cast(LongType))).as("seq_id"))
       .select(col("doc_id"), col("shard"), col("seq_id"),
-        (least(col("_end"), (col("seq_id") + 1) * seqLen)
-          - greatest(col("_start"), col("seq_id") * seqLen)).as("n_tok_in_seq"),
-        (greatest(col("_start"), col("seq_id") * seqLen)
-          - col("seq_id") * seqLen).as("tok_off"))
+        (least(col("_end"), (col("seq_id") + 1) * seqLen) - lo).as("n_tok_in_seq"),
+        (lo - col("seq_id") * seqLen).as("tok_off"))
   }
 
   /** x77 — fragmentation report over a [[pack]] output: the numbers a
@@ -1108,8 +1074,19 @@ object TextOps {
     * and skew-free regardless of stratum size distribution. */
   def tokenBudgetSample(docs: DataFrame, id: Column, text: Column,
                         strata: Column, budget: Long,
-                        nBuckets: Int = 1024): DataFrame = {
+                        nBuckets: Int = 1024): DataFrame =
+    budgetSample(docs, id, text, strata, nBuckets, None, lit(budget))
+
+  /** The two-phase bucketed prefix sum behind [[tokenBudgetSample]]
+    * (`budget` a literal) and [[tokenBudgetSampleWeighted]] (`budget` =
+    * the `budget` column of the joined per-stratum `budgets` frame,
+    * which the output then carries). */
+  private def budgetSample(docs: DataFrame, id: Column, text: Column,
+                           strata: Column, nBuckets: Int,
+                           budgets: Option[DataFrame],
+                           budget: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val carry = budgets.map(_ => "budget").toSeq
     val h = docs.select(id.as("doc_id"), strata.as("stratum"),
         wsTokenCount(text).as("n_tokens"),
         fingerprint(norm(text)).as("_hk"))
@@ -1119,15 +1096,16 @@ object TextOps {
       .withColumn("_bkt", rangeBucket(col("_hk"), nBuckets))
     // phase 1: per-bucket subtotals (strata x nBuckets rows, longs only)
     val wOff = Window.partitionBy(col("stratum")).orderBy(col("_bkt"))
-    val offsets = h.groupBy("stratum", "_bkt")
+    val subtotals = h.groupBy("stratum", "_bkt")
       .agg(sum(col("n_tokens")).as("_sub"))
       // exclusive prefix: tokens in all strictly-earlier buckets
       .withColumn("_off", sum(col("_sub")).over(wOff) - col("_sub"))
-      // a bucket whose offset exceeds the budget cannot admit any doc
-      // (every cum_tokens in it is >= _off); drop it before the join
-      // so its documents are never shuffled into a sort
+    // a bucket whose offset exceeds the budget cannot admit any doc
+    // (every cum_tokens in it is >= _off); drop it before the join
+    // so its documents are never shuffled into a sort
+    val offsets = budgets.fold(subtotals)(subtotals.join(_, "stratum"))
       .filter(col("_off") <= budget)
-      .select("stratum", "_bkt", "_off")
+      .select((Seq("stratum", "_bkt", "_off") ++ carry).map(col): _*)
     // phase 2: running sum within (stratum, bucket) only — each window
     // partition holds corpus/(strata x nBuckets) rows, not a stratum
     val wIn = Window.partitionBy(col("stratum"), col("_bkt"))
@@ -1135,7 +1113,8 @@ object TextOps {
     h.join(offsets, Seq("stratum", "_bkt"))
       .withColumn("cum_tokens", col("_off") + sum(col("n_tokens")).over(wIn))
       .filter(col("cum_tokens") <= budget)
-      .select("doc_id", "stratum", "n_tokens", "cum_tokens")
+      .select((Seq("doc_id", "stratum", "n_tokens", "cum_tokens") ++ carry)
+        .map(col): _*)
   }
 
   /** x103 — length-bucketed inference batch plan: assign every document
@@ -1242,9 +1221,8 @@ object TextOps {
   }
 
   /** x85 (selection half) — [[tokenBudgetSample]] generalized to a
-    * PER-STRATUM budget table (the scalar form keeps its own audited
-    * hint-free plan): same two-phase bucketed prefix sums — per-bucket
-    * subtotals, exclusive offsets, then a running sum only WITHIN
+    * PER-STRATUM budget table: the same two-phase bucketed prefix sums
+    * — per-bucket subtotals, exclusive offsets, then a running sum only WITHIN
     * (stratum, bucket) — with the budget joined per stratum (a
     * source-count-bounded frame; strategy left to AQE, the x36
     * discipline). Buckets whose offset already exceeds their stratum's
@@ -1255,26 +1233,9 @@ object TextOps {
     * the last selection step before export. */
   def tokenBudgetSampleWeighted(docs: DataFrame, id: Column, text: Column,
                                 strata: Column, budgets: DataFrame,
-                                nBuckets: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val h = docs.select(id.as("doc_id"), strata.as("stratum"),
-        wsTokenCount(text).as("n_tokens"),
-        fingerprint(norm(text)).as("_hk"))
-      .withColumn("_bkt", rangeBucket(col("_hk"), nBuckets))
-    val wOff = Window.partitionBy(col("stratum")).orderBy(col("_bkt"))
-    val offsets = h.groupBy("stratum", "_bkt")
-      .agg(sum(col("n_tokens")).as("_sub"))
-      .withColumn("_off", sum(col("_sub")).over(wOff) - col("_sub"))
-      .join(budgets, "stratum")
-      .filter(col("_off") <= col("budget"))
-      .select("stratum", "_bkt", "_off", "budget")
-    val wIn = Window.partitionBy(col("stratum"), col("_bkt"))
-      .orderBy(col("_hk"), col("doc_id"))
-    h.join(offsets, Seq("stratum", "_bkt"))
-      .withColumn("cum_tokens", col("_off") + sum(col("n_tokens")).over(wIn))
-      .filter(col("cum_tokens") <= col("budget"))
-      .select("doc_id", "stratum", "n_tokens", "cum_tokens", "budget")
-  }
+                                nBuckets: Int = 1024): DataFrame =
+    budgetSample(docs, id, text, strata, nBuckets, Some(budgets),
+      col("budget"))
 
   /** Per-stratum quota cap: keep at most `k` documents per stratum
     * (source domain, language, ...) ranked by quality descending with
@@ -1406,57 +1367,38 @@ object TextOps {
     * vs the word-level vocab's truncation OOV). Output: one row per
     * merge, (merge_rank, lft, rgt, merged, pair_count).
     *
-    * Scale shape — why this survives 100 TB: the corpus is read ONCE,
-    * into a distinct-word inventory (vocabulary-bounded — ~1e6 rows
-    * regardless of corpus size, Heaps' law); all `nMerges` iterations
-    * run on that inventory. Pair counting is a (lft, rgt)-keyed hash
-    * aggregation with map-side combine; the per-round driver action
-    * collects exactly ONE row (the argmax pair — same
-    * bounded-driver-loop discipline as the CC round counts); the merge
-    * rewrite is a narrow per-row fold. Each round's inventory is
-    * persisted and the parent unpersisted, so lineage never recomputes
-    * across rounds. */
+    * Scale shape: the corpus is read ONCE, into a distinct-word
+    * inventory (vocabulary-bounded — ~1e6 rows regardless of corpus
+    * size, Heaps' law); all `nMerges` rounds run on that inventory. A
+    * count over it picks the training form (see [[bpeTrain]]): at or
+    * under [[BpeLocalInventory]] words every round runs on the driver,
+    * ~2 Spark jobs in total instead of 2 per round; past it the rounds
+    * stay distributed and the inventory never leaves the executors. */
   def bpeMerges(docs: DataFrame, id: Column, text: Column,
-                nMerges: Int = 12): DataFrame = {
+                nMerges: Int = 12): DataFrame =
+    bpeMergesAt(docs, text, nMerges, BpeLocalInventory)
+
+  /** [[bpeMerges]] with an explicit local-dispatch threshold —
+    * package-private so the spec can force the distributed rounds on a
+    * small corpus and assert both sides agree. */
+  private[graft] def bpeMergesAt(docs: DataFrame, text: Column, nMerges: Int,
+                                 localThreshold: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, words) = bpeTrain(docs, text, nMerges)
+    val (merges, words) = bpeTrain(docs, text, nMerges, localThreshold)
     words.unpersist()
     merges.toDF("merge_rank", "lft", "rgt", "merged", "pair_count")
   }
 
-  /** Bounded-inventory BPE fast path: ONE distributed pass builds the
-    * (word, count) inventory, then ALL merge rounds run on the driver —
-    * the design HF-tokenizers-style trainers use, and the right call
-    * whenever the vocabulary is known-bounded (Heaps' law puts web-scale
-    * unique words in the millions; `maxInventory` makes the license
-    * explicit and FAILS LOUDLY past it rather than silently melting the
-    * driver). vs [[bpeMerges]]: identical output bit-for-bit (the spec
-    * pins it) — same UTF-8-binary tie order as Spark's orderBy, same
-    * leftmost-fold merge step — but ~2 Spark jobs total instead of 2 per
-    * round, which also removes the round-count × job-latency wall-clock
-    * term (x61's bench variance under host stalls is exactly that term).
-    * The distributed form stays the default: its inventory never leaves
-    * the executors, so it is safe at ANY vocabulary size. */
-  def bpeMergesLocal(docs: DataFrame, id: Column, text: Column,
-                     nMerges: Int = 12,
-                     maxInventory: Long = 2000000L): DataFrame = {
-    require(nMerges > 0, s"nMerges must be positive, got $nMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val inv0 = wordInventory(docs, text).persist()
-    val v = inv0.count()
-    require(v <= maxInventory,
-      s"bpeMergesLocal: inventory $v exceeds maxInventory $maxInventory — " +
-        "use the distributed bpeMerges (its rounds never collect the inventory)")
-    val inv = inv0.collect().map(r => (r.getString(0), r.getLong(1)))
-    inv0.unpersist()
-    localMergeRounds(inv, nMerges)._1
-      .toDF("merge_rank", "lft", "rgt", "merged", "pair_count")
-  }
+  /** Inventory size (distinct words) up to which BPE training runs its
+    * merge rounds on the driver — the
+    * [[graft.dedup.Dedup.CcLocalEdgeThreshold]] discipline. Heaps' law
+    * puts web-scale vocabularies in the millions, and 2M words with
+    * their symbol arrays is a bounded driver footprint. */
+  val BpeLocalInventory: Long = 2000000L
 
-  /** The (w, wc) distinct-word inventory — the single corpus read every
-    * BPE training form starts from (vocabulary-bounded by Heaps' law). */
+  /** The (w, wc) distinct-word inventory — the single corpus read BPE
+    * training starts from (vocabulary-bounded by Heaps' law). */
   private def wordInventory(docs: DataFrame, text: Column): DataFrame =
     docs.select(explode(split(norm(text), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -1477,8 +1419,7 @@ object TextOps {
     x.length < y.length
   }
 
-  /** Driver-side BPE merge rounds over a collected (w, wc) inventory —
-    * the loop [[bpeMergesLocal]] and the auto-dispatch forms share.
+  /** Driver-side BPE merge rounds over a collected (w, wc) inventory.
     * Returns (merge list, final symbol arrays aligned 1:1 with the
     * input order); bit-for-bit the distributed rounds' results
     * (TextOpsSpec pins both the merges and the encode route). */
@@ -1535,21 +1476,39 @@ object TextOps {
     (merges.toSeq, syms)
   }
 
-  /** The BPE training loop shared by [[bpeMerges]] (which keeps the
-    * merge list) and [[bpeEncode]] (which keeps the tokenized
-    * inventory). Returns (merges, final inventory (w, wc, syms)); the
+  /** The BPE trainer both [[bpeMerges]] (which keeps the merge list)
+    * and [[bpeEncode]] (which keeps the segmented inventory) run. ONE
+    * distributed pass builds the (w, wc) inventory and a count over it
+    * picks the form: at or under `localThreshold` words the inventory is
+    * collected and every round runs on the driver (bit-for-bit equal to
+    * the distributed rounds — same UTF-8-binary tie order as Spark's
+    * orderBy, same leftmost-fold merge step), and the segmented
+    * inventory is parallelized back (vocab-bounded — the
+    * model-sized-broadcast license); past it the distributed rounds run.
+    * Returns (merges, segmented (w, syms) inventory); a distributed
     * inventory is PERSISTED — the caller owns releasing it. */
-  private def bpeTrain(docs: DataFrame, text: Column, nMerges: Int)
+  private def bpeTrain(docs: DataFrame, text: Column, nMerges: Int,
+                       localThreshold: Long)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {
     require(nMerges > 0, s"nMerges must be positive, got $nMerges")
-    bpeRounds(wordInventory(docs, text)
-      .withColumn("syms", concat(split(col("w"), ""), array(lit("</w>"))))
-      .persist(), nMerges)
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val inv0 = wordInventory(docs, text).persist()
+    val trained =
+      if (inv0.count() <= localThreshold) {
+        val inv = inv0.collect().map(r => (r.getString(0), r.getLong(1)))
+        val (merges, fin) = localMergeRounds(inv, nMerges)
+        (merges, inv.zip(fin).toSeq
+          .map { case ((w, _), ss) => (w, ss.toSeq) }
+          .toDF("w", "syms"))
+      } else bpeRounds(inv0.withColumn("syms",
+        concat(split(col("w"), ""), array(lit("</w>")))).persist(), nMerges)
+    inv0.unpersist()
+    trained
   }
 
   /** The distributed merge-round loop over a persisted (w, wc, syms)
-    * inventory — shared by [[bpeTrain]] and the auto-dispatch's
-    * large-vocabulary branch. */
+    * inventory — [[bpeTrain]]'s large-vocabulary branch. */
   private def bpeRounds(words0: DataFrame, nMerges: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {
     var words = words0
@@ -1607,18 +1566,16 @@ object TextOps {
     * token only (doc_id, word) cross the wire — the classic
     * dictionary-encode join shape. */
   def bpeEncode(docs: DataFrame, id: Column, text: Column,
-                nMerges: Int = 12): DataFrame = {
-    val (_, inventory) = bpeTrain(docs, text, nMerges)
-    encodeWith(docs, id, text, inventory)
-  }
+                nMerges: Int = 12): DataFrame =
+    bpeEncodeAt(docs, id, text, nMerges, BpeLocalInventory)
 
-  /** The dictionary-encode half of [[bpeEncode]]: join the corpus word
-    * stream against a segmented (w, syms) inventory (however trained)
-    * and aggregate per-document BPE statistics. */
-  private def encodeWith(docs: DataFrame, id: Column, text: Column,
-                         inventory: DataFrame): DataFrame = {
+  /** [[bpeEncode]] with an explicit local-dispatch threshold (see
+    * [[bpeMergesAt]]). */
+  private[graft] def bpeEncodeAt(docs: DataFrame, id: Column, text: Column,
+                                 nMerges: Int,
+                                 localThreshold: Long): DataFrame = {
     val p = 1000000007L
-    val segmented = inventory
+    val segmented = bpeTrain(docs, text, nMerges, localThreshold)._2
       .select(col("w"), size(col("syms")).cast(LongType).as("_n"),
         fingerprint(array_join(col("syms"), " ")).as("_fp"))
     docs.select(id.as("doc_id"), explode(split(norm(text), " ")).as("w"))
@@ -1628,70 +1585,6 @@ object TextOps {
       .agg(count(lit(1)).as("n_words"),
         sum(col("_n")).as("n_bpe_tokens"),
         (sum(col("_fp")) % p).as("sym_sum"))
-  }
-
-  /** Probe-and-dispatch BPE training (r15 verdict task #1): build the
-    * (w, wc) inventory in ONE distributed pass, count it, and pick the
-    * training form the size licenses — driver rounds when the
-    * vocabulary fits `maxInventory` (bit-for-bit equal to the
-    * distributed rounds, ~2 Spark jobs total instead of 2 per round,
-    * which removes the rounds × job-latency wall-clock term that made
-    * x61 the suite's noise magnet), distributed rounds otherwise (the
-    * inventory never leaves the executors — safe at ANY vocabulary).
-    * The probe count reuses the inventory the chosen path trains on,
-    * so dispatch costs one count over an already-persisted aggregate. */
-  def bpeMergesAuto(docs: DataFrame, id: Column, text: Column,
-                    nMerges: Int = 12,
-                    maxInventory: Long = 2000000L): DataFrame = {
-    require(nMerges > 0, s"nMerges must be positive, got $nMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val inv0 = wordInventory(docs, text).persist()
-    val v = inv0.count()
-    if (v <= maxInventory) {
-      val inv = inv0.collect().map(r => (r.getString(0), r.getLong(1)))
-      inv0.unpersist()
-      localMergeRounds(inv, nMerges)._1
-        .toDF("merge_rank", "lft", "rgt", "merged", "pair_count")
-    } else {
-      val (merges, words) = bpeRounds(
-        inv0.withColumn("syms",
-          concat(split(col("w"), ""), array(lit("</w>")))).persist(), nMerges)
-      words.unpersist()
-      inv0.unpersist()
-      merges.toDF("merge_rank", "lft", "rgt", "merged", "pair_count")
-    }
-  }
-
-  /** [[bpeEncode]] behind the same probe-and-dispatch as
-    * [[bpeMergesAuto]]: when the vocabulary fits, training runs on the
-    * driver and the segmented inventory is parallelized back
-    * (vocab-bounded — exactly the model-sized-broadcast license) for
-    * the ONE distributed dictionary join; otherwise the fully
-    * distributed [[bpeEncode]] path runs unchanged. */
-  def bpeEncodeAuto(docs: DataFrame, id: Column, text: Column,
-                    nMerges: Int = 12,
-                    maxInventory: Long = 2000000L): DataFrame = {
-    require(nMerges > 0, s"nMerges must be positive, got $nMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val inv0 = wordInventory(docs, text).persist()
-    val v = inv0.count()
-    if (v <= maxInventory) {
-      val inv = inv0.collect().map(r => (r.getString(0), r.getLong(1)))
-      inv0.unpersist()
-      val (_, fin) = localMergeRounds(inv, nMerges)
-      val segmented = inv.zip(fin).toSeq
-        .map { case ((w, _), ss) => (w, ss.toSeq) }
-        .toDF("w", "syms")
-      encodeWith(docs, id, text, segmented)
-    } else {
-      val (_, inventory) = bpeRounds(
-        inv0.withColumn("syms",
-          concat(split(col("w"), ""), array(lit("</w>")))).persist(), nMerges)
-      inv0.unpersist()
-      encodeWith(docs, id, text, inventory)
-    }
   }
 
   /** x97 — tokenizer economics per language: the "tokenizer parity"
@@ -1715,7 +1608,7 @@ object TextOps {
     * is one row per language. */
   def tokenizerEconomics(docs: DataFrame, id: Column, text: Column,
                          lang: Column, nMerges: Int = 12): DataFrame = {
-    val perDoc = bpeEncodeAuto(docs, id, text, nMerges)
+    val perDoc = bpeEncode(docs, id, text, nMerges)
     val meta = docs.select(id.as("doc_id"), lang.as("lang"),
       length(norm(text)).cast(LongType).as("_chars"))
     perDoc.join(meta, "doc_id")

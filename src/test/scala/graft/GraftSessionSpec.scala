@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The one session factory: its settings, Verify's interpreted mode, the
-  * cpus rule, and that no other file under src/ configures a session. */
+  * cpus rule, that no other file under src/ configures a session, and
+  * that no code writes a reliable checkpoint. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries every factory setting") {
@@ -45,5 +46,24 @@ class GraftSessionSpec extends SparkSpec {
         Files.readString(p).contains(needle))
       .map(_.toString).toSeq
     assert(files === Seq("src/main/scala/graft/GraftSession.scala"))
+  }
+
+  test("no code under src/main writes a reliable checkpoint; loops pin with localCheckpoint") {
+    // every session is local[cpus], so an executor dies only with the
+    // driver, and Spark never reads an RDD checkpoint back after a
+    // restart: a reliable checkpoint recovers nothing. Split so the
+    // names do not match this file; comment lines are skipped.
+    val needles = Seq("setCheckpoint" + "Dir", ".check" + "point(")
+    def code(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*")) "" else line.split("//", 2)(0)
+    }
+    val hits = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if needles.exists(code(l).contains(_)) => s"$p:${i + 1}"
+      })
+      .toSeq
+    assert(hits.isEmpty, s"reliable checkpoint calls: $hits")
   }
 }

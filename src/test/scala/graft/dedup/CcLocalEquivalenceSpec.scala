@@ -16,7 +16,7 @@ class CcLocalEquivalenceSpec extends SparkSpec {
 
   private def both(pairs: DataFrame): (Seq[String], Seq[String], String, String) = {
     def run(threshold: Long): (Seq[String], String) = {
-      val df = Dedup.connectedComponentsAt(pairs, 60, 5, None, threshold)
+      val df = Dedup.connectedComponentsAt(pairs, 60, 5, threshold)
       val rows = df.collect().map(_.toString).sorted.toSeq
       spark.catalog.clearCache()
       (rows, df.schema.catalogString)

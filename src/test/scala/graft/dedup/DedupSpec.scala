@@ -268,81 +268,18 @@ class DedupSpec extends SparkSpec {
     assert(perCluster.values.forall(_ == 1))
   }
 
-  test("connectedComponents with reliable checkpointDir matches localCheckpoint mode") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    try {
-      // multi-round graph (long chain) so several rounds actually hit the
-      // reliable checkpoint path, plus small stars for the common shape
-      val pairs = (Seq((1L, 2L), (2L, 3L), (10L, 11L)) ++
-        (30L until 40L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
-      val reliable = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      val local = Dedup.connectedComponents(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(reliable === local)
-      // the rounds really went through the reliable path: files on disk
-      // (Files.walk holds directory handles — must be closed)
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      val wrote =
-        try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
-        finally walk.close()
-      assert(wrote > 0, "no reliable checkpoint files written")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
-  test("withReliableCheckpoints deletes the round files after the scope consumes the output") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-scope").toString
-    val pairs = (Seq((1L, 2L), (2L, 3L)) ++ (50L until 58L).map(i => (i, i + 1)))
-      .toDF("doc_a", "doc_b")
-    val out = ReliableCheckpoints.withReliableCheckpoints(spark, dir) { d =>
-      val frame = Dedup.connectedComponents(pairs, checkpointDir = Some(d))
-      // the contract: consume INSIDE the scope (the frame is a scan of
-      // the checkpoint files the scope is about to delete)
-      frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    assert(out(3L) === 1L && out(57L) === 50L)
-    // the scope removed the accumulated round files, dir and all
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)),
-      s"checkpoint round files survived the scope at $dir")
-  }
-
-  test("a conflicting reliable checkpoint dir while one is in flight throws") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft-cc-a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-cc-b").toString
-    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
-    try {
-      val e = intercept[IllegalStateException] {
-        ReliableCheckpoints.withReliableCheckpoints(spark, dirA) { _ =>
-          // an invocation on dirA is active for the whole scope; pointing
-          // the global dir at dirB now would race its round files
-          Dedup.connectedComponents(pairs, checkpointDir = Some(dirB)).count()
-        }
-      }
-      assert(e.getMessage.contains("conflict"))
-      // and the same dir nests fine while active
-      val n = ReliableCheckpoints.withReliableCheckpoints(spark, dirA) { d =>
-        Dedup.connectedComponents(pairs, checkpointDir = Some(d)).count()
-      }
-      assert(n === 2L)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dirB))
-    }
-  }
-
   test("connectedComponents fails loudly when the diameter exceeds maxIter") {
     // threshold -1 forces the DISTRIBUTED loop (the small-graph local
     // union-find has no rounds to exhaust)
     val chain = (1L to 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val e = intercept[IllegalArgumentException] {
       Dedup.connectedComponentsAt(chain, maxIter = 2, starRounds = 5,
-        checkpointDir = None, localThreshold = -1L)
+        localThreshold = -1L)
     }
     assert(e.getMessage.contains("did not converge"))
     // and converges fine with enough rounds
     val ok = Dedup.connectedComponentsAt(chain, maxIter = 10, starRounds = 5,
-        checkpointDir = None, localThreshold = -1L)
+        localThreshold = -1L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 9L).forall(d => ok(d) == 1L))
   }
@@ -354,7 +291,7 @@ class DedupSpec extends SparkSpec {
     // would short-circuit the phase this test exists to exercise
     val chain = (1L to 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val out = Dedup.connectedComponentsAt(chain, maxIter = 60, starRounds = 5,
-        checkpointDir = None, localThreshold = -1L)
+        localThreshold = -1L)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(out.size === 101)
     assert(out.values.forall(_._1 == 1L)) // one component, min id 1

@@ -129,21 +129,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("IVF with trained centroids + nprobe reaches recall@3 = 1.0 vs brute force on testdata") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def resultSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = resultSet(Similarity.bruteForceTopK(emb, queries, 3))
-    val ivf = resultSet(
-      Similarity.ivfTopK(emb, queries, 3, nCells = 4, nprobe = 2, kmeansIters = 2))
-    val recall = (exact intersect ivf).size.toDouble / exact.size
-    assert(recall === 1.0, s"recall@3 $recall; missing ${exact diff ivf}")
-  }
-
   test("ivfPqTopK: seed queries self-reconstruct through residual codes; deterministic") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -175,30 +160,6 @@ class SimilaritySpec extends SparkSpec {
     info(f"ivfPqTopK(cells=scaled, nprobe=2, 4x16, rerank=10) recall@3 = $recall%.3f")
     assert(recall >= 0.4, s"ivfpq recall collapsed: $recall")
     spark.catalog.clearCache()
-  }
-
-  test("kmeansRefine is deterministic and keeps one centroid per cell") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val init = emb.orderBy(col("vec_id")).limit(4)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-    def train() = Similarity.kmeansRefine(emb, init, 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val a = train()
-    val b = train()
-    assert(a.keySet === Set(0L, 1L, 2L, 3L))
-    assert(a === b) // exact decimal sums → identical floats run to run
-    a.values.foreach(c => assert(c.length === 64))
-    // reliable-checkpoint mode (the real-cluster path) trains the SAME
-    // centroids — same contract as Dedup.connectedComponents
-    val dir = java.nio.file.Files.createTempDirectory("graft-km-ckpt").toString
-    try {
-      val c = Similarity.kmeansRefine(emb, init, 2, Some(dir))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-      assert(c === a)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
   }
 
   test("semanticDedup drops exactly the planted copies, keeps one representative") {

@@ -39,7 +39,7 @@ class LifecycleSpec extends SparkSpec {
     // DefaultTiming shards deadlines inside the reference's 10 s
     // post-boundary buffer — the first poll keeps the key's stagger
     assert(s2.get.nextActionMs ===
-      900000L + FirstPollDelayMs + closeStaggerMs("m1"))
+      900000L + DefaultTiming.firstPollDelayMs + closeStaggerMs("m1"))
   }
 
   test("close deadlines shard deterministically inside the jitter buffer") {
@@ -72,7 +72,7 @@ class LifecycleSpec extends SparkSpec {
     }
     assert(delays === Seq(30000L, 60000L, 120000L, 240000L, 300000L, 300000L))
     // exhaust the attempt budget
-    st = st.copy(attempt = MaxAttempts)
+    st = st.copy(attempt = DefaultTiming.maxAttempts)
     val (fin, out) = onTimeout("m1", st, now)
     assert(fin.isEmpty)
     assert(out.map(_.transition) === Seq("resolution_failed"))

@@ -51,11 +51,11 @@ class TextOpsSpec extends SparkSpec {
     assert(bySeq === Map(0L -> 5L, 1L -> 5L, 2L -> 3L))
   }
 
-  test("packOffsets: segments tile each sequence contiguously from 0, never crossing seqLen") {
+  test("packWithOffsets: segments tile each sequence contiguously from 0, never crossing seqLen") {
     val docs = Seq(
       (1L, "a b c"), (2L, "d e f g"), (3L, "h i j k l m")).toDF("doc_id", "text")
-    val out = TextOps.packOffsets(
-      TextOps.pack(docs, col("doc_id"), col("text"), seqLen = 5, nShards = 1))
+    val out = TextOps.packWithOffsets(docs, col("doc_id"), col("text"),
+      seqLen = 5, nShards = 1)
       .collect().map(r => (r.getAs[Long]("seq_id"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("tok_off"), r.getAs[Long]("n_tok_in_seq")))
     out.groupBy(_._1).foreach { case (seq, spans) =>
@@ -270,20 +270,6 @@ class TextOpsSpec extends SparkSpec {
     assert(out(5L) === ((3L, 2L, 0.666667)), s"bin 5 wrong: $out")
     assert(out(6L) === ((1L, 1L, 1.0)), s"bin 6 wrong: $out")
     assert(out.values.map(_._1).sum === 6L, s"unjoined doc leaked: $out")
-  }
-
-  test("packWithOffsets (zero-shuffle arithmetic) equals packOffsets(pack) row for row") {
-    val docs = Seq(
-      (1L, "a b c"), (2L, "d e f g"), (3L, "h i j k l m"),
-      (4L, "n o"), (5L, "p q r s t u v w x")).toDF("doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "shard", "seq_id", "n_tok_in_seq", "tok_off")
-      .collect().map(_.toSeq).toSet
-    val windowed = rows(TextOps.packOffsets(
-      TextOps.pack(docs, col("doc_id"), col("text"), seqLen = 5, nShards = 2)))
-    val arith = rows(TextOps.packWithOffsets(
-      docs, col("doc_id"), col("text"), seqLen = 5, nShards = 2))
-    assert(arith === windowed, s"forms disagree:\n$arith\nvs\n$windowed")
   }
 
   test("pack: shards carry independent offsets") {
@@ -722,48 +708,37 @@ class TextOpsSpec extends SparkSpec {
     assert(m.map(_._4).distinct.length === 3)
   }
 
-  test("bpeMergesLocal replays the distributed trainer bit-for-bit (ties, early stop, inventory cap)") {
-    // tie-heavy corpus: equal pair counts force the lexicographic
-    // tie-break path; mixed words exercise the merged-symbol rounds
-    val docs = Seq((1L, "abc abd ab abc abc ba ba cab"),
-      (2L, "xy xy xz zz zz"), (3L, "q qq qqq")).toDF("doc_id", "text")
+  // tie-heavy corpus: equal pair counts force the lexicographic
+  // tie-break path; mixed words exercise the merged-symbol rounds. The
+  // early-stop corpus runs out of pairs before nMerges.
+  private def bpeCorpora = Seq(
+    Seq((1L, "abc abd ab abc abc ba ba cab"),
+      (2L, "xy xy xz zz zz"), (3L, "q qq qqq")).toDF("doc_id", "text") -> 8,
+    Seq((1L, "aa aa aa")).toDF("doc_id", "text") -> 10)
+
+  test("bpeMerges: the driver rounds and the distributed rounds agree (ties, early stop)") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("merge_rank").collect().map(r =>
         (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
-    val dist = rows(TextOps.bpeMerges(docs, col("doc_id"), col("text"), nMerges = 8))
-    val loc = rows(TextOps.bpeMergesLocal(docs, col("doc_id"), col("text"), nMerges = 8))
-    assert(loc === dist, "the local fast path must replay the distributed merges exactly")
-    // early stop matches too
-    val tiny = Seq((1L, "aa aa aa")).toDF("doc_id", "text")
-    assert(rows(TextOps.bpeMergesLocal(tiny, col("doc_id"), col("text"), nMerges = 10))
-      === rows(TextOps.bpeMerges(tiny, col("doc_id"), col("text"), nMerges = 10)))
-    // the bounded-inventory license fails loudly, not silently
-    val e = intercept[IllegalArgumentException](
-      TextOps.bpeMergesLocal(docs, col("doc_id"), col("text"),
-        nMerges = 2, maxInventory = 3L))
-    assert(e.getMessage.contains("maxInventory"))
-    // probe-and-dispatch: BOTH branches replay the reference trainer —
-    // default (local branch: vocab fits) and forced-distributed
-    // (maxInventory = 0 makes the probe overflow)
-    assert(rows(TextOps.bpeMergesAuto(docs, col("doc_id"), col("text"),
-      nMerges = 8)) === dist, "auto dispatch (local branch) diverged")
-    assert(rows(TextOps.bpeMergesAuto(docs, col("doc_id"), col("text"),
-      nMerges = 8, maxInventory = 0L)) === dist,
-      "auto dispatch (forced distributed branch) diverged")
+    bpeCorpora.foreach { case (docs, n) =>
+      val local = rows(TextOps.bpeMerges(docs, col("doc_id"), col("text"), nMerges = n))
+      // threshold 0: every inventory overflows it, so the rounds stay distributed
+      val dist = rows(TextOps.bpeMergesAt(docs, col("text"), n, localThreshold = 0L))
+      assert(local.nonEmpty && local === dist, s"dispatch sides diverged:\n$local\nvs\n$dist")
+    }
   }
 
-  test("bpeEncodeAuto: both dispatch branches reproduce bpeEncode exactly") {
-    val docs = Seq((1L, "abc abd ab abc abc ba ba cab"),
-      (2L, "xy xy xz zz zz"), (3L, "q qq qqq")).toDF("doc_id", "text")
+  test("bpeEncode: the driver rounds and the distributed rounds agree (ties, early stop)") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val dist = rows(TextOps.bpeEncode(docs, col("doc_id"), col("text"), nMerges = 8))
-    assert(rows(TextOps.bpeEncodeAuto(docs, col("doc_id"), col("text"),
-      nMerges = 8)) === dist, "auto encode (local branch) diverged")
-    assert(rows(TextOps.bpeEncodeAuto(docs, col("doc_id"), col("text"),
-      nMerges = 8, maxInventory = 0L)) === dist,
-      "auto encode (forced distributed branch) diverged")
+    bpeCorpora.foreach { case (docs, n) =>
+      val local = rows(TextOps.bpeEncode(docs, col("doc_id"), col("text"), nMerges = n))
+      val dist = rows(TextOps.bpeEncodeAt(docs, col("doc_id"), col("text"), n,
+        localThreshold = 0L))
+      spark.catalog.clearCache()
+      assert(local.nonEmpty && local === dist, s"dispatch sides diverged:\n$local\nvs\n$dist")
+    }
   }
 
   test("bpeMerges stops early when the inventory is fully merged") {
