@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Per-query oracle compare with a hard timeout — the sf1-tier runner.
 
-Usage: python3 scripts/compare_timeout.py <sfDir> <outDir> [timeoutSec] [jobs]
+Usage: python3 scripts/compare_timeout.py [--only q1,q2] <sfDir> <outDir> [timeoutSec] [jobs]
 
-Same canonicalized comparison as scripts/compare.py (columns sorted by
-name, EXCEPT ALL both ways), but each query's oracle runs in its OWN
-killable subprocess with a hard timeout. At sf1 a handful of DuckDB
+The per-query compare is scripts/compare.py's `compare_query`, with
+its verdicts and pass rule (a verdict starting with "OK" passes), but
+each query's oracle runs in its OWN killable subprocess with a hard
+timeout. Each child's DuckDB gets max(1, cpus // jobs) threads, cpus
+by the scripts/host_size.sh rule. At sf1 a handful of DuckDB
 oracle replays are orders of magnitude slower than the Spark side (the
 oracle is a single-node semantic spec, not an engine); a TIMEOUT row
 records "oracle too slow at this SF", which is a different statement
@@ -17,51 +19,20 @@ import subprocess
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
+from compare import compare_query, connect
 
 
-def run_one(name, sf, out):
+def run_one(name, sf, out, threads):
     """Executed in the child: compare one query, print the verdict."""
-    import duckdb
-    con = duckdb.connect()
-    con.sql("SET threads=8")
-    for t in TABLES:
-        p = f"{sf}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = connect(sf)
+    con.sql(f"SET threads={threads}")
     sql = json.load(open(f"{out}/oracle_sql.json"))[name]
-    try:
-        got = con.sql(
-            f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')").arrow()
-    except Exception as e:
-        print(f"SPARK_READ_FAILED: {str(e)[:200]}")
-        return
-    try:
-        want = con.sql(sql).arrow()
-    except Exception as e:
-        print(f"ORACLE_FAILED: {str(e)[:200]}")
-        return
-    gcols, wcols = sorted(got.column_names), sorted(want.column_names)
-    if gcols != wcols:
-        print(f"COLS_MISMATCH spark={gcols} oracle={wcols}")
-        return
-    if got.num_rows != want.num_rows:
-        print(f"ROWS_MISMATCH spark={got.num_rows} oracle={want.num_rows}")
-        return
-    order = ", ".join(f'"{c}"' for c in gcols)
-    con.register("_got", got)
-    con.register("_want", want)
-    diff = con.sql(
-        f"SELECT count(*) FROM ((SELECT {order} FROM _got EXCEPT ALL "
-        f"SELECT {order} FROM _want) UNION ALL (SELECT {order} FROM _want "
-        f"EXCEPT ALL SELECT {order} FROM _got))").fetchall()[0][0]
-    print("OK" if diff == 0 else f"VALUES_MISMATCH {diff} diff rows")
+    print(compare_query(con, f"{out}/{name}", sql))
 
 
 def main():
     if sys.argv[1] == "--one":
-        run_one(sys.argv[2], sys.argv[3], sys.argv[4])
+        run_one(*sys.argv[2:5], int(sys.argv[5]))
         return
     argv = sys.argv[1:]
     only = None
@@ -72,6 +43,9 @@ def main():
     out = argv[1]
     timeout = int(argv[2]) if len(argv) > 2 else 600
     jobs = int(argv[3]) if len(argv) > 3 else 4
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or
+               len(os.sched_getaffinity(0)))
+    threads = max(1, cpus // jobs)
     names = sorted(json.load(open(f"{out}/oracle_sql.json")))
     if only is not None:
         missing = only - set(names)
@@ -82,7 +56,7 @@ def main():
     def child(name):
         try:
             r = subprocess.run(
-                [sys.executable, __file__, "--one", name, sf, out],
+                [sys.executable, __file__, "--one", name, sf, out, str(threads)],
                 capture_output=True, text=True, timeout=timeout)
             v = (r.stdout.strip().splitlines() or ["NO_OUTPUT"])[-1]
             if r.returncode != 0 and v == "NO_OUTPUT":
@@ -93,9 +67,9 @@ def main():
 
     with ThreadPoolExecutor(max_workers=jobs) as ex:
         results = dict(ex.map(child, names))
-    npass = sum(1 for v in results.values() if v == "OK")
+    npass = sum(1 for v in results.values() if v.startswith("OK"))
     for name in sorted(results):
-        tag = "PASS" if results[name] == "OK" else "FAIL"
+        tag = "PASS" if results[name].startswith("OK") else "FAIL"
         print(f"{tag} {name}: {results[name]}")
     print(f"\n{npass}/{len(results)} queries match at {sf}")
     # a filtered run must not clobber a full-suite record

@@ -15,10 +15,8 @@ object GraftSession {
     env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** The session's settings. `interpreted` turns whole-stage codegen and
-    * codegen'd expression factories off, so every native expression runs
-    * its eval() path (Verify's `SPARK_GRAFT_NO_CODEGEN` parity mode). */
-  def settings(cpus: Int, interpreted: Boolean = false): Map[String, String] = Map(
+  /** The session's settings. */
+  def settings(cpus: Int): Map[String, String] = Map(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
@@ -32,13 +30,11 @@ object GraftSession {
     // that made shingle staging single-threaded (a 100-TB input is
     // thousands of files, so this is a fixture artifact to neutralize,
     // not a production setting)
-    "spark.sql.files.maxPartitionBytes" -> "4m") ++
-    (if (interpreted) Map("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Map.empty)
+    "spark.sql.files.maxPartitionBytes" -> "4m")
 
-  def build(cpus: Int = hostCpus(), interpreted: Boolean = false): SparkSession = {
+  def build(cpus: Int = hostCpus()): SparkSession = {
     val spark = SparkSession.builder().appName("graft")
-      .config(settings(cpus, interpreted)).getOrCreate()
+      .config(settings(cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

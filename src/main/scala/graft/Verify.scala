@@ -8,14 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for fast local
     // single-query oracle checks (the driver always passes two args)
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    // SPARK_GRAFT_NO_CODEGEN=1: run the whole dump fully interpreted
-    // (wholeStage off, NO_CODEGEN factories) so the DuckDB compare can
-    // certify the eval() path of every native expression — the dual-path
-    // parity mode (see CodegenSuiteParitySpec for the in-JVM gate)
-    val noCodegen = sys.env.get("SPARK_GRAFT_NO_CODEGEN").contains("1")
-    val spark = GraftSession.build(interpreted = noCodegen)
-    if (noCodegen) System.err.println(
-      "[verify] NO_CODEGEN mode: all queries run interpreted")
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -32,7 +25,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries persist() intermediates they self-join; without a
-      // per-query clear those caches accumulate across all ~65 queries
+      // per-query clear those caches accumulate across all 152 queries
       // in this one JVM and eventually GC-thrash the driver heap
       finally spark.catalog.clearCache()
     }

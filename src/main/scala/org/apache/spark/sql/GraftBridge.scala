@@ -5,9 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the classic Column factory (private[sql] in Spark 4's
   * Connect-era API): lets the library wrap its native Catalyst
-  * expressions in Columns without requiring callers to register
-  * session extensions. Same mechanism every Spark-native extension
-  * library (Delta, Sedona, etc.) uses. */
+  * expressions in Columns (see graft.plans.functions). Same mechanism
+  * every Spark-native extension library (Delta, Sedona, etc.) uses. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -17,12 +16,4 @@ object GraftBridge {
     * resolving its path again. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Register the library's SQL functions on an ALREADY-BUILT session
-    * (the `spark.sql.extensions` config only applies at session
-    * creation) — the SedonaContext.create-style runtime entry point. */
-  def registerFunctions(spark: SparkSession): Unit =
-    graft.plans.GraftExtensions.sqlFunctions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }

@@ -14,11 +14,7 @@ package graft
   * a plan) would make the SAME query return different answers depending
   * on whether its inputs happened to be literal-foldable. Exact string
   * comparison, no numeric tolerance: both arms run identical kernels
-  * over identical partitioning, so any drift is a real dual-path bug.
-  *
-  * The standalone equivalent (same sweep against the real oracle) is
-  * `SPARK_GRAFT_NO_CODEGEN=1 python3 scripts/compare.py`, which routes
-  * through Verify's interpreted mode. */
+  * over identical partitioning, so any drift is a real dual-path bug. */
 class CodegenSuiteParitySpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -40,7 +36,7 @@ class CodegenSuiteParitySpec extends SparkSpec {
   }
 
   /** Sorted canonical rows + schema; cache cleared so per-query
-    * persist() intermediates never leak across the ~160×2 runs. */
+    * persist() intermediates never leak across the 152×2 runs. */
   private def rows(name: String): (String, Seq[String]) = {
     val df = SparkEntry.queries(name)(spark, sfDir)
     try (df.schema.catalogString,

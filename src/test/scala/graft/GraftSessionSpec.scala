@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** The one session factory: its settings, Verify's interpreted mode, the
-  * cpus rule, that no other file under src/ configures a session, and
-  * that no code writes a reliable checkpoint. */
+/** The one session factory: its settings, the cpus rule, that no other
+  * file under src/ configures a session, and that no code writes a
+  * reliable checkpoint. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries every factory setting") {
@@ -23,13 +23,6 @@ class GraftSessionSpec extends SparkSpec {
     // settings, but what the session was built with stays here
     val built = spark.sparkContext.getConf
     want.foreach { case (k, v) => assert(built.get(k) === v, k) }
-  }
-
-  test("interpreted mode turns whole-stage codegen and codegen'd factories off") {
-    assert(GraftSession.settings(4, interpreted = true).toSet --
-      GraftSession.settings(4).toSet === Set(
-        "spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
   }
 
   test("cpus: SPARK_GRAFT_CPUS wins, else the JVM's available processors") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** j07 machinery: the bloom pre-filter is semantically transparent for
   * the inner join (no false negatives), actually prunes, and the
-  * expression honors null/type contracts + the SQL surface. */
+  * expression honors its null/type contracts. */
 class BloomJoinSpec extends SparkSpec {
   import spark.implicits._
 
@@ -36,25 +36,4 @@ class BloomJoinSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("bloom_might_contain"))
   }
-
-  test("SQL surface: binary-literal bloom probes; non-literal rejected") {
-    org.apache.spark.sql.GraftBridge.registerFunctions(spark)
-    val bloom = Seq(Tuple1(42L)).toDF("k").stat.bloomFilter("k", 10L, 0.01)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    Seq((42L, bos.toByteArray), (43L, bos.toByteArray)).toDF("k", "b")
-      .createOrReplaceTempView("bloomt")
-    spark.sql("SELECT k FROM bloomt").collect() // view sanity
-    val lit42 = spark.sql(
-      s"SELECT bloom_might_contain(k, ${hexLit(bos.toByteArray)}) FROM bloomt ORDER BY k")
-      .collect().map(_.getBoolean(0))
-    assert(lit42(0) === true)
-    val e = intercept[org.apache.spark.sql.AnalysisException](
-      spark.sql("SELECT bloom_might_contain(k, b) FROM bloomt").collect())
-    assert(e.getMessage.contains("bloom_might_contain") ||
-      e.getMessage.contains("bloom"))
-  }
-
-  private def hexLit(b: Array[Byte]): String =
-    "X'" + b.map(x => f"$x%02X").mkString + "'"
 }

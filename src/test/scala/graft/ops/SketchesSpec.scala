@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** KMV sketch semantics: exact bottom-k-distinct determinism under any
@@ -76,11 +75,9 @@ class SketchesSpec extends SparkSpec {
       "the k*partitions-shuffle claim requires a partial mode: " + plan.take(500))
   }
 
-  test("kmv_sketch is callable from SQL and skips nulls") {
-    GraftBridge.registerFunctions(spark)
-    Seq(Some(5L), Some(3L), None, Some(3L), Some(9L))
-      .toDF("h").createOrReplaceTempView("kmv_in")
-    val got = spark.sql("SELECT kmv_sketch(h, 2) FROM kmv_in")
+  test("kmv_sketch keeps the bottom-k distinct hashes and skips nulls") {
+    val got = Seq(Some(5L), Some(3L), None, Some(3L), Some(9L)).toDF("h")
+      .agg(graft.plans.functions.kmv_sketch(col("h"), 2))
       .head().getSeq[Long](0)
     assert(got === Seq(3L, 5L), s"got $got")
   }
@@ -88,14 +85,12 @@ class SketchesSpec extends SparkSpec {
   // ---- Count-Min sketch (x111) ----
 
   test("cms_sketch: hand-computed cells (depth 2, width 8), nulls skipped") {
-    GraftBridge.registerFunctions(spark)
     // h=5 twice, h=12 once. Row 0 (mul 48271): 5*48271 % P = 241355,
     // % 8 = 3; 12*48271 = 579252, % 8 = 4. Row 1 (mul 48271^2 % P =
     // 182605794, +1 offset): 5 -> 913028971 % 8 = 3; 12 -> 43785882
     // % 8 = 2.
-    Seq(Some(5L), Some(12L), None, Some(5L))
-      .toDF("h").createOrReplaceTempView("cms_in")
-    val got = spark.sql("SELECT cms_sketch(h, 2, 8) FROM cms_in")
+    val got = Seq(Some(5L), Some(12L), None, Some(5L)).toDF("h")
+      .agg(graft.plans.functions.cms_sketch(col("h"), 2, 8))
       .head().getSeq[Long](0)
     val want = Array.fill(16)(0L)
     want(3) = 2L; want(4) = 1L          // row 0

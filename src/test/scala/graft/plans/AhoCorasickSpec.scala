@@ -1,13 +1,12 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Aho–Corasick machinery (x114): automaton semantics (overlaps, nested
-  * dictionary patterns), the expression's null/literal contracts, the
-  * SQL surface, and the blocklistScan operator end to end. */
+  * dictionary patterns), the expression's null/literal contracts, and
+  * the blocklistScan operator end to end. */
 class AhoCorasickSpec extends SparkSpec {
   import spark.implicits._
 
@@ -77,18 +76,6 @@ class AhoCorasickSpec extends SparkSpec {
     val rows = df.collect()
     assert(rows(0).getSeq[Long](0) === Seq(2L, 1L))
     assert(rows(1).isNullAt(0))
-  }
-
-  test("SQL surface: literal array patterns; non-literal rejected") {
-    GraftBridge.registerFunctions(spark)
-    val r = spark.sql(
-      "SELECT ac_match_counts('ushers', array('he', 'she', 'hers'))").head()
-    assert(r.getSeq[Long](0) === Seq(1L, 1L, 1L))
-    Seq(("abc", Seq("a", "b"))).toDF("t", "p").createOrReplaceTempView("acbad")
-    val e = intercept[org.apache.spark.sql.AnalysisException](
-      spark.sql("SELECT ac_match_counts(t, p) FROM acbad").head())
-    assert(e.getMessage.contains("ac_match_counts") ||
-      e.getMessage.contains("patterns"))
   }
 
   test("blocklistScan aggregates docs-hit and total hits per pattern") {

@@ -26,9 +26,10 @@ import graft.plans.{functions => F}
   * The arms must render identically (exact bits — both paths call the
   * same kernels, so no tolerance is licensed).
   *
-  * Aggregates (misra_gries, kmv_sketch, cms_sketch, gram_matrix) are
-  * TypedImperativeAggregates with a single execution path and are
-  * covered by the suite-wide sweep in CodegenSuiteParitySpec instead. */
+  * Aggregates (misra_gries, kmv_sketch, cms_sketch, gram_matrix,
+  * capped_collect) are TypedImperativeAggregates with a single execution
+  * path and are covered by the suite-wide sweep in CodegenSuiteParitySpec
+  * instead. */
 class CodegenParitySpec extends SparkSpec {
 
   /** Canonical, exact rendering (same discipline as the suite sweep):
@@ -168,16 +169,21 @@ class CodegenParitySpec extends SparkSpec {
   }
 
   test("battery covers every registered scalar SQL function (no rot)") {
-    // every non-aggregate function in the SQL registration surface must
+    // every non-aggregate Column wrapper in graft.plans.functions must
     // have a parity case, so a newly added expression cannot silently
     // skip the gate
-    val aggregates = Set("misra_gries", "kmv_sketch", "cms_sketch", "gram_matrix")
-    val registered = GraftExtensions.sqlFunctions.map(_._1.funcName).toSet
+    val aggregates = Set("misra_gries", "kmv_sketch", "cms_sketch",
+      "gram_matrix", "capped_collect")
+    val wrapped = F.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) &&
+        m.getReturnType == classOf[Column])
+      .map(_.getName).toSet -- aggregates
+    assert(wrapped.contains("poly_hash"), s"reflection found $wrapped")
     val covered = cases.map(_._1).toSet
-    val missing = registered -- aggregates -- covered
+    val missing = wrapped -- covered
     assert(missing.isEmpty,
-      s"scalar expressions registered but missing a parity case: $missing")
-    val stale = covered -- registered
-    assert(stale.isEmpty, s"parity cases for unregistered functions: $stale")
+      s"scalar expressions wrapped but missing a parity case: $missing")
+    val stale = covered -- wrapped
+    assert(stale.isEmpty, s"parity cases for unwrapped functions: $stale")
   }
 }

